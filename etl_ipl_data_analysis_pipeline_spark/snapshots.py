@@ -22,22 +22,22 @@ lists the rewritten files while older versions keep reading the
 originals. Nothing is ever modified in place; expiry deletes only
 files unreferenced by every RETAINED manifest.
 
-Concurrency: data file names are ATTEMPT-unique (the ``v<N>`` prefix
-records the attempt's target version, nothing parses it), so two
+Concurrency: data file names carry a fresh uuid token per attempt, so
 racing writers never collide on the data plane; manifest publication
 arbitrates through a truly EXCLUSIVE primitive (an atomic hard-link on
 local filesystems — link(2) fails with EEXIST — and rename + content
-verify elsewhere; see ``_commit_manifest``). ``snapshot_commit``
-retries a lost race optimistically —
-re-read the new head, re-point the parent, restage ONLY the manifest
-(the data files are already immutable) — so concurrent APPENDS both
-land. Rewriting ops (merge/delete/compact) rebase-retry with
-file-disjointness validation (``_commit_rewrite``): iff every file the
-op rewrote is still live in the new head (and, for merge, the racer's
-new files carry none of the merge keys), the new manifest is recomputed
-against the new head — one manifest write, no data restaged — so an
-append racing a merge/delete/compact BOTH land; a genuine overlap
-raises ``SnapshotConflict`` and the caller re-runs on the new head.
+verify elsewhere; see ``_commit_manifest``). Every operation commits
+through ONE publish path (``_publish``): it carries the parent's
+manifest fields forward, publishes, and on a lost race re-reads the
+head and rebuilds only the manifest (data files are already immutable)
+up to ``_PUBLISH_RETRIES`` times. An operation's ``build`` decides
+whether it can rebase: appends and metadata-only ops compose with any
+racer, so concurrent APPENDS both land; rewriting ops (merge/delete/
+compact, ``_commit_rewrite``) rebase iff every file the op rewrote is
+still live in the new head (and, for merge, the racer's new files
+carry none of the merge keys); a restore never rebases. A genuine
+overlap raises ``SnapshotConflict`` and the caller re-runs on the new
+head.
 
 Scale: the manifest is one JSON line per version holding relative file
 paths — for a 100 TB table at 1 GB files that's ~10⁵ names per
@@ -68,13 +68,16 @@ _BROADCAST_KEYS_MAX = 1_000_000
 # pure overhead. Strictly conservative either way (candidates = all files).
 _PRUNE_MIN_FILES = 64
 
+# How many times a commit that lost the manifest-publish race rebuilds
+# its manifest against the new head before SnapshotConflict propagates.
+_PUBLISH_RETRIES = 10
+
 
 class SnapshotConflict(IOError):
-    """A commit lost the manifest-publish race: the target version was
-    committed by another writer between head read and publish. Appends
-    recover automatically (snapshot_commit retries against the new
-    head); rewriting ops rebase-retry when their inputs are untouched
-    (_commit_rewrite) and surface this only on a genuine overlap."""
+    """A commit lost the manifest-publish race and could not rebase: the
+    target version was committed by another writer between head read
+    and publish, and either the operation's rebase check vetoed the new
+    head (a true overlap) or ``_PUBLISH_RETRIES`` retries all lost."""
 
 
 def _snap_dir(path: str) -> str:
@@ -182,14 +185,23 @@ def snapshot_latest_batch_id(spark: SparkSession, path: str) -> int | None:
     head = _head_version(spark, path)
     if head is None:
         return None
-    bid = _read_manifest(spark, path, head).get("batch_id")
-    if bid is not None:
-        return bid
-    for v in reversed(snapshot_versions(spark, path)[:-1]):
-        bid = _read_manifest(spark, path, v).get("batch_id")
-        if bid is not None:
-            return bid
-    return None
+    return _inherited_batch_id(spark, path, head, _read_manifest(spark, path, head))
+
+
+def _inherited_batch_id(
+    spark: SparkSession, base: str, version: int, manifest: dict
+) -> int | None:
+    """The streaming marker as of ``version`` (whose manifest is given):
+    its own, or — on tables written before every commit carried the
+    marker forward — the newest older manifest's."""
+    bid = manifest.get("batch_id")
+    if bid is None:
+        for v in reversed(snapshot_versions(spark, base)):
+            if v < version:
+                bid = _read_manifest(spark, base, v).get("batch_id")
+                if bid is not None:
+                    break
+    return bid
 
 
 def snapshot_commit(
@@ -202,7 +214,6 @@ def snapshot_commit(
     cluster_files: int | None = None,
     cluster_method: str = "range",
     cluster_tiebreak: str | None = None,
-    max_retries: int = 10,
 ) -> int:
     """Commit ``df`` as a new table version; returns the version number.
 
@@ -238,22 +249,21 @@ def snapshot_commit(
     bites on all of them — requires ``cluster_tiebreak``, a unique
     non-null row key (zorder_ranks contract).
 
-    Concurrency (optimistic): if the manifest rename loses a race, the
+    Concurrency (optimistic): if the manifest publish loses a race, the
     data files — already immutable under attempt-unique names — stay
-    put; only the head is re-read, the parent re-pointed, and the
-    manifest restaged at the next version number, up to ``max_retries``
-    times before ``SnapshotConflict`` propagates. Two racing appenders
-    therefore BOTH land (versions n+1 and n+2, the second referencing
-    the first's files verbatim). Note for streaming: the exactly-once
-    batch-id skip check happens BEFORE commit, so concurrent writers to
-    one table still need a single stream owner."""
+    put; ``_publish`` re-reads the head and restages only the manifest
+    at the next version number. Two racing appenders therefore BOTH
+    land (versions n+1 and n+2, the second referencing the first's
+    files verbatim); only a concurrent change of the partition layout
+    conflicts. Note for streaming: the exactly-once batch-id skip check
+    happens BEFORE commit, so concurrent writers to one table still need
+    a single stream owner."""
     if mode not in ("append", "overwrite"):
         raise ValueError(f"unknown snapshot mode {mode!r}")
     spark = df.sparkSession
     base = path.rstrip("/")
-    versions = snapshot_versions(spark, base)
-    version = (versions[-1] if versions else 0) + 1
-    parent = _read_manifest(spark, base, versions[-1]) if versions else None
+    start = _read_head(spark, base, missing_ok=True)
+    parent = start[1]
     if partition_by is not None:
         partition_by = list(partition_by)
     if mode == "append" and parent is not None:
@@ -270,62 +280,35 @@ def snapshot_commit(
         df = _cluster_df(
             df, list(cluster_by), cluster_files, cluster_method, cluster_tiebreak
         )
-    new_files = _stage_files(df, base, version, partition_by)
+    new_files = _stage_files(df, base, start[0] + 1, partition_by)
     new_stats, new_rows = _file_stats(base, new_files)
-    for attempt in range(max_retries + 1):
-        if parent is not None and mode == "append" and (
-            parent.get("partition_by") or []
-        ) != (partition_by or []):
-            raise SnapshotConflict(
-                "snapshot commit: table layout changed concurrently "
-                f"(staged {partition_by or []}, head has "
-                f"{parent.get('partition_by') or []})"
-            )
-        files = list(new_files)
-        schema = df.schema
-        stats = dict(new_stats)
-        rows = dict(new_rows)
-        adds = {rel: version for rel in new_files}
-        deletes = None
-        field_meta = None
-        bid = batch_id
-        if mode == "append" and parent:
-            files = parent["files"] + files
-            schema = _merge_schemas(parent["schema"], schema)
-            stats = {**(parent.get("stats") or {}), **stats}
-            rows = {**(parent.get("rows") or {}), **rows}
-            adds = {**(parent.get("adds") or {}), **adds}
+
+    def build(head_version: int, head: dict | None) -> dict:
+        fields = {
+            "files": new_files, "schema": df.schema, "batch_id": batch_id,
+            "partition_by": partition_by, "stats": new_stats,
+            "rows": new_rows, "adds": dict.fromkeys(new_files, head_version + 1),
+        }
+        if mode == "overwrite":
+            # the table is replaced: equality-delete entries and the
+            # rename/drop machinery reset (names are fresh by definition)
+            fields.update(deletes=None, field_meta=None)
+        elif head is not None:
+            if (head.get("partition_by") or []) != (partition_by or []):
+                raise SnapshotConflict(
+                    "snapshot commit: table layout changed concurrently "
+                    f"(staged {partition_by or []}, head has "
+                    f"{head.get('partition_by') or []})"
+                )
             # equality-delete entries ride forward: they keep masking the
             # parent files they applied to; the appended files' add-version
             # (this version) postdates every entry, so a re-inserted key
             # is visible — exactly the MERGE-on-read contract
-            deletes = parent.get("deletes")
-            # rename/drop machinery rides forward too (overwrite resets it:
-            # the table is replaced, so names are fresh by definition)
-            field_meta = _evolve_field_meta(parent, schema, version)
-        if bid is None and parent:
-            # EVERY commit inherits the streaming marker, so the head
-            # manifest always carries it and snapshot_latest_batch_id never
-            # has to walk the lineage (a walk would read one manifest per
-            # version — measurable on every streaming micro-batch)
-            bid = parent.get("batch_id")
-        try:
-            _commit_manifest(
-                spark, base, version, op=mode, files=files, schema=schema,
-                batch_id=bid, stats=stats, partition_by=partition_by,
-                adds=adds, deletes=deletes, field_meta=field_meta,
-                rows=rows,
-            )
-            return version
-        except SnapshotConflict:
-            if attempt >= max_retries:
-                raise
-            versions = snapshot_versions(spark, base)
-            version = (versions[-1] if versions else 0) + 1
-            parent = (
-                _read_manifest(spark, base, versions[-1]) if versions else None
-            )
-    raise AssertionError("unreachable")
+            fields["files"] = head["files"] + new_files
+            fields["schema"] = _merge_schemas(head["schema"], df.schema)
+        return fields
+
+    return _publish(spark, base, mode, build, start)
 
 
 def _cluster_df(
@@ -472,7 +455,7 @@ def _commit_manifest(
     rows: dict | None = None,
 ) -> None:
     """Write + atomically PUBLISH the version manifest — the commit point
-    shared by every snapshot operation. Publication must be EXCLUSIVE
+    every snapshot operation reaches through ``_publish``. Publication must be EXCLUSIVE
     (exactly one writer per version can ever succeed), and a bare
     rename is not: POSIX rename(2) — what Hadoop LocalFileSystem and
     most object-store shims use — silently REPLACES an existing
@@ -596,6 +579,79 @@ def _commit_manifest(
             "filesystem) — this writer's commit did not land"
         )
     _write_head_hint(spark, base, version)
+
+
+def _read_head(
+    spark: SparkSession, base: str, missing_ok: bool = False
+) -> tuple[int, dict | None]:
+    """``(version, manifest)`` of the newest committed version. Writers
+    find it by LISTING (``snapshot_versions`` — the seam the race tests
+    patch), not through the HEAD hint the read paths use. A table with
+    no version raises, or gives ``(0, None)`` when ``missing_ok``."""
+    versions = snapshot_versions(spark, base)
+    if versions:
+        return versions[-1], _read_manifest(spark, base, versions[-1])
+    if missing_ok:
+        return 0, None
+    raise ValueError(f"no committed snapshot at {base}")
+
+
+def _publish(spark: SparkSession, base: str, op: str, build, head: tuple) -> int:
+    """Commit version ``head_version + 1`` — the ONE path every snapshot
+    operation publishes through; returns the new version.
+
+    ``head`` is the ``(head_version, manifest)`` the operation read its
+    input against (manifest None for a table's first commit).
+    ``build(head_version, manifest)`` returns only the manifest fields
+    the operation sets (``_commit_manifest``'s keywords); everything
+    else is carried forward from the parent:
+
+    - ``files``, ``schema``, ``partition_by`` and ``deletes`` verbatim;
+    - the per-file ``stats``/``rows``/``adds`` maps, restricted to the
+      files the new version still lists (an entry is a fact about an
+      immutable file), under build's entries for its new files;
+    - the field-id machinery, with fresh ids for new schema names;
+    - the streaming ``batch_id`` marker when build sets none, so replay
+      protection never regresses and the head manifest answers
+      snapshot_latest_batch_id without walking the lineage.
+
+    If the publish loses the race, the head is re-read and build runs
+    again against it — data files are immutable, only the manifest is
+    recomputed. build raises ``SnapshotConflict`` to veto a rebase it
+    cannot make; after ``_PUBLISH_RETRIES`` lost races the conflict
+    propagates."""
+    from pyspark.sql.types import StructType
+
+    for attempt in range(_PUBLISH_RETRIES + 1):
+        head_version, parent = head
+        fields = build(head_version, parent)
+        parent = parent or {}
+        for key in ("files", "partition_by", "deletes"):
+            fields.setdefault(key, parent.get(key))
+        if "schema" not in fields:
+            fields["schema"] = StructType.fromJson(json.loads(parent["schema"]))
+        live = set(fields["files"])
+        for key in ("stats", "rows", "adds"):
+            inherited = parent.get(key) or {}
+            fields[key] = {
+                **{rel: x for rel, x in inherited.items() if rel in live},
+                **(fields.get(key) or {}),
+            }
+        if "field_meta" not in fields:
+            fields["field_meta"] = _evolve_field_meta(
+                parent, fields["schema"], head_version + 1
+            )
+        if fields.get("batch_id") is None and parent:
+            fields["batch_id"] = _inherited_batch_id(
+                spark, base, head_version, parent
+            )
+        try:
+            _commit_manifest(spark, base, head_version + 1, op, **fields)
+            return head_version + 1
+        except SnapshotConflict:
+            if attempt == _PUBLISH_RETRIES:
+                raise
+            head = _read_head(spark, base, missing_ok=True)
 
 
 def _field_meta_of(manifest: dict | None) -> dict | None:
@@ -1188,7 +1244,9 @@ def snapshot_restore(spark: SparkSession, path: str, version: int) -> int:
     original manifest is dropped. The streaming batch-id marker carries
     forward from the HEAD, not the restored version — replay protection
     must stay monotone (a rollback of data must not re-open the
-    exactly-once window)."""
+    exactly-once window). A restore that loses the publish race raises
+    ``SnapshotConflict``: rebasing it would silently roll back a commit
+    it never saw."""
     from pyspark.sql.types import StructType
 
     base = path.rstrip("/")
@@ -1196,28 +1254,26 @@ def snapshot_restore(spark: SparkSession, path: str, version: int) -> int:
     if version not in versions:
         raise ValueError(f"version {version} not in {versions}")
     target = _read_manifest(spark, base, version)
-    head = _read_manifest(spark, base, versions[-1])
-    new_version = versions[-1] + 1
-    _commit_manifest(
-        spark,
-        base,
-        new_version,
-        op="restore",
-        files=target["files"],
-        schema=StructType.fromJson(json.loads(target["schema"])),
-        batch_id=(
-            head.get("batch_id")
-            if head.get("batch_id") is not None
-            else snapshot_latest_batch_id(spark, base)
-        ),
-        stats=target.get("stats"),
-        partition_by=target.get("partition_by"),
-        adds=target.get("adds"),
-        deletes=target.get("deletes"),
-        field_meta=_field_meta_of(target),
-        rows=target.get("rows"),
-    )
-    return new_version
+
+    def build(head_version: int, head: dict) -> dict:
+        if head_version != versions[-1]:
+            raise SnapshotConflict(
+                f"snapshot restore: v{head_version} landed after the restore "
+                "read the head — re-run against the new head"
+            )
+        return {
+            "files": target["files"],
+            "schema": StructType.fromJson(json.loads(target["schema"])),
+            "stats": target.get("stats"),
+            "partition_by": target.get("partition_by"),
+            "adds": target.get("adds"),
+            "deletes": target.get("deletes"),
+            "field_meta": _field_meta_of(target),
+            "rows": target.get("rows"),
+        }
+
+    head = (versions[-1], _read_manifest(spark, base, versions[-1]))
+    return _publish(spark, base, "restore", build, head)
 
 
 def _resolve_version(
@@ -1527,22 +1583,20 @@ def snapshot_compact(
     marker carries forward, so a compact (then expiry) between stream
     runs never re-opens the exactly-once window."""
     base = path.rstrip("/")
-    versions = snapshot_versions(spark, base)
     # read the data PINNED to the captured head manifest — a separate
     # "read latest" here would race a concurrent commit landing between
     # the two resolutions and compact rows the rebase then duplicates
-    head = _read_manifest(spark, base, versions[-1])
+    head_version, head = _read_head(spark, base)
     cur = _read_data(spark, base, head, head["files"])
-    total = sum(f[2] for f in _live_files(spark, base, [versions[-1]]))
+    total = sum(f[2] for f in _live_files(spark, base, [head_version]))
     n_target = max(1, -(-total // (target_mb * 1024 * 1024)))
-    version = versions[-1] + 1
     part = head.get("partition_by")
-    files = _stage_files(cur.coalesce(n_target), base, version, part)
+    files = _stage_files(cur.coalesce(n_target), base, head_version + 1, part)
     # touched = every file this compaction read: a concurrent APPEND
     # rebases cleanly (its files ride the new manifest verbatim next to
     # the compacted ones); any concurrent REWRITE of those files raises.
     return _commit_rewrite(
-        spark, base, head, versions[-1], op="replace",
+        spark, base, head, head_version, op="replace",
         touched=list(head["files"]), new_files=files, new_schema=cur.schema,
     )
 
@@ -1569,22 +1623,20 @@ def snapshot_optimize(
     a concurrent append rebases cleanly (its files ride the new
     manifest verbatim) while a concurrent rewrite conflicts."""
     base = path.rstrip("/")
-    versions = snapshot_versions(spark, base)
-    head = _read_manifest(spark, base, versions[-1])
+    head_version, head = _read_head(spark, base)
     cur = _read_data(spark, base, head, head["files"])
     if target_files is not None:
         n_target = max(1, int(target_files))
     else:
-        total = sum(f[2] for f in _live_files(spark, base, [versions[-1]]))
+        total = sum(f[2] for f in _live_files(spark, base, [head_version]))
         n_target = max(1, -(-total // (target_mb * 1024 * 1024)))
     clustered = _cluster_df(
         cur, list(cluster_by), n_target, cluster_method, cluster_tiebreak
     )
-    version = versions[-1] + 1
     part = head.get("partition_by")
-    files = _stage_files(clustered, base, version, part)
+    files = _stage_files(clustered, base, head_version + 1, part)
     return _commit_rewrite(
-        spark, base, head, versions[-1], op="replace",
+        spark, base, head, head_version, op="replace",
         touched=list(head["files"]), new_files=files, new_schema=cur.schema,
     )
 
@@ -1772,44 +1824,33 @@ def _commit_rewrite(
     new_schema,
     batch_id: int | None = None,
     validate_delta=None,
-    max_retries: int = 5,
 ) -> int:
-    """Commit a REWRITING op's manifest with optimistic rebase-retry
-    (Iceberg's validate-no-conflicting-files): the op rewrote
-    ``touched`` (as read from ``head``) into ``new_files``. If the
-    manifest publish loses a race, re-read the new head and rebase iff
-    every file this op rewrote is STILL LIVE there — a concurrent
-    APPEND (or a rewrite of disjoint files) composes: the rebased
-    manifest is the new head's file list minus ``touched`` plus
-    ``new_files``, so the racer's delta is referenced verbatim. A
-    concurrent op that removed any of our inputs is a true conflict and
-    raises. ``validate_delta(delta_added_rels, head_manifest)`` lets the
-    op veto semantically-conflicting concurrent additions (merge uses
-    it to reject appends that carry its update keys — rebasing past
-    those would leave duplicate keys); raise SnapshotConflict inside it
-    to abort. Data files are never restaged on retry — only the
-    manifest is recomputed, so a rebase costs one manifest write."""
+    """Publish a REWRITING op's manifest through ``_publish`` with
+    rebase validation (Iceberg's validate-no-conflicting-files): the op
+    rewrote ``touched`` (as read from ``head``) into ``new_files``, and
+    the new manifest is the head's file list minus ``touched`` plus
+    ``new_files``. If another commit landed first, the rebase is allowed
+    iff every file this op rewrote is STILL LIVE in the new head — a
+    concurrent APPEND (or a rewrite of disjoint files) composes, and
+    the racer's delta is referenced verbatim. A concurrent op that
+    removed any of our inputs is a true conflict and raises, as do a
+    racing rename/drop, equality delete or layout change.
+    ``validate_delta(delta_added_rels, head_manifest)`` lets the op veto
+    semantically-conflicting concurrent additions (merge uses it to
+    reject appends that carry its update keys — rebasing past those
+    would leave duplicate keys); raise SnapshotConflict inside it to
+    abort. Data files are never restaged — a rebase costs one manifest
+    write."""
     touched_set = set(touched)
-    for attempt in range(max_retries + 1):
+    read_version, read_head = head_version, head
+    # footers of the new files are immutable: read them once, not per attempt
+    new_stats, new_rows = _file_stats(base, new_files)
+
+    def build(head_version: int, head: dict) -> dict:
+        if head_version != read_version:
+            _check_rebase(op, read_head, head, touched_set, validate_delta)
         survivors = [f for f in head["files"] if f not in touched_set]
-        files = survivors + new_files
-        schema = _merge_schemas(head["schema"], new_schema)
-        old_stats = head.get("stats") or {}
-        new_stats, new_rows = _file_stats(base, new_files)
-        stats = {
-            **{rel: old_stats[rel] for rel in files if rel in old_stats},
-            **new_stats,
-        }
-        old_rows = head.get("rows") or {}
-        rows = {
-            **{rel: old_rows[rel] for rel in survivors if rel in old_rows},
-            **new_rows,
-        }
-        old_adds = head.get("adds") or {}
-        adds = {
-            **{rel: old_adds.get(rel, 0) for rel in survivors},
-            **{rel: head_version + 1 for rel in new_files},
-        }
+        adds = head.get("adds") or {}
         # equality-delete entries survive iff they still mask at least one
         # surviving file; the REWRITTEN files read their state WITH the
         # entries applied (_read_data), so an entry masking only touched
@@ -1819,99 +1860,78 @@ def _commit_rewrite(
         kept_deletes = [
             d
             for d in (head.get("deletes") or [])
-            if any(adds[rel] <= d["applies"] for rel in survivors)
+            if any(adds.get(rel, 0) <= d["applies"] for rel in survivors)
         ]
-        field_meta = _evolve_field_meta(head, schema, head_version + 1)
-        bid = batch_id
-        if bid is None:
-            bid = (
-                head.get("batch_id")
-                if head.get("batch_id") is not None
-                # legacy tables (written before markers propagated) may
-                # carry the marker only on an older manifest — walk once
-                else snapshot_latest_batch_id(spark, base)
-            )
-        try:
-            _commit_manifest(
-                spark, base, head_version + 1, op=op, files=files,
-                schema=schema, partition_by=head.get("partition_by"),
-                batch_id=bid, stats=stats, adds=adds,
-                deletes=kept_deletes or None, field_meta=field_meta,
-                rows=rows,
-            )
-            return head_version + 1
-        except SnapshotConflict:
-            if attempt >= max_retries:
-                raise
-            versions = snapshot_versions(spark, base)
-            new_head = _read_manifest(spark, base, versions[-1])
-            if (new_head.get("partition_by") or []) != (
-                head.get("partition_by") or []
-            ):
-                raise SnapshotConflict(
-                    f"snapshot {op}: table layout changed concurrently"
-                )
-            old_files = set(head["files"])
-            new_files_set = set(new_head["files"])
-            removed = old_files - new_files_set
-            if removed & touched_set:
-                raise SnapshotConflict(
-                    f"snapshot {op}: a concurrent commit removed "
-                    f"{len(removed & touched_set)} file(s) this op rewrote — "
-                    "re-run against the new head"
-                )
-            # a racer's metadata-only rename/drop is a true conflict the
-            # file checks can't see (it changes no files): this op's
-            # rewritten files were written under the OLD column names but
-            # get stamped with an add-version that POSTDATES the rename,
-            # so the renamed field resolves to its current physical name
-            # — which they don't contain — and _merge_schemas resurrects
-            # the old name as a zombie fresh field. Abort the rebase when
-            # the racer touched the field-id history or removed/renamed
-            # any schema name; a purely ADDITIVE concurrent evolution
-            # (new column appended, existing ids untouched) still
-            # composes — rewritten files simply serve NULL for the new
-            # column, same as the old files their rows came from.
-            _empty_meta = {"field_ids": {}, "renames": [], "drops": []}
-            old_meta = _field_meta_of(head) or _empty_meta
-            new_meta = _field_meta_of(new_head) or _empty_meta
-            old_names = {
-                f["name"] for f in json.loads(head["schema"])["fields"]
-            }
-            new_names = {
-                f["name"] for f in json.loads(new_head["schema"])["fields"]
-            }
-            if (
-                old_names - new_names
-                or new_meta["renames"] != old_meta["renames"]
-                or new_meta["drops"] != old_meta["drops"]
-                or any(
-                    new_meta["field_ids"].get(n, i) != i
-                    for n, i in old_meta["field_ids"].items()
-                )
-            ):
-                raise SnapshotConflict(
-                    f"snapshot {op}: a concurrent schema rename/drop "
-                    "landed — the rewrite read old column names; re-run "
-                    "against the new head"
-                )
-            # a racer's NEW equality-delete entry is a true conflict: this
-            # op read state WITHOUT it, so its rewritten files may carry
-            # rows the racer deleted — and they'd escape the entry (their
-            # add-version postdates it). Rebasing would resurrect them.
-            known = {d["file"] for d in (head.get("deletes") or [])}
-            if any(
-                d["file"] not in known for d in (new_head.get("deletes") or [])
-            ):
-                raise SnapshotConflict(
-                    f"snapshot {op}: a concurrent equality delete landed — "
-                    "re-run against the new head"
-                )
-            delta_added = [f for f in new_head["files"] if f not in old_files]
-            if validate_delta is not None and delta_added:
-                validate_delta(delta_added, new_head)
-            head, head_version = new_head, versions[-1]
-    raise AssertionError("unreachable")
+        return {
+            "files": survivors + new_files,
+            "schema": _merge_schemas(head["schema"], new_schema),
+            "stats": new_stats, "rows": new_rows,
+            "adds": dict.fromkeys(new_files, head_version + 1),
+            "deletes": kept_deletes, "batch_id": batch_id,
+        }
+
+    return _publish(spark, base, op, build, (head_version, head))
+
+
+def _check_rebase(
+    op: str, read: dict, head: dict, touched: set, validate_delta
+) -> None:
+    """Raise SnapshotConflict unless a rewrite that read manifest
+    ``read`` and rewrote the files ``touched`` can rebase onto the newer
+    ``head``."""
+    if (head.get("partition_by") or []) != (read.get("partition_by") or []):
+        raise SnapshotConflict(f"snapshot {op}: table layout changed concurrently")
+    gone = touched - set(head["files"])
+    if gone:
+        raise SnapshotConflict(
+            f"snapshot {op}: a concurrent commit removed "
+            f"{len(gone)} file(s) this op rewrote — "
+            "re-run against the new head"
+        )
+    # a racer's metadata-only rename/drop is a true conflict the file
+    # checks can't see (it changes no files): this op's rewritten files
+    # were written under the OLD column names but get stamped with an
+    # add-version that POSTDATES the rename, so the renamed field
+    # resolves to its current physical name — which they don't contain
+    # — and _merge_schemas resurrects the old name as a zombie fresh
+    # field. Abort the rebase when the racer touched the field-id
+    # history or removed/renamed any schema name; a purely ADDITIVE
+    # concurrent evolution (new column appended, existing ids untouched)
+    # still composes — rewritten files simply serve NULL for the new
+    # column, same as the old files their rows came from.
+    _empty_meta = {"field_ids": {}, "renames": [], "drops": []}
+    old_meta = _field_meta_of(read) or _empty_meta
+    new_meta = _field_meta_of(head) or _empty_meta
+    old_names = {f["name"] for f in json.loads(read["schema"])["fields"]}
+    new_names = {f["name"] for f in json.loads(head["schema"])["fields"]}
+    if (
+        old_names - new_names
+        or new_meta["renames"] != old_meta["renames"]
+        or new_meta["drops"] != old_meta["drops"]
+        or any(
+            new_meta["field_ids"].get(n, i) != i
+            for n, i in old_meta["field_ids"].items()
+        )
+    ):
+        raise SnapshotConflict(
+            f"snapshot {op}: a concurrent schema rename/drop "
+            "landed — the rewrite read old column names; re-run "
+            "against the new head"
+        )
+    # a racer's NEW equality-delete entry is a true conflict: this op
+    # read state WITHOUT it, so its rewritten files may carry rows the
+    # racer deleted — and they'd escape the entry (their add-version
+    # postdates it). Rebasing would resurrect them.
+    known = {d["file"] for d in (read.get("deletes") or [])}
+    if any(d["file"] not in known for d in (head.get("deletes") or [])):
+        raise SnapshotConflict(
+            f"snapshot {op}: a concurrent equality delete landed — "
+            "re-run against the new head"
+        )
+    read_files = set(read["files"])
+    delta_added = [f for f in head["files"] if f not in read_files]
+    if validate_delta is not None and delta_added:
+        validate_delta(delta_added, head)
 
 
 def snapshot_merge(
@@ -1959,9 +1979,7 @@ def snapshot_merge(
 
     spark = updates.sparkSession
     base = path.rstrip("/")
-    versions = snapshot_versions(spark, base)
-    if not versions:
-        raise ValueError(f"no committed snapshot at {base}")
+    head_version, manifest = _read_head(spark, base)
     # one evaluation of the updates plan: everything downstream (counts,
     # key collect, probe and rewrite joins) reads the checkpointed blocks.
     # LAZY mark + the validation aggregate below as the materializing
@@ -2003,7 +2021,7 @@ def snapshot_merge(
         # a no-op merge commits nothing: the head version is returned
         # unchanged (an explicit batch_id marker, if any, is NOT
         # recorded — streaming callers skip empty batches upstream)
-        return versions[-1]
+        return head_version
     if counts["__k"] != n_updates:
         raise ValueError(
             "snapshot_merge: updates carry duplicate keys on "
@@ -2015,7 +2033,6 @@ def snapshot_merge(
     # on the broadcast size limit
     bcast = n_updates <= _BROADCAST_KEYS_MAX
     bkeys = F.broadcast(keys) if bcast else keys
-    manifest = _read_manifest(spark, base, versions[-1])
     schema = _merge_schemas(manifest["schema"], upserts.schema)
     cur_schema = StructType.fromJson(json.loads(manifest["schema"]))
     # key-range pruning: the locate probe scans only the files whose
@@ -2037,7 +2054,6 @@ def snapshot_merge(
         )
     else:
         touched = []
-    version = versions[-1] + 1
 
     # align both sides to the merged schema: absent columns -> NULL,
     # present columns CAST to the merged type (a no-op unless this merge
@@ -2065,7 +2081,7 @@ def snapshot_merge(
     else:
         rewrite = _align(upserts)
     part = manifest.get("partition_by")
-    new_files = _stage_files(rewrite, base, version, part)
+    new_files = _stage_files(rewrite, base, head_version + 1, part)
 
     def _no_key_overlap(delta_added: list[str], head_m: dict) -> None:
         """Rebase veto: a concurrent commit's NEW files must not carry
@@ -2094,7 +2110,7 @@ def snapshot_merge(
             )
 
     return _commit_rewrite(
-        spark, base, manifest, versions[-1], op="merge",
+        spark, base, manifest, head_version, op="merge",
         touched=touched, new_files=new_files, new_schema=upserts.schema,
         batch_id=batch_id, validate_delta=_no_key_overlap,
     )
@@ -2114,23 +2130,19 @@ def snapshot_delete(spark: SparkSession, path: str, condition) -> int:
     from pyspark.sql.types import StructType
 
     base = path.rstrip("/")
-    versions = snapshot_versions(spark, base)
-    if not versions:
-        raise ValueError(f"no committed snapshot at {base}")
-    manifest = _read_manifest(spark, base, versions[-1])
+    head_version, manifest = _read_head(spark, base)
     schema = StructType.fromJson(json.loads(manifest["schema"]))
     cur = _read_data(
         spark, base, manifest, manifest["files"], schema=schema,
         with_file="__file",
     )
     touched = _touched_files(cur, base, manifest["files"], None, condition=condition)
-    version = versions[-1] + 1
     part = manifest.get("partition_by")
     if touched:
         survivors = _read_data(
             spark, base, manifest, touched, schema=schema
         ).filter(~F.coalesce(condition, F.lit(False)))
-        new_files = _stage_files(survivors, base, version, part)
+        new_files = _stage_files(survivors, base, head_version + 1, part)
     else:
         new_files = []
     # SNAPSHOT-ISOLATION rebase (no validate_delta): rows a concurrent
@@ -2140,14 +2152,13 @@ def snapshot_delete(spark: SparkSession, path: str, condition) -> int:
     # snapshot-isolation DELETE. Only removal of a file this op rewrote
     # is a true conflict.
     return _commit_rewrite(
-        spark, base, manifest, versions[-1], op="delete",
+        spark, base, manifest, head_version, op="delete",
         touched=touched, new_files=new_files, new_schema=schema,
     )
 
 
 def snapshot_delete_keys(
-    keys: DataFrame, path: str, batch_id: int | None = None,
-    max_retries: int = 5,
+    keys: DataFrame, path: str, batch_id: int | None = None
 ) -> int:
     """MERGE-ON-READ equality delete: remove every row whose key columns
     (= ``keys``'s columns) match a row of ``keys`` — WITHOUT reading or
@@ -2183,11 +2194,7 @@ def snapshot_delete_keys(
 
     spark = keys.sparkSession
     base = path.rstrip("/")
-    versions = snapshot_versions(spark, base)
-    if not versions:
-        raise ValueError(f"no committed snapshot at {base}")
-    head_version = versions[-1]
-    head = _read_manifest(spark, base, head_version)
+    head_version, head = _read_head(spark, base)
     schema = StructType.fromJson(json.loads(head["schema"]))
     cols = list(keys.columns)
     missing = [c for c in cols if c not in {f.name for f in schema.fields}]
@@ -2228,7 +2235,24 @@ def snapshot_delete_keys(
         )
         for rel in staged
     }
-    for attempt in range(max_retries + 1):
+
+    def build(head_version: int, head: dict) -> dict:
+        # ANY concurrent commit composes: an equality delete serializes
+        # after it by pointing ``applies`` at the head it publishes on —
+        # "delete these keys as of now" is the contract, so rows a racing
+        # append/merge just added are deleted too. But a concurrent
+        # rename/drop of a key column composes with nothing — committing
+        # the entry anyway would put cols in the manifest that no longer
+        # exist in the schema, and every subsequent _read_data anti-join
+        # would throw, bricking all reads until manual manifest repair.
+        live = {f["name"] for f in json.loads(head["schema"])["fields"]}
+        gone = [c for c in cols if c not in live]
+        if gone:
+            raise SnapshotConflict(
+                f"snapshot_delete_keys: key column(s) {gone} were "
+                "renamed or dropped concurrently — re-run with the "
+                "current schema's key names"
+            )
         entries = [
             {
                 "file": rel,
@@ -2239,54 +2263,12 @@ def snapshot_delete_keys(
             }
             for rel in staged
         ]
-        bid = batch_id
-        if bid is None:
-            bid = (
-                head.get("batch_id")
-                if head.get("batch_id") is not None
-                else snapshot_latest_batch_id(spark, base)
-            )
-        try:
-            _commit_manifest(
-                spark, base, head_version + 1, op="delete_keys",
-                files=head["files"],
-                schema=StructType.fromJson(json.loads(head["schema"])),
-                partition_by=head.get("partition_by"), batch_id=bid,
-                stats=head.get("stats"), adds=head.get("adds"),
-                deletes=(head.get("deletes") or []) + entries,
-                field_meta=_field_meta_of(head),
-                rows=head.get("rows"),
-            )
-            return head_version + 1
-        except SnapshotConflict:
-            if attempt >= max_retries:
-                raise
-            # ANY concurrent commit composes: an equality delete
-            # serializes after it by re-pointing ``applies`` at the new
-            # head — "delete these keys as of now" is the contract, so
-            # rows a racing append/merge just added are deleted too
-            # (data files are untouched either way; only the manifest
-            # is recomputed).
-            versions = snapshot_versions(spark, base)
-            head_version = versions[-1]
-            head = _read_manifest(spark, base, head_version)
-            # re-validate the key columns against the NEW head: a
-            # concurrent rename/drop of a key column composes with
-            # nothing — committing the entry anyway would put cols in
-            # the manifest that no longer exist in the schema, and
-            # every subsequent _read_data anti-join would throw,
-            # bricking all reads until manual manifest repair.
-            live = {
-                f["name"] for f in json.loads(head["schema"])["fields"]
-            }
-            gone = [c for c in cols if c not in live]
-            if gone:
-                raise SnapshotConflict(
-                    f"snapshot_delete_keys: key column(s) {gone} were "
-                    "renamed or dropped concurrently — re-run with the "
-                    "current schema's key names"
-                )
-    raise AssertionError("unreachable")
+        return {
+            "deletes": (head.get("deletes") or []) + entries,
+            "batch_id": batch_id,
+        }
+
+    return _publish(spark, base, "delete_keys", build, (head_version, head))
 
 
 def snapshot_changes(
@@ -2515,7 +2497,7 @@ def _check_schema_change_ok(head: dict, col: str, op: str) -> None:
 
 
 def snapshot_rename_column(
-    spark: SparkSession, path: str, old: str, new: str, max_retries: int = 5
+    spark: SparkSession, path: str, old: str, new: str
 ) -> int:
     """RENAME a column, metadata-only (Iceberg-style field ids): the
     commit rewrites ZERO data files — the manifest maps the column's
@@ -2531,12 +2513,11 @@ def snapshot_rename_column(
     from pyspark.sql.types import StructField, StructType
 
     base = path.rstrip("/")
-    versions = snapshot_versions(spark, base)
-    if not versions:
-        raise ValueError(f"no committed snapshot at {base}")
-    head_version = versions[-1]
-    head = _read_manifest(spark, base, head_version)
-    for attempt in range(max_retries + 1):
+
+    # a metadata-only op composes with ANY concurrent commit: build
+    # re-validates against whatever head it publishes on (the racer may
+    # itself have renamed or dropped)
+    def build(head_version: int, head: dict) -> dict:
         schema = StructType.fromJson(json.loads(head["schema"]))
         names = [f.name for f in schema.fields]
         if old not in names:
@@ -2560,31 +2541,12 @@ def snapshot_rename_column(
                 for f in schema.fields
             ]
         )
-        try:
-            _commit_manifest(
-                spark, base, head_version + 1, op="rename_column",
-                files=head["files"], schema=new_schema,
-                partition_by=head.get("partition_by"),
-                batch_id=head.get("batch_id"), stats=head.get("stats"),
-                adds=head.get("adds"), deletes=head.get("deletes"),
-                field_meta=meta,
-            )
-            return head_version + 1
-        except SnapshotConflict:
-            if attempt >= max_retries:
-                raise
-            # a metadata-only op composes with ANY concurrent commit:
-            # re-derive against the new head (re-validating — the racer
-            # may itself have renamed or dropped)
-            versions = snapshot_versions(spark, base)
-            head_version = versions[-1]
-            head = _read_manifest(spark, base, head_version)
-    raise AssertionError("unreachable")
+        return {"schema": new_schema, "field_meta": meta}
+
+    return _publish(spark, base, "rename_column", build, _read_head(spark, base))
 
 
-def snapshot_drop_column(
-    spark: SparkSession, path: str, name: str, max_retries: int = 5
-) -> int:
+def snapshot_drop_column(spark: SparkSession, path: str, name: str) -> int:
     """DROP a column, metadata-only: zero data rewritten — the manifest's
     schema loses the field and the drop log records its id, so reads
     simply never project the physical column. Time travel still serves
@@ -2596,12 +2558,8 @@ def snapshot_drop_column(
     from pyspark.sql.types import StructType
 
     base = path.rstrip("/")
-    versions = snapshot_versions(spark, base)
-    if not versions:
-        raise ValueError(f"no committed snapshot at {base}")
-    head_version = versions[-1]
-    head = _read_manifest(spark, base, head_version)
-    for attempt in range(max_retries + 1):
+
+    def build(head_version: int, head: dict) -> dict:
         schema = StructType.fromJson(json.loads(head["schema"]))
         names = [f.name for f in schema.fields]
         if name not in names:
@@ -2615,23 +2573,9 @@ def snapshot_drop_column(
             {"id": fid, "version": head_version + 1, "name": name}
         ]
         new_schema = StructType([f for f in schema.fields if f.name != name])
-        try:
-            _commit_manifest(
-                spark, base, head_version + 1, op="drop_column",
-                files=head["files"], schema=new_schema,
-                partition_by=head.get("partition_by"),
-                batch_id=head.get("batch_id"), stats=head.get("stats"),
-                adds=head.get("adds"), deletes=head.get("deletes"),
-                field_meta=meta,
-            )
-            return head_version + 1
-        except SnapshotConflict:
-            if attempt >= max_retries:
-                raise
-            versions = snapshot_versions(spark, base)
-            head_version = versions[-1]
-            head = _read_manifest(spark, base, head_version)
-    raise AssertionError("unreachable")
+        return {"schema": new_schema, "field_meta": meta}
+
+    return _publish(spark, base, "drop_column", build, _read_head(spark, base))
 
 
 def snapshot_changes_by_version(

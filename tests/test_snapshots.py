@@ -98,6 +98,10 @@ def test_bad_mode_and_missing_table_raise(spark, tmp_path):
         sn.snapshot_commit(df, str(tmp_path / "x"), "merge")
     with pytest.raises(ValueError, match="no committed snapshot"):
         sn.snapshot_read(spark, str(tmp_path / "y"))
+    with pytest.raises(ValueError, match="no committed snapshot"):
+        sn.snapshot_compact(spark, str(tmp_path / "y"))
+    with pytest.raises(ValueError, match="no committed snapshot"):
+        sn.snapshot_optimize(spark, str(tmp_path / "y"), ["k"])
 
 
 def test_stream_ingest_versions_asof_and_replay(spark, tmp_path):
@@ -342,14 +346,12 @@ def test_manifest_key_stats_prune_merge_probe(spark, tmp_path):
 
 
 def test_concurrent_commit_loser_aborts_cleanly(spark, table):
-    """The manifest rename arbitrates the MANIFEST level: a second
+    """The manifest publish arbitrates the MANIFEST level: a second
     attempt at an already-committed version number raises and the
-    committed state is untouched. Single-writer remains the operating
-    contract — two writers racing through the full commit path can
-    still collide on the data/v<N>-<i> names before either manifest
-    lands, so the rename guard bounds damage (at most one manifest per
-    version, losers abort), it does not make concurrent writes safe.
-    This test pins the manifest-level arbitration."""
+    committed state is untouched. Writers cannot collide on the data
+    plane — every staging attempt names its files with a fresh uuid
+    token — so this exclusive publish is the only arbitration two
+    racing writers need. This test pins it."""
     head = sn.snapshot_versions(spark, table)[-1]
     df = spark.range(500, 505).withColumnRenamed("id", "k")
     # a racing writer targeting the same next version: stage its files,
@@ -399,17 +401,21 @@ def test_optimistic_concurrent_appends_both_commit(spark, table, monkeypatch):
 
 def test_commit_conflict_exhausts_retries(spark, table, monkeypatch):
     """When every retry keeps losing (pathological contention), the
-    SnapshotConflict surfaces after max_retries instead of spinning."""
+    SnapshotConflict surfaces after _PUBLISH_RETRIES retries instead of
+    spinning."""
     real = sn._commit_manifest
+    attempts = []
 
     def always_lose(*a, **kw):
+        attempts.append(a[2])
         raise sn.SnapshotConflict("manifest rename failed (simulated)")
 
     monkeypatch.setattr(sn, "_commit_manifest", always_lose)
     df = spark.range(1).withColumnRenamed("id", "k")
     with pytest.raises(sn.SnapshotConflict):
-        sn.snapshot_commit(df, table, "append", max_retries=2)
+        sn.snapshot_commit(df, table, "append")
     monkeypatch.setattr(sn, "_commit_manifest", real)
+    assert len(attempts) == sn._PUBLISH_RETRIES + 1
 
 
 def test_snapshot_read_prunes_by_manifest_stats(spark, tmp_path):
@@ -2051,3 +2057,287 @@ def test_row_count_manifest_only_and_fallbacks(spark, tmp_path, monkeypatch):
     sn.snapshot_compact(spark, base)
     monkeypatch.setattr(sn, "_read_data", boom)
     assert sn.snapshot_row_count(spark, base) == 118
+
+
+def test_rename_and_drop_carry_row_map_and_marker(spark, tmp_path):
+    """rename/drop inherit the parent's per-file ``rows`` map and the
+    streaming marker like every other commit: after rename + append the
+    head's map covers every file, so snapshot_row_count launches no
+    Spark job, and a marker only an older (legacy) manifest carries
+    lands on the new head."""
+    base = str(tmp_path / "tbl")
+    df = _kv(spark, 0, 30).repartition(2)
+    sn.snapshot_commit(df, base, "append", batch_id=5)
+    # a manifest from before markers propagated: same files, no marker
+    m1 = sn._read_manifest(spark, base, 1)
+    sn._commit_manifest(
+        spark, base, 2, "append", m1["files"], df.schema,
+        stats=m1["stats"], rows=m1["rows"], adds=m1["adds"],
+    )
+    v3 = sn.snapshot_rename_column(spark, base, "v", "w")
+    assert sn._read_manifest(spark, base, v3)["batch_id"] == 5
+    sn.snapshot_commit(
+        _kv(spark, 30, 40).withColumnRenamed("v", "w").repartition(2),
+        base, "append",
+    )
+    v5 = sn.snapshot_drop_column(spark, base, "w")
+    tracker = spark.sparkContext.statusTracker()
+    for v in (v5 - 1, v5):
+        m = sn._read_manifest(spark, base, v)
+        assert len(m["files"]) == 4 and set(m["rows"]) == set(m["files"])
+        before = max(tracker.getJobIdsForGroup(None))
+        assert sn.snapshot_row_count(spark, base, version=v) == 40
+        assert max(tracker.getJobIdsForGroup(None)) == before  # no job
+
+
+def test_restore_losing_publish_race_raises(spark, table, monkeypatch):
+    """A restore never rebases: rebasing would silently roll back a
+    commit it never saw. Writer B commits between the restore's head
+    read and its publish, so the restore raises SnapshotConflict and
+    publishes nothing."""
+    head = sn.snapshot_versions(spark, table)[-1]
+    b_df = spark.range(300, 305).withColumnRenamed("id", "k")
+    assert sn.snapshot_commit(b_df, table, "append") == head + 1  # B wins
+
+    real_versions = sn.snapshot_versions
+    calls = {"n": 0}
+
+    def stale_once(spark_, path_):
+        calls["n"] += 1
+        out = real_versions(spark_, path_)
+        return out[:-1] if calls["n"] == 1 else out
+
+    monkeypatch.setattr(sn, "snapshot_versions", stale_once)
+    with pytest.raises(sn.SnapshotConflict):
+        sn.snapshot_restore(spark, table, 2)
+    monkeypatch.setattr(sn, "snapshot_versions", real_versions)
+    assert sn.snapshot_versions(spark, table) == [1, 2, 3, head + 1]
+    assert _keys(spark, table) == [100, 101, 102, 300, 301, 302, 303, 304]
+
+
+class _Crash(Exception):
+    """A writer process dying just before its manifest publish."""
+
+
+def test_snapshot_protocol_state_machine(spark, tmp_path):
+    """Model check of the commit protocol: a hypothesis state machine
+    drives append, merge, COW delete, delete_keys, compact, restore,
+    rename of the value column and expire against a ``(k, <value>)``
+    table and an in-memory model of every retained version. Each commit
+    may run under one fault — a competing append landing between the
+    writer's head read and its publish, a crash before publish, or a
+    skipped HEAD-hint write. After every step the listing, the head
+    read, every retained as-of read and snapshot_row_count must equal
+    the model, so an acknowledged commit is never lost and a crash
+    leaves the head unchanged for the next operation."""
+    import contextlib
+    import functools
+    import shutil
+    import tempfile
+
+    import pyspark.sql.functions as F
+    from hypothesis import HealthCheck, settings, strategies as st
+    from hypothesis.stateful import (
+        RuleBasedStateMachine,
+        invariant,
+        rule,
+        run_state_machine_as_test,
+    )
+    from pyspark.sql import DataFrame
+
+    # two draws in five commit without a fault
+    faults = st.sampled_from([None, None, "race", "crash", "no_hint"])
+    some_keys = st.lists(
+        st.integers(0, 30), min_size=1, max_size=4, unique=True
+    )
+
+    class Machine(RuleBasedStateMachine):
+        def __init__(self):
+            super().__init__()
+            self.dir = tempfile.mkdtemp(dir=tmp_path)
+            self.base = self.dir + "/tbl"
+            self.next_key = 1000  # appends use fresh keys, merges 0..30
+            rows = {k: 0 for k in range(0, 30, 3)}
+            assert sn.snapshot_commit(self._frame("v", rows), self.base) == 1
+            # retained version -> (value column name, {k: value})
+            self.model = {1: ("v", rows)}
+
+        def teardown(self):
+            shutil.rmtree(self.dir, ignore_errors=True)
+
+        def _frame(self, col, rows):
+            return spark.createDataFrame(
+                sorted(rows.items()), f"k long, {col} long"
+            )
+
+        def _head(self):
+            return self.model[max(self.model)]
+
+        def _fresh(self, n, val):
+            keys = range(self.next_key, self.next_key + n)
+            self.next_key += n
+            return dict.fromkeys(keys, val)
+
+        def _acked(self, version, col, rows):
+            assert version == max(self.model) + 1
+            self.model[version] = (col, rows)
+
+        @contextlib.contextmanager
+        def _fault(self, fault):
+            names = ("snapshot_versions", "_commit_manifest", "_write_head_hint")
+            saved = {n: getattr(sn, n) for n in names}
+
+            def crash(*a, **k):
+                raise _Crash()
+
+            def racing(spark_, path_):
+                stale = saved["snapshot_versions"](spark_, path_)
+                sn.snapshot_versions = saved["snapshot_versions"]
+                col, rows = self._head()
+                new = self._fresh(2, 7)
+                v = sn.snapshot_commit(self._frame(col, new), self.base)
+                self._acked(v, col, {**rows, **new})
+                return stale  # the racer's version is invisible
+
+            if fault == "crash":
+                sn._commit_manifest = crash
+            elif fault == "no_hint":
+                sn._write_head_hint = lambda *a, **k: None
+            elif fault == "race":
+                sn.snapshot_versions = racing
+            try:
+                yield
+            finally:
+                for n, fn in saved.items():
+                    setattr(sn, n, fn)
+
+        def _commit(self, fault, op, apply):
+            """Run commit ``op`` under ``fault``; ``apply(col, rows)``
+            is the model of the op on the head it lands on."""
+            with self._fault(fault):
+                try:
+                    v = op()
+                except _Crash:
+                    assert fault == "crash"
+                    return
+            assert fault != "crash"
+            self._acked(v, *apply(*self._head()))
+
+        @rule(n=st.integers(1, 3), val=st.integers(0, 9), fault=faults)
+        def append(self, n, val, fault):
+            col = self._head()[0]
+            new = self._fresh(n, val)
+            self._commit(
+                fault,
+                lambda: sn.snapshot_commit(self._frame(col, new), self.base),
+                lambda col, rows: (col, {**rows, **new}),
+            )
+
+        @rule(keys=some_keys, val=st.integers(0, 9), fault=faults)
+        def merge(self, keys, val, fault):
+            col = self._head()[0]
+            upd = dict.fromkeys(keys, val)
+            self._commit(
+                fault,
+                lambda: sn.snapshot_merge(self._frame(col, upd), self.base, ["k"]),
+                lambda col, rows: (col, {**rows, **upd}),
+            )
+
+        @rule(keys=some_keys, fault=faults)
+        def delete(self, keys, fault):
+            self._commit(
+                fault,
+                lambda: sn.snapshot_delete(spark, self.base, F.col("k").isin(keys)),
+                lambda col, rows: (
+                    col, {k: x for k, x in rows.items() if k not in keys}
+                ),
+            )
+
+        @rule(keys=some_keys, fault=faults)
+        def delete_keys(self, keys, fault):
+            frame = spark.createDataFrame([(k,) for k in keys], "k long")
+            self._commit(
+                fault,
+                lambda: sn.snapshot_delete_keys(frame, self.base),
+                lambda col, rows: (
+                    col, {k: x for k, x in rows.items() if k not in keys}
+                ),
+            )
+
+        @rule(fault=faults)
+        def compact(self, fault):
+            self._commit(
+                fault,
+                lambda: sn.snapshot_compact(spark, self.base),
+                lambda col, rows: (col, rows),
+            )
+
+        @rule(fault=faults)
+        def rename(self, fault):
+            old = self._head()[0]
+            new = "w" if old == "v" else "v"
+            self._commit(
+                fault,
+                lambda: sn.snapshot_rename_column(spark, self.base, old, new),
+                lambda col, rows: (new, rows),
+            )
+
+        @rule(pick=st.integers(0, 9), fault=faults)
+        def restore(self, pick, fault):
+            target = sorted(self.model)[pick % len(self.model)]
+            if fault == "race":
+                with self._fault(fault):
+                    with pytest.raises(sn.SnapshotConflict):
+                        sn.snapshot_restore(spark, self.base, target)
+                return
+            self._commit(
+                fault,
+                lambda: sn.snapshot_restore(spark, self.base, target),
+                lambda col, rows: self.model[target],
+            )
+
+        @rule(keep=st.integers(2, 4))
+        def expire(self, keep):
+            retained = sorted(self.model)[-keep:]
+            dropped, _ = sn.snapshot_expire(
+                spark, self.base, keep_last=keep, staging_grace_s=0
+            )
+            assert dropped == len(self.model) - len(retained)
+            self.model = {v: self.model[v] for v in retained}
+
+        @invariant()
+        def reads_equal_model(self):
+            assert sn.snapshot_versions(spark, self.base) == sorted(self.model)
+            head_col, head_rows = self._head()
+            reads = [(0, head_col, sn.snapshot_read(spark, self.base))]
+            reads += [
+                (v, col, sn.snapshot_read(spark, self.base, v))
+                for v, (col, _) in self.model.items()
+            ]
+            for _, col, df in reads:
+                assert df.columns == ["k", col]
+            union = functools.reduce(
+                DataFrame.unionByName,
+                [
+                    df.select(F.lit(v).alias("ver"), "k", F.col(col).alias("x"))
+                    for v, col, df in reads
+                ],
+            )
+            got = {v: [] for v, _, _ in reads}
+            for r in union.collect():
+                got[r.ver].append((r.k, r.x))
+            want = {v: rows for v, (_, rows) in self.model.items()}
+            want[0] = head_rows
+            for v, rows in want.items():
+                assert sorted(got[v]) == sorted(rows.items()), v
+            assert sn.snapshot_row_count(spark, self.base) == len(head_rows)
+
+    run_state_machine_as_test(
+        Machine,
+        settings=settings(
+            max_examples=4,
+            stateful_step_count=8,
+            deadline=None,
+            suppress_health_check=list(HealthCheck),
+        ),
+    )
