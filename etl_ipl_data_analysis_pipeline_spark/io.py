@@ -46,11 +46,10 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
 
 def read_json(
     spark: SparkSession,
-    path: str,
+    path: str | list[str],
     schema=None,
     multiline: bool = True,
     corrupt_col: str | None = None,
-    modified_after: str | None = None,
 ) -> DataFrame:
     """SRC3 (transformation_job.py:37-38): JSON scan.
 
@@ -62,14 +61,8 @@ def read_json(
     kill a 100 TB ingest; filter `col IS NOT NULL` into a quarantine sink).
     Requires an explicit ``schema`` (Spark drops the corrupt column during
     inference), and the column must be declared StringType in it.
-
-    ``modified_after``: file-source mtime watermark ("YYYY-MM-DDTHH:mm:ss",
-    session timezone) — bounds an incremental scan over an ever-growing
-    landing zone to recently-written files instead of rescanning history.
     """
     reader = spark.read.option("multiLine", "true" if multiline else "false")
-    if modified_after is not None:
-        reader = reader.option("modifiedAfter", modified_after)
     if corrupt_col is not None:
         if schema is None:
             raise ValueError("corrupt_col requires an explicit schema")
@@ -86,20 +79,9 @@ def read_table(spark: SparkSession, name: str) -> DataFrame:
     return spark.read.table(name)
 
 
-def read_binary_files(
-    spark: SparkSession,
-    path: str,
-    glob: str | None = None,
-    modified_after: str | None = None,
-) -> DataFrame:
-    """Multimodal/raw source: (path, modificationTime, length, content).
-    ``modified_after`` bounds the scan by file mtime (see read_json)."""
-    reader = spark.read.format("binaryFile")
-    if glob:
-        reader = reader.option("pathGlobFilter", glob)
-    if modified_after is not None:
-        reader = reader.option("modifiedAfter", modified_after)
-    return reader.load(path)
+def read_binary_files(spark: SparkSession, path: str | list[str]) -> DataFrame:
+    """Multimodal/raw source: (path, modificationTime, length, content)."""
+    return spark.read.format("binaryFile").load(path)
 
 
 def write_parquet(
@@ -342,14 +324,27 @@ def expand_zip(
     zip_path: str, out_dir: str, suffix: str = ".json"
 ) -> list[str]:
     """SRC2 (lambda_unzip_function.py:18-22, lamda_function.py:24-28):
-    expand a zip archive, keeping only ``suffix`` members."""
-    os.makedirs(out_dir, exist_ok=True)
-    written: list[str] = []
+    expand a zip archive, keeping only ``suffix`` members.
+
+    Members land under their basename, so two members sharing one (say
+    ``2023/x.json`` and ``2024/x.json``) raise ``ValueError`` before
+    anything is written — the second would silently overwrite the first."""
     with zipfile.ZipFile(zip_path) as zf:
+        by_name: dict[str, str] = {}
         for member in zf.namelist():
             if suffix and not member.endswith(suffix):
                 continue
-            target = os.path.join(out_dir, os.path.basename(member))
+            name = os.path.basename(member)
+            if name in by_name:
+                raise ValueError(
+                    f"zip members {by_name[name]!r} and {member!r} both "
+                    f"extract to {name!r} in {out_dir!r}"
+                )
+            by_name[name] = member
+        os.makedirs(out_dir, exist_ok=True)
+        written: list[str] = []
+        for name, member in by_name.items():
+            target = os.path.join(out_dir, name)
             with zf.open(member) as src, open(target, "wb") as dst:
                 dst.write(src.read())
             written.append(target)

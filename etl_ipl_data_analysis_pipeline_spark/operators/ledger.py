@@ -84,15 +84,19 @@ def ingest_new(ledger: DataFrame, new_keys: DataFrame, key_col: str = "file_key"
     existing keys are excluded by the anti-join first, mirroring the
     head_object skip at lamda_function.py:31-37)."""
     fresh = discover_new_files(new_keys.select(key_col).distinct(), ledger, key_col)
-    rows = fresh.select(
+    return ledger.unionByName(ledger_rows(fresh, ("ingested",), key_col))
+
+
+def ledger_rows(keys: DataFrame, done: tuple[str, ...], key_col: str = "file_key") -> DataFrame:
+    """One new ledger row per key: the stages in ``done`` true, the rest
+    false, stamped now. For keys absent from the ledger, appending these
+    rows equals ``ingest_new`` followed by ``mark_stage`` for each later
+    stage in ``done``."""
+    return keys.select(
         key_col,
-        F.lit(True).alias("ingested"),
-        F.lit(False).alias("crawled"),
-        F.lit(False).alias("transformed"),
-        F.lit(False).alias("loaded"),
+        *[F.lit(s in done).alias(s) for s in STAGES],
         F.current_timestamp().alias("updated_at"),
     )
-    return ledger.unionByName(rows)
 
 
 def latest_state(ledger_log: DataFrame, key_col: str = "file_key") -> DataFrame:

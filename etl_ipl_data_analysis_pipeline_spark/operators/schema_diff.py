@@ -18,12 +18,14 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql.types import StructType
 
+SNAPSHOT_SCHEMA = "version_id long, name string, type string"
+
 
 def schema_snapshot(spark: SparkSession, df: DataFrame, version_id: int) -> DataFrame:
     """Snapshot a DataFrame's schema as (version_id, name, type) rows —
     replaces the Glue catalog version record (compare_schema.py:107-111)."""
     rows = [(version_id, name, dtype) for name, dtype in spark_schema_to_rows(df.schema)]
-    return spark.createDataFrame(rows, "version_id long, name string, type string")
+    return spark.createDataFrame(rows, SNAPSHOT_SCHEMA)
 
 
 def schema_diff(new: DataFrame, old: DataFrame) -> DataFrame:
@@ -80,9 +82,11 @@ def retain_versions(snapshots: DataFrame, n: int = 5) -> DataFrame:
     return snapshots.join(F.broadcast(keep), "version_id", "left_semi")
 
 
-def drift_report(diff: DataFrame) -> str:
+def drift_report(diff) -> str:
     """Human-readable drift message (compare_schema.py:40-43,56-63's SNS
-    payload). Driver-side by design — the diff itself is tiny."""
+    payload). Driver-side by design — the diff itself is tiny. ``diff`` is
+    a :func:`schema_diff` frame or its already-collected rows."""
+    rows = diff.collect() if isinstance(diff, DataFrame) else diff
     lines = [
         f"- {r['change']}: {r['name']}"
         + (
@@ -90,7 +94,7 @@ def drift_report(diff: DataFrame) -> str:
             if r["change"] == "type_changed"
             else ""
         )
-        for r in diff.collect()
+        for r in rows
     ]
     return "schema drift detected:\n" + "\n".join(lines) if lines else "no drift"
 

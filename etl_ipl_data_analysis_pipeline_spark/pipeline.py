@@ -2,19 +2,29 @@
 fetch → unzip → read JSON → flatten → schema-drift gate → parquet → ledger
 update (final_DAG.py:349's 14-task sequence) — as one composable function.
 
-Batch-incremental by construction: every run discovers only files absent
-from the ledger, so re-running against an unchanged landing zone is a
-no-op (the run-twice idempotency contract, L3). The streaming twin of the
-same semantics is streaming/incremental.py.
+One run is one batch: the archive members this run extracted whose keys the
+ledger has not seen. Discovery compares the archive's member list (already
+on the driver) with the ledger; the batch is then read by exact path, so no
+scan ever globs the accumulated landing zone, and it is flattened once: the
+write that lands the rows also counts them. Re-running against an unchanged
+archive is a no-op (the run-twice idempotency contract, L3). The streaming
+twin of the same semantics is streaming/incremental.py.
+
+Every Spark job a run launches carries the description
+``run_ingest:<phase>``, phase one of ``discover``, ``registry``, ``write``
+and ``ledger``; the caller's description is restored on return. (Spark
+describes its own parallel file-listing job, run for more than 32 paths.)
 """
 
 from __future__ import annotations
 
+import functools
 import os
+import re
 from dataclasses import dataclass
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 
 from .io import (
     expand_zip,
@@ -28,17 +38,21 @@ from .io import (
 from .io import read_json as _read_json
 from .operators.flatten import flatten
 from .operators.ledger import (
+    LEDGER_SCHEMA,
     discover_new_files,
     empty_ledger,
-    ingest_new,
-    mark_stage,
+    ledger_rows,
     strip_extension,
 )
 from .operators.schema_diff import (
+    SNAPSHOT_SCHEMA,
     drift_report,
     schema_diff,
     schema_snapshot,
 )
+
+_JOB_DESCRIPTION = "spark.job.description"
+_GLOB_CHARS = re.compile(r"([*?\[\]{}\\])")
 
 
 @dataclass
@@ -64,48 +78,28 @@ def _json_from_strings(spark: SparkSession, docs: DataFrame) -> DataFrame:
         return spark.read.json(docs.rdd.map(lambda r: r[0]))
 
 
-def _mtime_watermark(
-    spark: SparkSession, members: list[str] | None = None, margin_s: int = 5
-) -> str | None:
-    """A ``modifiedAfter`` watermark in the SESSION timezone (the option is
-    parsed in session TZ). Derived from the OLDEST mtime of the files this
-    run just wrote — the filesystem's own clock, i.e. the same clock
-    ``modifiedAfter`` compares against — so driver-vs-filesystem clock
-    drift (NFS landing dir, VM clock skew) cannot place the watermark
-    after this run's own extractions. A now()-based watermark would: mtime
-    lagging the driver clock by more than the margin silently excludes
-    the batch, and step 6 still marks it ingested. The margin absorbs
-    second-granularity mtimes. Returns None — scan unbounded, never
-    wrong — when no members are given, a stat fails, or the session TZ
-    string can't be resolved (fixed-offset strings like GMT+08:00)."""
-    import datetime as _dt
-    import zoneinfo
+def _literal(path: str) -> str:
+    """Escape Hadoop glob characters: the file sources glob every path
+    they are given, so ``m[1].json`` would otherwise match ``m1.json``
+    and ``a{b}.json`` nothing at all."""
+    return _GLOB_CHARS.sub(r"\\\1", path)
 
-    tz_name = spark.conf.get("spark.sql.session.timeZone", None)
-    tz = None
-    if tz_name:
+
+def _phase(spark: SparkSession, name: str) -> None:
+    spark.sparkContext.setJobDescription(f"run_ingest:{name}")
+
+
+def _restores_job_description(fn):
+    @functools.wraps(fn)
+    def wrapper(spark: SparkSession, *args, **kwargs):
+        sc = spark.sparkContext
+        caller = sc.getLocalProperty(_JOB_DESCRIPTION)
         try:
-            tz = zoneinfo.ZoneInfo(tz_name)
-        except Exception:  # fixed-offset strings like GMT+08:00
-            return None
-    if not members:
-        return None
-    try:
-        epoch = min(os.path.getmtime(m) for m in members)
-    except OSError:
-        return None
-    base = (
-        _dt.datetime.fromtimestamp(epoch, tz) if tz else _dt.datetime.fromtimestamp(epoch)
-    )
-    return (base - _dt.timedelta(seconds=margin_s)).strftime("%Y-%m-%dT%H:%M:%S")
+            return fn(spark, *args, **kwargs)
+        finally:
+            sc.setLocalProperty(_JOB_DESCRIPTION, caller)  # None clears it
 
-
-def _load_ledger(spark: SparkSession, ledger_path: str) -> DataFrame:
-    # recover_swapped repairs a swap torn by a crash before declaring the
-    # ledger absent — an absent-looking ledger would re-ingest everything.
-    if recover_swapped(spark, ledger_path):
-        return spark.read.parquet(ledger_path)
-    return empty_ledger(spark)
+    return wrapper
 
 
 def _save_small_table(df: DataFrame, path: str) -> None:
@@ -122,6 +116,7 @@ def _save_small_table(df: DataFrame, path: str) -> None:
     swap_directory(spark, tmp, path)
 
 
+@_restores_job_description
 def run_ingest(
     spark: SparkSession,
     source: str,
@@ -164,16 +159,6 @@ def run_ingest(
         )
 
     # 1. acquire + expand (SRC1/SRC2). fetch_url streams to the landing zone.
-    # The oldest mtime among THIS run's extracted members (minus a grace
-    # margin for second-granularity mtimes) becomes a modifiedAfter
-    # watermark: every file this run extracts passes it by construction —
-    # it is the filesystem's own clock, not the driver's — and every file
-    # from earlier runs is older, so the per-run scan is bounded by this
-    # run's extraction instead of the whole accumulated landing zone.
-    # Correctness never depends on it in either direction: the ledger
-    # semi-join below filters extra rows the scan returns, and the
-    # listing-level guard before step 3 falls back to an unbounded scan
-    # if the bounded listing would miss any fresh file.
     if source.startswith(("http://", "https://")):
         archive = os.path.join(landing_dir, os.path.basename(source) or "archive.zip")
         os.makedirs(landing_dir, exist_ok=True)
@@ -181,68 +166,35 @@ def run_ingest(
     else:
         archive = source
     members = expand_zip(archive, landing_dir, suffix=".json")
-    watermark = _mtime_watermark(spark, members)
 
-    # 2. incremental discovery (L1): listing vs ledger by normalized key.
-    listing = spark.createDataFrame(
+    # 2. incremental discovery (L1): this run's members vs the ledger by
+    # normalized key. No ledger means every member is fresh and no job
+    # runs. Otherwise one anti-join against the ledger (read with its
+    # schema pinned, so no inference job) collects the fresh rows — no
+    # more than the member list the driver already holds. recover_swapped
+    # repairs a swap torn by a crash first: an absent-looking ledger
+    # would re-ingest everything.
+    _phase(spark, "discover")
+    fresh = spark.createDataFrame(
         [(m,) for m in sorted(members)], "path string"
     ).withColumn("file_key", strip_extension(F.expr("reverse(split(path, '/'))[0]")))
-    ledger = _load_ledger(spark, ledger_path)
-    fresh = discover_new_files(listing, ledger).cache()
-    n_new = fresh.count()
-    if n_new == 0:
+    if recover_swapped(spark, ledger_path):
+        ledger = spark.read.schema(LEDGER_SCHEMA).parquet(ledger_path)
+        rows = discover_new_files(fresh, ledger).collect()
+        fresh = spark.createDataFrame(rows, fresh.schema)
+        paths = [r.path for r in rows]
+    else:
+        ledger = empty_ledger(spark)
+        paths = sorted(members)
+    if not paths:
         return RunResult(0, 0, None, skipped=True)
 
-    # 3. read + flatten (SRC3, P1-P4) — only the new files. Discovery stays
-    # on EXECUTORS: one glob scan over the landing zone, each row keyed by
-    # its source file and semi-joined against the fresh-key set (one short
-    # row per new file — broadcasts like the ledger itself). A
-    # collect()-to-driver path list would cap a backfill at driver memory
-    # (10^6+ new files) and serialize the whole list into every task. The
-    # modifiedAfter watermark (step 1) bounds the glob to this run's
-    # extractions; the ledger semi-join keeps correctness either way.
-    glob_path = os.path.join(landing_dir, "*.json")
-    fresh_keys = fresh.select("file_key")
-
-    # Guard against a short scan BEFORE reading: step 6 marks every fresh
-    # key ingested, so a watermark that excludes a fresh file would be
-    # silent data loss, not slowness. The check is listing-level — the
-    # binaryFile source with only `path` projected shares the JSON
-    # source's modifiedAfter file-index filter without reading content —
-    # and any fresh key missing from the bounded listing (NFS attribute
-    # caching, mtime truncation coarser than the margin) drops the
-    # watermark entirely for this run.
-    if watermark is not None:
-        bounded_keys = read_binary_files(
-            spark, landing_dir, glob="*.json", modified_after=watermark
-        ).select(
-            strip_extension(F.expr("reverse(split(path, '/'))[0]")).alias("file_key")
-        )
-        if not fresh_keys.join(bounded_keys, "file_key", "left_anti").isEmpty():
-            watermark = None
-
-    def _only_fresh(df: DataFrame, src_col: str, decode: bool) -> DataFrame:
-        # The two file sources disagree on encoding: input_file_name()
-        # yields percent-ENCODED URIs ('%'->%25, ' '->%20), binaryFile's
-        # `path` column is the raw path. The listing keys above come from
-        # raw Python paths, so encoded sources must be decoded before
-        # keying — or any filename with a space/% silently matches
-        # nothing (zero rows ingested, yet marked done in step 6). '+' is
-        # pre-escaped because url_decode is form-decoding ('+' -> ' ')
-        # but the URI encoder leaves literal '+' alone.
-        basename = F.expr(f"reverse(split({src_col}, '/'))[0]")
-        if decode:
-            basename = F.url_decode(F.regexp_replace(basename, r"\+", "%2B"))
-        keyed = df.withColumn("__fk", strip_extension(basename))
-        return keyed.join(
-            F.broadcast(fresh_keys.withColumnRenamed("file_key", "__fk")),
-            "__fk",
-            "left_semi",
-        ).drop("__fk")
-
+    # 3. read + flatten (SRC3, P1-P4): exactly the fresh files, each path
+    # escaped so the sources' globbing matches it literally.
+    paths = [_literal(p) for p in paths]
     n_quarantined = 0
     cached_raw = None
-    if quarantine_dir is not None and json_schema is not None:
+    if quarantine_dir is not None:
         from pyspark.sql.types import StringType, StructField, StructType
 
         schema_q = (
@@ -254,17 +206,12 @@ def run_ingest(
         # Spark refuses corrupt-column-only queries on raw JSON otherwise
         # (UNSUPPORTED_FEATURE.QUERY_ONLY_CORRUPT_RECORD_COLUMN). The batch
         # is only this run's new files, so the cache is small by design.
-        raw = _only_fresh(
-            _read_json(
-                spark,
-                glob_path,
-                schema=schema_q,
-                corrupt_col="_corrupt",
-                modified_after=watermark,
-            ).withColumn("_src", F.input_file_name()),
-            "_src",
-            decode=True,
-        ).cache()
+        _phase(spark, "write")  # diverting to quarantine is a write
+        raw = (
+            _read_json(spark, paths, schema=schema_q, corrupt_col="_corrupt")
+            .withColumn("_src", F.input_file_name())
+            .cache()
+        )
         bad = raw.filter(F.col("_corrupt").isNotNull()).select(
             F.col("_src").alias("path"), F.col("_corrupt").alias("raw")
         )
@@ -274,50 +221,33 @@ def run_ingest(
         cached_raw = raw
         raw = raw.filter(F.col("_corrupt").isNull()).drop("_corrupt", "_src")
     elif json_schema is not None:
-        raw = _only_fresh(
-            _read_json(
-                spark, glob_path, schema=json_schema, modified_after=watermark
-            ).withColumn("_src", F.input_file_name()),
-            "_src",
-            decode=True,
-        ).drop("_src")
+        raw = _read_json(spark, paths, schema=json_schema)
     else:
-        # Inference mode: schema must come from THIS batch only (the drift
-        # gate compares the new batch's shape, and a whole-zone inference
-        # would silently merge historical schemas). Read the landing files
-        # as whole documents, semi-join to the fresh set, then let the JSON
-        # reader infer over the surviving document STRINGS — discovery and
-        # filtering stay on executors with no driver path list.
-        docs = _only_fresh(
-            read_binary_files(
-                spark, landing_dir, glob="*.json", modified_after=watermark
-            ).select(
-                F.col("path").alias("_src"),
-                F.col("content").cast("string").alias("_doc"),
-            ),
-            "_src",
-            decode=False,  # binaryFile paths are raw, not URI-encoded
-        ).select("_doc")
+        # Inference mode: the schema comes from THIS batch only (the drift
+        # gate compares the new batch's shape). The files are read as whole
+        # documents and the JSON reader infers over the strings: handed
+        # paths, the multiLine reader would re-glob them during inference.
+        docs = read_binary_files(spark, paths).select(F.col("content").cast("string"))
         raw = _json_from_strings(spark, docs)
     flat = flatten(raw)
 
-    # 4. drift gate (J3/SE2/SE3) against the newest registry snapshot.
+    # 4. drift gate (J3/SE2/SE3) against the newest registry snapshot; the
+    # diff is collected once and the report built from those rows.
     drift_msg = None
     if schema_registry_path is not None:
-        new_snap_rows = schema_snapshot(spark, flat, version_id=0).select("name", "type")
+        _phase(spark, "registry")
         if recover_swapped(spark, schema_registry_path):
-            registry = spark.read.parquet(schema_registry_path)
+            registry = spark.read.schema(SNAPSHOT_SCHEMA).parquet(schema_registry_path)
             latest = registry.agg(F.max("version_id")).first()[0]
             old = registry.filter(F.col("version_id") == latest).select("name", "type")
-            diff = schema_diff(new_snap_rows, old)
-            if not diff.isEmpty():
+            new = schema_snapshot(spark, flat, version_id=0).select("name", "type")
+            diff = schema_diff(new, old).collect()
+            if diff:
                 drift_msg = drift_report(diff)
                 if on_drift == "block":
                     raise RuntimeError(drift_msg)
-            next_version = latest + 1 if drift_msg else latest
-            if drift_msg:
                 updated = registry.unionByName(
-                    schema_snapshot(spark, flat, version_id=next_version)
+                    schema_snapshot(spark, flat, version_id=latest + 1)
                 )
                 _save_small_table(updated, schema_registry_path)
         else:
@@ -325,9 +255,12 @@ def run_ingest(
                 schema_snapshot(spark, flat, version_id=1), schema_registry_path
             )
 
-    # 5. write (SNK1). Append — each run adds only its new files' rows.
-    rows_written = flat.count()
-    write_parquet(flat, out_dir, mode="append")
+    # 5. write (SNK1). Append — each run adds only its new files' rows,
+    # counted by an observation on the write itself.
+    _phase(spark, "write")
+    counted = Observation()
+    write_parquet(flat.observe(counted, F.count(F.lit(1)).alias("n")), out_dir, mode="append")
+    rows_written = counted.get["n"]
     if cached_raw is not None:
         cached_raw.unpersist()  # executor memory back; batch is re-readable
     if compact_after:
@@ -337,13 +270,11 @@ def run_ingest(
         # torn commit replays before this run's bin-packing plan is made
         compact_table(spark, out_dir, target_file_mb=compact_target_mb)
 
-    # 6. ledger update (L2/L3): new keys ingested, then marked through
-    # crawled/transformed (this runner performs both stages).
-    keys = fresh.select("file_key")
-    ledger = ingest_new(ledger, keys)
-    ledger = mark_stage(ledger, keys, "crawled")
-    ledger = mark_stage(ledger, keys, "transformed")
-    _save_small_table(ledger, ledger_path)
-    fresh.unpersist()
+    # 6. ledger update (L2/L3): one row per fresh key, ingested through
+    # crawled/transformed (this runner performs both stages). The union
+    # also keeps the ledger's declared schema when it is new.
+    _phase(spark, "ledger")
+    new_rows = ledger_rows(fresh.select("file_key"), ("ingested", "crawled", "transformed"))
+    _save_small_table(ledger.unionByName(new_rows), ledger_path)
 
-    return RunResult(n_new, rows_written, drift_msg, skipped=False, quarantined=n_quarantined)
+    return RunResult(len(paths), rows_written, drift_msg, skipped=False, quarantined=n_quarantined)

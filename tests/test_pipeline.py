@@ -117,18 +117,29 @@ def test_quarantine_diverts_corrupt_files(spark, tmp_path, pipe_args):
     assert r2.skipped
 
 
+SPECIAL_NAMES = {
+    "team rosters.json": "space",
+    "pct%20literal.json": "percent",
+    "a+b.json": "plus",
+    "m[1].json": "bracket",
+    "a{b}.json": "brace",
+    "q?.json": "question",
+    "star*.json": "star",
+    "back\\slash.json": "backslash",
+}
+
+
 @pytest.mark.parametrize("mode", ["infer", "pinned", "quarantine"])
 def test_special_char_filenames_survive_discovery(spark, tmp_path, pipe_args, mode):
-    # input_file_name() yields percent-encoded URIs; the fresh-key join
-    # decodes them, or files named with spaces/%/+ would contribute zero
-    # rows while being marked ingested (silent loss). Three modes because
-    # they key differently: inference reads binaryFile (raw paths, no
-    # decoding), while the pinned-schema and quarantine modes read
-    # input_file_name() and exercise the url_decode branch.
+    # Every fresh file is read by its exact path, and the file sources
+    # treat each path as a Hadoop glob: unescaped, `m[1].json` or
+    # `a{b}.json` would match nothing and contribute zero rows while being
+    # marked ingested (silent loss). Spaces, % and + exercise the URI
+    # encoding between Python paths and Spark's file index. Three modes
+    # because they read differently: inference reads binaryFile, the
+    # pinned-schema and quarantine modes the JSON source.
     z = make_zip(tmp_path, "b1.zip", {
-        "team rosters.json": [{"id": 1, "v": "space"}],
-        "pct%20literal.json": [{"id": 2, "v": "percent"}],
-        "a+b.json": [{"id": 3, "v": "plus"}],
+        name: [{"id": i, "v": v}] for i, (name, v) in enumerate(SPECIAL_NAMES.items())
     })
     extra = {}
     if mode in ("pinned", "quarantine"):
@@ -136,16 +147,31 @@ def test_special_char_filenames_survive_discovery(spark, tmp_path, pipe_args, mo
     if mode == "quarantine":
         extra["quarantine_dir"] = str(tmp_path / "quarantine")
     r = run_ingest(spark, z, **pipe_args, **extra)
-    assert (r.processed_files, r.rows_written) == (3, 3)
+    n = len(SPECIAL_NAMES)
+    assert (r.processed_files, r.rows_written) == (n, n)
     vals = {
         row.v for row in spark.read.parquet(pipe_args["out_dir"]).collect()
     }
-    assert vals == {"space", "percent", "plus"}
+    assert vals == set(SPECIAL_NAMES.values())
+    assert run_ingest(spark, z, **pipe_args, **extra).skipped
+
+
+def test_colliding_member_names_raise(spark, tmp_path, pipe_args):
+    # members land under their basename: two documents sharing one would
+    # overwrite each other and land one row under one ledger key
+    z = make_zip(tmp_path, "b1.zip", {
+        "2023/x.json": [{"id": 1}],
+        "2024/x.json": [{"id": 2}],
+    })
+    with pytest.raises(ValueError, match="'2023/x.json' and '2024/x.json'"):
+        run_ingest(spark, z, **pipe_args)
+    assert not os.path.exists(pipe_args["out_dir"])
+    assert not os.path.exists(pipe_args["ledger_path"])
 
 
 def test_second_run_rescans_only_new_extractions(spark, tmp_path, pipe_args):
-    # the modifiedAfter watermark bounds each run's scan to files the run
-    # itself extracted; correctness across runs comes from the ledger join
+    # each run reads only the files it extracted itself; correctness across
+    # runs comes from the ledger join
     z1 = make_zip(tmp_path, "b1.zip", {"old1.json": [{"id": 1}]})
     z2 = make_zip(tmp_path, "b2.zip", {"new1.json": [{"id": 2}], "new2.json": [{"id": 3}]})
     run_ingest(spark, z1, **pipe_args)
@@ -156,10 +182,10 @@ def test_second_run_rescans_only_new_extractions(spark, tmp_path, pipe_args):
 
 def test_lagging_filesystem_clock_does_not_lose_batch(spark, tmp_path, pipe_args, monkeypatch):
     # the silent-loss shape: filesystem mtimes lag the driver clock (NFS
-    # landing dir, VM clock drift) by more than the watermark margin. A
-    # now()-based watermark would exclude this run's own extractions while
-    # step 6 marks them ingested. The watermark is derived from the
-    # members' own mtimes, so a uniform lag cannot exclude them.
+    # landing dir, VM clock drift). A scan bounded by a now()-based mtime
+    # watermark would exclude this run's own extractions while step 6
+    # marks them ingested. The batch is read by exact path, so no mtime
+    # can exclude it.
     import etl_ipl_data_analysis_pipeline_spark.pipeline as pl
 
     real_expand = pl.expand_zip
@@ -178,21 +204,91 @@ def test_lagging_filesystem_clock_does_not_lose_batch(spark, tmp_path, pipe_args
     assert spark.read.parquet(pipe_args["out_dir"]).count() == 2
 
 
-def test_short_bounded_listing_falls_back_to_unbounded(spark, tmp_path, pipe_args, monkeypatch):
-    # belt-and-braces for exclusion causes mtime derivation can't fix
-    # (listing caches, mtime truncation coarser than the margin): force a
-    # watermark in the FUTURE — the bounded listing then misses every
-    # fresh key — and require the guard to drop it and rescan unbounded
-    # rather than write nothing while marking the batch done.
+def test_extracted_files_land_whatever_their_mtime(spark, tmp_path, pipe_args, monkeypatch):
+    # the hazard an mtime-bounded scan has (listing caches, clock skew,
+    # truncated mtimes): extracted files whose mtime falls outside any
+    # window derived from the run. Stamp every member a year ahead, then a
+    # year back; each batch must land in full rather than be written as
+    # nothing while marked done.
     import etl_ipl_data_analysis_pipeline_spark.pipeline as pl
 
-    monkeypatch.setattr(
-        pl, "_mtime_watermark", lambda *a, **kw: "2999-01-01T00:00:00"
-    )
-    z = make_zip(tmp_path, "b1.zip", {"f1.json": [{"id": 1, "v": "x"}]})
-    r = run_ingest(spark, z, **pipe_args, json_schema="id long, v string")
-    assert (r.processed_files, r.rows_written, r.skipped) == (1, 1, False)
-    assert spark.read.parquet(pipe_args["out_dir"]).count() == 1
+    real_expand = pl.expand_zip
+    year = 365 * 24 * 3600
+    shift = {"s": 0}
+
+    def shifted_expand(*a, **kw):
+        members = real_expand(*a, **kw)
+        for m in members:
+            t = os.path.getmtime(m) + shift["s"]
+            os.utime(m, (t, t))
+        return members
+
+    monkeypatch.setattr(pl, "expand_zip", shifted_expand)
+    schema = "id long, v string"
+    shift["s"] = year
+    z1 = make_zip(tmp_path, "b1.zip", {"f1.json": [{"id": 1, "v": "x"}], "f2.json": [{"id": 2, "v": "y"}]})
+    r1 = run_ingest(spark, z1, **pipe_args, json_schema=schema)
+    assert (r1.processed_files, r1.rows_written, r1.skipped) == (2, 2, False)
+    shift["s"] = -year
+    z2 = make_zip(tmp_path, "b2.zip", {"f3.json": [{"id": 3, "v": "z"}]})
+    r2 = run_ingest(spark, z2, **pipe_args, json_schema=schema)
+    assert (r2.processed_files, r2.rows_written, r2.skipped) == (1, 1, False)
+    got = sorted(r.id for r in spark.read.parquet(pipe_args["out_dir"]).collect())
+    assert got == [1, 2, 3]
+
+
+def _jobs_during(spark, fn):
+    """(result, descriptions of the Spark jobs ``fn`` launched), counted by
+    job-ID delta around the call."""
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+    store = sc._jsc.sc().statusStore()
+
+    def last_job():
+        bus.waitUntilEmpty()
+        ids = sc.statusTracker().getJobIdsForGroup(None)
+        return max(ids) if ids else -1
+
+    first = last_job()
+    out = fn()
+    descs = []
+    for jid in range(first + 1, last_job() + 1):
+        d = store.job(jid).description()
+        descs.append(d.get() if d.isDefined() else None)
+    return out, descs
+
+
+def test_ingest_job_counts_and_descriptions(spark, tmp_path, pipe_args):
+    # a backfill is three writes (schema registry, data, ledger) and no
+    # other job; a replay is the ledger anti-join (broadcast + collect)
+    schema = "id long, v string"
+    z = make_zip(tmp_path, "b1.zip", {
+        f"d{i}.json": [{"id": i, "v": "x"}, {"id": 10 + i, "v": "y"}] for i in range(4)
+    })
+    sc = spark.sparkContext
+    sc.setJobDescription("caller")
+    try:
+        r, descs = _jobs_during(spark, lambda: run_ingest(spark, z, **pipe_args, json_schema=schema))
+        assert (r.processed_files, r.rows_written) == (4, 8)
+        assert descs == ["run_ingest:registry", "run_ingest:write", "run_ingest:ledger"]
+        assert sc.getLocalProperty("spark.job.description") == "caller"
+        r, descs = _jobs_during(spark, lambda: run_ingest(spark, z, **pipe_args, json_schema=schema))
+        assert r.skipped
+        assert descs == ["run_ingest:discover"] * 2
+        assert sc.getLocalProperty("spark.job.description") == "caller"
+    finally:
+        sc.setLocalProperty("spark.job.description", None)
+
+    # 100 paths cross Spark's parallel-listing threshold: one more job,
+    # which Spark itself describes
+    big = make_zip(tmp_path, "big.zip", {f"f{i:03d}.json": [{"id": i, "v": "x"}] for i in range(100)})
+    big_args = {k: v + "_big" for k, v in pipe_args.items()}
+    r, descs = _jobs_during(spark, lambda: run_ingest(spark, big, **big_args, json_schema=schema))
+    assert (r.processed_files, r.rows_written) == (100, 100)
+    assert len(descs) <= 4
+    ours = [d for d in descs if not d.startswith("Listing leaf files")]
+    assert ours == ["run_ingest:registry", "run_ingest:write", "run_ingest:ledger"], descs
+    assert spark.read.parquet(big_args["out_dir"]).count() == 100
 
 
 def test_compact_after_bounds_small_files(spark, tmp_path, pipe_args):
