@@ -431,44 +431,6 @@ def dir_bytes(spark: SparkSession, path: str) -> int:
     return int(fs.getContentSummary(hadoop_path).getLength())
 
 
-def compact_parquet(
-    spark: SparkSession,
-    src_dir: str,
-    dest_dir: str,
-    target_mb: int = 128,
-) -> tuple[int, int]:
-    """Small-files compaction: rewrite a parquet directory into
-    ~``target_mb`` files. Returns (n_files_before, n_files_after).
-
-    The small-file problem is THE operational tax of incremental appends
-    (each pipeline run adds a file per partition; a year of hourly runs =
-    ~10⁴ files whose open/footer costs dominate scans). Periodic compaction
-    into scan-sized files restores read throughput. Uses coalesce() when
-    shrinking (no shuffle — merges existing partitions) and repartition()
-    only if the source has too FEW partitions.
-    """
-    def _count_parquet_files(d: str) -> int:
-        # Hadoop FS listStatus (like dir_bytes) so the count is real files
-        # on ANY supported scheme, not read partitions or a local listdir
-        jvm = spark._jvm
-        p = jvm.org.apache.hadoop.fs.Path(d)
-        fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-        return sum(
-            1
-            for st in fs.listStatus(p)
-            if st.isFile() and st.getPath().getName().endswith(".parquet")
-        )
-
-    df = spark.read.parquet(src_dir)
-    n_before = _count_parquet_files(src_dir)
-    n_parts = df.rdd.getNumPartitions()
-    total = dir_bytes(spark, src_dir)
-    n_target = max(1, -(-total // (target_mb * 1024 * 1024)))  # ceil div
-    out = df.coalesce(n_target) if n_target < n_parts else df.repartition(n_target)
-    out.write.mode("overwrite").parquet(dest_dir)
-    return n_before, _count_parquet_files(dest_dir)
-
-
 def _compact_manifest_path(path: str) -> str:
     return path.rstrip("/") + ".__compact_manifest__"
 

@@ -214,11 +214,10 @@ def gram_novelty(
     corpus-vs-benchmark).
 
     Scale: distinct (doc, gram) pairs feed BOTH the doc-frequency
-    aggregate and the join probe — identical subplans inside one
-    execution, so AQE reuses the exploded scan's stages (measured on the
-    graph ops; no checkpoint needed). Two gram-keyed shuffles + one
-    doc-keyed aggregate; everything integer until the single rounded
-    ratio, so the oracle twin is exact."""
+    aggregate and the join probe, from one lazily checkpointed tokenize
+    pass (the two copies never canonicalize equal, see below). Two
+    gram-keyed shuffles + one doc-keyed aggregate; everything integer
+    until the single rounded ratio, so the oracle twin is exact."""
     from .curation import _contiguous_grams
 
     base = _gram_base(df, id_col, text_col)

@@ -68,14 +68,9 @@ def _json_from_strings(spark: SparkSession, docs: DataFrame) -> DataFrame:
     """Parse a one-column DataFrame of JSON document strings with the full
     JSON datasource (schema inference, top-level-array explosion). The
     JVM ``Dataset.as(Encoders.STRING())`` bridge keeps the documents
-    JVM-side; the RDD fallback pays one Python round-trip of the strings
-    but is semantically identical."""
-    try:
-        jvm = spark._jvm
-        jds = getattr(docs._jdf, "as")(jvm.org.apache.spark.sql.Encoders.STRING())
-        return DataFrame(spark._jsparkSession.read().json(jds), spark)
-    except Exception:
-        return spark.read.json(docs.rdd.map(lambda r: r[0]))
+    JVM-side."""
+    jds = getattr(docs._jdf, "as")(spark._jvm.org.apache.spark.sql.Encoders.STRING())
+    return DataFrame(spark._jsparkSession.read().json(jds), spark)
 
 
 def _literal(path: str) -> str:

@@ -1940,7 +1940,6 @@ def snapshot_merge(
     key_cols: list[str],
     batch_id: int | None = None,
     delete_col: str | None = None,
-    _materialized: bool = False,
 ) -> int:
     """MERGE (upsert) into a snapshot table with FILE-GRANULAR
     copy-on-write: only the files that actually contain a matched key
@@ -1987,11 +1986,7 @@ def snapshot_merge(
     # computes EVERY partition, so the checkpoint finalizes with no
     # missing-partition follow-up — one job where eager + validate was
     # two, and still exactly one evaluation of the plan.
-    # ``_materialized=True`` (internal; mirror_snapshot_changes) promises
-    # the caller ALREADY checkpoint-marked ``updates`` — re-marking would
-    # copy every block once more, a full extra pass per sync.
-    if not _materialized:
-        updates = updates.localCheckpoint(eager=False)
+    updates = updates.localCheckpoint(eager=False)
     if delete_col is not None:
         if delete_col not in updates.columns:
             raise ValueError(

@@ -105,24 +105,15 @@ def mirror_snapshot_changes(
             .withColumn(_DEL, F.lit(True))
         )
         changeset = upserts.unionByName(dels)
-    # ONE evaluation of the (O(churn)) change-feed diff, and ONE Spark
-    # job for evaluation + emptiness + validation combined: the LAZY
-    # checkpoint mark makes snapshot_merge's validation aggregate the
-    # materializing action (its single job covers every partition), and
-    # the separate limit(1).count() emptiness probe is gone — an empty
-    # changeset comes back as the merge's no-op return (head version
-    # unchanged), which is when the cursor-advance append runs instead.
-    # Without the barrier the multiset diff executed twice per sync
-    # (measured as the dominant cost of a mirror sync); with the eager
-    # barrier + probe it cost two extra jobs per sync.
-    changeset = changeset.localCheckpoint(eager=False)
+    # ONE evaluation of the (O(churn)) change-feed diff, and no emptiness
+    # probe: snapshot_merge pins its input with a lazy checkpoint that its
+    # validation aggregate materializes, so that one job evaluates the
+    # diff, and an empty changeset comes back as the merge's no-op return
+    # (head version unchanged), which is when the cursor-advance append
+    # runs instead.
     dst_head_version = sn.snapshot_versions(spark, dst)[-1]
-    # _materialized: the checkpoint mark above IS the merge's one-eval
-    # barrier — re-marking inside snapshot_merge would copy every
-    # changeset block a second time (one full extra pass per sync)
     new_version = sn.snapshot_merge(
-        changeset, dst, key_cols, batch_id=src_head, delete_col=_DEL,
-        _materialized=True,
+        changeset, dst, key_cols, batch_id=src_head, delete_col=_DEL
     )
     if new_version == dst_head_version:
         # nothing changed between the versions (e.g. pure compaction on

@@ -125,18 +125,6 @@ def test_load_star_registers_views(spark, sf_dir):
             spark.catalog.dropTempView(name)
 
 
-def test_compact_parquet_merges_small_files(spark, tmp_path):
-    src, dst = str(tmp_path / "frag"), str(tmp_path / "compact")
-    spark.range(0, 2000).repartition(20).write.parquet(src)
-    import os as _os
-
-    n_src_files = len([f for f in _os.listdir(src) if f.endswith(".parquet")])
-    assert n_src_files >= 10  # genuinely fragmented input
-    before, after = tio.compact_parquet(spark, src, dst, target_mb=64)
-    assert after < n_src_files and after >= 1
-    assert spark.read.parquet(dst).count() == 2000
-
-
 def test_partition_filter_prunes_at_plan_time(spark, tmp_path):
     out = str(tmp_path / "bydate")
     df = spark.createDataFrame(
