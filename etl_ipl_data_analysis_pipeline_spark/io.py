@@ -229,15 +229,31 @@ def _fs_and_path(spark: SparkSession, path: str):
 
 
 def staging_path(path: str) -> str:
-    """The ONE temp-dir name :func:`swap_directory` accepts and
-    :func:`recover_swapped` probes. Callers write here, then swap; owning
-    the convention in one place is what lets crash recovery find the
-    newest complete copy."""
+    """The ONE temp-dir name :func:`overwrite_parquet` writes,
+    :func:`swap_directory` swaps in and :func:`recover_swapped` probes;
+    owning the convention in one place is what lets crash recovery find
+    the newest complete copy."""
     return path + ".__tmp__"
 
 
-def swap_directory(spark: SparkSession, tmp_path: str, path: str) -> None:
-    """Crash-safe swap of a freshly-written ``tmp_path`` dir into ``path``.
+def overwrite_parquet(
+    df: DataFrame, path: str, partition_by: list[str] | None = None
+) -> None:
+    """Crash-safe overwrite of the parquet directory ``path`` with ``df``:
+    write to :func:`staging_path` first, then :func:`swap_directory` it in.
+    ``df`` may still be reading ``path`` (state folds, control tables,
+    index compaction): Spark reads lazily, so writing straight over the
+    source would corrupt the plan mid-read."""
+    writer = df.write.mode("overwrite")
+    if partition_by:
+        writer = writer.partitionBy(*partition_by)
+    writer.parquet(staging_path(path))
+    swap_directory(df.sparkSession, path)
+
+
+def swap_directory(spark: SparkSession, path: str) -> None:
+    """Crash-safe swap of the freshly-written :func:`staging_path` dir
+    into ``path``.
 
     Two-phase: the live dir is renamed ASIDE (``path.__old__``) before the
     temp is renamed in, so at every instant at least one complete copy of
@@ -253,11 +269,7 @@ def swap_directory(spark: SparkSession, tmp_path: str, path: str) -> None:
     every step checks the return so a failed rename can never fall
     through to the cleanup delete and destroy the sole surviving copy.
     """
-    if tmp_path != staging_path(path):
-        raise ValueError(
-            f"tmp_path must be staging_path(path) = {staging_path(path)!r} "
-            f"(got {tmp_path!r}) — recover_swapped probes exactly that name"
-        )
+    tmp_path = staging_path(path)
     fs, dst, jvm = _fs_and_path(spark, path)
     src = jvm.org.apache.hadoop.fs.Path(tmp_path)
     old = jvm.org.apache.hadoop.fs.Path(path + ".__old__")

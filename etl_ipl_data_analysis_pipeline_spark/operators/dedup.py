@@ -9,6 +9,7 @@ disjoint documents never meet.
 
 from __future__ import annotations
 
+import operator
 from functools import reduce
 
 import pyspark.sql.functions as F
@@ -185,6 +186,130 @@ def minhash_signatures(
     )
 
 
+def band_join(
+    new: DataFrame,
+    old: DataFrame,
+    cols: list,
+    keys,
+    band: tuple[str, str],
+    first_band,
+    score,
+    pair: tuple[str, str] = ("id_a", "id_b"),
+    ids=operator.lt,
+    hint: str | None = "SHUFFLE_HASH",
+) -> DataFrame:
+    """The LSH band join every near-duplicate operator shares: candidate
+    pairs of ``new`` × ``old``, each kept exactly once, in the lowest
+    band where both sides agree.
+
+    Both sides are banded the same way — ``cols`` (which must yield
+    ``__id``) plus one row per band from ``posexplode(keys)``, named
+    ``band`` = (band index, band key) — then aliased ``a`` (new) and
+    ``b`` (old) and equi-joined on band index and band key, plus
+    ``ids(a.__id, b.__id)`` unless ``ids`` is None: ``operator.lt`` for
+    a self-join (each unordered pair once), ``operator.ne`` to drop
+    self-pairs of a probe. Returns (``pair[0]`` = a.__id, ``pair[1]`` =
+    b.__id, ``score``); ``first_band`` and ``score`` are expressions
+    over the ``a.``/``b.`` columns, and the caller filters on the score.
+
+    Why the first agreeing band: a pair agreeing on k of the bands
+    collides in k buckets, and near-identical items agree on ALL of
+    them, so a near-dup-dense corpus ships most true pairs once per
+    band. A post-join dropDuplicates would shuffle that whole multiplied
+    candidate stream through one more exchange — the dominant cost of
+    the simhash pairs in a 100x scale smoke, ~4 rows per true pair.
+    Instead the join keeps a pair only where ``a.<band index>`` equals
+    ``first_band``, the lowest band index whose keys agree on both
+    sides (decidable inside the join stage because both sides carry the
+    whole signature the keys come from): one deterministic survivor per
+    pair, no pair-dedup exchange at all, and the multiplied rows die
+    before they are ever shuffled or scored. Two ``first_band`` forms
+    exist: the first true position of ``zip_with(a.<keys>, b.<keys>,
+    ==)`` over a key array both sides carry
+    (:func:`first_agreeing_band`), and the lowest zero band of
+    ``a.__fp XOR b.__fp`` for integer fingerprints
+    (:func:`_fingerprint_pairs`).
+
+    ``hint="SHUFFLE_HASH"`` on ``b`` (not broadcast) for the text and
+    fingerprint joins: in a self-join both sides are the same expensive
+    signature subplan, and identical shuffle exchanges are computed once
+    (ReusedExchange); a broadcast would evaluate the pipeline twice and
+    could never hold the full corpus signature set at 100 TB anyway."""
+    a = new.select(*cols, F.posexplode(keys).alias(*band)).alias("a")
+    b = old.select(*cols, F.posexplode(keys).alias(*band)).alias("b")
+    on = (F.col(f"a.{band[0]}") == F.col(f"b.{band[0]}")) & (
+        F.col(f"a.{band[1]}") == F.col(f"b.{band[1]}")
+    )
+    if ids is not None:
+        on = on & ids(F.col("a.__id"), F.col("b.__id"))
+    return (
+        a.join(b.hint(hint) if hint else b, on)
+        .filter(F.col(f"a.{band[0]}") == first_band)
+        .select(
+            F.col("a.__id").alias(pair[0]), F.col("b.__id").alias(pair[1]), score
+        )
+    )
+
+
+def first_agreeing_band(arr: str):
+    """:func:`band_join`'s ``first_band`` over a per-band key array
+    ``arr`` carried on both sides: the 0-based first position where they
+    agree."""
+    return (
+        F.array_position(
+            F.zip_with(F.col(f"a.{arr}"), F.col(f"b.{arr}"), lambda x, y: x == y),
+            True,
+        )
+        - 1
+    )
+
+
+def _fingerprint_pairs(
+    new: DataFrame,
+    old: DataFrame,
+    bits: int,
+    n_bands: int,
+    max_hamming: int,
+    pair: tuple[str, str] = ("id_a", "id_b"),
+    ids=operator.lt,
+) -> DataFrame:
+    """Pairs of ``bits``-bit integer fingerprints (``__id``, ``__fp``)
+    within ``max_hamming`` bits, through :func:`band_join` on
+    ``n_bands`` contiguous equal bands. Both the first agreeing band
+    (the lowest zero band of the XOR) and the Hamming distance (popcount
+    of the same XOR, one JVM intrinsic) are computed inside the join
+    stage. Returns (``pair``, hamming)."""
+    if bits % n_bands:
+        raise ValueError(
+            f"bits={bits} must divide into max_hamming+1={n_bands} equal bands"
+        )
+    width = bits // n_bands
+    mask = (1 << width) - 1
+    bands = [
+        F.shiftright(F.col("__fp"), q * width).bitwiseAND(F.lit(mask))
+        for q in range(n_bands)
+    ]
+    xor = F.col("a.__fp").bitwiseXOR(F.col("b.__fp"))
+    block = [
+        F.shiftright(xor, q * width).bitwiseAND(F.lit(mask)) for q in range(n_bands)
+    ]
+    first_zero = F.when(block[0] == 0, 0)
+    for q in range(1, n_bands - 1):
+        first_zero = first_zero.when(block[q] == 0, q)
+    first_zero = first_zero.otherwise(n_bands - 1)
+    return band_join(
+        new,
+        old,
+        ["__id", "__fp"],
+        F.array(*bands),
+        ("q_idx", "q_val"),
+        first_zero,
+        F.bit_count(xor).alias("hamming"),
+        pair,
+        ids,
+    ).filter(F.col("hamming") <= max_hamming)
+
+
 def _band_keys(sig_col, bands: int, rows_per_band: int, hash_family: str):
     """Per-band key expressions over a signature array column. "md5"
     keys on the band's comma-joined VALUE string (no hash collision can
@@ -228,7 +353,8 @@ def minhash_near_dup_pairs(
     as fraction of agreeing signature positions -> filter.
 
     The band join is the LSH trick: only documents agreeing on a full band
-    collide, so the shuffle is O(n·bands), never O(n²). Returns
+    collide, so the shuffle is O(n·bands), never O(n²); each pair is kept
+    in its first agreeing band (:func:`band_join`). Returns
     (id_a, id_b, est_jaccard) with id_a < id_b.
 
     ``hash_family="md5"`` (see minhash_signatures) additionally keys the
@@ -240,15 +366,21 @@ def minhash_near_dup_pairs(
     rows_per_band = num_hashes // bands
     sig = minhash_signatures(df, text_col, id_col, n, num_hashes, seed, hash_family)
     band_keys = _band_keys("__sig", bands, rows_per_band, hash_family)
-    banded = sig.select(
-        "__id",
-        "__sig",
-        F.array(*band_keys).alias("__bhs"),
-    ).select(
-        "__id", "__sig", "__bhs", F.posexplode("__bhs").alias("band_idx", "band_hash")
-    )
-    a = banded.alias("a")
-    b = banded.alias("b")
+    sig = sig.select("__id", "__sig", F.array(*band_keys).alias("__bhs"))
+    return _minhash_band_join(sig, sig, num_hashes, min_jaccard)
+
+
+def _minhash_band_join(
+    new: DataFrame,
+    old: DataFrame,
+    num_hashes: int,
+    min_jaccard: float,
+    pair: tuple[str, str] = ("id_a", "id_b"),
+    ids=operator.lt,
+) -> DataFrame:
+    """:func:`band_join` of two (__id, __sig, __bhs) relations, scored by
+    the fraction of agreeing signature positions. Returns (``pair``,
+    est_jaccard) at or above ``min_jaccard``."""
     # Measured note: an unrolled sum of num_hashes getItem comparisons
     # (to dodge the interpreted zip_with lambda) is ~2x SLOWER here —
     # 64 bounds-checked array accesses per row lose to one fused array
@@ -259,37 +391,17 @@ def minhash_near_dup_pairs(
             lambda v: v,
         )
     ) / F.lit(float(num_hashes))
-    # A pair agreeing on k of the ``bands`` bands collides in k buckets —
-    # near-identical docs agree on ALL bands, so a near-dup-dense corpus
-    # would ship most true pairs ``bands`` times through a post-join
-    # dropDuplicates exchange (the same multiplied-candidate cost the
-    # simhash operator below eliminates). Instead each pair survives only
-    # in its FIRST agreeing band: both sides carry the per-band hash array
-    # (__bhs, ``bands`` longs), so "band_idx is the first position where
-    # the arrays agree" picks one deterministic survivor per pair inside
-    # the join stage and no pair-dedup exchange exists at all.
-    # SHUFFLE_HASH (not broadcast): both sides are the same expensive
-    # signature subplan, and identical shuffle exchanges are computed once
-    # (ReusedExchange); a broadcast would evaluate the pipeline twice and
-    # could never hold the full corpus signature set at 100 TB anyway.
-    first_agree = F.array_position(
-        F.zip_with(F.col("a.__bhs"), F.col("b.__bhs"), lambda x, y: x == y), True
-    )
-    return (
-        a.join(
-            b.hint("SHUFFLE_HASH"),
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col("a.__id") < F.col("b.__id")),
-        )
-        .filter(F.col("a.band_idx") == first_agree - 1)
-        .select(
-            F.col("a.__id").alias("id_a"),
-            F.col("b.__id").alias("id_b"),
-            F.round(est, 4).alias("est_jaccard"),
-        )
-        .filter(F.col("est_jaccard") >= min_jaccard)
-    )
+    return band_join(
+        new,
+        old,
+        ["__id", "__sig", "__bhs"],
+        F.col("__bhs"),
+        ("band_idx", "band_hash"),
+        first_agreeing_band("__bhs"),
+        F.round(est, 4).alias("est_jaccard"),
+        pair,
+        ids,
+    ).filter(F.col("est_jaccard") >= min_jaccard)
 
 
 def minhash_dedup(
@@ -418,60 +530,11 @@ def simhash_near_dup_pairs(
     """SimHash near-dup candidates: block by the 4 16-bit quarters of the
     fingerprint (pigeonhole: hamming<=3 guarantees one equal quarter; wider
     radii trade recall) then score exact Hamming distance within blocks.
-
-    A pair whose fingerprints agree on k quarters matches in k of the four
-    block buckets — a near-dup-dense corpus emits most true pairs 4 times
-    (near-identical docs agree everywhere), and a post-join
-    dropDuplicates would shuffle the whole multiplied candidate stream
-    (the dominant cost of the round-4 100x smoke: ~4 rows per true pair
-    through one exchange). Instead each pair is kept ONLY in its first
-    matching quarter: the matching quarters are exactly the zero 16-bit
-    blocks of fp_a XOR fp_b, so "q_idx is the lowest zero block" picks
-    one deterministic survivor per pair inside the join stage — no
-    pair-dedup exchange exists at all, and the multiplied rows die before
-    ever being shuffled."""
+    Each pair is kept only in its first matching quarter — the matching
+    quarters are exactly the zero 16-bit blocks of fp_a XOR fp_b — so no
+    pair-dedup exchange exists (:func:`band_join`)."""
     fp = simhash_fingerprints(df, text_col, id_col, seed=seed, hash_family=hash_family)
-    quarters = fp.select(
-        "__id",
-        "__fp",
-        F.posexplode(
-            F.array(
-                *[
-                    F.shiftright(F.col("__fp"), q * 16).bitwiseAND(F.lit(0xFFFF))
-                    for q in range(4)
-                ]
-            )
-        ).alias("q_idx", "q_val"),
-    )
-    a, b = quarters.alias("a"), quarters.alias("b")
-    # Hamming distance = popcount of XOR, one JVM intrinsic, computed inside
-    # the join stage; first_zero_block only inspects the same XOR.
-    xor = F.col("a.__fp").bitwiseXOR(F.col("b.__fp"))
-    hamming = F.bit_count(xor)
-    block = [
-        F.shiftright(xor, q * 16).bitwiseAND(F.lit(0xFFFF)) for q in range(4)
-    ]
-    first_zero_block = (
-        F.when(block[0] == 0, 0)
-        .when(block[1] == 0, 1)
-        .when(block[2] == 0, 2)
-        .otherwise(3)
-    )
-    return (
-        a.join(
-            b.hint("SHUFFLE_HASH"),
-            (F.col("a.q_idx") == F.col("b.q_idx"))
-            & (F.col("a.q_val") == F.col("b.q_val"))
-            & (F.col("a.__id") < F.col("b.__id")),
-        )
-        .filter(F.col("a.q_idx") == first_zero_block)
-        .select(
-            F.col("a.__id").alias("id_a"),
-            F.col("b.__id").alias("id_b"),
-            hamming.alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-    )
+    return _fingerprint_pairs(fp, fp, 64, 4, max_hamming)
 
 
 def fingerprint_near_dup_pairs(
@@ -489,58 +552,21 @@ def fingerprint_near_dup_pairs(
     on at least one whole band), equi-join per band, score exact Hamming
     inside the join stage, and keep each pair only in its FIRST
     agreeing band (the lowest zero band of the XOR — no pair-dedup
-    exchange; see simhash_near_dup_pairs for the measured rationale).
+    exchange; see :func:`band_join`).
     NULL fingerprints (decode failures) are dropped before banding.
 
     Scale: one shuffle on (band_idx, band_val); never all-pairs. Returns
     (id_a, id_b, hamming) with id_a < id_b, hamming <= max_hamming."""
-    n_bands = max_hamming + 1
-    if bits % n_bands:
-        raise ValueError(
-            f"bits={bits} must divide into max_hamming+1={n_bands} equal bands"
-        )
-    w = bits // n_bands
-    mask = (1 << w) - 1
-    fp = fps.select(
+    fp = _fingerprints(fps, id_col, fp_col)
+    return _fingerprint_pairs(fp, fp, bits, max_hamming + 1, max_hamming)
+
+
+def _fingerprints(fps: DataFrame, id_col: str, fp_col: str) -> DataFrame:
+    """(__id, __fp bigint) of the non-NULL fingerprints: a NULL (decode
+    failure) never pairs."""
+    return fps.select(
         F.col(id_col).alias("__id"), F.col(fp_col).cast("bigint").alias("__fp")
     ).filter(F.col("__fp").isNotNull())
-    bands = fp.select(
-        "__id",
-        "__fp",
-        F.posexplode(
-            F.array(
-                *[
-                    F.shiftright(F.col("__fp"), q * w).bitwiseAND(F.lit(mask))
-                    for q in range(n_bands)
-                ]
-            )
-        ).alias("q_idx", "q_val"),
-    )
-    a, b = bands.alias("a"), bands.alias("b")
-    xor = F.col("a.__fp").bitwiseXOR(F.col("b.__fp"))
-    hamming = F.bit_count(xor)
-    block = [
-        F.shiftright(xor, q * w).bitwiseAND(F.lit(mask)) for q in range(n_bands)
-    ]
-    first_zero = F.when(block[0] == 0, 0)
-    for q in range(1, n_bands - 1):
-        first_zero = first_zero.when(block[q] == 0, q)
-    first_zero = first_zero.otherwise(n_bands - 1)
-    return (
-        a.join(
-            b.hint("SHUFFLE_HASH"),
-            (F.col("a.q_idx") == F.col("b.q_idx"))
-            & (F.col("a.q_val") == F.col("b.q_val"))
-            & (F.col("a.__id") < F.col("b.__id")),
-        )
-        .filter(F.col("a.q_idx") == first_zero)
-        .select(
-            F.col("a.__id").alias("id_a"),
-            F.col("b.__id").alias("id_b"),
-            hamming.alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-    )
 
 
 def fingerprint_incremental_pairs(
@@ -556,65 +582,20 @@ def fingerprint_incremental_pairs(
     contract applied to perceptual hashes): the existing corpus enters
     ONLY as its (id, fingerprint) index, the new batch is banded the
     same way, and each (new, old) pair within the Hamming radius
-    surfaces exactly once via the first-agreeing-band rule. Old media
+    surfaces exactly once via :func:`band_join`'s first agreeing band;
+    NULL fingerprints on either side never pair. Old media
     bytes are never re-decoded — per batch the cost is the batch's
     banding plus an equi-join against the band-keyed index.
 
     Returns (new_id, old_id, hamming)."""
-    n_bands = max_hamming + 1
-    if bits % n_bands:
-        raise ValueError(
-            f"bits={bits} must divide into max_hamming+1={n_bands} equal bands"
-        )
-    w = bits // n_bands
-    mask = (1 << w) - 1
-
-    def banded(fp: DataFrame) -> DataFrame:
-        return fp.select(
-            "__id",
-            "__fp",
-            F.posexplode(
-                F.array(
-                    *[
-                        F.shiftright(F.col("__fp"), q * w).bitwiseAND(F.lit(mask))
-                        for q in range(n_bands)
-                    ]
-                )
-            ).alias("q_idx", "q_val"),
-        )
-
-    new_b = banded(
-        new_fps.select(
-            F.col(id_col).alias("__id"), F.col(fp_col).cast("bigint").alias("__fp")
-        ).filter(F.col("__fp").isNotNull())
-    ).alias("a")
-    old_b = banded(
-        index.select(
-            F.col(id_col).alias("__id"), F.col(fp_col).cast("bigint").alias("__fp")
-        ).filter(F.col("__fp").isNotNull())
-    ).alias("b")
-    xor = F.col("a.__fp").bitwiseXOR(F.col("b.__fp"))
-    hamming = F.bit_count(xor)
-    block = [
-        F.shiftright(xor, q * w).bitwiseAND(F.lit(mask)) for q in range(n_bands)
-    ]
-    first_zero = F.when(block[0] == 0, 0)
-    for q in range(1, n_bands - 1):
-        first_zero = first_zero.when(block[q] == 0, q)
-    first_zero = first_zero.otherwise(n_bands - 1)
-    return (
-        new_b.join(
-            old_b.hint("SHUFFLE_HASH"),
-            (F.col("a.q_idx") == F.col("b.q_idx"))
-            & (F.col("a.q_val") == F.col("b.q_val")),
-        )
-        .filter(F.col("a.q_idx") == first_zero)
-        .select(
-            F.col("a.__id").alias("new_id"),
-            F.col("b.__id").alias("old_id"),
-            hamming.alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
+    return _fingerprint_pairs(
+        _fingerprints(new_fps, id_col, fp_col),
+        _fingerprints(index, id_col, fp_col),
+        bits,
+        max_hamming + 1,
+        max_hamming,
+        ("new_id", "old_id"),
+        None,
     )
 
 
@@ -1471,9 +1452,9 @@ def minhash_incremental_pairs(
     O(new·bands) LSH shuffle against an index pre-bucketable by band key
     at rest, never new × old.
 
-    The first-agreeing-band trick carries over unchanged to the
-    cross-relation join (both sides carry the per-band key array, so a
-    pair agreeing on k bands survives exactly once), and with
+    The same :func:`band_join` serves the cross-relation join (both
+    sides carry the per-band key array, so a pair agreeing on k bands
+    survives exactly once), and with
     ``hash_family="md5"`` every signature and band key is cross-engine
     exact, so the incremental pipeline sits under a full DuckDB oracle.
 
@@ -1488,42 +1469,12 @@ def minhash_incremental_pairs(
     old_sig = index.select(
         F.col(id_col).alias("__id"), F.col("sig").alias("__sig")
     )
-
-    def banded(sig: DataFrame) -> DataFrame:
-        keys = _band_keys("__sig", bands, rows_per_band, hash_family)
-        return sig.select(
-            "__id", "__sig", F.array(*keys).alias("__bhs")
-        ).select(
-            "__id",
-            "__sig",
-            "__bhs",
-            F.posexplode("__bhs").alias("band_idx", "band_hash"),
-        )
-
-    a = banded(new_sig).alias("a")
-    b = banded(old_sig).alias("b")
-    est = F.size(
-        F.filter(
-            F.zip_with(F.col("a.__sig"), F.col("b.__sig"), lambda x, y: x == y),
-            lambda v: v,
-        )
-    ) / F.lit(float(num_hashes))
-    first_agree = F.array_position(
-        F.zip_with(F.col("a.__bhs"), F.col("b.__bhs"), lambda x, y: x == y),
-        True,
-    ) - F.lit(1)
-    pairs = (
-        a.join(
-            b.hint("SHUFFLE_HASH"),
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_hash") == F.col("b.band_hash")),
-        )
-        .filter(F.col("a.band_idx") == first_agree)
-        .select(
-            F.col("a.__id").alias("new_id"),
-            F.col("b.__id").alias("old_id"),
-            F.round(est, 4).alias("est_jaccard"),
-        )
-        .filter(F.col("est_jaccard") >= F.lit(min_jaccard))
+    keys = F.array(*_band_keys("__sig", bands, rows_per_band, hash_family))
+    return _minhash_band_join(
+        new_sig.select("__id", "__sig", keys.alias("__bhs")),
+        old_sig.select("__id", "__sig", keys.alias("__bhs")),
+        num_hashes,
+        min_jaccard,
+        ("new_id", "old_id"),
+        None,
     )
-    return pairs

@@ -13,6 +13,8 @@ expression form would re-evaluate per element — see each docstring.
 
 from __future__ import annotations
 
+import operator
+
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
@@ -490,45 +492,46 @@ def embedding_near_dup_pairs(
     only ~T/2^n_planes ≈ 0.2%, keeping the self-join far from O(n²).
 
     A true near-dup pair collides in MOST of the ``n_tables`` buckets
-    (high-sim vectors agree in nearly every table), and each collision
-    used to evaluate the exact 64-dim cosine and then feed a post-filter
-    dropDuplicates — ~T cosines plus T dedup-exchange rows per true pair,
-    the dominant cost of a near-dup-dense corpus. Each pair now survives
-    only in its FIRST agreeing table (both sides carry the per-table
-    bucket array, so "tbl is the first position where the arrays agree"
-    is decidable inside the join stage, before the cosine): one cosine
-    per pair, no pair-dedup exchange at all — the same
-    multiplied-candidate elimination as the minhash/simhash operators."""
-    from ..functions import dot
+    (high-sim vectors agree in nearly every table); each pair survives
+    only in its first agreeing table (:func:`dedup.band_join`), decided
+    inside the join stage before the cosine: one cosine per pair, no
+    pair-dedup exchange at all."""
+    c = embedding_sig_index(df, n_planes, n_tables, dim, id_col, vec_col, seed)
+    return _embedding_band_join(c, c, id_col, min_sim)
 
-    c = embedding_sig_index(
-        df, n_planes, n_tables, dim, id_col, vec_col, seed
-    ).select(
-        F.col(id_col).alias("__id"), "__vec", "__norm", "__bkts",
-        F.posexplode("__bkts").alias("tbl", "bucket"),
-    )
-    a, b = c.alias("a"), c.alias("b")
-    first_agree = F.array_position(
-        F.zip_with(F.col("a.__bkts"), F.col("b.__bkts"), lambda x, y: x == y), True
-    )
+
+def _embedding_band_join(
+    new: DataFrame,
+    old: DataFrame,
+    id_col: str,
+    min_sim: float,
+    pair: tuple[str, str] = ("id_a", "id_b"),
+    ids=operator.lt,
+) -> DataFrame:
+    """:func:`dedup.band_join` of two :func:`embedding_sig_index`
+    relations on (table, bucket), first agreeing table decided from the
+    __bkts arrays, then one exact cosine per surviving pair from the
+    hoisted norms. No join hint. Returns (``pair``, sim) with sim >=
+    ``min_sim``."""
+    from ..functions import dot
+    from .dedup import band_join, first_agreeing_band
+
+    first_table = first_agreeing_band("__bkts")
     sim = dot(F.col("a.__vec"), F.col("b.__vec")) / (
         F.col("a.__norm") * F.col("b.__norm")
     )
-    return (
-        a.join(
-            b,
-            (F.col("a.tbl") == F.col("b.tbl"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.__id") < F.col("b.__id")),
-        )
-        .filter(F.col("a.tbl") == first_agree - 1)
-        .select(
-            F.col("a.__id").alias("id_a"),
-            F.col("b.__id").alias("id_b"),
-            F.round(sim, 6).alias("sim"),
-        )
-        .filter(F.col("sim") >= min_sim)
-    )
+    return band_join(
+        new,
+        old,
+        [F.col(id_col).alias("__id"), "__vec", "__norm", "__bkts"],
+        F.col("__bkts"),
+        ("tbl", "bucket"),
+        first_table,
+        F.round(sim, 6).alias("sim"),
+        pair,
+        ids,
+        hint=None,
+    ).filter(F.col("sim") >= min_sim)
 
 
 def embedding_sig_index(
@@ -578,11 +581,9 @@ def embedding_incremental_pairs(
 ) -> DataFrame:
     """NEW-vs-INDEXED embedding near-dup pairs: bucket only the incoming
     batch (the index rows carry their build-time __bkts verbatim), join
-    on (table, bucket), decide each pair in its FIRST agreeing table
-    (both sides hold the full bucket arrays, so the zip_with/
-    array_position predicate from the batch self-join dedups candidate
-    multiplicity inside the join stage — no pair-dedup exchange), then
-    one exact cosine per surviving pair. Returns (new_id, old_id, sim)
+    on (table, bucket), decide each pair in its first agreeing table
+    (:func:`dedup.band_join`, as in the batch self-join), then one exact
+    cosine per surviving pair. Returns (new_id, old_id, sim)
     with sim >= min_sim. Same hyperplanes, same first-agree rule and
     the same float associations as :func:`embedding_near_dup_pairs`, so
     intra-batch pairs + these cross-batch pairs accumulate to EXACTLY
@@ -592,40 +593,11 @@ def embedding_incremental_pairs(
     O(batch) bucketing + a join sized by the batch's true collisions,
     never O(history) re-hashing. Contract: new ids are disjoint from
     indexed ids (the ledger's dedup job, as for minhash)."""
-    from ..functions import dot
-
     new_sigs = embedding_sig_index(
         new_df, n_planes, n_tables, dim, id_col, vec_col, seed
     )
-    a = new_sigs.select(
-        F.col(id_col).alias("__id"), "__vec", "__norm", "__bkts",
-        F.posexplode("__bkts").alias("tbl", "bucket"),
-    ).alias("a")
-    b = index.select(
-        F.col(id_col).alias("__id"), "__vec", "__norm", "__bkts",
-        F.posexplode("__bkts").alias("tbl", "bucket"),
-    ).alias("b")
-    first_agree = F.array_position(
-        F.zip_with(F.col("a.__bkts"), F.col("b.__bkts"), lambda x, y: x == y),
-        True,
-    )
-    sim = dot(F.col("a.__vec"), F.col("b.__vec")) / (
-        F.col("a.__norm") * F.col("b.__norm")
-    )
-    return (
-        a.join(
-            b,
-            (F.col("a.tbl") == F.col("b.tbl"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.__id") != F.col("b.__id")),
-        )
-        .filter(F.col("a.tbl") == first_agree - 1)
-        .select(
-            F.col("a.__id").alias("new_id"),
-            F.col("b.__id").alias("old_id"),
-            F.round(sim, 6).alias("sim"),
-        )
-        .filter(F.col("sim") >= min_sim)
+    return _embedding_band_join(
+        new_sigs, index, id_col, min_sim, ("new_id", "old_id"), operator.ne
     )
 
 
@@ -1847,25 +1819,18 @@ def ivf_compact_index(spark, path: str) -> None:
     repartition the cells table BY the cell key (all rows of a cell
     hash to one task, so each partition directory collapses to one
     file), write to the staging path, and crash-safely swap it in
-    (io.swap_directory — at every instant a complete copy exists on
+    (io.overwrite_parquet — at every instant a complete copy exists on
     disk). The model is untouched and rows are only moved, never
     re-routed, so search results are value-identical before and after —
     pytest-pinned. Cost scales with the INDEX (vectors x dim), never
     with re-clustering; at 100 TB run it per-cell-range on a cadence,
     exactly like any small-file compaction job."""
-    from ..io import staging_path, swap_directory
+    from ..io import overwrite_parquet
 
-    base = path.rstrip("/")
-    cells = base + "/cells"
-    tmp = staging_path(cells)
-    (
-        spark.read.parquet(cells)
-        .repartition(F.col("cell"))
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(tmp)
+    cells = path.rstrip("/") + "/cells"
+    overwrite_parquet(
+        spark.read.parquet(cells).repartition(F.col("cell")), cells, ["cell"]
     )
-    swap_directory(spark, tmp, cells)
 
 
 def pq_compact_index(spark, path: str, num_files: int = 1) -> None:
@@ -1875,18 +1840,10 @@ def pq_compact_index(spark, path: str, num_files: int = 1) -> None:
     the crash-safe staging swap; codes are untouched integers, so
     search results are value-identical — pytest-pinned alongside the
     IVF twin."""
-    from ..io import staging_path, swap_directory
+    from ..io import overwrite_parquet
 
-    base = path.rstrip("/")
-    codes = base + "/codes"
-    tmp = staging_path(codes)
-    (
-        spark.read.parquet(codes)
-        .repartition(num_files)
-        .write.mode("overwrite")
-        .parquet(tmp)
-    )
-    swap_directory(spark, tmp, codes)
+    codes = path.rstrip("/") + "/codes"
+    overwrite_parquet(spark.read.parquet(codes).repartition(num_files), codes)
 
 
 def ivf_search_index_exact(

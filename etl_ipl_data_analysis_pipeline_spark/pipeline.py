@@ -29,10 +29,9 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from .io import (
     expand_zip,
     fetch_url,
+    overwrite_parquet,
     read_binary_files,
     recover_swapped,
-    staging_path,
-    swap_directory,
     write_parquet,
 )
 from .io import read_json as _read_json
@@ -100,15 +99,12 @@ def _restores_job_description(fn):
 def _save_small_table(df: DataFrame, path: str) -> None:
     """Overwrite a control table (ledger / schema registry) that the input
     plan may still be READING from: write to a temp sibling path first, then
-    crash-safely swap directories (io.swap_directory keeps one complete
+    crash-safely swap directories (io.overwrite_parquet keeps one complete
     copy on disk at every instant). Spark reads lazily, so writing straight
     over the source path would corrupt the plan mid-read — and a
     collect()-to-driver round-trip would cap the ledger at driver memory
     (one row per ingested file is 10⁷ rows at real fleet scale)."""
-    spark = df.sparkSession
-    tmp = staging_path(path)
-    df.coalesce(1).write.mode("overwrite").parquet(tmp)
-    swap_directory(spark, tmp, path)
+    overwrite_parquet(df.coalesce(1), path)
 
 
 @_restores_job_description

@@ -15,11 +15,12 @@ from . import load, register
 
 def _wipe_stream_state(*paths: str) -> None:
     """rm -rf each state path AND its crash-swap leftovers. A previous
-    run killed inside _swap_write can leave a COMPLETE stale copy at
-    <path>.__tmp__ (staged, newer) or <path>.__old__ (set aside);
-    recover_swapped would then PROMOTE it inside this run's first
-    micro-batch and contaminate a deliberately-fresh accumulation with
-    the dead run's state. Fresh-start queries must clear all three."""
+    run killed inside io.overwrite_parquet can leave a COMPLETE stale
+    copy at <path>.__tmp__ (staged, newer) or <path>.__old__ (set
+    aside); recover_swapped would then PROMOTE it inside this run's
+    first micro-batch and contaminate a deliberately-fresh accumulation
+    with the dead run's state. Fresh-start queries must clear all
+    three."""
     import shutil
 
     for p in paths:

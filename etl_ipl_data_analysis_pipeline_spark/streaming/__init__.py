@@ -11,11 +11,24 @@ stops — the ledger becomes Spark's own offset log.
   session) with watermarks; the same expressions as the batch queries in
   ``plans/streaming_q.py`` (tests prove batch/stream equivalence).
 - :mod:`.incremental` — checkpointed AvailableNow file pipeline (L1/L3
-  streaming twin).
+  streaming twin) and :func:`.incremental.drain`.
 - :mod:`.stateful`    — custom stateful operator via
   ``applyInPandasWithState`` (L6).
 - :mod:`.cdc`         — foreachBatch latest-row state maintenance
-  (streaming CDC-apply; micro-batch-boundary independent).
+  (streaming CDC-apply; micro-batch-boundary independent), plain or
+  into a versioned snapshot table.
+- :mod:`.sketch_stream` — foreachBatch folds into persisted state: KMV,
+  count, Bloom and signature-index states, the near-duplicate pair
+  streams, and streaming BM25 index maintenance.
+- :mod:`.snapshot_ingest` — one snapshot-table version per micro-batch,
+  exactly once.
+- :mod:`.changefeed`  — snapshot change feed mirrored into another
+  table.
+- :mod:`.joins`       — stream-stream joins with watermarks.
+- :mod:`.dedup`       — watermark-bounded exact dedup on arrival.
+
+Every foreachBatch stream above drains through one helper,
+:func:`.incremental.drain` (``Trigger.AvailableNow``, checkpointed).
 """
 
 from .cdc import latest_per_key, run_cdc_apply

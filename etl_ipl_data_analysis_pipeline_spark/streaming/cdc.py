@@ -8,10 +8,9 @@ the persisted state by re-running the same arg-max over
 ``state UNION batch-latest`` — an associative, commutative merge, so the
 result is independent of how the stream was micro-batched (proven in
 tests/test_streaming.py by comparing 1-file-per-trigger against
-one-shot). State writes go through a temp-path + atomic-rename swap
-(same discipline as pipeline._save_small_table) so a crashed batch never
-leaves a torn table; re-running a batch is idempotent because the merge
-is.
+one-shot). State writes go through incremental.fold_into's temp-path +
+atomic-rename swap so a crashed batch never leaves a torn table;
+re-running a batch is idempotent because the merge is.
 
 At fleet scale the state table is O(live keys), not O(event history) —
 each batch shuffles O(batch + live keys touched), never the history.
@@ -20,9 +19,9 @@ each batch shuffles O(batch + live keys touched), never the history.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Window
 
-from ..io import recover_swapped, staging_path, swap_directory
+from .incremental import drain, fold_into
 
 
 def latest_per_key(
@@ -41,13 +40,6 @@ def latest_per_key(
     )
 
 
-def _swap_write(df: DataFrame, path: str) -> None:
-    spark = df.sparkSession
-    tmp = staging_path(path)
-    df.write.mode("overwrite").parquet(tmp)
-    swap_directory(spark, tmp, path)
-
-
 def run_cdc_apply(
     stream_df: DataFrame,
     state_path: str,
@@ -61,28 +53,15 @@ def run_cdc_apply(
     spark = stream_df.sparkSession
 
     def apply_batch(batch: DataFrame, _batch_id: int) -> None:
-        incoming = latest_per_key(batch, keys, order_cols)
-        sess = batch.sparkSession
-        # recover_swapped (not a bare exists) — a crash mid-swap must not
-        # read as "no state yet": the checkpoint already marks prior batches
-        # committed, so rebuilding from this batch alone would silently drop
-        # all accumulated latest-per-key state.
-        if recover_swapped(sess, state_path):
-            current = sess.read.parquet(state_path)
-            merged = latest_per_key(
+        fold_into(
+            latest_per_key(batch, keys, order_cols),
+            state_path,
+            lambda current, incoming: latest_per_key(
                 current.unionByName(incoming), keys, order_cols
-            )
-        else:
-            merged = incoming
-        _swap_write(merged, state_path)
+            ),
+        )
 
-    q = (
-        stream_df.writeStream.foreachBatch(apply_batch)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", f"{state_path}.__ckpt__")
-        .start()
-    )
-    q.awaitTermination()
+    drain(stream_df, apply_batch, f"{state_path}.__ckpt__")
     return spark.read.parquet(state_path)
 
 
@@ -210,14 +189,7 @@ def run_snapshot_cdc_stream(
                     sess, table_path, keep_last=expire_retain, staging_grace_s=0
                 )
 
-    q = (
-        stream_df.writeStream.foreachBatch(apply_batch)
-        .trigger(availableNow=True)
-        .option(
-            "checkpointLocation",
-            checkpoint or table_path.rstrip("/") + "__checkpoint",
-        )
-        .start()
+    drain(
+        stream_df, apply_batch, checkpoint or table_path.rstrip("/") + "__checkpoint"
     )
-    q.awaitTermination()
     return sn.snapshot_read(spark, table_path)

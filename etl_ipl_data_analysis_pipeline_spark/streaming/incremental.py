@@ -14,6 +14,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..io import overwrite_parquet, recover_swapped
+
 
 def _stream_reader(spark: SparkSession, path: str, fmt: str, schema):
     """File-source streams require a directory basePath; for a single-file
@@ -70,6 +72,36 @@ def file_stream_pipeline(
     query.awaitTermination()
     progress = query.recentProgress
     return sum(1 for p in progress if p["numInputRows"] > 0)
+
+
+def drain(stream_df: DataFrame, apply_batch, checkpoint: str) -> None:
+    """Run ``apply_batch(batch, batch_id)`` on every micro-batch of
+    ``stream_df`` available now (``foreachBatch`` under
+    ``Trigger.AvailableNow``) and return once the source is drained. The
+    checkpoint at ``checkpoint`` records which input is done, so a rerun
+    sees only what arrived since; a batch whose effects landed before its
+    checkpoint commit is re-delivered, and every caller's fold absorbs
+    that replay."""
+    (
+        stream_df.writeStream.foreachBatch(apply_batch)
+        .trigger(availableNow=True)
+        .option("checkpointLocation", checkpoint)
+        .start()
+        .awaitTermination()
+    )
+
+
+def fold_into(incoming: DataFrame, path: str, merge) -> None:
+    """Crash-safely overwrite the parquet state at ``path`` with
+    ``merge(current, incoming)``, or with ``incoming`` alone when no
+    state exists yet. recover_swapped (not a bare exists): a crash
+    mid-swap must not read as "no state yet" — the checkpoint already
+    marks prior batches committed, so rebuilding from this batch alone
+    would silently drop all accumulated state."""
+    sess = incoming.sparkSession
+    if recover_swapped(sess, path):
+        incoming = merge(sess.read.parquet(path), incoming)
+    overwrite_parquet(incoming, path)
 
 
 def checkpoint_dir(base: str, name: str) -> str:

@@ -1,25 +1,57 @@
-"""Streaming sketch maintenance (L6 × sketches): fold each micro-batch
-into a persisted KMV bottom-k state with ``foreachBatch``.
+"""Streaming state maintenance (L6 × sketches): fold each micro-batch
+into persisted state with ``foreachBatch``.
 
-The rollup every monitoring pipeline wants: "distinct users so far",
-maintained as the stream drains, answerable at any moment from O(k)
-rows per group without touching history. The KMV merge is associative
-and commutative (bottom-k of a union is the bottom-k of the union of
-bottom-k's), so the final state is independent of micro-batch
-boundaries — and because the sketch is a deterministic SET of md5
-hashes, the streamed result is bit-identical to a single-shot batch
-build, which puts the whole streaming path under the exact-hash
-oracle gate. State writes reuse the CDC module's crash-safe
-temp-path + atomic-rename swap.
+- :func:`_fold_stream` — one fold for the idempotent states: KMV
+  bottom-k sketches, Bloom word tables and the MinHash signature index.
+  The rollup every monitoring pipeline wants ("distinct users so far")
+  is maintained as the stream drains, answerable at any moment from
+  O(k) rows per group without touching history. Each merge is
+  associative, commutative and idempotent, so the final state is
+  independent of micro-batch boundaries — and because the states are
+  deterministic SETs of md5 hashes, bits or signatures, the streamed
+  result is bit-identical to a single-shot batch build, which puts the
+  whole streaming path under the exact-hash oracle gate.
+- :func:`run_count_stream` — additive counts, made exactly-once by a
+  batch-id marker.
+- :func:`_run_pair_stream` — one runner for the three near-duplicate
+  pair streams (text MinHash, media fingerprints, embeddings).
+- :func:`run_bm25_index_stream` — per-batch delta indexes, folded once.
+
+State writes go through io.overwrite_parquet's crash-safe temp-path +
+atomic-rename swap, and every stream here drains through
+incremental.drain.
 """
 
 from __future__ import annotations
 
+import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-from ..io import recover_swapped
+from ..io import overwrite_parquet, recover_swapped
 from ..operators import sketches
-from .cdc import _swap_write
+from .incremental import drain, fold_into
+
+
+def _fold_stream(
+    stream_df: DataFrame, state_path: str, build, merge
+) -> DataFrame:
+    """Drain ``stream_df``, folding each micro-batch's ``build(batch)``
+    into the state at ``state_path`` with ``merge(current, incoming)``;
+    returns the final state. ``merge`` must be associative, commutative
+    and idempotent — then the state is independent of micro-batch
+    boundaries and a replayed batch changes nothing, so no batch marker
+    is needed. A source that yielded zero micro-batches never wrote
+    state: the result is then ``build`` of an empty batch, the exact
+    state schema, instead of a read that raises on a missing path."""
+    drain(
+        stream_df,
+        lambda batch, _batch_id: fold_into(build(batch), state_path, merge),
+        state_path.rstrip("/") + "__checkpoint",
+    )
+    spark = stream_df.sparkSession
+    if recover_swapped(spark, state_path):
+        return spark.read.parquet(state_path)
+    return build(spark.createDataFrame([], stream_df.schema))
 
 
 def run_kmv_stream(
@@ -36,40 +68,20 @@ def run_kmv_stream(
     merge, so the union never carries raw events — O(batch) reduction
     plus O(k·groups) merge, never O(history)."""
     keys = list(keys or [])
-
-    def apply_batch(batch: DataFrame, _batch_id: int) -> None:
-        incoming = sketches.kmv_build(batch, col, keys=keys, k=k)
-        sess = batch.sparkSession
-        if recover_swapped(sess, state_path):
-            current = sess.read.parquet(state_path)
-            merged = sketches.kmv_merge([current, incoming], keys=keys, k=k)
-        else:
-            merged = incoming
-        _swap_write(merged, state_path)
-
-    q = (
-        stream_df.writeStream.foreachBatch(apply_batch)
-        .trigger(availableNow=True)
-        .option(
-            "checkpointLocation", state_path.rstrip("/") + "__checkpoint"
-        )
-        .start()
+    return _fold_stream(
+        stream_df,
+        state_path,
+        lambda batch: sketches.kmv_build(batch, col, keys=keys, k=k),
+        lambda current, incoming: sketches.kmv_merge(
+            [current, incoming], keys=keys, k=k
+        ),
     )
-    q.awaitTermination()
-    spark = stream_df.sparkSession
-    if recover_swapped(spark, state_path):
-        return spark.read.parquet(state_path)
-    # a source that yielded ZERO micro-batches never wrote state: return
-    # an empty sketch with the exact state schema instead of letting the
-    # read raise on a missing path
-    empty = spark.createDataFrame([], stream_df.schema)
-    return sketches.kmv_build(empty, col, keys=keys, k=k)
 
 
 #: constant marker column persisted WITH the count state in the same
 #: atomic swap: the id of the last batch folded in. Summation is additive
 #: (NOT idempotent), so foreachBatch's at-least-once replay — crash after
-#: _swap_write but before the checkpoint commits — would double-count
+#: the state swap but before the checkpoint commits — would double-count
 #: without it.
 _BATCH_MARKER = "__last_batch_id"
 
@@ -94,8 +106,6 @@ def _merge_count_batch(
     state forever; that case raises. State and checkpoint must share a
     lifetime: delete both together or neither. Module-level (not a
     closure) so replay semantics are directly unit-testable."""
-    import pyspark.sql.functions as F
-
     incoming = batch.groupBy(*keys).agg(
         F.count(F.lit(1)).cast("long").alias(count_col)
     )
@@ -122,7 +132,7 @@ def _merge_count_batch(
         )
     else:
         merged = incoming
-    _swap_write(
+    overwrite_parquet(
         merged.withColumn(_BATCH_MARKER, F.lit(batch_id).cast("long")), state_path
     )
 
@@ -149,22 +159,14 @@ def run_count_stream(
     n-gram LM count upkeep, where min-count pruning must happen at READ
     time (pruning during maintenance would drop counts that later
     accumulate past the threshold)."""
-
-    def apply_batch(batch: DataFrame, batch_id: int) -> None:
-        _merge_count_batch(batch, batch_id, state_path, keys, count_col)
-
-    q = (
-        stream_df.writeStream.foreachBatch(apply_batch)
-        .trigger(availableNow=True)
-        .option(
-            "checkpointLocation", state_path.rstrip("/") + "__checkpoint"
-        )
-        .start()
+    drain(
+        stream_df,
+        lambda batch, batch_id: _merge_count_batch(
+            batch, batch_id, state_path, keys, count_col
+        ),
+        state_path.rstrip("/") + "__checkpoint",
     )
-    q.awaitTermination()
     spark = stream_df.sparkSession
-    import pyspark.sql.functions as F
-
     if recover_swapped(spark, state_path):
         state = spark.read.parquet(state_path)
         return state.drop(_BATCH_MARKER)
@@ -191,40 +193,17 @@ def run_bloom_stream(
     final table is bit-identical to a single-shot batch build whatever
     the micro-batch boundaries (or their retries), putting streamed
     membership state under the exact-hash gate. Per batch: O(batch) +
-    O(num_bits/64) merge, never O(history). State writes reuse the
-    crash-safe temp-path + atomic-rename swap."""
+    O(num_bits/64) merge, never O(history)."""
     from ..operators import bloom
 
-    def apply_batch(batch: DataFrame, _batch_id: int) -> None:
-        import pyspark.sql.functions as F
-
-        incoming = bloom.bloom_build(batch, key_col, num_bits, num_hashes, salt)
-        sess = batch.sparkSession
-        if recover_swapped(sess, state_path):
-            current = sess.read.parquet(state_path)
-            merged = (
-                current.unionByName(incoming)
-                .groupBy("word_idx")
-                .agg(F.bit_or("word").alias("word"))
-            )
-        else:
-            merged = incoming
-        _swap_write(merged, state_path)
-
-    q = (
-        stream_df.writeStream.foreachBatch(apply_batch)
-        .trigger(availableNow=True)
-        .option(
-            "checkpointLocation", state_path.rstrip("/") + "__checkpoint"
-        )
-        .start()
+    return _fold_stream(
+        stream_df,
+        state_path,
+        lambda batch: bloom.bloom_build(batch, key_col, num_bits, num_hashes, salt),
+        lambda current, incoming: current.unionByName(incoming)
+        .groupBy("word_idx")
+        .agg(F.bit_or("word").alias("word")),
     )
-    q.awaitTermination()
-    spark = stream_df.sparkSession
-    if recover_swapped(spark, state_path):
-        return spark.read.parquet(state_path)
-    empty = spark.createDataFrame([], stream_df.schema)
-    return bloom.bloom_build(empty, key_col, num_bits, num_hashes, salt)
 
 
 def run_sig_index_stream(
@@ -254,38 +233,90 @@ def run_sig_index_stream(
     arbitrarily (one of the signatures wins).
 
     Per batch: O(batch text) signature build + O(state) id-dedup merge,
-    never O(history) re-hash. State writes reuse the crash-safe
-    temp-path + atomic-rename swap."""
+    never O(history) re-hash."""
     from ..operators.dedup import minhash_sig_index
 
-    def apply_batch(batch: DataFrame, _batch_id: int) -> None:
-        incoming = minhash_sig_index(
+    return _fold_stream(
+        stream_df,
+        state_path,
+        lambda batch: minhash_sig_index(
             batch, text_col, id_col, n, num_hashes, seed, hash_family
-        )
-        sess = batch.sparkSession
-        if recover_swapped(sess, state_path):
-            current = sess.read.parquet(state_path)
-            merged = current.unionByName(incoming).dropDuplicates([id_col])
-        else:
-            merged = incoming
-        _swap_write(merged, state_path)
+        ),
+        lambda current, incoming: current.unionByName(incoming).dropDuplicates(
+            [id_col]
+        ),
+    )
 
-    q = (
-        stream_df.writeStream.foreachBatch(apply_batch)
-        .trigger(availableNow=True)
-        .option(
-            "checkpointLocation", state_path.rstrip("/") + "__checkpoint"
+
+def _run_pair_stream(
+    stream_df: DataFrame,
+    pairs_path: str,
+    index_path: str,
+    id_col: str,
+    prep,
+    intra,
+    cross,
+    sigs,
+    empty_schema: str | None = None,
+) -> DataFrame:
+    """The near-duplicate stream behind the three pair streams below.
+    Per micro-batch: ``rows = prep(batch)``; (1) ``intra(rows)``
+    self-pairs the batch (id_a, id_b, score); (2) ``cross(rows, index)``
+    probes the persisted index at ``index_path`` for (new_id, old_id,
+    score) pairs against every EARLIER batch, whose raw content is never
+    touched again; (3) both fold into the pair table at ``pairs_path``,
+    cross pairs normalized to (least, greatest); (4) ``sigs(rows)``
+    merges into the index by ``id_col``. Every pair of the corpus is
+    either intra-batch or cross-batch exactly once, so the accumulated
+    pair table is IDENTICAL to the single-shot batch pair set whatever
+    the micro-batch boundaries — the batch-boundary-independence
+    contract that puts a streaming dedup under the same oracle as its
+    batch operator.
+
+    Replay safety without a batch marker: pairs and index rows are pure
+    functions of content, ``cross`` drops self-pairs, and both merges
+    dedup by key — so a re-delivered batch (even one whose index merge
+    landed but whose checkpoint commit did not) re-derives rows the
+    distinct absorbs. Per batch: O(batch) hashing + banded joins sized
+    by the batch and its true matches + O(state) key-dedup merges;
+    never O(history) content.
+
+    A source that yielded zero micro-batches returns an empty frame of
+    ``empty_schema``, or when that is None the intra pairs of an empty
+    batch."""
+
+    def apply_batch(batch: DataFrame, _batch_id: int) -> None:
+        sess = batch.sparkSession
+        rows = prep(batch)
+        new_pairs = intra(rows)
+        have_index = recover_swapped(sess, index_path)
+        if have_index:
+            index = sess.read.parquet(index_path)
+            found = cross(rows, index)
+            new_pairs = new_pairs.unionByName(
+                found.select(
+                    F.least("new_id", "old_id").alias("id_a"),
+                    F.greatest("new_id", "old_id").alias("id_b"),
+                    *found.columns[2:],
+                )
+            )
+        fold_into(
+            new_pairs,
+            pairs_path,
+            lambda cur, new: cur.unionByName(new).dropDuplicates(["id_a", "id_b"]),
         )
-        .start()
-    )
-    q.awaitTermination()
+        new_index = sigs(rows)
+        if have_index:
+            new_index = index.unionByName(new_index).dropDuplicates([id_col])
+        overwrite_parquet(new_index, index_path)
+
+    drain(stream_df, apply_batch, pairs_path.rstrip("/") + "__checkpoint")
     spark = stream_df.sparkSession
-    if recover_swapped(spark, state_path):
-        return spark.read.parquet(state_path)
-    empty = spark.createDataFrame([], stream_df.schema)
-    return minhash_sig_index(
-        empty, text_col, id_col, n, num_hashes, seed, hash_family
-    )
+    if recover_swapped(spark, pairs_path):
+        return spark.read.parquet(pairs_path)
+    if empty_schema is not None:
+        return spark.createDataFrame([], empty_schema)
+    return intra(prep(spark.createDataFrame([], stream_df.schema)))
 
 
 def run_minhash_pair_stream(
@@ -301,90 +332,32 @@ def run_minhash_pair_stream(
     min_jaccard: float = 0.7,
     hash_family: str = "md5",
 ) -> DataFrame:
-    """END-TO-END streaming near-duplicate detection: per micro-batch,
-    (1) self-pair the batch (dedup.minhash_near_dup_pairs — intra-batch
-    duplicates), (2) probe the persisted signature index
-    (dedup.minhash_incremental_pairs — cross-batch duplicates against
-    every EARLIER batch, old text never rescanned), (3) fold both into
-    the persisted pair table, (4) merge the batch's signatures into the
-    index. Every pair of the corpus is either intra-batch or
-    cross-batch exactly once, so the accumulated pair table is
-    IDENTICAL to the single-shot batch LSH pair set whatever the
-    micro-batch boundaries — the batch-boundary-independence contract
-    that puts a streaming dedup under the exact oracle gate (with
-    hash_family='md5', the same mhpairs CTE as dedup_minhash_pairs).
+    """END-TO-END streaming near-duplicate detection over documents
+    (:func:`_run_pair_stream`): the batch self-pairs through
+    dedup.minhash_near_dup_pairs, probes the persisted signature index
+    through dedup.minhash_incremental_pairs (old text never rescanned),
+    and merges its dedup.minhash_sig_index rows into that index. With
+    hash_family='md5' the accumulated pair table sits under the same
+    mhpairs oracle CTE as dedup_minhash_pairs."""
+    from ..operators import dedup
 
-    Replay safety without a batch marker: pairs and signatures are pure
-    functions of document text, pairs are normalized to
-    (least, greatest) id order, self-pairs are dropped, and both merges
-    dedup by key — so a re-delivered batch (even one whose index merge
-    landed but whose checkpoint commit did not) re-derives rows the
-    distinct absorbs. Per batch: O(batch text) hashing + banded joins
-    sized by the batch and its true matches + O(state) key-dedup
-    merges; never O(history) text."""
-    import pyspark.sql.functions as F
-
-    from ..operators import dedup as _dedup
-
-    def apply_batch(batch: DataFrame, _batch_id: int) -> None:
-        sess = batch.sparkSession
-        intra = _dedup.minhash_near_dup_pairs(
-            batch, text_col, id_col, n, num_hashes, bands, seed,
+    return _run_pair_stream(
+        stream_df,
+        pairs_path,
+        index_path,
+        id_col,
+        lambda batch: batch,
+        lambda docs: dedup.minhash_near_dup_pairs(
+            docs, text_col, id_col, n, num_hashes, bands, seed, min_jaccard,
+            hash_family,
+        ),
+        lambda docs, index: dedup.minhash_incremental_pairs(
+            docs, index, text_col, id_col, n, num_hashes, bands, seed,
             min_jaccard, hash_family,
-        )
-        have_index = recover_swapped(sess, index_path)
-        if have_index:
-            index = sess.read.parquet(index_path)
-            cross = (
-                _dedup.minhash_incremental_pairs(
-                    batch, index, text_col, id_col, n, num_hashes, bands,
-                    seed, min_jaccard, hash_family,
-                )
-                .filter(F.col("new_id") != F.col("old_id"))
-                .select(
-                    F.least("new_id", "old_id").alias("id_a"),
-                    F.greatest("new_id", "old_id").alias("id_b"),
-                    "est_jaccard",
-                )
-            )
-            new_pairs = intra.unionByName(cross)
-        else:
-            index = None
-            new_pairs = intra
-        if recover_swapped(sess, pairs_path):
-            cur = sess.read.parquet(pairs_path)
-            merged_pairs = cur.unionByName(new_pairs).dropDuplicates(
-                ["id_a", "id_b"]
-            )
-        else:
-            merged_pairs = new_pairs
-        _swap_write(merged_pairs, pairs_path)
-        sigs = _dedup.minhash_sig_index(
-            batch, text_col, id_col, n, num_hashes, seed, hash_family
-        )
-        merged_idx = (
-            index.unionByName(sigs).dropDuplicates([id_col])
-            if have_index
-            else sigs
-        )
-        _swap_write(merged_idx, index_path)
-
-    q = (
-        stream_df.writeStream.foreachBatch(apply_batch)
-        .trigger(availableNow=True)
-        .option(
-            "checkpointLocation", pairs_path.rstrip("/") + "__checkpoint"
-        )
-        .start()
-    )
-    q.awaitTermination()
-    spark = stream_df.sparkSession
-    if recover_swapped(spark, pairs_path):
-        return spark.read.parquet(pairs_path)
-    empty = spark.createDataFrame([], stream_df.schema)
-    return _dedup.minhash_near_dup_pairs(
-        empty, text_col, id_col, n, num_hashes, bands, seed, min_jaccard,
-        hash_family,
+        ).filter(F.col("new_id") != F.col("old_id")),
+        lambda docs: dedup.minhash_sig_index(
+            docs, text_col, id_col, n, num_hashes, seed, hash_family
+        ),
     )
 
 
@@ -398,84 +371,34 @@ def run_fingerprint_pair_stream(
     max_hamming: int = 3,
     bits: int = 16,
 ) -> DataFrame:
-    """Streaming PERCEPTUAL-HASH near-dup detection — the multimodal twin
-    of run_minhash_pair_stream: per micro-batch, ``fp_fn`` turns the raw
-    batch into an (id, fingerprint) relation (decode + image_ahash — the
-    only place media bytes are touched), the batch is (1) self-paired
-    (dedup.fingerprint_near_dup_pairs), (2) probed against the persisted
-    fingerprint index (dedup.fingerprint_incremental_pairs — old media
-    never re-decoded), and (3) both pair sets fold into the persisted
-    pair table while the batch's fingerprints merge into the index.
-    Every corpus pair is intra- or cross-batch exactly once, so the
-    accumulated table equals the single-shot batch pair set whatever the
-    micro-batch boundaries — and because the integer aHash is a pure
-    function of the media bytes, the streamed result sits under the SAME
-    full SQL oracle as the batch query.
+    """Streaming PERCEPTUAL-HASH near-dup detection
+    (:func:`_run_pair_stream`): ``fp_fn`` turns the raw batch into an
+    (id, fingerprint) relation (decode + image_ahash — the only place
+    media bytes are touched); the batch self-pairs through
+    dedup.fingerprint_near_dup_pairs, probes the persisted fingerprint
+    index through dedup.fingerprint_incremental_pairs (old media never
+    re-decoded), and its fingerprints merge into that index — one bigint
+    per media item, never the bytes. The integer aHash is a pure
+    function of the media bytes, so the streamed result sits under the
+    SAME full SQL oracle as the batch query."""
+    from ..operators import dedup
 
-    Replay safety mirrors the minhash stream: fingerprints are pure
-    functions of content, pairs normalize to (least, greatest), and both
-    merges dedup by key, so a re-delivered batch re-derives rows the
-    distinct absorbs. Per batch: O(batch decode) + banded joins sized by
-    the batch and its matches + O(state) key-dedup merges; the index
-    holds one bigint per media item — never the bytes."""
-    import pyspark.sql.functions as F
-
-    from ..operators import dedup as _dedup
-
-    def apply_batch(batch: DataFrame, _batch_id: int) -> None:
-        sess = batch.sparkSession
-        fps = fp_fn(batch).select(id_col, fp_col)
-        intra = _dedup.fingerprint_near_dup_pairs(
-            fps, id_col=id_col, fp_col=fp_col,
+    return _run_pair_stream(
+        stream_df,
+        pairs_path,
+        index_path,
+        id_col,
+        lambda batch: fp_fn(batch).select(id_col, fp_col),
+        lambda fps: dedup.fingerprint_near_dup_pairs(
+            fps, id_col=id_col, fp_col=fp_col, max_hamming=max_hamming, bits=bits
+        ),
+        lambda fps, index: dedup.fingerprint_incremental_pairs(
+            fps, index, id_col=id_col, fp_col=fp_col,
             max_hamming=max_hamming, bits=bits,
-        )
-        have_index = recover_swapped(sess, index_path)
-        if have_index:
-            index = sess.read.parquet(index_path)
-            cross = (
-                _dedup.fingerprint_incremental_pairs(
-                    fps, index, id_col=id_col, fp_col=fp_col,
-                    max_hamming=max_hamming, bits=bits,
-                )
-                .filter(F.col("new_id") != F.col("old_id"))
-                .select(
-                    F.least("new_id", "old_id").alias("id_a"),
-                    F.greatest("new_id", "old_id").alias("id_b"),
-                    "hamming",
-                )
-            )
-            new_pairs = intra.unionByName(cross)
-        else:
-            index = None
-            new_pairs = intra
-        if recover_swapped(sess, pairs_path):
-            cur = sess.read.parquet(pairs_path)
-            merged_pairs = cur.unionByName(new_pairs).dropDuplicates(
-                ["id_a", "id_b"]
-            )
-        else:
-            merged_pairs = new_pairs
-        _swap_write(merged_pairs, pairs_path)
-        merged_idx = (
-            index.unionByName(fps).dropDuplicates([id_col])
-            if have_index
-            else fps
-        )
-        _swap_write(merged_idx, index_path)
-
-    q = (
-        stream_df.writeStream.foreachBatch(apply_batch)
-        .trigger(availableNow=True)
-        .option(
-            "checkpointLocation", pairs_path.rstrip("/") + "__checkpoint"
-        )
-        .start()
+        ).filter(F.col("new_id") != F.col("old_id")),
+        lambda fps: fps,
+        "id_a bigint, id_b bigint, hamming int",
     )
-    q.awaitTermination()
-    spark = stream_df.sparkSession
-    if recover_swapped(spark, pairs_path):
-        return spark.read.parquet(pairs_path)
-    return spark.createDataFrame([], "id_a bigint, id_b bigint, hamming int")
 
 
 def run_embedding_pair_stream(
@@ -491,91 +414,36 @@ def run_embedding_pair_stream(
     vec_col: str = "embedding",
     seed: int = 42,
 ) -> DataFrame:
-    """Streaming EMBEDDING near-dup detection — the vector twin of
-    run_minhash_pair_stream, completing the dedup-stream family (text
-    minhash, media fingerprint, now semantic vectors): per micro-batch,
-    ``prep_fn`` turns the raw batch into an (id, vector) relation, the
-    batch is (1) self-paired (similarity.embedding_near_dup_pairs —
-    intra-batch duplicates), (2) probed against the persisted
-    hyperplane-bucket signature index (similarity.
-    embedding_incremental_pairs — cross-batch duplicates; old vectors
-    are never re-bucketed, their build-time bucket arrays ride the
-    index), and (3) both pair sets fold into the persisted pair table
-    while the batch's signatures (similarity.embedding_sig_index) merge
-    into the index. Every corpus pair is intra- or cross-batch exactly
-    once, and both legs share one signature definition and one
-    first-agreeing-table rule, so the accumulated pair table is
-    IDENTICAL to the single-shot batch LSH pair set whatever the
-    micro-batch boundaries — which is what lets a planted-duplicate
-    gate (recall 1 for exact copies, by theory, whatever the seeds)
-    hold for the STREAM exactly as it does for the batch operator.
+    """Streaming EMBEDDING near-dup detection (:func:`_run_pair_stream`):
+    ``prep_fn`` turns the raw batch into an (id, vector) relation; the
+    batch self-pairs through similarity.embedding_near_dup_pairs, probes
+    the persisted hyperplane-bucket index through
+    similarity.embedding_incremental_pairs (old vectors are never
+    re-bucketed: their build-time bucket arrays ride the index), and its
+    similarity.embedding_sig_index rows merge into that index. Both legs
+    share one signature definition and one band join, which is what lets
+    a planted-duplicate gate (recall 1 for exact copies, whatever the
+    seeds) hold for the STREAM exactly as it does for the batch
+    operator. Per batch: one Arrow matmul pass of bucketing."""
+    from ..operators import similarity
 
-    Replay safety mirrors the minhash stream: buckets, norms and
-    cosines are pure functions of the vectors, pairs normalize to
-    (least, greatest), and both merges dedup by key — a re-delivered
-    batch re-derives rows the distinct absorbs. Per batch: O(batch)
-    bucketing (one Arrow matmul pass) + joins sized by the batch's true
-    collisions + O(state) key-dedup merges; never O(history)
-    re-hashing."""
-    import pyspark.sql.functions as F
-
-    from ..operators import similarity as _sim
-
-    def apply_batch(batch: DataFrame, _batch_id: int) -> None:
-        sess = batch.sparkSession
-        vecs = prep_fn(batch).select(id_col, vec_col)
-        intra = _sim.embedding_near_dup_pairs(
+    return _run_pair_stream(
+        stream_df,
+        pairs_path,
+        index_path,
+        id_col,
+        lambda batch: prep_fn(batch).select(id_col, vec_col),
+        lambda vecs: similarity.embedding_near_dup_pairs(
             vecs, min_sim, n_planes, n_tables, dim, id_col, vec_col, seed
-        )
-        have_index = recover_swapped(sess, index_path)
-        if have_index:
-            index = sess.read.parquet(index_path)
-            cross = (
-                _sim.embedding_incremental_pairs(
-                    vecs, index, min_sim, n_planes, n_tables, dim,
-                    id_col, vec_col, seed,
-                )
-                .select(
-                    F.least("new_id", "old_id").alias("id_a"),
-                    F.greatest("new_id", "old_id").alias("id_b"),
-                    "sim",
-                )
-            )
-            new_pairs = intra.unionByName(cross)
-        else:
-            index = None
-            new_pairs = intra
-        if recover_swapped(sess, pairs_path):
-            cur = sess.read.parquet(pairs_path)
-            merged_pairs = cur.unionByName(new_pairs).dropDuplicates(
-                ["id_a", "id_b"]
-            )
-        else:
-            merged_pairs = new_pairs
-        _swap_write(merged_pairs, pairs_path)
-        sigs = _sim.embedding_sig_index(
+        ),
+        lambda vecs, index: similarity.embedding_incremental_pairs(
+            vecs, index, min_sim, n_planes, n_tables, dim, id_col, vec_col, seed
+        ),
+        lambda vecs: similarity.embedding_sig_index(
             vecs, n_planes, n_tables, dim, id_col, vec_col, seed
-        )
-        merged_idx = (
-            index.unionByName(sigs).dropDuplicates([id_col])
-            if have_index
-            else sigs
-        )
-        _swap_write(merged_idx, index_path)
-
-    q = (
-        stream_df.writeStream.foreachBatch(apply_batch)
-        .trigger(availableNow=True)
-        .option(
-            "checkpointLocation", pairs_path.rstrip("/") + "__checkpoint"
-        )
-        .start()
+        ),
+        "id_a bigint, id_b bigint, sim double",
     )
-    q.awaitTermination()
-    spark = stream_df.sparkSession
-    if recover_swapped(spark, pairs_path):
-        return spark.read.parquet(pairs_path)
-    return spark.createDataFrame([], "id_a bigint, id_b bigint, sim double")
 
 
 def run_bm25_index_stream(
@@ -635,13 +503,7 @@ def run_bm25_index_stream(
             num_buckets=num_buckets,
         )
 
-    q = (
-        stream_df.writeStream.foreachBatch(apply_batch)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", base + "__checkpoint")
-        .start()
-    )
-    q.awaitTermination()
+    drain(stream_df, apply_batch, base + "__checkpoint")
     spark = stream_df.sparkSession
     fs, root, jvm = _fs_and_path(spark, base)
     paths = sorted(

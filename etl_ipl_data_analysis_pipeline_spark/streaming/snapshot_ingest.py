@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 from .. import snapshots as sn
+from .incremental import drain
 
 
 def run_snapshot_ingest_stream(
@@ -64,14 +65,7 @@ def run_snapshot_ingest_stream(
                     spark, table_path, keep_last=expire_retain, staging_grace_s=0
                 )
 
-    q = (
-        stream_df.writeStream.foreachBatch(apply_batch)
-        .trigger(availableNow=True)
-        .option(
-            "checkpointLocation",
-            checkpoint or table_path.rstrip("/") + "__checkpoint",
-        )
-        .start()
+    drain(
+        stream_df, apply_batch, checkpoint or table_path.rstrip("/") + "__checkpoint"
     )
-    q.awaitTermination()
     return committed

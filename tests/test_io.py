@@ -182,10 +182,10 @@ def test_swap_directory_crash_recovery(spark, tmp_path):
 
     # normal swap: v1 in place, then v2 swapped over it
     write_state(0, f"{path}.__tmp__")
-    swap_directory(spark, f"{path}.__tmp__", path)
+    swap_directory(spark, path)
     assert read_ids() == [0, 1, 2]
     write_state(10, f"{path}.__tmp__")
-    swap_directory(spark, f"{path}.__tmp__", path)
+    swap_directory(spark, path)
     assert read_ids() == [10, 11, 12]
     assert not os.path.exists(f"{path}.__old__")
 
@@ -236,19 +236,6 @@ def test_jdbc_roundtrip_embedded_derby(spark, tmp_path):
     got = sorted((r["ID"] if "ID" in back.columns else r["id"],
                   r[1], r[2]) for r in back.collect())
     assert got == [(1, "alpha", 1.5), (2, "beta", -2.25), (3, None, 0.0)]
-
-
-def test_swap_directory_rejects_foreign_tmp_name(spark, tmp_path):
-    # recover_swapped probes exactly staging_path(path); accepting any other
-    # temp name would silently break crash recovery for that caller
-    import pytest as _pytest
-
-    from etl_ipl_data_analysis_pipeline_spark.io import staging_path, swap_directory
-
-    path = str(tmp_path / "tbl")
-    with _pytest.raises(ValueError, match="staging_path"):
-        swap_directory(spark, path + ".staging", path)
-    assert staging_path(path) == path + ".__tmp__"
 
 
 def _table_rows(spark, path):

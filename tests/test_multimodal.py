@@ -274,6 +274,52 @@ class TestImageAhash:
         with _pt.raises(ValueError):
             dedup.fingerprint_near_dup_pairs(df, max_hamming=2, bits=16)
 
+    def test_incremental_fingerprint_pairs_match_brute_force(self, spark):
+        # the probe leg on its own: every (new, old) pair within the radius
+        # appears exactly once (pigeonhole over max_hamming + 1 bands makes
+        # recall exact, the first agreeing band makes it unique), and a
+        # NULL fingerprint on either side never pairs
+        import random
+
+        from etl_ipl_data_analysis_pipeline_spark.operators import dedup
+
+        rnd = random.Random(31)
+        old = [(i, rnd.getrandbits(16)) for i in range(60)]
+        old += [(60, None), (61, None)]
+        new = []
+        for j in range(20):  # planted: 0-4 bits away from an old print
+            fp = old[j][1]
+            for bit in rnd.sample(range(16), j % 5):
+                fp ^= 1 << bit
+            new.append((1000 + j, fp))
+        new += [(1020 + j, rnd.getrandbits(16)) for j in range(20)]
+        new += [(1040, None), (1041, None)]
+        schema = "media_id bigint, ahash bigint"
+        got = sorted(
+            tuple(r)
+            for r in dedup.fingerprint_incremental_pairs(
+                spark.createDataFrame(new, schema),
+                spark.createDataFrame(old, schema),
+                max_hamming=3,
+                bits=16,
+            ).collect()
+        )
+        want = sorted(
+            (a, b, bin(fa ^ fb).count("1"))
+            for a, fa in new
+            for b, fb in old
+            if fa is not None
+            and fb is not None
+            and bin(fa ^ fb).count("1") <= 3
+        )
+        assert got == want
+        # the planted 0-3 bit copies are all in, the 4-bit ones are not
+        planted = {(1000 + j, j) for j in range(20) if j % 5 <= 3}
+        assert planted <= {(a, b) for a, b, _ in got}
+        assert not {(1000 + j, j) for j in range(20) if j % 5 == 4} & {
+            (a, b) for a, b, _ in got
+        }
+
 
 def _encode_png(px_rows, filters, channels):
     """Test-side PNG encoder: raw pixel rows + a filter type per row ->

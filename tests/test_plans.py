@@ -50,23 +50,23 @@ def test_q1_aggregate_has_partial_phase(spark, sf_dir, qs):
     assert "partial_" in plan  # map-side partial aggregation before the shuffle
 
 
-def test_minhash_band_join_has_no_pair_dedup_exchange(spark, sf_dir, qs):
+@pytest.mark.parametrize(
+    "query",
+    [
+        "dedup_minhash_pairs",
+        "dedup_embedding_pairs_planted",
+        "dedup_simhash_pairs",
+        "multimodal_image_neardup",
+    ],
+)
+def test_band_join_has_no_pair_dedup_exchange(spark, sf_dir, qs, query):
     # a pair agreeing on k bands used to ship k times into a
     # dropDuplicates aggregate; now it survives only in its first
     # agreeing band, decided INSIDE the join stage — so no aggregate or
     # exchange keyed on (id_a, id_b) may exist anywhere in the plan
-    opt = _optimized(qs["dedup_minhash_pairs"](spark, sf_dir))
-    assert "Aggregate [id_a" not in opt, "pair-dedup aggregate reappeared"
-    plan = _executed(qs["dedup_minhash_pairs"](spark, sf_dir))
-    assert "hashpartitioning(id_a" not in plan
-
-
-def test_embedding_lsh_join_has_no_pair_dedup_exchange(spark, sf_dir, qs):
-    # same first-agreeing-table guarantee for the embedding LSH: the
-    # exact cosine runs once per pair and nothing re-shuffles on the
-    # pair key afterwards
-    plan = _executed(qs["dedup_embedding_pairs_planted"](spark, sf_dir))
-    assert "hashpartitioning(id_a" not in plan
+    df = qs[query](spark, sf_dir)
+    assert "Aggregate [id_a" not in _optimized(df), "pair-dedup aggregate reappeared"
+    assert "hashpartitioning(id_a" not in _executed(df)
 
 
 def test_topk_cosine_has_no_rank_window(spark, sf_dir, qs):

@@ -419,6 +419,67 @@ def test_bloom_stream_zero_batches_returns_empty(spark, tmp_path):
     assert got.columns == ["word_idx", "word"] and got.count() == 0
 
 
+def _zero_batch_cases():
+    """(source schema, run(stream, state_dir), expected empty frame) per
+    state or pair stream: each drains a source with no files, so no
+    micro-batch ever runs and the result is the zero-batch fallback."""
+    from etl_ipl_data_analysis_pipeline_spark.operators import dedup, sketches
+    from etl_ipl_data_analysis_pipeline_spark.streaming import sketch_stream as ss
+
+    docs = "doc_id long, text string"
+    return {
+        "kmv": (
+            "event_type string, user_id long",
+            lambda st, d: ss.run_kmv_stream(
+                st, f"{d}/s", "user_id", keys=["event_type"], k=16
+            ),
+            lambda e: sketches.kmv_build(e, "user_id", keys=["event_type"], k=16),
+        ),
+        "sig_index": (
+            docs,
+            lambda st, d: ss.run_sig_index_stream(st, f"{d}/s"),
+            lambda e: dedup.minhash_sig_index(e, hash_family="md5"),
+        ),
+        "minhash_pairs": (
+            docs,
+            lambda st, d: ss.run_minhash_pair_stream(st, f"{d}/p", f"{d}/i"),
+            lambda e: dedup.minhash_near_dup_pairs(e, hash_family="md5"),
+        ),
+        "fingerprint_pairs": (
+            "media_id long, content binary",
+            lambda st, d: ss.run_fingerprint_pair_stream(
+                st, lambda b: b, f"{d}/p", f"{d}/i"
+            ),
+            lambda e: e.sparkSession.createDataFrame(
+                [], "id_a bigint, id_b bigint, hamming int"
+            ),
+        ),
+        "embedding_pairs": (
+            "vec_id long, embedding array<double>",
+            lambda st, d: ss.run_embedding_pair_stream(
+                st, lambda b: b, f"{d}/p", f"{d}/i"
+            ),
+            lambda e: e.sparkSession.createDataFrame(
+                [], "id_a bigint, id_b bigint, sim double"
+            ),
+        ),
+    }
+
+
+@pytest.mark.parametrize(
+    "case",
+    ["kmv", "sig_index", "minhash_pairs", "fingerprint_pairs", "embedding_pairs"],
+)
+def test_state_and_pair_streams_zero_batches_return_empty(spark, tmp_path, case):
+    schema, run, expected = _zero_batch_cases()[case]
+    src = tmp_path / "src"
+    src.mkdir()
+    got = run(spark.readStream.schema(schema).parquet(str(src)), tmp_path)
+    want = expected(spark.createDataFrame([], schema))
+    assert got.schema == want.schema
+    assert got.count() == 0
+
+
 def test_count_stream_replay_is_noop(spark, tmp_path):
     """foreachBatch is at-least-once: a crash between the state swap and
     the checkpoint commit re-delivers the batch. Summation is not
