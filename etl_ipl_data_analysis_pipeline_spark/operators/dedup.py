@@ -912,18 +912,10 @@ def semantic_dedup(
     O(n²/target_cell) under the governed k (measured r8: 85s for only
     20k uniques at f10; the SCALE_SMOKE crossover line records where
     it becomes untenable). Never default it at scale. Past ~10^4
-    derived centroids the k×dim broadcast itself is the ceiling; there
-    the shape is hierarchical — cluster to √n coarse cells first, then
-    run this operator per coarse cell — which is exactly what
-    ``assign="hierarchical"`` does: k1 = ceil(sqrt(k)) coarse Arrow
-    cells, then a per-coarse-cell LOCAL spherical fit via applyInPandas
-    with its own governed k2, emitting composite (coarse, sub) cells.
-    The centroid state any single node holds shrinks to ~sqrt(k) x dim.
-    ``rebalance_factor`` guards BOTH engines' skew: on ``fast`` it
-    second-level-splits oversized final cells before the pair join; on
-    ``hierarchical`` it reroutes coarse cells past rebalance_factor x
-    n/k1 through the Arrow matmul router so no single executor ever
-    materializes a dominant cluster as one pandas frame.
+    derived centroids the fast path's k×dim centroid broadcast itself
+    becomes the ceiling. ``rebalance_factor`` guards the fast path's
+    skew: it second-level-splits oversized final cells before the pair
+    join.
 
     .. versionchanged:: round 9
        ``assign`` DEFAULTS to ``"fast"`` (was ``"exact"``). Exact-copy
@@ -933,6 +925,8 @@ def semantic_dedup(
        relied on the SQL-replayable routing must pin
        ``assign="exact"`` explicitly (the oracle query does).
     """
+    if assign not in ("fast", "exact"):
+        raise ValueError(f"assign must be 'fast' or 'exact', got {assign!r}")
     from .similarity import (
         _as_double_array,
         kmeans_exact,
@@ -1004,7 +998,7 @@ def semantic_dedup(
                 # cell's range and collide unrelated cells.
                 assert k2 < 1_000_000 - 1, (
                     f"rebalance k2={k2} would overflow the composite "
-                    "cell key; raise target_cell_size or go hierarchical"
+                    "cell key; raise target_cell_size"
                 )
                 sub = members.filter(F.col("cell").isin(big)).select(
                     F.col("__vid").alias(id_col),
@@ -1031,122 +1025,7 @@ def semantic_dedup(
                         + F.lit(1)
                     ).alias("cell"),
                 )
-    elif assign == "hierarchical":
-        # The > ~10^4-centroid regime (n_unique > ~10^7 under governed
-        # k), where the fast path's k x dim centroid broadcast becomes
-        # the ceiling: route through TWO levels. Level 1 clusters the
-        # reps to k1 = ceil(sqrt(k)) coarse cells (broadcast shrinks to
-        # sqrt(k) x dim); level 2 fits a LOCAL spherical k-means per
-        # coarse cell via applyInPandas — each group is ~n/k1 vectors,
-        # whole in one pandas frame, its own k2 governed by
-        # target_cell_size — and emits composite (coarse, sub) cells.
-        # Deterministic under any partitioning: groups arrive whole,
-        # rows are sorted by id, init is the first k2 sorted rows, and
-        # numpy arithmetic has no partition order. Identical vectors
-        # were already collapsed, so co-routing is inherited; cells only
-        # steer which candidates meet (the fast-path contract).
-        import math
-
-        import numpy as np
-        import pandas as pd
-
-        from .similarity import _cell_router, _normalize_rows, kmeans_centroids
-
-        k1 = max(1, math.isqrt(max(k - 1, 0)) + 1 if k > 1 else 1)
-        cn1 = kmeans_centroids(
-            rep_emb, k=k1, iters=iters, id_col=id_col, vec_col=vec_col
-        )
-        coarse = reps.select("__vid", "__vec").withColumn(
-            "__coarse", F.element_at(_cell_router(cn1, 1)("__vec"), 1)
-        )
-        _sub_lim = 1_000_000
-        _tcs, _iters = target_cell_size, iters
-        big: list[int] = []
-        big_assigned = None
-        if rebalance_factor:
-            # Skew guard on the LEVEL-1 routing itself: applyInPandas
-            # materializes each coarse cell as ONE pandas frame on one
-            # executor, so a dominant semantic cluster (exactly the skew
-            # the fast path's rebalance exists for) would put
-            # ~cell_size x dim doubles in one process. Probe per-cell
-            # counts (<= k1 rows, the k-row-collect shape, off a
-            # checkpoint shared with both downstream branches) and route
-            # every coarse cell past rebalance_factor x the expected
-            # size n/k1 through the Arrow matmul router instead: one
-            # GLOBAL sub-fit over the oversized mass (no per-group local
-            # models, nothing whole on one node), keyed with the same
-            # composite (coarse, sub) cell ids — the fast-path rebalance
-            # applied one level up.
-            coarse = coarse.localCheckpoint(eager=True)
-            counts = coarse.groupBy("__coarse").count().collect()
-            n_total = sum(r["count"] for r in counts)
-            cap = rebalance_factor * max(1, -(-n_total // k1))
-            big = sorted(r["__coarse"] for r in counts if r["count"] > cap)
-            if big:
-                n_big = sum(
-                    r["count"] for r in counts if r["__coarse"] in set(big)
-                )
-                k2g = max(2, -(-n_big // target_cell_size))
-                assert k2g < _sub_lim - 1, (
-                    f"hierarchical rebalance k2={k2g} would overflow the "
-                    "composite cell key; raise target_cell_size"
-                )
-                big_rows = coarse.filter(F.col("__coarse").isin(big))
-                cn2 = kmeans_centroids(
-                    big_rows.select(
-                        F.col("__vid").alias(id_col),
-                        F.col("__vec").alias(vec_col),
-                    ),
-                    k=k2g,
-                    iters=iters,
-                    id_col=id_col,
-                    vec_col=vec_col,
-                )
-                big_assigned = big_rows.select(
-                    "__vid",
-                    "__vec",
-                    (
-                        F.col("__coarse").cast("bigint") * F.lit(_sub_lim)
-                        + F.element_at(_cell_router(cn2, 1)("__vec"), 1).cast(
-                            "bigint"
-                        )
-                        + F.lit(1)
-                    ).alias("cell"),
-                )
-                coarse = coarse.filter(~F.col("__coarse").isin(big))
-
-        def _fit_assign(pdf: "pd.DataFrame") -> "pd.DataFrame":
-            pdf = pdf.sort_values("__vid").reset_index(drop=True)
-            X = np.stack(pdf["__vec"].to_numpy()).astype(np.float64)
-            n_local = len(pdf)
-            k2 = max(1, -(-n_local // _tcs))
-            assert k2 < _sub_lim - 1, "sub-cell count would overflow the key"
-            Xn = _normalize_rows(X)
-            C = Xn[:k2].copy()
-            sub = np.zeros(n_local, dtype=np.int64)
-            for _ in range(_iters):
-                Cn = _normalize_rows(C)
-                sub = np.argmax(Xn @ Cn.T, axis=1)
-                for j in range(k2):
-                    m = sub == j
-                    if m.any():
-                        C[j] = X[m].mean(axis=0)
-            coarse_id = int(pdf["__coarse"].iloc[0])
-            return pd.DataFrame(
-                {
-                    "__vid": pdf["__vid"],
-                    "__vec": pdf["__vec"],
-                    "cell": coarse_id * _sub_lim + sub + 1,
-                }
-            )
-
-        members = coarse.groupBy("__coarse").applyInPandas(
-            _fit_assign, schema="__vid long, __vec array<double>, cell long"
-        )
-        if big_assigned is not None:
-            members = members.unionByName(big_assigned)
-        members = members.localCheckpoint(eager=True)
-    elif assign == "exact":
+    else:
         from .similarity import _exploded, _keyed_corpus
 
         cents = kmeans_exact(
@@ -1173,10 +1052,6 @@ def semantic_dedup(
             .select(
                 F.col("vid").alias("__vid"), "cell", F.col("__vec")
             )
-        )
-    else:
-        raise ValueError(
-            f"assign must be 'fast', 'hierarchical' or 'exact', got {assign!r}"
         )
     # Precompute each member's norm ONCE (n interpreted array folds) so the
     # quadratic pair stage evaluates only the dot — HOF lambdas run

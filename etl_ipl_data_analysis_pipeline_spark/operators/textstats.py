@@ -257,6 +257,77 @@ def gram_novelty(
     )
 
 
+def _terms(text_col: str):
+    """A document's non-empty normalized tokens (array<string>) — the one
+    tokenization BM25, its persisted index and chi_square_drift share."""
+    return F.filter(
+        F.split(normalized_text(F.col(text_col)), " "), lambda t: t != F.lit("")
+    )
+
+
+def _bm25_tables(
+    df: DataFrame, id_col: str, text_col: str, hits=lambda occ: occ
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The BM25 tables ``(tf, dfreq, stats)`` over the documents with at
+    least one token, built here for every BM25 caller. ``tf`` is
+    (id_col, term, __tf, __dl) over the (doc, __dl, term) occurrences
+    ``hits`` keeps — a search's query-term filter, or every term for
+    bm25_build_index's postings; ``dfreq`` is (term, __df) over those
+    terms; ``stats`` is the 1-row (__n_docs, __sum_dl) of the whole
+    corpus, hit or not."""
+    docs = (
+        df.select(F.col(id_col), _terms(text_col).alias("__t"))
+        .withColumn("__dl", F.size("__t"))
+        .filter(F.col("__dl") > 0)
+    )
+    stats = docs.agg(
+        F.count(F.lit(1)).alias("__n_docs"), F.sum("__dl").alias("__sum_dl")
+    )
+    occ = docs.select(id_col, "__dl", F.explode("__t").alias("term"))
+    tf = hits(occ).groupBy(id_col, "term").agg(
+        F.count(F.lit(1)).alias("__tf"), F.first("__dl").alias("__dl")
+    )
+    # the filter is vacuously true (a tf row exists only with >= 1 hit
+    # and a positive doc length) but it references BOTH aggregate
+    # outputs, which stops column pruning from rewriting this branch's
+    # copy of the tf aggregate without first(__dl) — a rewrite that
+    # de-canonicalizes the subtree and re-plans the whole corpus
+    # scan+tokenize+hits pipeline for the document-frequency count
+    # (plan-verified: without it, one more job and one more corpus scan;
+    # the remaining second corpus pass is the full-corpus stats, the
+    # documented ad-hoc cost)
+    dfreq = (
+        tf.filter((F.col("__tf") >= 1) & F.col("__dl").isNotNull())
+        .groupBy("term")
+        .agg(F.count(F.lit(1)).alias("__df"))
+    )
+    return tf, dfreq, stats
+
+
+def _bm25_per_term(tf, dfreq, stats, id_col: str, *keep: str) -> DataFrame:
+    """(id_col, *keep, __s): every tf row's rational-idf BM25 term score
+    (see bm25_top_docs), floor-rounded to 4dp as DECIMAL(14,4)."""
+    num = (
+        F.lit(22) * F.col("__tf") * F.col("__sum_dl") * (2 * F.col("__n_docs") + 2)
+    )
+    den = (
+        F.lit(10) * F.col("__tf") * F.col("__sum_dl")
+        + F.lit(3) * F.col("__sum_dl")
+        + F.lit(9) * F.col("__dl") * F.col("__n_docs")
+    ) * (2 * F.col("__df") + 1)
+    return (
+        tf.join(F.broadcast(dfreq), "term")
+        .join(F.broadcast(stats))
+        .select(
+            id_col,
+            *keep,
+            (F.floor(num.cast("double") / den * 1e4 + F.lit(0.5)) / 1e4)
+            .cast("decimal(14,4)")
+            .alias("__s"),
+        )
+    )
+
+
 def bm25_top_docs(
     df: DataFrame,
     query_terms: Sequence[str],
@@ -312,55 +383,10 @@ def bm25_top_docs(
     if not query_terms:
         raise ValueError("query_terms must be non-empty")
     qlits = [str(t) for t in query_terms]
-    toked = df.select(
-        F.col(id_col),
-        F.filter(
-            F.split(normalized_text(F.col(text_col)), " "),
-            lambda t: t != F.lit(""),
-        ).alias("__t"),
-    ).withColumn("__dl", F.size("__t"))
-    docs = toked.filter(F.col("__dl") > 0)
-
-    stats = docs.agg(
-        F.count(F.lit(1)).alias("__n_docs"),
-        F.sum("__dl").alias("__sum_dl"),
+    tf, dfreq, stats = _bm25_tables(
+        df, id_col, text_col, lambda occ: occ.filter(F.col("term").isin(qlits))
     )
-    hits = docs.select(
-        id_col, "__dl", F.explode("__t").alias("term")
-    ).filter(F.col("term").isin(qlits))
-    tf = hits.groupBy(id_col, "term").agg(
-        F.count(F.lit(1)).alias("__tf"), F.first("__dl").alias("__dl")
-    )
-    # vacuously-true fence (hit counts are >= 1, hit doc lengths are
-    # > 0 by construction) referencing BOTH aggregate outputs: stops
-    # column pruning from re-planning this branch's copy of the tf
-    # aggregate as a bare distinct — a rewrite that de-canonicalizes
-    # the subtree and costs a second corpus scan+tokenize for the
-    # document-frequency count (see bm25_batch_topk)
-    dfreq = (
-        tf.filter((F.col("__tf") >= 1) & F.col("__dl").isNotNull())
-        .groupBy("term")
-        .agg(F.count(F.lit(1)).alias("__df"))
-    )
-
-    num = (
-        F.lit(22) * F.col("__tf") * F.col("__sum_dl") * (2 * F.col("__n_docs") + 2)
-    )
-    den = (
-        F.lit(10) * F.col("__tf") * F.col("__sum_dl")
-        + F.lit(3) * F.col("__sum_dl")
-        + F.lit(9) * F.col("__dl") * F.col("__n_docs")
-    ) * (2 * F.col("__df") + 1)
-    per_term = (
-        tf.join(F.broadcast(dfreq), "term")
-        .join(F.broadcast(stats))
-        .select(
-            id_col,
-            (F.floor(num.cast("double") / den * 1e4 + F.lit(0.5)) / 1e4)
-            .cast("decimal(14,4)")
-            .alias("__s"),
-        )
-    )
+    per_term = _bm25_per_term(tf, dfreq, stats, id_col)
     scored = per_term.groupBy(id_col).agg(
         F.sum("__s").cast("double").alias("score")
     )
@@ -411,15 +437,7 @@ def chi_square_drift(
     Returns (group_col, n_terms, n_tokens, chi2) — chi2 DOUBLE, one row
     per group.
     """
-    toked = df.select(
-        F.col(group_col),
-        F.explode(
-            F.filter(
-                F.split(normalized_text(F.col(text_col)), " "),
-                lambda t: t != F.lit(""),
-            )
-        ).alias("term"),
-    )
+    toked = df.select(F.col(group_col), F.explode(_terms(text_col)).alias("term"))
     obs = toked.groupBy(group_col, "term").agg(F.count(F.lit(1)).alias("__o"))
     return chi_square_from_counts(obs, group_col, "term", "__o", min_count)
 
@@ -673,16 +691,7 @@ def nb_classify(
         F.sum("__m").alias("__ncw")
     )
     cls_tot = cls_term.groupBy(class_col).agg(F.sum("__ncw").alias("__nc"))
-    # the filter is vacuously true (occurrence counts are >= 1) but it
-    # references the aggregate's OUTPUT, which stops Catalyst's
-    # RemoveRedundantAggregates from collapsing this into a fresh
-    # countDistinct over the raw occurrences — i.e. a third scan +
-    # tokenize of the corpus (observed in the plan dump); kept as a
-    # consumer of cls_term, the vocab count reuses the (class, term)
-    # exchange at runtime instead
-    vstats = cls_term.filter(F.col("__ncw") >= 1).agg(
-        F.countDistinct("term").alias("__v")
-    )
+    vstats = cls_term.agg(F.countDistinct("term").alias("__v"))
     doc_counts = df.groupBy(class_col).agg(F.count(F.lit(1)).alias("__dc"))
     dstats = df.agg(F.count(F.lit(1)).alias("__d"))
     priors = (
@@ -899,15 +908,15 @@ def bm25_batch_topk(
 ) -> DataFrame:
     """BM25 retrieval for a BATCH of queries at once — the RAG-eval /
     corpus-slicing shape where hundreds of probes share one corpus scan.
-    ``queries`` is long-form (query_id, term). Scoring is exactly
-    :func:`bm25_top_docs`'s rational-idf integer BM25 (same constants,
-    same 4dp decimal per-term discipline), computed ONCE per (doc, term)
-    over the union of all query terms, then fanned out to queries by a
-    broadcast term join — per-query cost is independent of corpus size
-    no matter how many queries ride the batch. The corpus text is
-    tokenized TWICE (the 1-row n_docs/sum_dl stats need every doc's
-    length, hit or not, and live in a separate aggregate subtree): the
-    honest ad-hoc cost. When the batch cadence justifies it, the
+    ``queries`` is long-form (query_id, term). The tables come from
+    ``_bm25_tables``, shared with :func:`bm25_top_docs`, and the score
+    is its rational-idf integer BM25 (``_bm25_per_term``), computed ONCE
+    per (doc, term) over the union of all query terms, then fanned out
+    to queries by a broadcast term join — per-query cost is independent
+    of corpus size no matter how many queries ride the batch. The corpus
+    text is tokenized TWICE (the 1-row n_docs/sum_dl stats need every
+    doc's length, hit or not, and live in a separate aggregate subtree):
+    the honest ad-hoc cost. When the batch cadence justifies it, the
     persisted index (bm25_build_index + bm25_search_index) pays the
     tokenization once and every later batch reads only its terms'
     postings partitions.
@@ -922,35 +931,8 @@ def bm25_batch_topk(
         F.col(query_id_col).alias("query_id"), F.col(term_col).alias("term")
     ).distinct()
     allterms = qt.select("term").distinct()
-    toked = df.select(
-        F.col(id_col),
-        F.filter(
-            F.split(normalized_text(F.col(text_col)), " "),
-            lambda t: t != F.lit(""),
-        ).alias("__t"),
-    ).withColumn("__dl", F.size("__t"))
-    docs = toked.filter(F.col("__dl") > 0)
-    stats = docs.agg(
-        F.count(F.lit(1)).alias("__n_docs"), F.sum("__dl").alias("__sum_dl")
-    )
-    hits = docs.select(id_col, "__dl", F.explode("__t").alias("term")).join(
-        F.broadcast(allterms), "term"
-    )
-    tf = hits.groupBy(id_col, "term").agg(
-        F.count(F.lit(1)).alias("__tf"), F.first("__dl").alias("__dl")
-    )
-    # the filter is vacuously true (a tf row exists only with >= 1 hit
-    # and a positive doc length) but it references BOTH aggregate
-    # outputs, which stops column pruning from rewriting this branch's
-    # copy of the tf aggregate without first(__dl) — a rewrite that
-    # de-canonicalizes the subtree and re-plans the whole corpus
-    # scan+tokenize+hits pipeline for the document-frequency count
-    # (plan-verified: 3 -> 2 corpus scans; the remaining second pass is
-    # the full-corpus dl stats, the documented ad-hoc cost)
-    dfreq = (
-        tf.filter((F.col("__tf") >= 1) & F.col("__dl").isNotNull())
-        .groupBy("term")
-        .agg(F.count(F.lit(1)).alias("__df"))
+    tf, dfreq, stats = _bm25_tables(
+        df, id_col, text_col, lambda occ: occ.join(F.broadcast(allterms), "term")
     )
     return _bm25_rank(tf, dfreq, stats, qt, k, id_col)
 
@@ -958,34 +940,16 @@ def bm25_batch_topk(
 def _bm25_rank(tf, dfreq, stats, qt, k: int, id_col: str) -> DataFrame:
     """Shared BM25 scoring tail: rank documents per query from the
     (doc, term, tf, dl) / (term, df) / 1-row stats relations — the same
-    rational-idf integer arithmetic whether the tables were just built
-    (bm25_batch_topk) or read back from a persisted index
-    (bm25_search_index). Restricting df to query-term rows is exact:
-    a term's document frequency does not depend on which terms were
-    asked about."""
+    rational-idf integer arithmetic (_bm25_per_term) whether the tables
+    were just built (_bm25_tables, for bm25_batch_topk) or read back from
+    a persisted index (bm25_search_index). Restricting df to query-term
+    rows is exact: a term's document frequency does not depend on which
+    terms were asked about."""
     from .similarity import topk_per_query
 
-    num = (
-        F.lit(22) * F.col("__tf") * F.col("__sum_dl") * (2 * F.col("__n_docs") + 2)
-    )
-    den = (
-        F.lit(10) * F.col("__tf") * F.col("__sum_dl")
-        + F.lit(3) * F.col("__sum_dl")
-        + F.lit(9) * F.col("__dl") * F.col("__n_docs")
-    ) * (2 * F.col("__df") + 1)
-    per_term = (
-        tf.join(F.broadcast(dfreq), "term")
-        .join(F.broadcast(stats))
-        .select(
-            id_col,
-            "term",
-            (F.floor(num.cast("double") / den * 1e4 + F.lit(0.5)) / 1e4)
-            .cast("decimal(14,4)")
-            .alias("__s"),
-        )
-    )
     qdoc = (
-        per_term.join(F.broadcast(qt), "term")
+        _bm25_per_term(tf, dfreq, stats, id_col, "term")
+        .join(F.broadcast(qt), "term")
         .groupBy("query_id", id_col)
         .agg(F.sum("__s").cast("double").alias("score"))
     )
@@ -1038,19 +1002,7 @@ def bm25_build_index(
     literals without touching the index."""
     from ..functions import portable_hash64
 
-    toked = df.select(
-        F.col(id_col),
-        F.filter(
-            F.split(normalized_text(F.col(text_col)), " "),
-            lambda t: t != F.lit(""),
-        ).alias("__t"),
-    ).withColumn("__dl", F.size("__t"))
-    docs = toked.filter(F.col("__dl") > 0)
-    postings = (
-        docs.select(id_col, "__dl", F.explode("__t").alias("term"))
-        .groupBy(id_col, "term")
-        .agg(F.count(F.lit(1)).alias("__tf"), F.first("__dl").alias("__dl"))
-    )
+    postings, _, _ = _bm25_tables(df, id_col, text_col)
     bucket = F.pmod(portable_hash64(F.col("term")), F.lit(num_buckets)).cast(
         "int"
     )

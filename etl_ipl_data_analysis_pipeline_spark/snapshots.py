@@ -191,17 +191,19 @@ def snapshot_latest_batch_id(spark: SparkSession, path: str) -> int | None:
 def _inherited_batch_id(
     spark: SparkSession, base: str, version: int, manifest: dict
 ) -> int | None:
-    """The streaming marker as of ``version`` (whose manifest is given):
-    its own, or — on tables written before every commit carried the
-    marker forward — the newest older manifest's."""
-    bid = manifest.get("batch_id")
-    if bid is None:
-        for v in reversed(snapshot_versions(spark, base)):
-            if v < version:
-                bid = _read_manifest(spark, base, v).get("batch_id")
-                if bid is not None:
-                    break
-    return bid
+    """The streaming marker as of ``version`` (whose manifest is given).
+    Every manifest ``_commit_manifest`` writes records it, null when the
+    lineage never had one, so this is one dict lookup. Only a legacy
+    manifest (written before the key was always recorded) lacks it and
+    inherits from the newest older manifest that has it."""
+    if "batch_id" in manifest:
+        return manifest["batch_id"]
+    for v in reversed(snapshot_versions(spark, base)):
+        if v < version:
+            older = _read_manifest(spark, base, v)
+            if "batch_id" in older:
+                return older["batch_id"]
+    return None
 
 
 def snapshot_commit(
@@ -492,9 +494,10 @@ def _commit_manifest(
         "committed_at": time.time(),
         # arbitration witness for the verify-after-rename path
         "writer": token,
+        # the streaming marker, recorded even when null so a child
+        # commit inherits it without walking the lineage
+        "batch_id": None if batch_id is None else int(batch_id),
     }
-    if batch_id is not None:
-        manifest["batch_id"] = int(batch_id)
     if stats:
         manifest["stats"] = stats
     if partition_by:

@@ -204,17 +204,6 @@ def main() -> int:
             if factor <= 10
             else None
         ),
-        # r9: the >10^4-centroid shape measured next to the flat fast
-        # path — two-level routing (sqrt(k) coarse broadcast +
-        # per-coarse-cell local applyInPandas fits); at these unique
-        # counts fast should win (k is small), hierarchical exists for
-        # the regime where the k x dim broadcast itself is the ceiling
-        "semantic_dedup_unique_hier": t(
-            lambda: dedup.semantic_dedup(
-                embu, iters=2, min_sim=0.99, assign="hierarchical"
-            ),
-            "semantic_dedup_unique_hier",
-        ),
         # round-7: the portable md5 universal-hash family (what the
         # oracled queries run) next to the xxhash64 default above —
         # records the md5-per-shingle premium at volume

@@ -530,93 +530,3 @@ def test_semantic_dedup_fast_rebalance_preserves_contract(spark):
         ).collect()
     }
     assert survivors_off == survivors
-
-
-def test_semantic_dedup_hierarchical_keeps_contract(spark):
-    """assign='hierarchical' (two-level routing: coarse Arrow cells, then
-    per-coarse-cell LOCAL fits via applyInPandas — the >10^4-centroid
-    regime's shape) must keep the fast-path contract: exact copies die
-    via the collapse with recall 1, and at a threshold no distinct pair
-    reaches, every unique vector survives whatever the carved cells.
-    Partitioning independence: survivors identical at 1 and 13
-    partitions."""
-    import random
-
-    rnd = random.Random(19)
-    base = [(i, [rnd.gauss(0, 1) for _ in range(16)]) for i in range(60)]
-    mirrors = [(500 + i, vec) for i, vec in base[:7]]
-    emb = spark.createDataFrame(base + mirrors, "vec_id long, embedding array<double>")
-    survivors = {
-        r["vec_id"]
-        for r in dedup.semantic_dedup(
-            emb, iters=2, min_sim=0.999, assign="hierarchical",
-            target_cell_size=8,
-        ).collect()
-    }
-    assert survivors == {i for i, _ in base}
-    again = {
-        r["vec_id"]
-        for r in dedup.semantic_dedup(
-            emb.repartition(13), iters=2, min_sim=0.999,
-            assign="hierarchical", target_cell_size=8,
-        ).collect()
-    }
-    assert again == survivors
-
-
-def test_semantic_dedup_hierarchical_skew_reroute(spark):
-    """A dominant semantic cluster (one gaussian blob holding ~90% of
-    vectors) must trip the hierarchical skew guard: the oversized coarse
-    cell reroutes through the global Arrow sub-fit instead of landing
-    whole in one pandas frame, and the operator contract is unchanged —
-    exact copies die with recall 1, every unique survives at a
-    threshold no distinct pair reaches, independent of partitioning."""
-    import random
-
-    rnd = random.Random(23)
-    # angle-TIGHT, scale-spread blob: spherical routing piles all 90
-    # into one coarse cell (the skew the guard exists for), and because
-    # shared direction means high pairwise cosine, the threshold sits
-    # ABOVE any reachable rounded sim (1.01) — distinct vectors can
-    # never pair, so survivorship isolates the routing machinery while
-    # the collapse still guarantees mirror recall 1
-    blob = [
-        (
-            i,
-            [
-                (1.0 + 0.09 * i) * u + rnd.gauss(0, 0.01)
-                for u in (1.0, 0.5, -0.25, 0.8, -0.6, 0.3, 0.9, -0.4)
-            ],
-        )
-        for i in range(90)
-    ]
-    spread = [
-        (200 + i, [rnd.gauss(0, 1) for _ in range(8)]) for i in range(10)
-    ]
-    base = blob + spread
-    mirrors = [(500 + i, vec) for i, vec in base[:9]]
-    emb = spark.createDataFrame(
-        base + mirrors, "vec_id long, embedding array<double>"
-    )
-    kw = dict(
-        iters=2, min_sim=1.01, assign="hierarchical",
-        target_cell_size=4, rebalance_factor=2,
-    )
-    survivors = {
-        r["vec_id"] for r in dedup.semantic_dedup(emb, **kw).collect()
-    }
-    assert survivors == {i for i, _ in base}
-    again = {
-        r["vec_id"]
-        for r in dedup.semantic_dedup(emb.repartition(7), **kw).collect()
-    }
-    assert again == survivors
-    # guard off: same contract (mirrors die via the collapse either way)
-    no_guard = {
-        r["vec_id"]
-        for r in dedup.semantic_dedup(
-            emb, iters=2, min_sim=1.01, assign="hierarchical",
-            target_cell_size=4, rebalance_factor=None,
-        ).collect()
-    }
-    assert no_guard == survivors

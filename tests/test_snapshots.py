@@ -8,6 +8,23 @@ import pytest
 from etl_ipl_data_analysis_pipeline_spark import snapshots as sn
 
 
+def _strip_manifest_key(base, version, key):
+    """Rewrite a published manifest without ``key`` — a legacy manifest
+    from before the key existed. The Hadoop-local-FS .crc sidecar goes
+    too: rewriting the file outside Hadoop would fail its checksum."""
+    import json
+
+    p = f"{base}/_snapshots/v{version:08d}.json"
+    with open(p) as f:
+        m = json.load(f)
+    m.pop(key, None)
+    with open(p, "w") as f:
+        json.dump(m, f)
+    crc = f"{base}/_snapshots/.v{version:08d}.json.crc"
+    if os.path.exists(crc):
+        os.remove(crc)
+
+
 def _keys(spark, base, version=None):
     return sorted(r.k for r in sn.snapshot_read(spark, base, version).collect())
 
@@ -817,7 +834,6 @@ def test_append_after_restore_and_legacy_manifest_asof(spark, table):
     manifest references the restore's files plus the new ones), and a
     pre-r11 manifest lacking committed_at stays eligible for as_of_ts
     without ever shadowing a stamped one."""
-    import json
     import time
 
     v4 = sn.snapshot_restore(spark, table, 2)  # back to keys 0..14
@@ -830,16 +846,7 @@ def test_append_after_restore_and_legacy_manifest_asof(spark, table):
     assert set(m4["files"]) < set(m5["files"])  # restore's files shared
 
     # strip committed_at from v1's manifest: a legacy (pre-r11) table
-    # (drop the Hadoop-local-FS .crc sidecar too — rewriting the file
-    # outside Hadoop would otherwise fail the checksum on next read)
-    p1 = table + "/_snapshots/v00000001.json"
-    m1 = json.load(open(p1))
-    del m1["committed_at"]
-    with open(p1, "w") as f:
-        json.dump(m1, f)
-    crc = table + "/_snapshots/.v00000001.json.crc"
-    if os.path.exists(crc):
-        os.remove(crc)
+    _strip_manifest_key(table, 1, "committed_at")
     hist = {r.version: r for r in sn.snapshot_history(spark, table).collect()}
     assert hist[1].committed_at is None  # surfaced, not faked
     # legacy versions read as arbitrarily old: an as_of_ts BEFORE every
@@ -2069,11 +2076,14 @@ def test_rename_and_drop_carry_row_map_and_marker(spark, tmp_path):
     df = _kv(spark, 0, 30).repartition(2)
     sn.snapshot_commit(df, base, "append", batch_id=5)
     # a manifest from before markers propagated: same files, no marker
+    # key (current manifests record even a null marker, so strip it and
+    # the Hadoop-local-FS .crc sidecar, as the legacy as-of test does)
     m1 = sn._read_manifest(spark, base, 1)
     sn._commit_manifest(
         spark, base, 2, "append", m1["files"], df.schema,
         stats=m1["stats"], rows=m1["rows"], adds=m1["adds"],
     )
+    _strip_manifest_key(base, 2, "batch_id")
     v3 = sn.snapshot_rename_column(spark, base, "v", "w")
     assert sn._read_manifest(spark, base, v3)["batch_id"] == 5
     sn.snapshot_commit(
@@ -2088,6 +2098,28 @@ def test_rename_and_drop_carry_row_map_and_marker(spark, tmp_path):
         before = max(tracker.getJobIdsForGroup(None))
         assert sn.snapshot_row_count(spark, base, version=v) == 40
         assert max(tracker.getJobIdsForGroup(None)) == before  # no job
+
+
+def test_commit_on_unstreamed_table_reads_bounded_manifests(
+    spark, tmp_path, monkeypatch
+):
+    """A table that never streamed records the marker's absence in each
+    manifest, so a commit inherits it from the head manifest alone: the
+    40th append reads at most 2 manifests, not one per older version."""
+    base = str(tmp_path / "tbl")
+    df = spark.range(1).withColumnRenamed("id", "k").coalesce(1)
+    for _ in range(39):
+        sn.snapshot_commit(df, base, "append")
+    real, reads = sn._read_manifest, []
+
+    def counted(spark_, base_, version):
+        reads.append(version)
+        return real(spark_, base_, version)
+
+    monkeypatch.setattr(sn, "_read_manifest", counted)
+    assert sn.snapshot_commit(df, base, "append") == 40
+    assert len(reads) <= 2, f"the 40th append read manifests {reads}"
+    assert sn.snapshot_latest_batch_id(spark, base) is None
 
 
 def test_restore_losing_publish_race_raises(spark, table, monkeypatch):
