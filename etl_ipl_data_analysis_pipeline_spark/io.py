@@ -3,8 +3,8 @@
 Reference parity:
 - SRC3 json scan w/ inference  -> ``read_json``        (transformation_job.py:37-38)
 - SRC4 catalog table scan      -> ``spark.read.table`` (etl_glue_job.py:28-31)
-- SRC5/SNK1 parquet scan/sink  -> ``read_parquet`` / ``write_parquet``
-                                                        (transformation_job.py:45)
+- SRC5 parquet scan            -> ``spark.read.parquet`` (transformation_job.py:45)
+- SNK1 parquet sink            -> ``write_parquet``     (transformation_job.py:45)
 - SNK2 JDBC warehouse sink     -> ``write_jdbc``       (etl_glue_job.py:18-43)
 - SNK3 object IO / existence   -> ``path_exists``      (lamda_function.py:31-37)
 - SRC1/SRC2 http fetch + zip   -> ``fetch_url`` / ``expand_zip``
@@ -37,11 +37,6 @@ STAR_TABLES = (
     "documents",
     "embeddings",
 )
-
-
-def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """SRC5: columnar scan; Catalyst pushes predicates + prunes columns."""
-    return spark.read.parquet(path)
 
 
 def read_json(
@@ -226,6 +221,71 @@ def _fs_and_path(spark: SparkSession, path: str):
     jvm = spark._jvm
     p = jvm.org.apache.hadoop.fs.Path(path)
     return p.getFileSystem(spark._jsc.hadoopConfiguration()), p, jvm
+
+
+# The file layer: each filesystem step that io.py and snapshots.py take,
+# written once over the Hadoop FS API (any scheme). Callers keep their
+# own policy — which files they list, what they do after a move.
+
+
+def _read_bytes(spark: SparkSession, path: str) -> bytes:
+    """Whole content of a small file (a manifest, the HEAD hint), read
+    on the driver through the Hadoop FS stream: a Spark job for a few-KB
+    file would cost a whole job's fixed overhead on every read."""
+    fs, p, jvm = _fs_and_path(spark, path)
+    stream = fs.open(p)
+    try:
+        # commons-io ships with Hadoop; py4j maps byte[] to Python bytes
+        return bytes(jvm.org.apache.commons.io.IOUtils.toByteArray(stream))
+    finally:
+        stream.close()
+
+
+def _write_bytes(spark: SparkSession, path: str, data: bytes) -> None:
+    """Create (or overwrite) the small file ``path`` holding ``data``."""
+    fs, p, _ = _fs_and_path(spark, path)
+    out = fs.create(p, True)
+    try:
+        out.write(bytearray(data))
+    finally:
+        out.close()
+
+
+def _fan_out(fn, items: list) -> None:
+    """Call ``fn`` on every item — independent FS RPCs. Up to 4 run
+    serially; more run on a bounded thread pool (py4j gives each Python
+    thread its own gateway connection, so the calls overlap). The first
+    failure propagates: a commit or sweep that could not finish a step
+    must not report success."""
+    if len(items) <= 4:
+        for item in items:
+            fn(item)
+        return
+    from concurrent.futures import ThreadPoolExecutor
+
+    with ThreadPoolExecutor(min(16, len(items))) as ex:
+        list(ex.map(fn, items))
+
+
+def _walk_files(spark: SparkSession, path: str):
+    """Yield ``(relative path, FileStatus)`` for every file under
+    ``path``, recursively, relative to the qualified root. One listing
+    iterator and no per-file status RPC: each status already carries the
+    length and modification time."""
+    fs, root, _ = _fs_and_path(spark, path)
+    prefix = len(fs.makeQualified(root).toString().rstrip("/")) + 1
+    it = fs.listFiles(root, True)  # recursive RemoteIterator
+    while it.hasNext():
+        st = it.next()
+        yield st.getPath().toString()[prefix:], st
+
+
+def _move(fs, src, dst, what: str) -> None:
+    """Rename the staged file ``src`` onto ``dst`` (Hadoop Paths). Hadoop
+    ``rename`` reports failure by RETURNING False, not raising; a failed
+    move raises here so no commit publishes around a missing file."""
+    if not fs.rename(src, dst):
+        raise IOError(f"{what}: rename {src} -> {dst} failed")
 
 
 def staging_path(path: str) -> str:
@@ -434,15 +494,6 @@ def retry(
     raise last
 
 
-def dir_bytes(spark: SparkSession, path: str) -> int:
-    """Total bytes under a path via the Hadoop FS API (works for any
-    supported scheme, same as path_exists)."""
-    jvm = spark._jvm
-    hadoop_path = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hadoop_path.getFileSystem(spark._jsc.hadoopConfiguration())
-    return int(fs.getContentSummary(hadoop_path).getLength())
-
-
 def _compact_manifest_path(path: str) -> str:
     return path.rstrip("/") + ".__compact_manifest__"
 
@@ -460,22 +511,14 @@ def _list_data_files(spark: SparkSession, path: str):
     uncommitted task outputs under ``_temporary/`` must never be
     treated as table data (compacting them in would resurrect rows the
     reader itself would not return)."""
-    fs, root, jvm = _fs_and_path(spark, path)
-    root_uri = fs.makeQualified(root).toString().rstrip("/")
     out = []
-    it = fs.listFiles(root, True)  # recursive RemoteIterator
-    while it.hasNext():
-        st = it.next()
-        p = st.getPath()
-        full = p.toString()
-        rel = full[len(root_uri) :].lstrip("/")
+    for rel, st in _walk_files(spark, path):
         segs = rel.split("/")
         if not segs[-1].endswith(".parquet"):
             continue
         if any(s.startswith(("_", ".")) for s in segs):
             continue
-        rel_dir = rel.rsplit("/", 1)[0] if "/" in rel else ""
-        out.append((rel_dir, full, int(st.getLen())))
+        out.append((rel.rpartition("/")[0], st.getPath().toString(), int(st.getLen())))
     return out
 
 
@@ -489,55 +532,27 @@ def _finish_compaction(spark: SparkSession, path: str) -> None:
     the transient state is duplication (repaired here), never loss."""
     import json
 
-    fs, root, jvm = _fs_and_path(spark, path)
-    mpath = jvm.org.apache.hadoop.fs.Path(_compact_manifest_path(path))
+    fs, _, jvm = _fs_and_path(spark, path)
+    Path = jvm.org.apache.hadoop.fs.Path
+    manifest = json.loads(_read_bytes(spark, _compact_manifest_path(path)))
     staging = _compact_staging_path(path)
-    # read the (one-line JSON) manifest DRIVER-SIDE through the Hadoop FS
-    # stream: a Spark text job for a few-KB file costs a whole job's
-    # fixed overhead on every commit AND every recover probe
-    stream = fs.open(mpath)
-    try:
-        data = bytes(jvm.org.apache.commons.io.IOUtils.toByteArray(stream))
-    finally:
-        stream.close()
-    manifest = json.loads(data.decode("utf-8"))
 
     def _move_in(rel: str) -> None:
-        src = jvm.org.apache.hadoop.fs.Path(staging + "/" + rel)
-        dst = jvm.org.apache.hadoop.fs.Path(path.rstrip("/") + "/" + rel)
+        src = Path(staging + "/" + rel)
+        dst = Path(path.rstrip("/") + "/" + rel)
         if not fs.exists(src):
             return  # moved by a previous (crashed) commit attempt
-        parent = dst.getParent()
-        if not fs.exists(parent):
-            fs.mkdirs(parent)
-        if not fs.rename(src, dst):
-            raise IOError(f"compaction commit: rename {src} -> {dst} failed")
+        if not fs.exists(dst.getParent()):
+            fs.mkdirs(dst.getParent())
+        _move(fs, src, dst, "compaction commit")
 
-    def _drop(full: str) -> None:
-        # delete() returns False when already gone — the idempotent-replay
-        # skip without a separate exists() RPC per file
-        fs.delete(jvm.org.apache.hadoop.fs.Path(full), False)
-
-    # the per-file move/delete RPCs are independent; a sliver-heavy
-    # commit issues hundreds — fan them over a bounded thread pool
-    # (py4j gives each Python thread its own gateway connection), same
-    # pattern as snapshots._parallel_fs_delete. Failures propagate.
-    from concurrent.futures import ThreadPoolExecutor
-
-    if len(manifest["staged"]) <= 4:
-        for rel in manifest["staged"]:
-            _move_in(rel)
-    else:
-        with ThreadPoolExecutor(min(16, len(manifest["staged"]))) as ex:
-            list(ex.map(_move_in, manifest["staged"]))
-    if len(manifest["delete"]) <= 4:
-        for full in manifest["delete"]:
-            _drop(full)
-    elif manifest["delete"]:
-        with ThreadPoolExecutor(min(16, len(manifest["delete"]))) as ex:
-            list(ex.map(_drop, manifest["delete"]))
-    fs.delete(jvm.org.apache.hadoop.fs.Path(staging), True)
-    fs.delete(mpath, False)
+    # a sliver-heavy commit issues hundreds of independent move/delete
+    # RPCs; delete() returns False when already gone — the
+    # idempotent-replay skip without a separate exists() RPC per file
+    _fan_out(_move_in, manifest["staged"])
+    _fan_out(lambda full: fs.delete(Path(full), False), manifest["delete"])
+    fs.delete(Path(staging), True)
+    fs.delete(Path(_compact_manifest_path(path)), False)
 
 
 def recover_compaction(spark: SparkSession, path: str) -> bool:
@@ -641,7 +656,8 @@ def compact_table(
     ]
     staging = _compact_staging_path(path)
     fs, root, jvm = _fs_and_path(spark, path)
-    fs.delete(jvm.org.apache.hadoop.fs.Path(staging), True)
+    Path = jvm.org.apache.hadoop.fs.Path
+    fs.delete(Path(staging), True)
     base_uri = fs.makeQualified(root).toString()
     # partition values must round-trip VERBATIM: type inference would
     # parse a string dir value that looks numeric (k=00123) as int and
@@ -697,11 +713,9 @@ def compact_table(
         for rel_dir, full, _ in _list_data_files(spark, staging)
     ]
     manifest = {"staged": staged, "delete": small_paths}
-    mtmp = jvm.org.apache.hadoop.fs.Path(_compact_manifest_path(path) + ".tmp")
-    out = fs.create(mtmp, True)
-    out.write(bytearray(json.dumps(manifest).encode()))
-    out.close()
-    if not fs.rename(mtmp, jvm.org.apache.hadoop.fs.Path(_compact_manifest_path(path))):
+    mtmp = _compact_manifest_path(path) + ".tmp"
+    _write_bytes(spark, mtmp, json.dumps(manifest).encode())
+    if not fs.rename(Path(mtmp), Path(_compact_manifest_path(path))):
         raise IOError("compaction manifest rename failed; table untouched")
     _finish_compaction(spark, path)
     return {

@@ -10,6 +10,13 @@ write that lands the rows also counts them. Re-running against an unchanged
 archive is a no-op (the run-twice idempotency contract, L3). The streaming
 twin of the same semantics is streaming/incremental.py.
 
+The control tables are append-only. A run adds one file to the ledger,
+holding the keys it landed, and one file to the schema registry when the
+schema is new or drifted; no run rewrites either table, so their write
+cost is O(batch), and both are read with their schemas pinned. The data
+append and the ledger append are two steps: a crash between them lands
+the batch again on the rerun.
+
 Every Spark job a run launches carries the description
 ``run_ingest:<phase>``, phase one of ``discover``, ``registry``, ``write``
 and ``ledger``; the caller's description is restored on return. (Spark
@@ -29,7 +36,6 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from .io import (
     expand_zip,
     fetch_url,
-    overwrite_parquet,
     read_binary_files,
     recover_swapped,
     write_parquet,
@@ -39,7 +45,6 @@ from .operators.flatten import flatten
 from .operators.ledger import (
     LEDGER_SCHEMA,
     discover_new_files,
-    empty_ledger,
     ledger_rows,
     strip_extension,
 )
@@ -94,17 +99,6 @@ def _restores_job_description(fn):
             sc.setLocalProperty(_JOB_DESCRIPTION, caller)  # None clears it
 
     return wrapper
-
-
-def _save_small_table(df: DataFrame, path: str) -> None:
-    """Overwrite a control table (ledger / schema registry) that the input
-    plan may still be READING from: write to a temp sibling path first, then
-    crash-safely swap directories (io.overwrite_parquet keeps one complete
-    copy on disk at every instant). Spark reads lazily, so writing straight
-    over the source path would corrupt the plan mid-read — and a
-    collect()-to-driver round-trip would cap the ledger at driver memory
-    (one row per ingested file is 10⁷ rows at real fleet scale)."""
-    overwrite_parquet(df.coalesce(1), path)
 
 
 @_restores_job_description
@@ -163,19 +157,21 @@ def run_ingest(
     # runs. Otherwise one anti-join against the ledger (read with its
     # schema pinned, so no inference job) collects the fresh rows — no
     # more than the member list the driver already holds. recover_swapped
-    # repairs a swap torn by a crash first: an absent-looking ledger
-    # would re-ingest everything.
+    # repairs a swap torn by a crash of an older run, which rewrote the
+    # ledger by swapping directories: an absent-looking ledger would
+    # re-ingest everything.
     _phase(spark, "discover")
     fresh = spark.createDataFrame(
         [(m,) for m in sorted(members)], "path string"
     ).withColumn("file_key", strip_extension(F.expr("reverse(split(path, '/'))[0]")))
     if recover_swapped(spark, ledger_path):
         ledger = spark.read.schema(LEDGER_SCHEMA).parquet(ledger_path)
-        rows = discover_new_files(fresh, ledger).collect()
+        # the anti-join puts the key column first: restore fresh's column
+        # order before the rows are re-framed positionally
+        rows = discover_new_files(fresh, ledger).select(*fresh.columns).collect()
         fresh = spark.createDataFrame(rows, fresh.schema)
         paths = [r.path for r in rows]
     else:
-        ledger = empty_ledger(spark)
         paths = sorted(members)
     if not paths:
         return RunResult(0, 0, None, skipped=True)
@@ -223,10 +219,12 @@ def run_ingest(
     flat = flatten(raw)
 
     # 4. drift gate (J3/SE2/SE3) against the newest registry snapshot; the
-    # diff is collected once and the report built from those rows.
+    # diff is collected once and the report built from those rows. A new
+    # or drifted schema appends its version's rows as one file.
     drift_msg = None
     if schema_registry_path is not None:
         _phase(spark, "registry")
+        new_version = 1
         if recover_swapped(spark, schema_registry_path):
             registry = spark.read.schema(SNAPSHOT_SCHEMA).parquet(schema_registry_path)
             latest = registry.agg(F.max("version_id")).first()[0]
@@ -237,14 +235,10 @@ def run_ingest(
                 drift_msg = drift_report(diff)
                 if on_drift == "block":
                     raise RuntimeError(drift_msg)
-                updated = registry.unionByName(
-                    schema_snapshot(spark, flat, version_id=latest + 1)
-                )
-                _save_small_table(updated, schema_registry_path)
-        else:
-            _save_small_table(
-                schema_snapshot(spark, flat, version_id=1), schema_registry_path
-            )
+            new_version = latest + 1 if diff else None
+        if new_version is not None:
+            snapshot = schema_snapshot(spark, flat, version_id=new_version)
+            write_parquet(snapshot.coalesce(1), schema_registry_path, mode="append")
 
     # 5. write (SNK1). Append — each run adds only its new files' rows,
     # counted by an observation on the write itself.
@@ -261,11 +255,11 @@ def run_ingest(
         # torn commit replays before this run's bin-packing plan is made
         compact_table(spark, out_dir, target_file_mb=compact_target_mb)
 
-    # 6. ledger update (L2/L3): one row per fresh key, ingested through
-    # crawled/transformed (this runner performs both stages). The union
-    # also keeps the ledger's declared schema when it is new.
+    # 6. ledger update (L2/L3): append one file of rows, one per fresh
+    # key, ingested through crawled/transformed (this runner performs
+    # both stages); the rows carry the ledger's declared column order.
     _phase(spark, "ledger")
     new_rows = ledger_rows(fresh.select("file_key"), ("ingested", "crawled", "transformed"))
-    _save_small_table(ledger.unionByName(new_rows), ledger_path)
+    write_parquet(new_rows.coalesce(1), ledger_path, mode="append")
 
     return RunResult(len(paths), rows_written, drift_msg, skipped=False, quarantined=n_quarantined)

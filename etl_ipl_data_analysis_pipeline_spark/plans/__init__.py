@@ -95,30 +95,39 @@ def normalize_nanos_ts(df: DataFrame) -> DataFrame:
 # first 50 names of that round's registry order). Order the registry
 # EXPLICITLY so the queries whose evidence is most valuable come first.
 # Current rotation, so the first 50 entries sample the code that changed
-# since round 14:
-# (0) the 10 queries over the round-14 shared-subtree pins and the
+# most recently:
+# (0) the 12 snapshot-family queries over the one file layer (the shared
+# small-file read/write, fan-out, walk and move steps under io.py and
+# snapshots.py; snapshot_scan as the one pruned read, with
+# snapshot_pruned_read's data-derived file layout; the one compaction
+# body; the rename log replayed once; CDC's key-range filter);
+# (1) the 10 queries over the round-14 shared-subtree pins and the
 # operators cut down since (nb_classify without its vocab fence, the one
 # BM25 table path, semantic_dedup without its hierarchical engine, the
 # n-gram/LM and covariance pins, the exact vector family);
-# (1) the 9 round-12 snapshot queries (merge-on-read equality delete;
-# manifest-diff change data feed; per-commit change log; field-id
-# rename/drop evolution; change-feed incremental cross-table mirror;
-# auto-derived filter pruning via snapshot_scan; type-widening schema
-# evolution; z-order commit with a conjunctive bare-filter pruned
-# read-back; CDC tombstone deletes) — with (3), the snapshot family
-# whose commits now record the streaming marker even when it is null;
-# (2) the 9-query evidence tail at r11 positions 51-59 — the ONLY
+# (2) the remaining round-12 snapshot queries (change-feed incremental
+# cross-table mirror; type-widening schema evolution; CDC tombstone
+# deletes);
+# (3) the 9-query evidence tail at r11 positions 51-59 — the ONLY
 # queries whose latest driver evidence predated round 6;
-# (3) the 7 snapshot-family queries whose machinery changed in round 12
-# (exclusive hard-link manifest publication, rewriting-op rebase-retry,
-# type-widening _merge_schemas + merge _align casts, HEAD-hint head
-# resolution, publication-time mtimes, CDC composite-key/partition-dir
-# pruned reads) and since then (the one _publish path);
-# (4) the r6-evidence cohort, alphabetical, minus the queries (0) moved
-# up; its first 15 close the window of 50.
+# (4) the r6-evidence cohort, alphabetical, minus the queries moved up;
+# its first entries close the window of 50.
 # scripts/evidence_map.py regenerates the per-query history
 # (EVIDENCE.md) justifying this ordering.
 _DRIVER_WINDOW_PRIORITY: tuple[str, ...] = (
+    # -- the snapshot family over the one file layer --
+    "snapshot_pruned_read",
+    "snapshot_partitioned_roundtrip",
+    "stream_snapshot_cdc",
+    "snapshot_time_travel",
+    "snapshot_merge_upsert",
+    "snapshot_mor_delete",
+    "snapshot_change_feed",
+    "snapshot_change_log",
+    "snapshot_column_evolution",
+    "snapshot_zorder_pruned_read",
+    "compact_table_roundtrip",
+    "stream_snapshot_ingest",
     # -- round-14 pins and the operators cut down since --
     "nb_lang_confusion",
     "hybrid_rrf_topk",
@@ -130,15 +139,9 @@ _DRIVER_WINDOW_PRIORITY: tuple[str, ...] = (
     "embedding_dim_covariance",
     "source_term_drift",
     "bm25_top_docs_query",
-    # -- round-12 snapshot queries --
-    "snapshot_mor_delete",  # NEW r12: merge-on-read equality delete
-    "snapshot_change_feed",  # NEW r12: manifest-diff change data feed
-    "snapshot_column_evolution",  # NEW r12: field-id rename/drop
+    # -- the other round-12 snapshot queries --
     "snapshot_incremental_mirror",  # NEW r12: change-feed replication
-    "snapshot_change_log",  # NEW r12: per-commit change event stream
-    "snapshot_filter_pruned_read",  # NEW r12: bare-filter auto pruning
     "snapshot_widened_append",  # NEW r12: int->long widening evolution
-    "snapshot_zorder_pruned_read",  # NEW r12: z-order + conjunctive prune
     "stream_cdc_tombstones",  # NEW r12: tombstone-aware CDC merge
     # -- the final evidence tail (last driver verdicts r4/r5) --
     "window_tumbling_late_data",
@@ -150,14 +153,6 @@ _DRIVER_WINDOW_PRIORITY: tuple[str, ...] = (
     "q2_min_cost_supplier",
     "regr_daily_revenue_trend",
     "stateful_top_values",
-    # -- changed in round 12: must re-green --
-    "snapshot_time_travel",
-    "snapshot_merge_upsert",
-    "snapshot_pruned_read",
-    "snapshot_partitioned_roundtrip",
-    "stream_snapshot_cdc",
-    "stream_snapshot_ingest",
-    "compact_table_roundtrip",
     # -- r6-evidence cohort, alphabetical --
     "asof_join_events",
     "bloom_prune_orders",

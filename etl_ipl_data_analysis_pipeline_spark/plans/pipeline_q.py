@@ -1110,17 +1110,24 @@ def snapshot_pruned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Manifest-stats FILE pruning on the as-of read (VERDICT r10
     directive 2): orders lands key-range-clustered (8 files, each
     file's o_orderkey min/max captured from its parquet footer into the
-    manifest at commit time), then a range-filtered read is served
-    through ``snapshot_read(prune=(col, lo, hi))`` — files whose
-    recorded interval can't intersect [lo, hi] are dropped BEFORE Spark
-    ever schedules tasks for them, the same conservative interval logic
-    the merge probe has used since r10, now on the read side. The
-    inline asserts pin that (a) the scan's inputFiles really shrank and
-    (b) pruning changed nothing about the answer (the post-prune filter
-    re-applies the exact predicate; the oracle computes it relationally
-    over orders). At 10^5 files this is the difference between
-    scheduling ~4 tasks and scheduling all of them — parquet row-group
-    skipping never sees the pruned-out files at all."""
+    manifest at commit time), then a plain range filter is served
+    through ``snapshot_scan(filter=col.between(lo, hi))``, which derives
+    the range from the filter and drops the files whose recorded
+    interval can't intersect [lo, hi] BEFORE Spark ever schedules tasks
+    for them — the same conservative interval logic the merge probe
+    has used since r10, now on the read side. The inline asserts pin
+    that (a) the scan's inputFiles really shrank and (b) pruning
+    changed nothing about the answer (the scan re-applies the exact
+    predicate; the oracle computes it relationally over orders). At
+    10^5 files this is the difference between scheduling ~4 tasks and
+    scheduling all of them — parquet row-group skipping never sees the
+    pruned-out files at all.
+
+    The 8 files are cut from the data alone: one task sorts orders by
+    key and rolls a new file every ceil(rows / 8) rows. A range
+    exchange would draw its bounds from a sample whose seed follows the
+    RDD id, so the files this read keeps would move with whatever the
+    session ran before."""
     import shutil
 
     from .. import snapshots as sn
@@ -1129,65 +1136,22 @@ def snapshot_pruned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = _scratch_dir(sf_dir, "snapshot_pruned_orders")
     shutil.rmtree(base, ignore_errors=True)
     o = load(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-    sn.snapshot_commit(o.repartitionByRange(8, "o_orderkey"), base, "append")
-    mx = o.agg(F.max("o_orderkey")).collect()[0][0]
+    mx, n = o.agg(F.max("o_orderkey"), F.count(F.lit(1))).collect()[0]
+    per_file = "spark.sql.files.maxRecordsPerFile"
+    was = spark.conf.get(per_file)
+    spark.conf.set(per_file, str(-(-n // 8)))
+    try:
+        sn.snapshot_commit(
+            o.coalesce(1).sortWithinPartitions("o_orderkey"), base, "append"
+        )
+    finally:
+        spark.conf.set(per_file, was)
     lo, hi = mx // 8, mx // 4
     m = sn._read_manifest(spark, base, 1)
     assert len(m.get("stats", {})) == len(m["files"])  # footer stats captured
-    pruned = sn.snapshot_read(spark, base, prune=("o_orderkey", lo, hi))
-    n_scanned = len(pruned.inputFiles())
-    assert 0 < n_scanned < len(m["files"]), (n_scanned, len(m["files"]))
-    return pruned.filter(F.col("o_orderkey").between(lo, hi)).agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        stable_sum("o_totalprice", 2).alias("sum_price"),
-        F.min("o_orderkey").alias("min_key"),
-        F.max("o_orderkey").alias("max_key"),
-    )
-
-
-@register(
-    "snapshot_filter_pruned_read",
-    oracle="""
-    WITH b AS (
-      SELECT max(o_orderkey) // 8 AS lo, max(o_orderkey) // 4 AS hi FROM orders
-    )
-    SELECT count(*) AS n_rows,
-           round(CAST(sum(CAST(o_totalprice AS DECIMAL(38,10))) AS DOUBLE), 2)
-               AS sum_price,
-           min(o_orderkey) AS min_key, max(o_orderkey) AS max_key
-    FROM orders, b WHERE o_orderkey BETWEEN b.lo AND b.hi
-    """,
-    tags=("SNK3", "L3", "P6", "A4"),
-)
-def snapshot_filter_pruned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """AUTO-derived file pruning from a PLAIN filter (VERDICT r11 next-1:
-    make the r11 manifest-stats machinery the default path, not an
-    opt-in): the same clustered table and range predicate as
-    ``snapshot_pruned_read``, but the caller writes only the natural
-    ``snapshot_scan(..., filter=col.between(lo, hi))`` — no prune
-    argument anywhere. snapshot_scan ANALYZES the filter against the
-    manifest schema, extracts its conjunctive range predicate, skips
-    the manifest files whose footer interval can't intersect it, and
-    re-applies the full filter to the survivors (pruning is IO-only, so
-    the result — and the oracle — are identical to the explicit-prune
-    query by construction; the hashes must match). The inline assert
-    pins that the scan really shrank: a user switching from
-    ``snapshot_read(prune=...)`` to a bare filter loses nothing."""
-    import shutil
-
-    from .. import snapshots as sn
-    from ..functions import stable_sum
-
-    base = _scratch_dir(sf_dir, "snapshot_fprune_orders")
-    shutil.rmtree(base, ignore_errors=True)
-    o = load(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-    sn.snapshot_commit(o.repartitionByRange(8, "o_orderkey"), base, "append")
-    mx = o.agg(F.max("o_orderkey")).collect()[0][0]
-    lo, hi = mx // 8, mx // 4
     scanned = sn.snapshot_scan(
         spark, base, filter=F.col("o_orderkey").between(lo, hi)
     )
-    m = sn._read_manifest(spark, base, 1)
     n_scanned = len(scanned.inputFiles())
     assert 0 < n_scanned < len(m["files"]), (n_scanned, len(m["files"]))
     return scanned.agg(
@@ -1345,8 +1309,8 @@ def snapshot_partitioned_roundtrip(spark: SparkSession, sf_dir: str) -> DataFram
     commits in two appends laid out under Hive ``o_orderpriority=...``
     directories (the second append INHERITS the layout — no explicit
     partition_by), and the filtered as-of read goes through
-    ``prune=(partition_col, v, v)`` so only the matching directory's
-    files are scheduled — directory pruning that r10's flat layout
+    ``snapshot_scan(filter=partition_col == v)`` so only the matching
+    directory's files are scheduled — directory pruning that r10's flat layout
     couldn't give a time-travel read. The partition value deliberately
     contains a space ('4-NOT SPECIFIED') to pin the Hive path
     escape/unescape round-trip. Asserts: every scanned file lives under
@@ -1374,13 +1338,12 @@ def snapshot_partitioned_roundtrip(spark: SparkSession, sf_dir: str) -> DataFram
     v2 = sn.snapshot_commit(o.filter(F.col("o_orderkey") % 2 == 1), base, "append")
     m = sn._read_manifest(spark, base, v2)
     assert m["partition_by"] == ["o_orderpriority"]
-    pr = sn.snapshot_read(spark, base, prune=("o_orderpriority", target, target))
+    pr = sn.snapshot_scan(spark, base, filter=F.col("o_orderpriority") == target)
     scanned = pr.inputFiles()
     assert 0 < len(scanned) < len(m["files"])
     assert all("o_orderpriority=4-NOT" in f for f in scanned), scanned[:3]
     return (
-        pr.filter(F.col("o_orderpriority") == target)
-        .groupBy((F.col("o_orderkey") % 2).cast("int").alias("parity"))
+        pr.groupBy((F.col("o_orderkey") % 2).cast("int").alias("parity"))
         .agg(
             F.count(F.lit(1)).alias("n_rows"),
             stable_sum("o_totalprice", 2).alias("sum_price"),

@@ -53,7 +53,7 @@ import json
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .io import _fs_and_path
+from .io import _fan_out, _fs_and_path, _move, _read_bytes, _walk_files, _write_bytes
 
 # Above this many update keys the merge probe/anti joins stop hinting
 # broadcast: a multi-million-row key set would blow the broadcast limit
@@ -114,10 +114,7 @@ def _write_head_hint(spark: SparkSession, path: str, version: int) -> None:
     wrong answer. This is what keeps head reads O(1) at 10^4+ versions
     (the many-versions smoke measures the listing alternative)."""
     try:
-        fs, p, jvm = _fs_and_path(spark, _head_hint_path(path))
-        out = fs.create(p, True)
-        out.write(bytearray(str(int(version)).encode()))
-        out.close()
+        _write_bytes(spark, _head_hint_path(path), str(int(version)).encode())
     except Exception:
         pass  # a hint writer must never fail a committed transaction
 
@@ -130,21 +127,11 @@ def _head_version(spark: SparkSession, path: str) -> int | None:
     costs 2 exists-checks; a hint stale by k commits costs k+2; a
     missing/garbage/expired hint falls back to one full listing. Returns
     None when the table has no committed version."""
-    fs, root, jvm = _fs_and_path(spark, _snap_dir(path))
-    hint = None
+    fs, _, jvm = _fs_and_path(spark, _snap_dir(path))
     try:
-        p = jvm.org.apache.hadoop.fs.Path(_head_hint_path(path))
-        if fs.exists(p):
-            stream = fs.open(p)
-            try:
-                data = bytes(
-                    jvm.org.apache.commons.io.IOUtils.toByteArray(stream)
-                )
-            finally:
-                stream.close()
-            hint = int(data.decode("ascii").strip())
+        hint = int(_read_bytes(spark, _head_hint_path(path)).decode("ascii").strip())
     except Exception:
-        hint = None  # torn/garbage hint: fall through to the listing
+        hint = None  # missing/torn/garbage hint: fall through to the listing
     if hint is not None and hint > 0 and fs.exists(
         jvm.org.apache.hadoop.fs.Path(_manifest_path(path, hint))
     ):
@@ -163,14 +150,7 @@ def _read_manifest(spark: SparkSession, path: str, version: int) -> dict:
     stream — a manifest is a few KB, and launching a spark.read.text
     job per read would dominate small streaming micro-batches (the
     ingest path reads manifests every batch)."""
-    fs, p, jvm = _fs_and_path(spark, _manifest_path(path, version))
-    stream = fs.open(p)
-    try:
-        # commons-io ships with Hadoop; py4j maps byte[] to Python bytes
-        data = bytes(jvm.org.apache.commons.io.IOUtils.toByteArray(stream))
-    finally:
-        stream.close()
-    return json.loads(data.decode("utf-8"))
+    return json.loads(_read_bytes(spark, _manifest_path(path, version)))
 
 
 def snapshot_latest_batch_id(spark: SparkSession, path: str) -> int | None:
@@ -233,14 +213,14 @@ def snapshot_commit(
 
     ``partition_by`` lays data files out under Hive-style ``col=value``
     directories so a filtered as-of read keeps DIRECTORY pruning (see
-    snapshot_read's ``prune``) — the layout is fixed at table creation;
+    snapshot_scan) — the layout is fixed at table creation;
     appends inherit it and a mismatching explicit value raises.
 
     ``cluster_by`` range-partitions + sorts the batch on the given
     columns before staging, so each data file covers a TIGHT interval
     of the cluster key and the footer min/max stats the manifest
-    captures actually prune (both the merge probe and snapshot_read's
-    ``prune``). ``cluster_files`` pins the range-partition count (AQE
+    captures actually prune (both the merge probe and snapshot_scan's
+    filter). ``cluster_files`` pins the range-partition count (AQE
     would otherwise coalesce a small batch into one file; at scale,
     pick table_bytes / target_file_size). Per-commit physical layout
     only — nothing is recorded in the manifest, and different commits
@@ -372,34 +352,26 @@ def _stage_files(
 
     spark = df.sparkSession
     fs, _, jvm = _fs_and_path(spark, base)
+    Path = jvm.org.apache.hadoop.fs.Path
     token = uuid.uuid4().hex[:8]
     staging = f"{base}/_commit_{version:08d}_{token}"
     writer = df.write.mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(staging)
-    spath = jvm.org.apache.hadoop.fs.Path(staging)
-    # recursive walk: partitioned staging nests files under col=val dirs
-    staged = []  # (relative-subdir, name)
-    it = fs.listFiles(spath, True)
-    prefix = len(fs.makeQualified(spath).toString().rstrip("/")) + 1
-    while it.hasNext():
-        st = it.next()
-        full = st.getPath().toString()
-        name = st.getPath().getName()
-        if not name.endswith(".parquet"):
-            continue
-        rel_in_staging = full[prefix:]
-        subdir = rel_in_staging[: -len(name)].strip("/")
-        staged.append((subdir, name))
-    staged.sort()
+    # (subdir, name): partitioned staging nests files under col=val dirs
+    staged = sorted(
+        rel.rpartition("/")[::2]
+        for rel, _ in _walk_files(spark, staging)
+        if rel.endswith(".parquet")
+    )
     new_files = []
     moves = []
     made_dirs: set[str] = set()
     for i, (subdir, name) in enumerate(staged):
         dest_dir = f"data/{subdir}".rstrip("/")
         if dest_dir not in made_dirs:
-            dd = jvm.org.apache.hadoop.fs.Path(f"{base}/{dest_dir}")
+            dd = Path(f"{base}/{dest_dir}")
             if not fs.exists(dd):
                 fs.mkdirs(dd)
             made_dirs.add(dest_dir)
@@ -412,11 +384,9 @@ def _stage_files(
         )
         new_files.append(rel)
 
-    def _move(pair: tuple) -> None:
-        src = jvm.org.apache.hadoop.fs.Path(pair[0])
-        dst = jvm.org.apache.hadoop.fs.Path(pair[1])
-        if not fs.rename(src, dst):
-            raise IOError(f"snapshot commit: rename {src} -> {dst} failed")
+    def _publish_file(pair: tuple) -> None:
+        dst = Path(pair[1])
+        _move(fs, Path(pair[0]), dst, "snapshot commit")
         # rename preserves the mtime of the staging WRITE, but
         # snapshot_expire's staging_grace_s measures file age by mtime —
         # a commit whose staging write outlasts the grace would publish
@@ -425,19 +395,8 @@ def _stage_files(
         # measured from when the file became sweep-visible.
         fs.setTimes(dst, int(time.time() * 1000), -1)
 
-    # the per-file rename+setTimes RPCs are independent; fan them over a
-    # bounded thread pool (py4j gives each Python thread its own gateway
-    # connection — the _parallel_fs_delete pattern). Failures propagate:
-    # a commit that couldn't move a staged file must not publish.
-    if len(moves) <= 4:
-        for pair in moves:
-            _move(pair)
-    else:
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(min(16, len(moves))) as ex:
-            list(ex.map(_move, moves))
-    fs.delete(spath, True)
+    _fan_out(_publish_file, moves)
+    fs.delete(Path(staging), True)
     return new_files
 
 
@@ -530,23 +489,23 @@ def _commit_manifest(
         # first rename/drop initializes it; tables that never rename keep
         # byte-identical manifests and the single-scan read fast path.
         manifest.update(field_meta)
-    sdir = jvm.org.apache.hadoop.fs.Path(_snap_dir(base))
+    Path = jvm.org.apache.hadoop.fs.Path
+    sdir = Path(_snap_dir(base))
     if not fs.exists(sdir):
         fs.mkdirs(sdir)
     final_str = _manifest_path(base, version)
-    final = jvm.org.apache.hadoop.fs.Path(final_str)
+    final = Path(final_str)
+    version_taken = SnapshotConflict(
+        f"snapshot commit: manifest publish failed for v{version} "
+        "(already committed by a concurrent writer)"
+    )
     if fs.exists(final):
-        raise SnapshotConflict(
-            f"snapshot commit: manifest publish failed for v{version} "
-            "(already committed by a concurrent writer)"
-        )
+        raise version_taken
     # tmp name is attempt-unique: two racing writers must not clobber
     # each other's staged manifest before publication arbitrates
     tmp_str = final_str + f".tmp-{token[:8]}"
-    tmp = jvm.org.apache.hadoop.fs.Path(tmp_str)
-    out = fs.create(tmp, True)
-    out.write(bytearray(json.dumps(manifest).encode()))
-    out.close()
+    tmp = Path(tmp_str)
+    _write_bytes(spark, tmp_str, json.dumps(manifest).encode())
     if fs.makeQualified(final).toUri().getScheme() == "file":
         nio = jvm.java.nio.file
         try:
@@ -558,10 +517,7 @@ def _commit_manifest(
         except Exception as e:  # py4j surfaces the java class in the message
             fs.delete(tmp, False)
             if "FileAlreadyExistsException" in str(e):
-                raise SnapshotConflict(
-                    f"snapshot commit: manifest publish failed for v{version} "
-                    "(already committed by a concurrent writer)"
-                ) from None
+                raise version_taken from None
             raise
         fs.delete(tmp, False)
         _write_head_hint(spark, base, version)
@@ -569,10 +525,7 @@ def _commit_manifest(
     if not fs.rename(tmp, final):
         fs.delete(tmp, False)
         if fs.exists(final):
-            raise SnapshotConflict(
-                f"snapshot commit: manifest publish failed for v{version} "
-                "(already committed by a concurrent writer)"
-            )
+            raise version_taken
         raise IOError(f"snapshot commit: manifest rename failed for v{version}")
     published = _read_manifest(spark, base, version)
     if published.get("writer") != token:
@@ -658,17 +611,20 @@ def _publish(spark: SparkSession, base: str, op: str, build, head: tuple) -> int
 
 
 def _field_meta_of(manifest: dict | None) -> dict | None:
-    """The field-id machinery a manifest carries, or None when it was
-    never materialized (tables that never rename/drop)."""
+    """A fresh, normalised copy of the field-id machinery a manifest
+    carries (safe to extend), or None when it was never materialized
+    (tables that never rename/drop)."""
     if not manifest or "field_ids" not in manifest:
         return None
+    fids = dict(manifest["field_ids"])
     return {
-        "field_ids": manifest["field_ids"],
-        "next_field_id": manifest.get("next_field_id")
-        or max(manifest["field_ids"].values(), default=0) + 1,
-        "field_added": manifest.get("field_added") or {},
-        "renames": manifest.get("renames") or [],
-        "drops": manifest.get("drops") or [],
+        "field_ids": fids,
+        "next_field_id": int(
+            manifest.get("next_field_id") or max(fids.values(), default=0) + 1
+        ),
+        "field_added": dict(manifest.get("field_added") or {}),
+        "renames": list(manifest.get("renames") or []),
+        "drops": list(manifest.get("drops") or []),
     }
 
 
@@ -683,21 +639,12 @@ def _evolve_field_meta(parent: dict | None, schema, version: int) -> dict | None
     meta = _field_meta_of(parent)
     if meta is None:
         return None
-    fids = dict(meta["field_ids"])
-    nxt = int(meta["next_field_id"])
-    fadd = dict(meta["field_added"])
     for f in schema.fields:
-        if f.name not in fids:
-            fids[f.name] = nxt
-            fadd[str(nxt)] = int(version)
-            nxt += 1
-    return {
-        "field_ids": fids,
-        "next_field_id": nxt,
-        "field_added": fadd,
-        "renames": meta["renames"],
-        "drops": meta["drops"],
-    }
+        if f.name not in meta["field_ids"]:
+            meta["field_ids"][f.name] = meta["next_field_id"]
+            meta["field_added"][str(meta["next_field_id"])] = int(version)
+            meta["next_field_id"] += 1
+    return meta
 
 
 def _file_stats(base: str, rels: list[str]) -> tuple[dict, dict]:
@@ -917,51 +864,20 @@ def _prune_files_by_range(
 _DELETE_BROADCAST_BYTES_MAX = 32 * 1024 * 1024
 
 
-def _phys_fields(manifest: dict, rel: str, schema) -> tuple | None:
-    """Physical column mapping of data file ``rel`` for every field of
-    ``schema``: a tuple aligned with schema.fields where each slot is the
-    column name the field had WHEN THE FILE WAS WRITTEN, or None when the
-    field did not exist yet (the read serves NULL — and never a stale
-    same-named physical column left behind by a drop or rename, because a
-    re-added name carries a FRESH field id whose add-version postdates
-    the file). Returns None when the table has no rename/drop history —
-    the single-scan fast path needs no mapping."""
-    renames = manifest.get("renames") or []
-    if not renames and not (manifest.get("drops") or []):
-        return None
-    fids = manifest.get("field_ids") or {}
-    fadd = manifest.get("field_added") or {}
-    av = (manifest.get("adds") or {}).get(rel, 0)
-    out = []
-    for f in schema.fields:
-        fid = fids.get(f.name)
-        if fid is None:
-            # caller-supplied column outside the tracked schema (e.g. a
-            # probe projection): read it by its literal name
-            out.append(f.name)
-            continue
-        if int(fadd.get(str(fid), 0)) > av:
-            out.append(None)
-            continue
-        name = f.name
-        # undo renames NEWER than the file, newest first, to recover the
-        # name the id had at write time (each id's entries form a chain)
-        for r in reversed(renames):
-            if r["id"] == fid and r["version"] > av:
-                name = r["from"]
-        out.append(name)
-    return tuple(out)
-
-
 def _phys_name(manifest: dict, rel: str, col: str) -> str | None:
-    """The physical name ``col`` had when ``rel`` was written (for stats
-    lookups), or None when the column did not exist in that file yet."""
+    """The column name ``col`` had WHEN data file ``rel`` was written —
+    the rename-log replay every read and stats lookup goes through — or
+    None when the field did not exist yet (the read serves NULL — and
+    never a stale same-named physical column left behind by a drop or
+    rename, because a re-added name carries a FRESH field id whose
+    add-version postdates the file). A name outside the tracked schema
+    (e.g. a probe projection) reads by its literal name."""
     renames = manifest.get("renames") or []
     # drops matter even with no renames: a dropped-then-re-added column
     # is a FRESH field whose add-version postdates old files, so their
     # stale same-named footer stats must not serve it (the field_added
     # check below returns None). Early-return only when neither history
-    # exists — matching _phys_fields.
+    # exists.
     if not renames and not (manifest.get("drops") or []):
         return col
     fid = (manifest.get("field_ids") or {}).get(col)
@@ -971,6 +887,8 @@ def _phys_name(manifest: dict, rel: str, col: str) -> str | None:
     if int((manifest.get("field_added") or {}).get(str(fid), 0)) > av:
         return None
     name = col
+    # undo renames NEWER than the file, newest first, to recover the
+    # name the id had at write time (each id's entries form a chain)
     for r in reversed(renames):
         if r["id"] == fid and r["version"] > av:
             name = r["from"]
@@ -1068,7 +986,9 @@ def _read_data(
     for rel in rels:
         key = (
             _applicable_deletes(manifest, rel),
-            _phys_fields(manifest, rel, schema) if evolved else None,
+            tuple(_phys_name(manifest, rel, f.name) for f in schema.fields)
+            if evolved
+            else None,
         )
         groups.setdefault(key, []).append(rel)
     out = None
@@ -1340,7 +1260,6 @@ def snapshot_read(
     spark: SparkSession,
     path: str,
     version: int | None = None,
-    prune: tuple | None = None,
     as_of_ts: float | None = None,
 ) -> DataFrame:
     """Read a table AS OF ``version`` (default: latest committed). Only
@@ -1351,20 +1270,9 @@ def snapshot_read(
     what later files carry, and (b) additive schema evolution works:
     files older than a column read it as NULL, no mergeSchema
     footer-sniff over every file needed. An empty version reconstructs
-    its schema the same way so downstream plans still resolve.
-
-    ``prune=(col, lo, hi)`` (either bound may be None) drops manifest
-    files whose recorded interval for ``col`` — partition-directory
-    value, else footer min/max stats — can't intersect [lo, hi], BEFORE
-    Spark ever sees them: at 10^5 files the win is not row-group skip
-    (parquet does that per file anyway) but never scheduling tasks for
-    pruned-out files at all. A LIST of such triples prunes on their
-    conjunction (e.g. partition column + cluster key together).
-    Strictly an IO optimization with conservative semantics (no stats →
-    kept): the surviving files' FULL rows are returned, so the caller
-    still applies the actual predicate — which Spark then pushes into
-    the remaining scans. Pair with ``snapshot_commit(cluster_by=...)``
-    to make the footer intervals tight enough to bite.
+    its schema the same way so downstream plans still resolve. A
+    filtered read goes through ``snapshot_scan``, which also skips the
+    files the filter rules out.
 
     ``as_of_ts`` (unix seconds; mutually exclusive with ``version``)
     reads the newest version whose recorded ``committed_at`` is <= the
@@ -1378,15 +1286,7 @@ def snapshot_read(
     this encodes: stamping is monotone — once a table has one stamped
     commit, every later commit is stamped too (true for any table this
     code writes; only hand-edited lineages can violate it)."""
-    base = path.rstrip("/")
-    version = _resolve_version(spark, base, version, as_of_ts)
-    manifest = _read_manifest(spark, base, version)
-    rels = manifest["files"]
-    if prune is not None:
-        preds = [prune] if isinstance(prune, tuple) else list(prune)
-        for col, lo, hi in preds:
-            rels = _prune_files_by_range(manifest, col, lo, hi, rels)
-    return _read_data(spark, base, manifest, rels)
+    return snapshot_scan(spark, path, version=version, as_of_ts=as_of_ts)
 
 
 # integral widenings are exact; float->double is exact; integral->floating
@@ -1546,19 +1446,23 @@ def snapshot_scan(
     version: int | None = None,
     as_of_ts: float | None = None,
 ) -> DataFrame:
-    """snapshot_read with AUTOMATIC file pruning: the natural
-    ``snapshot_scan(spark, path, filter=col("k").between(lo, hi))``
-    call derives the manifest-level file skip that snapshot_read needs
-    an explicit ``prune=(col, lo, hi)`` argument for (VERDICT r11
-    residual 1 — the stats machinery existed but plain filters never
-    reached it). ``filter`` is a Column or SQL string; its top-level
-    conjunctive range/equality/IN predicates prune on footer stats AND
-    partition directories (conjunction composes), everything else in
-    the predicate simply doesn't prune. The FULL filter is then applied
-    to the surviving files' scan — extraction is strictly an IO
-    optimization, Spark still pushes the predicate into the remaining
-    parquet reads — so the result equals
-    ``snapshot_read(...).filter(filter)`` by construction."""
+    """snapshot_read with FILE pruning — the one pruned read: the
+    natural ``snapshot_scan(spark, path, filter=col("k").between(lo,
+    hi))`` call drops manifest files whose recorded interval —
+    partition-directory value, else footer min/max stats — can't
+    satisfy the filter, BEFORE Spark ever sees them: at 10^5 files the
+    win is not row-group skip (parquet does that per file anyway) but
+    never scheduling tasks for pruned-out files at all. ``filter`` is a
+    Column or SQL string; its top-level conjunctive range/equality/IN
+    predicates prune on footer stats AND partition directories
+    (conjunction composes, e.g. partition column + cluster key),
+    everything else in the predicate simply doesn't prune, and a file
+    without stats is kept. The FULL filter is then applied to the
+    surviving files' scan — extraction is strictly an IO optimization,
+    Spark still pushes the predicate into the remaining parquet reads —
+    so the result equals ``snapshot_read(...).filter(filter)`` by
+    construction. Pair with ``snapshot_commit(cluster_by=...)`` to make
+    the footer intervals tight enough to bite."""
     import pyspark.sql.functions as F
     from pyspark.sql.types import StructType
 
@@ -1585,23 +1489,7 @@ def snapshot_compact(
     destructive step and it honors retention. The streaming batch-id
     marker carries forward, so a compact (then expiry) between stream
     runs never re-opens the exactly-once window."""
-    base = path.rstrip("/")
-    # read the data PINNED to the captured head manifest — a separate
-    # "read latest" here would race a concurrent commit landing between
-    # the two resolutions and compact rows the rebase then duplicates
-    head_version, head = _read_head(spark, base)
-    cur = _read_data(spark, base, head, head["files"])
-    total = sum(f[2] for f in _live_files(spark, base, [head_version]))
-    n_target = max(1, -(-total // (target_mb * 1024 * 1024)))
-    part = head.get("partition_by")
-    files = _stage_files(cur.coalesce(n_target), base, head_version + 1, part)
-    # touched = every file this compaction read: a concurrent APPEND
-    # rebases cleanly (its files ride the new manifest verbatim next to
-    # the compacted ones); any concurrent REWRITE of those files raises.
-    return _commit_rewrite(
-        spark, base, head, head_version, op="replace",
-        touched=list(head["files"]), new_files=files, new_schema=cur.schema,
-    )
+    return _rewrite_head(spark, path, target_mb, None, lambda cur, n: cur.coalesce(n))
 
 
 def snapshot_optimize(
@@ -1625,19 +1513,35 @@ def snapshot_optimize(
     are absorbed physically, the batch-id marker carries forward, and
     a concurrent append rebases cleanly (its files ride the new
     manifest verbatim) while a concurrent rewrite conflicts."""
+    return _rewrite_head(
+        spark, path, target_mb, target_files,
+        lambda cur, n: _cluster_df(
+            cur, list(cluster_by), n, cluster_method, cluster_tiebreak
+        ),
+    )
+
+
+def _rewrite_head(
+    spark: SparkSession, path: str, target_mb: int, n_files: int | None, shape
+) -> int:
+    """The one "rewrite the head" body of compact and optimize:
+    ``shape(rows, n)`` lays the head's rows out as ``n`` files
+    (``n_files``, or the head's bytes over ``target_mb``), committed as a
+    'replace' version."""
     base = path.rstrip("/")
+    # read the data PINNED to the captured head manifest — a separate
+    # "read latest" here would race a concurrent commit landing between
+    # the two resolutions and compact rows the rebase then duplicates
     head_version, head = _read_head(spark, base)
     cur = _read_data(spark, base, head, head["files"])
-    if target_files is not None:
-        n_target = max(1, int(target_files))
-    else:
+    if n_files is None:
         total = sum(f[2] for f in _live_files(spark, base, [head_version]))
-        n_target = max(1, -(-total // (target_mb * 1024 * 1024)))
-    clustered = _cluster_df(
-        cur, list(cluster_by), n_target, cluster_method, cluster_tiebreak
-    )
+        n_files = -(-total // (target_mb * 1024 * 1024))
     part = head.get("partition_by")
-    files = _stage_files(clustered, base, head_version + 1, part)
+    files = _stage_files(shape(cur, max(1, int(n_files))), base, head_version + 1, part)
+    # touched = every file this rewrite read: a concurrent APPEND
+    # rebases cleanly (its files ride the new manifest verbatim next to
+    # the rewritten ones); any concurrent REWRITE of those files raises.
     return _commit_rewrite(
         spark, base, head, head_version, op="replace",
         touched=list(head["files"]), new_files=files, new_schema=cur.schema,
@@ -1657,23 +1561,6 @@ def _live_files(spark: SparkSession, path: str, versions: list[int]):
         p = jvm.org.apache.hadoop.fs.Path(f"{base}/{rel}")
         out.append((rel, f"{base}/{rel}", int(fs.getFileStatus(p).getLen())))
     return out
-
-
-def _parallel_fs_delete(fs, paths: list, recursive: bool = False) -> None:
-    """Issue independent fs.delete RPCs from a bounded thread pool.
-    py4j allocates one gateway connection per Python thread, so calls
-    proceed concurrently; failures propagate (an expire that couldn't
-    delete must not report success)."""
-    if not paths:
-        return
-    if len(paths) <= 4:
-        for p in paths:
-            fs.delete(p, recursive)
-        return
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(min(16, len(paths))) as ex:
-        list(ex.map(lambda p: fs.delete(p, recursive), paths))
 
 
 def snapshot_expire(
@@ -1719,7 +1606,7 @@ def snapshot_expire(
     # getFileStatus-per-file pass would be minutes of metadata latency
     # on an object store for data this function never uses); the
     # modification times used for the grace check ride the SAME
-    # listStatus entries the sweep already walks
+    # listing entries the sweep already walks
     retained: set[str] = set()
     for v in keep:
         m = _read_manifest(spark, base, v)
@@ -1728,48 +1615,28 @@ def snapshot_expire(
         # would resurrect its deleted rows in every retained version
         retained.update(d["file"] for d in m.get("deletes") or [])
     cutoff_ms = (time.time() - staging_grace_s) * 1000.0
-    data_dir = jvm.org.apache.hadoop.fs.Path(base + "/data")
+    Path = jvm.org.apache.hadoop.fs.Path
     sweep_paths = []
-    if fs.exists(data_dir):
-        qual = fs.makeQualified(data_dir).toString().rstrip("/")
-        stack = [data_dir]
-        while stack:
-            d = stack.pop()
-            for st in fs.listStatus(d):
-                if st.isDirectory():
-                    stack.append(st.getPath())
-                    continue
-                full = st.getPath().toString()
-                rel = "data/" + full[len(qual) + 1:]
-                if rel not in retained and st.getModificationTime() < cutoff_ms:
-                    sweep_paths.append(st.getPath())
+    if fs.exists(Path(base + "/data")):
+        for rel, st in _walk_files(spark, base + "/data"):
+            if "data/" + rel not in retained and st.getModificationTime() < cutoff_ms:
+                sweep_paths.append(st.getPath())
     removed_files = len(sweep_paths)
     if dry_run:
         return (len(drop), removed_files)
     # deletes are one FS RPC each (~4-6ms of py4j/metadata latency); a
-    # long-retention sweep or a 10^4-version expiry issues thousands, so
-    # fan them over a thread pool — py4j gives each Python thread its own
-    # gateway connection, and HDFS/object-store delete RPCs are
-    # independent. Measured in the many-versions smoke.
-    _parallel_fs_delete(fs, sweep_paths, recursive=False)
-    _parallel_fs_delete(
-        fs,
-        [
-            jvm.org.apache.hadoop.fs.Path(_manifest_path(base, v))
-            for v in drop
-        ],
-        recursive=False,
-    )
+    # long-retention sweep or a 10^4-version expiry issues thousands —
+    # measured in the many-versions smoke
+    _fan_out(lambda p: fs.delete(p, False), sweep_paths)
+    _fan_out(lambda v: fs.delete(Path(_manifest_path(base, v)), False), drop)
     # crashed-commit staging debris (past the grace window) too, and
     # manifest .tmp-* orphans a crash between create and rename leaves
-    broot = jvm.org.apache.hadoop.fs.Path(base)
-    for st in fs.listStatus(broot):
+    for st in fs.listStatus(Path(base)):
         if st.getPath().getName().startswith("_commit_") and (
             st.getModificationTime() < cutoff_ms
         ):
             fs.delete(st.getPath(), True)
-    sroot = jvm.org.apache.hadoop.fs.Path(_snap_dir(base))
-    for st in fs.listStatus(sroot):
+    for st in fs.listStatus(Path(_snap_dir(base))):
         if ".json.tmp-" in st.getPath().getName() and (
             st.getModificationTime() < cutoff_ms
         ):
@@ -2269,6 +2136,25 @@ def snapshot_delete_keys(
     return _publish(spark, base, "delete_keys", build, (head_version, head))
 
 
+def _version_range(
+    spark: SparkSession, base: str, from_version: int, to_version: int | None
+) -> tuple[list[int], int]:
+    """``(committed versions, to_version)`` for a change read over
+    [from_version, to_version] (default: the head); raises ValueError
+    when either end is not committed or the range is reversed."""
+    versions = snapshot_versions(spark, base)
+    if to_version is None:
+        to_version = versions[-1] if versions else 0
+    for v in (from_version, to_version):
+        if v not in versions:
+            raise ValueError(f"version {v} not in {versions}")
+    if from_version > to_version:
+        raise ValueError(
+            f"from_version {from_version} > to_version {to_version}"
+        )
+    return versions, to_version
+
+
 def snapshot_changes(
     spark: SparkSession,
     path: str,
@@ -2305,16 +2191,7 @@ def snapshot_changes(
     from pyspark.sql.types import StructType
 
     base = path.rstrip("/")
-    versions = snapshot_versions(spark, base)
-    if to_version is None:
-        to_version = versions[-1] if versions else 0
-    for v in (from_version, to_version):
-        if v not in versions:
-            raise ValueError(f"version {v} not in {versions}")
-    if from_version > to_version:
-        raise ValueError(
-            f"from_version {from_version} > to_version {to_version}"
-        )
+    _, to_version = _version_range(spark, base, from_version, to_version)
     m1 = _read_manifest(spark, base, from_version)
     m2 = _read_manifest(spark, base, to_version)
     schema2 = StructType.fromJson(json.loads(m2["schema"]))
@@ -2353,10 +2230,7 @@ def snapshot_changes(
         if r2[: len(r1)] == r1 and d2[: len(d1)] == d1:
             old_m = {
                 **m1,
-                "field_ids": m2["field_ids"],
-                "field_added": m2.get("field_added") or {},
-                "renames": r2,
-                "drops": d2,
+                **_field_meta_of(m2),
                 "adds": {**(m2.get("adds") or {}), **(m1.get("adds") or {})},
             }
     old = _read_data(spark, base, old_m, old_rels, schema=schema2)
@@ -2460,23 +2334,13 @@ def _init_field_meta(head: dict) -> dict:
     """Materialize field-id machinery for a table that never had it:
     every current field gets id 1..n with add-version 0 ('existed from
     the start' — matching every existing file's implicit add-version)."""
-    meta = _field_meta_of(head)
-    if meta is not None:
-        return {
-            "field_ids": dict(meta["field_ids"]),
-            "next_field_id": int(meta["next_field_id"]),
-            "field_added": dict(meta["field_added"]),
-            "renames": list(meta["renames"]),
-            "drops": list(meta["drops"]),
-        }
     names = [f["name"] for f in json.loads(head["schema"])["fields"]]
-    return {
-        "field_ids": {n: i + 1 for i, n in enumerate(names)},
-        "next_field_id": len(names) + 1,
-        "field_added": {str(i + 1): 0 for i in range(len(names))},
-        "renames": [],
-        "drops": [],
-    }
+    return _field_meta_of(head) or _field_meta_of(
+        {
+            "field_ids": {n: i + 1 for i, n in enumerate(names)},
+            "field_added": {str(i + 1): 0 for i in range(len(names))},
+        }
+    )
 
 
 def _check_schema_change_ok(head: dict, col: str, op: str) -> None:
@@ -2597,16 +2461,7 @@ def snapshot_changes_by_version(
     import pyspark.sql.functions as F
 
     base = path.rstrip("/")
-    versions = snapshot_versions(spark, base)
-    if to_version is None:
-        to_version = versions[-1] if versions else 0
-    for v in (from_version, to_version):
-        if v not in versions:
-            raise ValueError(f"version {v} not in {versions}")
-    if from_version > to_version:
-        raise ValueError(
-            f"from_version {from_version} > to_version {to_version}"
-        )
+    versions, to_version = _version_range(spark, base, from_version, to_version)
     span = [v for v in versions if from_version <= v <= to_version]
     out = None
     for lo, hi in zip(span, span[1:]):

@@ -18,6 +18,9 @@ each batch shuffles O(batch + live keys touched), never the history.
 
 from __future__ import annotations
 
+import functools
+import operator
+
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
@@ -127,15 +130,17 @@ def run_snapshot_cdc_stream(
         head_v = sn._head_version(sess, table_path)
         if head_v is not None:
             # the winner-resolution read needs only rows whose key the
-            # batch touches: prune the scan by the incoming key range
-            # (manifest footer stats / partition dirs), so a clustered
-            # table reads a handful of files, not the state. Composite
-            # keys prune on the LEADING column (the necessary-condition
-            # rule _prune_by_key_stats uses: a file whose leading-column
-            # range misses every incoming value can't hold a full-key
-            # match), and when the table is Hive-partitioned on any key
-            # column, that column's incoming min/max prunes DIRECTORIES
-            # too — triples compose conjunctively.
+            # batch touches: filter the scan to the incoming key range,
+            # which snapshot_scan turns into a file skip (manifest footer
+            # stats / partition dirs), so a clustered table reads a
+            # handful of files, not the state. Composite keys bound the
+            # LEADING column (the necessary-condition rule
+            # _prune_by_key_stats uses: a file whose leading-column range
+            # misses every incoming value can't hold a full-key match),
+            # and when the table is Hive-partitioned on any key column,
+            # that column's incoming min/max prunes DIRECTORIES too — the
+            # range conjuncts compose. Rows outside the range could not
+            # survive the key semi-join below anyway.
             head_m = sn._read_manifest(sess, table_path, head_v)
             prune_cols = [keys[0]] + [
                 c
@@ -146,12 +151,16 @@ def run_snapshot_cdc_stream(
             for i, c in enumerate(prune_cols):
                 aggs += [F.min(c).alias(f"lo{i}"), F.max(c).alias(f"hi{i}")]
             r = incoming.agg(*aggs).collect()[0]
-            prune = [
-                (c, r[f"lo{i}"], r[f"hi{i}"])
+            in_range = [
+                F.col(c).between(r[f"lo{i}"], r[f"hi{i}"])
                 for i, c in enumerate(prune_cols)
                 if r[f"lo{i}"] is not None
             ]
-            current = sn.snapshot_read(sess, table_path, prune=prune or None)
+            current = sn.snapshot_scan(
+                sess,
+                table_path,
+                filter=functools.reduce(operator.and_, in_range) if in_range else None,
+            )
             existing = current.join(
                 incoming.select(*keys).distinct(), keys, "left_semi"
             )

@@ -11,7 +11,7 @@ Claims measured (recorded into SCALE_SMOKE_r10.json):
 4. bm25_merge_many fold cost ~linear in the number/size of deltas.
 
 Round 11 additions:
-5. snapshot_read manifest-stats pruning: a range-filtered as-of read
+5. snapshot_scan manifest-stats pruning: a range-filtered as-of read
    schedules tasks for ONLY the overlapping files (file counts +
    timing vs the unpruned scan at 16x).
 6. streaming ingest maintenance (compact_every/expire_retain): 20
@@ -120,12 +120,10 @@ def main() -> int:
         full_read.filter(F.col("k").between(lo, hi)).agg(F.sum("v")).collect()[0][0]
     )
     out["pruned_read_unpruned_secs"] = round(time.monotonic() - t0, 2)
-    pruned_read = sn.snapshot_read(spark, base, prune=("k", lo, hi))
+    pruned_read = sn.snapshot_scan(spark, base, filter=F.col("k").between(lo, hi))
     out["pruned_read_files_pruned"] = len(pruned_read.inputFiles())
     t0 = time.monotonic()
-    pruned_sum = (
-        pruned_read.filter(F.col("k").between(lo, hi)).agg(F.sum("v")).collect()[0][0]
-    )
+    pruned_sum = pruned_read.agg(F.sum("v")).collect()[0][0]
     out["pruned_read_pruned_secs"] = round(time.monotonic() - t0, 2)
     assert pruned_sum == full_sum, (pruned_sum, full_sum)
 

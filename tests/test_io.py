@@ -536,3 +536,21 @@ def test_write_parquet_salt_skips_map_columns(spark, tmp_path):
     p = str(tmp_path / "mapped")
     tio.write_parquet(df, p, partition_by=["grp"], files_per_partition=3)
     assert spark.read.parquet(p).count() == 50
+
+
+def test_fan_out_propagates_a_pool_failure():
+    """The shared fan-out of independent FS calls runs more than 4 items
+    on its thread pool; a call that raises there must still reach the
+    caller, or a commit or sweep that lost a step would report success."""
+    import threading
+
+    threads = set()
+
+    def call(i):
+        threads.add(threading.current_thread() is threading.main_thread())
+        if i == 5:
+            raise OSError("delete of item 5 failed")
+
+    with pytest.raises(OSError, match="item 5"):
+        tio._fan_out(call, list(range(8)))
+    assert threads == {False}  # every call ran on the pool

@@ -291,6 +291,33 @@ def test_ingest_job_counts_and_descriptions(spark, tmp_path, pipe_args):
     assert spark.read.parquet(big_args["out_dir"]).count() == 100
 
 
+def test_control_tables_append_one_file_per_run(spark, tmp_path, pipe_args):
+    """The ledger is append-only: a second run over a disjoint archive
+    leaves the first run's ledger file in place (same name, same size)
+    and adds one file holding exactly the second archive's keys — keys,
+    not paths, so rerunning that archive lands nothing. With no drift
+    the schema registry is not written at all."""
+    from etl_ipl_data_analysis_pipeline_spark.operators.ledger import LEDGER_SCHEMA
+
+    def files(key):
+        d = pipe_args[key]
+        return {f: os.path.getsize(os.path.join(d, f)) for f in os.listdir(d) if f.endswith(".parquet")}
+
+    run_ingest(spark, make_zip(tmp_path, "z1.zip", {"a1.json": [{"id": 1}], "a2.json": [{"id": 2}]}), **pipe_args)
+    ledger1, registry1 = files("ledger_path"), files("schema_registry_path")
+    assert len(ledger1) == 1
+    z2 = make_zip(tmp_path, "z2.zip", {f"b{i}.json": [{"id": 10 + i}] for i in range(3)})
+    run_ingest(spark, z2, **pipe_args)
+    ledger2 = files("ledger_path")
+    assert {f: ledger2.get(f) for f in ledger1} == ledger1
+    (added,) = set(ledger2) - set(ledger1)
+    keys = spark.read.schema(LEDGER_SCHEMA).parquet(os.path.join(pipe_args["ledger_path"], added))
+    assert sorted(r.file_key for r in keys.collect()) == ["b0", "b1", "b2"]
+    assert files("schema_registry_path") == registry1
+    assert run_ingest(spark, z2, **pipe_args).skipped
+    assert spark.read.parquet(pipe_args["out_dir"]).count() == 5
+
+
 def test_compact_after_bounds_small_files(spark, tmp_path, pipe_args):
     """compact_after keeps the append-mode out_dir from accumulating one
     sliver per run: after 3 ingests with compaction the table holds one

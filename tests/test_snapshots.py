@@ -436,9 +436,10 @@ def test_commit_conflict_exhausts_retries(spark, table, monkeypatch):
 
 
 def test_snapshot_read_prunes_by_manifest_stats(spark, tmp_path):
-    """prune=(col, lo, hi) drops manifest files whose footer min/max
-    can't intersect the range BEFORE Spark schedules tasks for them;
-    files without stats stay; results equal the unpruned filtered read."""
+    """snapshot_scan's range filter drops manifest files whose footer
+    min/max can't intersect the range BEFORE Spark schedules tasks for
+    them; files without stats stay; results equal the unpruned filtered
+    read."""
     import pyspark.sql.functions as F
 
     base = str(tmp_path / "tbl")
@@ -452,17 +453,15 @@ def test_snapshot_read_prunes_by_manifest_stats(spark, tmp_path):
     m = sn._read_manifest(spark, base, 1)
     assert len(m["files"]) == 8
 
-    pruned = sn.snapshot_read(spark, base, prune=("k", 100, 199))
+    pruned = sn.snapshot_scan(spark, base, filter=F.col("k").between(100, 199))
     assert len(pruned.inputFiles()) < 8  # fewer files even reach the scan
-    got = sorted(r.k for r in pruned.filter(F.col("k").between(100, 199)).collect())
+    got = sorted(r.k for r in pruned.collect())
     assert got == list(range(100, 200))
 
     # open-ended bounds
-    lo_only = sn.snapshot_read(spark, base, prune=("k", 700, None))
+    lo_only = sn.snapshot_scan(spark, base, filter=F.col("k") >= 700)
     assert len(lo_only.inputFiles()) < 8
-    assert {r.k for r in lo_only.filter(F.col("k") >= 700).collect()} == set(
-        range(700, 800)
-    )
+    assert {r.k for r in lo_only.collect()} == set(range(700, 800))
 
     # a column with no stats anywhere: nothing pruned (conservative)
     m_no = dict(m)
@@ -495,7 +494,7 @@ def test_partitioned_snapshot_roundtrip_and_pruned_read(spark, tmp_path):
     assert out.filter(F.col("lang") == "en").count() == 30
 
     # pruned read: only the lang=en directory's files reach the scan
-    pr = sn.snapshot_read(spark, base, prune=("lang", "en", "en"))
+    pr = sn.snapshot_scan(spark, base, filter=F.col("lang") == "en")
     assert all("lang=en" in f for f in pr.inputFiles())
     assert sorted(r.k for r in pr.collect()) == [i for i in range(90) if i % 3 == 0]
 
@@ -625,7 +624,7 @@ def test_stream_ingest_with_maintenance_bounds_files(spark, tmp_path):
 
 def test_cluster_by_and_conjunctive_prune(spark, tmp_path):
     """cluster_by gives each data file a tight key interval, so footer
-    stats actually prune; a list-valued prune applies the conjunction
+    stats actually prune; a conjunctive scan filter prunes on both
     (partition dir AND cluster key)."""
     import pyspark.sql.functions as F
 
@@ -643,23 +642,18 @@ def test_cluster_by_and_conjunctive_prune(spark, tmp_path):
     assert n_all > 4  # range-partitioned into several files per lang dir
 
     # conjunction: one lang dir AND one narrow k interval
-    pr = sn.snapshot_read(
-        spark, base, prune=[("lang", "en", "en"), ("k", 100, 120)]
+    pr = sn.snapshot_scan(
+        spark, base, filter=(F.col("lang") == "en") & F.col("k").between(100, 120)
     )
     scanned = pr.inputFiles()
     assert 0 < len(scanned) < n_all
     assert all("lang=en" in f for f in scanned)
-    got = sorted(
-        r.k
-        for r in pr.filter(
-            (F.col("lang") == "en") & F.col("k").between(100, 120)
-        ).collect()
-    )
+    got = sorted(r.k for r in pr.collect())
     assert got == [k for k in range(100, 121) if k % 2 == 0]
 
     # the same narrow read WITHOUT cluster_by stats would keep all files
     # in the lang dir; with clustering it must keep strictly fewer
-    dir_only = sn.snapshot_read(spark, base, prune=("lang", "en", "en"))
+    dir_only = sn.snapshot_scan(spark, base, filter=F.col("lang") == "en")
     assert len(scanned) < len(dir_only.inputFiles())
 
 
@@ -783,11 +777,9 @@ def test_zorder_clustered_commit_prunes_both_dimensions(spark, tmp_path):
     assert n_all >= 8
 
     for col in ("x", "y"):
-        pr = sn.snapshot_read(spark, base_z, prune=(col, 10, 13))
+        pr = sn.snapshot_scan(spark, base_z, filter=F.col(col).between(10, 13))
         assert 0 < len(pr.inputFiles()) < n_all, col
-        got = sorted(
-            (r.rid) for r in pr.filter(F.col(col).between(10, 13)).collect()
-        )
+        got = sorted(r.rid for r in pr.collect())
         want = sorted(
             r.rid for r in df.filter(F.col(col).between(10, 13)).collect()
         )

@@ -987,14 +987,15 @@ def test_snapshot_cdc_composite_key_prunes_files_and_partitions(
     batch.coalesce(1).write.parquet(src)
 
     calls = []
-    real_read = sn.snapshot_read
+    real_scan = sn.snapshot_scan
 
-    def recording_read(sess, path, version=None, prune=None, as_of_ts=None):
-        df = real_read(sess, path, version=version, prune=prune, as_of_ts=as_of_ts)
-        calls.append((prune, len(df.inputFiles())))
+    def recording_scan(sess, path, filter=None, version=None, as_of_ts=None):
+        df = real_scan(sess, path, filter=filter, version=version, as_of_ts=as_of_ts)
+        triples = sn._filter_prune_triples(sess, df.schema, filter) if filter is not None else []
+        calls.append((triples, len(df.inputFiles())))
         return df
 
-    monkeypatch.setattr(sn, "snapshot_read", recording_read)
+    monkeypatch.setattr(sn, "snapshot_scan", recording_scan)
     out = cdc.run_snapshot_cdc_stream(
         spark.readStream.schema(batch.schema).parquet(src),
         base,
