@@ -715,8 +715,7 @@ def compact_table(
     manifest = {"staged": staged, "delete": small_paths}
     mtmp = _compact_manifest_path(path) + ".tmp"
     _write_bytes(spark, mtmp, json.dumps(manifest).encode())
-    if not fs.rename(Path(mtmp), Path(_compact_manifest_path(path))):
-        raise IOError("compaction manifest rename failed; table untouched")
+    _move(fs, Path(mtmp), Path(_compact_manifest_path(path)), "compaction manifest")
     _finish_compaction(spark, path)
     return {
         "files_before": files_before,

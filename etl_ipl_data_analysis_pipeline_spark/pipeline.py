@@ -13,9 +13,10 @@ twin of the same semantics is streaming/incremental.py.
 The control tables are append-only. A run adds one file to the ledger,
 holding the keys it landed, and one file to the schema registry when the
 schema is new or drifted; no run rewrites either table, so their write
-cost is O(batch), and both are read with their schemas pinned. The data
-append and the ledger append are two steps: a crash between them lands
-the batch again on the rerun.
+cost is O(batch), and both are read with their schemas pinned. The
+discovery read opens one ledger file per past run; ``compact_after``
+merges them. The data append and the ledger append are two steps: a
+crash between them lands the batch again on the rerun.
 
 Every Spark job a run launches carries the description
 ``run_ingest:<phase>``, phase one of ``discover``, ``registry``, ``write``
@@ -34,6 +35,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Observation, SparkSession
 
 from .io import (
+    compact_table,
     expand_zip,
     fetch_url,
     read_binary_files,
@@ -119,8 +121,9 @@ def run_ingest(
     members land in ``landing_dir``, flattened rows append to ``out_dir``.
 
     ``compact_after``: run :func:`io.compact_table` on ``out_dir`` after
-    the append — the maintenance step that keeps a daily append-mode
-    table from accumulating one sliver per run per partition (cost
+    the append and on ``ledger_path`` after the ledger append — the
+    maintenance step that keeps a daily append-mode table from
+    accumulating one sliver per run per partition (cost
     scales with the accumulated small-file bytes, so running it every
     ingest is affordable by construction; crash mid-compaction is
     repaired by the recover pass the next run performs).
@@ -220,7 +223,9 @@ def run_ingest(
 
     # 4. drift gate (J3/SE2/SE3) against the newest registry snapshot; the
     # diff is collected once and the report built from those rows. A new
-    # or drifted schema appends its version's rows as one file.
+    # or drifted schema appends its version's rows as one file. A registry
+    # with no versions is a new one: an append that died before its first
+    # commit leaves the directory behind holding only `_temporary`.
     drift_msg = None
     if schema_registry_path is not None:
         _phase(spark, "registry")
@@ -228,14 +233,15 @@ def run_ingest(
         if recover_swapped(spark, schema_registry_path):
             registry = spark.read.schema(SNAPSHOT_SCHEMA).parquet(schema_registry_path)
             latest = registry.agg(F.max("version_id")).first()[0]
-            old = registry.filter(F.col("version_id") == latest).select("name", "type")
-            new = schema_snapshot(spark, flat, version_id=0).select("name", "type")
-            diff = schema_diff(new, old).collect()
-            if diff:
-                drift_msg = drift_report(diff)
-                if on_drift == "block":
-                    raise RuntimeError(drift_msg)
-            new_version = latest + 1 if diff else None
+            if latest is not None:
+                old = registry.filter(F.col("version_id") == latest).select("name", "type")
+                new = schema_snapshot(spark, flat, version_id=0).select("name", "type")
+                diff = schema_diff(new, old).collect()
+                if diff:
+                    drift_msg = drift_report(diff)
+                    if on_drift == "block":
+                        raise RuntimeError(drift_msg)
+                new_version = latest + 1 if diff else None
         if new_version is not None:
             snapshot = schema_snapshot(spark, flat, version_id=new_version)
             write_parquet(snapshot.coalesce(1), schema_registry_path, mode="append")
@@ -249,8 +255,6 @@ def run_ingest(
     if cached_raw is not None:
         cached_raw.unpersist()  # executor memory back; batch is re-readable
     if compact_after:
-        from .io import compact_table
-
         # recover-then-compact is inside compact_table: a previous run's
         # torn commit replays before this run's bin-packing plan is made
         compact_table(spark, out_dir, target_file_mb=compact_target_mb)
@@ -261,5 +265,7 @@ def run_ingest(
     _phase(spark, "ledger")
     new_rows = ledger_rows(fresh.select("file_key"), ("ingested", "crawled", "transformed"))
     write_parquet(new_rows.coalesce(1), ledger_path, mode="append")
+    if compact_after:
+        compact_table(spark, ledger_path, target_file_mb=compact_target_mb)
 
     return RunResult(len(paths), rows_written, drift_msg, skipped=False, quarantined=n_quarantined)

@@ -318,10 +318,27 @@ def test_control_tables_append_one_file_per_run(spark, tmp_path, pipe_args):
     assert spark.read.parquet(pipe_args["out_dir"]).count() == 5
 
 
+def test_control_tables_torn_by_a_first_append_start_empty(spark, tmp_path, pipe_args):
+    """An append that dies before its first commit leaves the table's
+    directory behind with only `_temporary` in it. The next run treats
+    such a registry as new (version 1, no drift, even under 'block') and
+    such a ledger as empty, and a rerun after it lands nothing."""
+    from etl_ipl_data_analysis_pipeline_spark.operators.schema_diff import SNAPSHOT_SCHEMA
+
+    for key in ("schema_registry_path", "ledger_path"):
+        os.makedirs(os.path.join(pipe_args[key], "_temporary", "0"))
+    z = make_zip(tmp_path, "t.zip", {"t1.json": [{"id": 1, "v": "a"}]})
+    res = run_ingest(spark, z, on_drift="block", **pipe_args)
+    assert (res.processed_files, res.rows_written, res.drift) == (1, 1, None)
+    registry = spark.read.schema(SNAPSHOT_SCHEMA).parquet(pipe_args["schema_registry_path"])
+    assert {r.version_id for r in registry.collect()} == {1}
+    assert run_ingest(spark, z, on_drift="block", **pipe_args).skipped
+
+
 def test_compact_after_bounds_small_files(spark, tmp_path, pipe_args):
-    """compact_after keeps the append-mode out_dir from accumulating one
-    sliver per run: after 3 ingests with compaction the table holds one
-    scan-sized file, rows identical to the uncompacted accumulation."""
+    """compact_after keeps the append-mode out_dir and ledger from
+    accumulating one sliver per run: after 3 ingests with compaction each
+    holds one file, rows identical to the uncompacted accumulation."""
     from etl_ipl_data_analysis_pipeline_spark import io as gio
 
     for i in range(3):
@@ -335,3 +352,6 @@ def test_compact_after_bounds_small_files(spark, tmp_path, pipe_args):
         r["id"] for r in spark.read.parquet(pipe_args["out_dir"]).collect()
     )
     assert got == sorted(10 * i + j for i in range(3) for j in range(4))
+    assert len(gio._list_data_files(spark, pipe_args["ledger_path"])) == 1
+    ledger = spark.read.parquet(pipe_args["ledger_path"])
+    assert sorted(r.file_key for r in ledger.collect()) == ["f0", "f1", "f2"]
