@@ -871,7 +871,8 @@ def semantic_dedup(
     boilerplate vector alone is 5·10^7 pairs); after it, duplicate mass
     costs one linear hash-groupBy on the vector bytes — the exact_dedup
     shape — and never reaches the quadratic stage (measured: the 10x
-    smoke's replicated corpus went 102.8s -> flat, see SCALE_SMOKE_r07).
+    smoke's replicated corpus went 102.8s -> flat, see SCALE_SMOKE_r07.json
+    in git history).
 
     Clustering is :func:`similarity.kmeans_exact` + the decimal
     squared-distance argmin (the ivf_topk_exact assignment): every
@@ -902,7 +903,7 @@ def semantic_dedup(
     production default is the scale-safe default) routes with the
     Arrow-matmul spherical k-means (kmeans_centroids + one narrow
     pandas-UDF matmul pass per vector — n·k FLOPS in numpy, no
-    shuffle): measured 10x unique growth → ~4.4x cost (SCALE_SMOKE),
+    shuffle): measured 10x unique growth → ~4.4x cost (SCALE_SMOKE, in git history),
     linear-ish under the governed k. Cells only steer which candidates
     meet; exact-copy recall stays 1 via the collapse either way.
     ``"exact"`` clusters and routes with the decimal-exact Lloyd
@@ -910,7 +911,7 @@ def semantic_dedup(
     oracle-gated path (dedup_semantic_planted pins it) — but its
     assignment is an exploded O(n·k) decimal aggregate, i.e.
     O(n²/target_cell) under the governed k (measured r8: 85s for only
-    20k uniques at f10; the SCALE_SMOKE crossover line records where
+    20k uniques at f10; the SCALE_SMOKE crossover line, in git history, records where
     it becomes untenable). Never default it at scale. Past ~10^4
     derived centroids the fast path's k×dim centroid broadcast itself
     becomes the ceiling. ``rebalance_factor`` guards the fast path's
@@ -1135,7 +1136,7 @@ def edit_distance_pairs(
     = MERGE`` (session conf) and every call with join_strategy=None picks
     it up; the explicit argument always wins. Measured at the factor-100
     smoke: MERGE completes at 24 g (spills, 225 s) where SHUFFLE_HASH
-    needs 48 g (143 s) — see SCALE_SMOKE_r06.json.
+    needs 48 g (143 s) — see SCALE_SMOKE_r06.json in git history.
 
     Returns (id_a, id_b, dist) with id_a < id_b.
     """

@@ -692,7 +692,7 @@ class _JpegBitReader:
     window sliced out of the destuffed bytes and ``decode_huff`` from a
     16-bit lookup table — one peek + one list index per SYMBOL instead
     of a Python-level loop per BIT. This is what moved the from-scratch
-    decoder from ~0.4 to multi-MB/s (measured in SCALE_SMOKE notes);
+    decoder from ~0.4 to multi-MB/s (measured in SCALE_SMOKE notes, in git history);
     outputs are bit-identical to the per-bit reader it replaced
     (the r10 oracle hashes did not move)."""
 

@@ -991,7 +991,7 @@ def embedding_dim_covariance(
     d-row broadcast. The token array is materialized before the HOF
     lambdas (interpreted, no CSE — the measured 30x trap).
 
-    d-sweep guidance (SCALE_SMOKE r7/r8, 500k rows): d=64 -> 2,080
+    d-sweep guidance (SCALE_SMOKE r7/r8 in git history, 500k rows): d=64 -> 2,080
     cells/vector, 48s; d=256 -> 32,896 cells, 783s — linear in rows,
     quadratic in d. Past d ~256 prefer either (a) the Arrow Gram-matrix
     mapInPandas (exact gate lost), or (b) :func:`embedding_dim_covariance_jl`

@@ -5161,7 +5161,7 @@ def dim_covariance_jl16(spark: SparkSession, sf_dir: str) -> DataFrame:
     covariance — the JL lemma bounds its distortion, which is the
     contract a dead-dimension health check needs at d >= ~256 where the
     exact matrix's cell fanout dominates (783s vs 48s per 500k rows at
-    d=256 vs d=64, SCALE_SMOKE r7)."""
+    d=256 vs d=64, SCALE_SMOKE r7, in git history)."""
     e = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     return similarity.embedding_dim_covariance_jl(e, jl_k=16)
 

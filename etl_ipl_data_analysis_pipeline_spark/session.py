@@ -3,9 +3,9 @@
 Design notes (SURVEY.md §4, §7): AQE is on so skewed joins/aggregations are
 re-planned at runtime; the session timezone is pinned to UTC so timestamp
 semantics match the DuckDB oracle; Arrow is enabled for the (rare) Pandas-UDF
-paths; shuffle partitions default small for local testing but are
-env-overridable for cluster runs (at 100 TB you want O(cores×3) partitions or
-AQE coalescing from a high initial count).
+paths; shuffle partitions default to 32, which AQE coalesces down on small
+inputs, and are env-overridable for cluster runs (at 100 TB you want
+O(cores×3) partitions or AQE coalescing from a high initial count).
 """
 
 from __future__ import annotations
@@ -27,8 +27,9 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a tuned SparkSession.
 
-    Env overrides: ``SPARK_GRAFT_CPUS`` (local parallelism),
-    ``SPARK_GRAFT_SHUFFLE`` (shuffle partitions).
+    Env overrides: ``SPARK_GRAFT_CPUS`` (local parallelism, default all
+    cores), ``SPARK_GRAFT_SHUFFLE`` (shuffle partitions, default 32) and
+    ``SPARK_GRAFT_DRIVER_MEM`` (driver memory, default 8g).
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     if master is None:

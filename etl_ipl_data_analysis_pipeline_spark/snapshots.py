@@ -267,9 +267,10 @@ def snapshot_commit(
 
     def build(head_version: int, head: dict | None) -> dict:
         fields = {
-            "files": new_files, "schema": df.schema, "batch_id": batch_id,
+            "files": list(new_files), "schema": df.schema, "batch_id": batch_id,
             "partition_by": partition_by, "stats": new_stats,
-            "rows": new_rows, "adds": dict.fromkeys(new_files, head_version + 1),
+            "rows": new_rows, "bytes": new_files,
+            "adds": dict.fromkeys(new_files, head_version + 1),
         }
         if mode == "overwrite":
             # the table is replaced: equality-delete entries and the
@@ -286,7 +287,7 @@ def snapshot_commit(
             # parent files they applied to; the appended files' add-version
             # (this version) postdates every entry, so a re-inserted key
             # is visible — exactly the MERGE-on-read contract
-            fields["files"] = head["files"] + new_files
+            fields["files"] = head["files"] + list(new_files)
             fields["schema"] = _merge_schemas(head["schema"], df.schema)
         return fields
 
@@ -334,11 +335,12 @@ def _cluster_df(
 
 def _stage_files(
     df: DataFrame, base: str, version: int, partition_by: list[str] | None = None
-) -> list[str]:
+) -> dict[str, int]:
     """Write ``df`` into hidden staging and move the parquet files to
     immutable, ATTEMPT-unique ``data/[col=val/]v<N>-<attempt>-<i>``
     names (``v<N>`` records the attempt's target version — informative
-    only, nothing parses it); returns the relative paths. Pure
+    only, nothing parses it); returns each relative path's byte length,
+    in staging order, from the listing the move walks anyway. Pure
     data-plane: nothing is visible to readers until a manifest
     referencing these names lands, and because every attempt's names
     carry a fresh uuid token, neither crashed prior attempts nor
@@ -359,16 +361,16 @@ def _stage_files(
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(staging)
-    # (subdir, name): partitioned staging nests files under col=val dirs
+    # ((subdir, name), bytes): partitioned staging nests files under col=val dirs
     staged = sorted(
-        rel.rpartition("/")[::2]
-        for rel, _ in _walk_files(spark, staging)
+        (rel.rpartition("/")[::2], int(st.getLen()))
+        for rel, st in _walk_files(spark, staging)
         if rel.endswith(".parquet")
     )
-    new_files = []
+    new_files: dict[str, int] = {}
     moves = []
     made_dirs: set[str] = set()
-    for i, (subdir, name) in enumerate(staged):
+    for i, ((subdir, name), size) in enumerate(staged):
         dest_dir = f"data/{subdir}".rstrip("/")
         if dest_dir not in made_dirs:
             dd = Path(f"{base}/{dest_dir}")
@@ -382,7 +384,7 @@ def _stage_files(
                 f"{base}/{rel}",
             )
         )
-        new_files.append(rel)
+        new_files[rel] = size
 
     def _publish_file(pair: tuple) -> None:
         dst = Path(pair[1])
@@ -414,6 +416,7 @@ def _commit_manifest(
     deletes: list | None = None,
     field_meta: dict | None = None,
     rows: dict | None = None,
+    bytes: dict | None = None,
 ) -> None:
     """Write + atomically PUBLISH the version manifest — the commit point
     every snapshot operation reaches through ``_publish``. Publication must be EXCLUSIVE
@@ -446,7 +449,7 @@ def _commit_manifest(
     manifest = {
         "version": version,
         "op": op,
-        "files": files,
+        "files": list(files),
         "schema": schema.json(),
         # wall-clock commit time: serves snapshot_history and the
         # timestamp as-of read; never part of any oracle hash
@@ -479,6 +482,10 @@ def _commit_manifest(
         # stats: makes snapshot_row_count a driver-only manifest sum on
         # tables without live equality-delete entries
         manifest["rows"] = {rel: int(n) for rel, n in rows.items()}
+    if bytes:
+        # per-file BYTE LENGTH from the staging listing: compaction sizes
+        # its output from the manifest instead of a status call per file
+        manifest["bytes"] = {rel: int(n) for rel, n in bytes.items()}
     if field_meta:
         # field-id machinery (Iceberg-shaped): ``field_ids`` maps each
         # CURRENT logical column name to a stable integer id;
@@ -563,7 +570,7 @@ def _publish(spark: SparkSession, base: str, op: str, build, head: tuple) -> int
     else is carried forward from the parent:
 
     - ``files``, ``schema``, ``partition_by`` and ``deletes`` verbatim;
-    - the per-file ``stats``/``rows``/``adds`` maps, restricted to the
+    - the per-file ``stats``/``rows``/``bytes``/``adds`` maps, restricted to the
       files the new version still lists (an entry is a fact about an
       immutable file), under build's entries for its new files;
     - the field-id machinery, with fresh ids for new schema names;
@@ -587,7 +594,7 @@ def _publish(spark: SparkSession, base: str, op: str, build, head: tuple) -> int
         if "schema" not in fields:
             fields["schema"] = StructType.fromJson(json.loads(parent["schema"]))
         live = set(fields["files"])
-        for key in ("stats", "rows", "adds"):
+        for key in ("stats", "rows", "bytes", "adds"):
             inherited = parent.get(key) or {}
             fields[key] = {
                 **{rel: x for rel, x in inherited.items() if rel in live},
@@ -1193,6 +1200,7 @@ def snapshot_restore(spark: SparkSession, path: str, version: int) -> int:
             "deletes": target.get("deletes"),
             "field_meta": _field_meta_of(target),
             "rows": target.get("rows"),
+            "bytes": target.get("bytes"),
         }
 
     head = (versions[-1], _read_manifest(spark, base, versions[-1]))
@@ -1535,7 +1543,11 @@ def _rewrite_head(
     head_version, head = _read_head(spark, base)
     cur = _read_data(spark, base, head, head["files"])
     if n_files is None:
-        total = sum(f[2] for f in _live_files(spark, base, [head_version]))
+        sizes = dict(head.get("bytes") or {})
+        unsized = [rel for rel in head["files"] if rel not in sizes]
+        if unsized:
+            sizes.update(_live_files(spark, base, unsized))
+        total = sum(sizes[rel] for rel in head["files"])
         n_files = -(-total // (target_mb * 1024 * 1024))
     part = head.get("partition_by")
     files = _stage_files(shape(cur, max(1, int(n_files))), base, head_version + 1, part)
@@ -1548,19 +1560,12 @@ def _rewrite_head(
     )
 
 
-def _live_files(spark: SparkSession, path: str, versions: list[int]):
-    """(rel, full, bytes) for every file referenced by the given
-    versions' manifests (deduped)."""
-    base = path.rstrip("/")
+def _live_files(spark: SparkSession, base: str, rels: list[str]) -> dict[str, int]:
+    """Byte length of each file in ``rels``, one status call per file: the
+    fallback for files whose manifest predates its ``bytes`` map."""
     fs, _, jvm = _fs_and_path(spark, base)
-    rels = set()
-    for v in versions:
-        rels.update(_read_manifest(spark, base, v)["files"])
-    out = []
-    for rel in sorted(rels):
-        p = jvm.org.apache.hadoop.fs.Path(f"{base}/{rel}")
-        out.append((rel, f"{base}/{rel}", int(fs.getFileStatus(p).getLen())))
-    return out
+    Path = jvm.org.apache.hadoop.fs.Path
+    return {rel: int(fs.getFileStatus(Path(f"{base}/{rel}")).getLen()) for rel in rels}
 
 
 def snapshot_expire(
@@ -1690,7 +1695,7 @@ def _commit_rewrite(
     head_version: int,
     op: str,
     touched: list[str],
-    new_files: list[str],
+    new_files: dict[str, int],
     new_schema,
     batch_id: int | None = None,
     validate_delta=None,
@@ -1733,9 +1738,9 @@ def _commit_rewrite(
             if any(adds.get(rel, 0) <= d["applies"] for rel in survivors)
         ]
         return {
-            "files": survivors + new_files,
+            "files": survivors + list(new_files),
             "schema": _merge_schemas(head["schema"], new_schema),
-            "stats": new_stats, "rows": new_rows,
+            "stats": new_stats, "rows": new_rows, "bytes": new_files,
             "adds": dict.fromkeys(new_files, head_version + 1),
             "deletes": kept_deletes, "batch_id": batch_id,
         }
@@ -2009,7 +2014,7 @@ def snapshot_delete(spark: SparkSession, path: str, condition) -> int:
         ).filter(~F.coalesce(condition, F.lit(False)))
         new_files = _stage_files(survivors, base, head_version + 1, part)
     else:
-        new_files = []
+        new_files = {}
     # SNAPSHOT-ISOLATION rebase (no validate_delta): rows a concurrent
     # append added were never part of the state this delete read, so
     # they survive even when they match the condition — the delete
@@ -2090,16 +2095,7 @@ def snapshot_delete_keys(
             "can never match NULL (SQL equality); filter or use "
             "snapshot_delete with an IS NULL condition"
         )
-    fs, _, jvm = _fs_and_path(spark, base)
     staged = _stage_files(keys.coalesce(1), base, head_version + 1, None)
-    sizes = {
-        rel: int(
-            fs.getFileStatus(
-                jvm.org.apache.hadoop.fs.Path(f"{base}/{rel}")
-            ).getLen()
-        )
-        for rel in staged
-    }
 
     def build(head_version: int, head: dict) -> dict:
         # ANY concurrent commit composes: an equality delete serializes
@@ -2124,9 +2120,9 @@ def snapshot_delete_keys(
                 "cols": cols,
                 "applies": head_version,
                 "rows": n,
-                "bytes": sizes[rel],
+                "bytes": size,
             }
-            for rel in staged
+            for rel, size in staged.items()
         ]
         return {
             "deletes": (head.get("deletes") or []) + entries,

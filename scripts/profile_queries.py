@@ -11,6 +11,9 @@ session and noop sink. The measured run records:
 - the plan layer, ``perfbench.probe.plan_counts`` of the returned frame;
 - the driver layer: ``manifest.<fn>.calls`` and ``manifest.<fn>.s`` for each
   snapshot manifest primitive the query called (nested calls count in both);
+- the JVM layer: ``jvm.jit_s`` (JIT compilation time), ``jvm.classes_loaded``
+  and ``spark.codegen_compiles`` (generated classes Janino compiled), each
+  read from the JVM before and after the run;
 - ``jobs``: every job's description, read from the status store.
 
 Each frame's ``explain("formatted")`` plan goes to ``<out stem>.plans/``.
@@ -44,6 +47,20 @@ MANIFEST_PRIMITIVES = (
     "_stage_files",
     "_file_stats",
 )
+
+
+def jvm_counters(spark) -> dict:
+    """JIT seconds, classes loaded and codegen compiles so far in the
+    driver JVM, read through py4j (no job)."""
+    jvm = spark.sparkContext._jvm
+    beans = jvm.java.lang.management.ManagementFactory
+    return {
+        "jvm.jit_s": beans.getCompilationMXBean().getTotalCompilationTime() / 1000.0,
+        "jvm.classes_loaded": beans.getClassLoadingMXBean().getTotalLoadedClassCount(),
+        "spark.codegen_compiles": (
+            jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME().getCount()
+        ),
+    }
 
 
 class ManifestTimer:
@@ -96,8 +113,10 @@ def profile_query(spark, sf_dir: str, fn, probe, manifest: ManifestTimer) -> dic
 
     manifest.counts.clear()
     mark = probe.start()
+    jvm0 = jvm_counters(spark)
     wall = bench.run_once(kept, spark, sf_dir)
     counters = probe.stop(mark, wall)
+    counters.update({k: v - jvm0[k] for k, v in jvm_counters(spark).items()})
     counters["wall_s"] = wall
     counters["driver.actions"] = probe._max_execution() - mark[1]
     counters.update(manifest.counts)

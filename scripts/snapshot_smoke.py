@@ -1,6 +1,6 @@
 """Scale smoke for the round-10 snapshot layer and streamed-BM25 fold.
 
-Claims measured (recorded into SCALE_SMOKE_r10.json):
+Claims measured (recorded into SCALE_SMOKE_r10.json, now in git history):
 1. snapshot append cost is O(delta), not O(table): appending a
    fixed-size delta to a table that has grown 16x must cost ~the same
    as the first append (manifest references parent files verbatim).

@@ -25,6 +25,9 @@ def spark():
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
+        # a generated method past the JVM's 64KB limit fails the test that
+        # runs it, instead of silently running interpreted
+        .config("spark.sql.codegen.fallback", "false")
         .getOrCreate()
     )
     yield session

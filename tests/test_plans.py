@@ -2,12 +2,15 @@
 (pushdown, pruning, broadcast, bounded shuffles) hold in the actual
 executed plans, not just in docstrings."""
 
+import re
+from collections import Counter
+
 import pyspark.sql.functions as F
 import pytest
+from pyspark.sql import Window
 
 import __spark_entry__ as entry
 import bench
-from perfbench.probe import plan_counts
 
 
 def _executed(df) -> str:
@@ -483,85 +486,301 @@ def test_exact_vector_family_shares_one_corpus_exchange(spark, sf_dir, qs):
     )
 
 
-# (plan.scans, plan.dup_wide_scans) allowed per bench.HEADLINE query on the
-# tier-1 fixture. perfbench.probe.plan_counts reads the declared (AQE-on)
-# plan, which lists a subtree once per consumer before stage reuse, so a
-# relation consumed twice that stops canonicalizing equal shows up here
-# as extra scans. The reuse pins hold these counts: without its
-# localCheckpoint, nb_classify, gram_novelty, lm_surprisal,
-# chi_square_from_counts (source_term_drift) and embedding_dim_covariance
-# each plan more scans. A count that falls may be tightened here; one that
-# rises needs a reason, not a bigger number.
-_HEADLINE_SCANS = {
-    "q1_pricing_summary": (1, 0),
-    "q3_top_revenue": (3, 0),
-    "q5_region_revenue": (6, 0),
-    "agg_rollup": (1, 0),
-    "agg_stats": (1, 0),
-    "window_running_sum": (1, 0),
-    "topn_per_group": (1, 0),
-    "join_range": (2, 0),
-    "asof_join_events": (2, 0),
-    "window_tumbling": (1, 0),
-    "flatten_json_props": (1, 0),
-    "dedup_exact": (1, 0),
-    "dedup_minhash_pairs": (2, 1),
-    "topk_cosine": (2, 1),
-    "text_quality": (1, 0),
-    "lang_profile": (1, 0),
-    "copurchase_triangles": (34, 33),
-    "pagerank_copurchase": (44, 43),
-    "zorder_key_stats": (3, 0),
-    "dq_orders_constraints": (3, 0),
-    "kmeans_clusters_exact": (6, 4),
-    "ngram_lm_counts": (1, 0),
-    "gram_novelty_scores": (1, 0),
-    "bloom_prune_orders": (5, 3),
-    "contrastive_negatives": (4, 3),
-    "copurchase_2hop_reach": (12, 11),
-    "chunk_sliding_docs": (1, 0),
-    "bm25_top_docs_query": (3, 1),
-    "mixture_temperature_lang": (2, 0),
-    "source_term_drift": (0, 0),
-    "embedding_dim_covariance": (0, 0),
-    "dedup_span_c4": (2, 1),
-    "embedding_standardize_head": (2, 0),
-    "feature_binning_decile": (2, 0),
-    "pareto_part_classes": (2, 1),
-    "revenue_gini": (2, 1),
-    "dedup_semantic_planted": (2, 1),
-    "lm_surprisal_scores": (1, 0),
-    "nb_lang_confusion": (3, 0),
-    "bpe_train_merges": (0, 0),
-    "dsir_weights": (4, 2),
-    "embedding_quantize_int8": (2, 0),
-    "topk_pq_exact": (14, 13),
-    "cluster_top_terms": (8, 5),
-    "hybrid_rrf_topk": (15, 11),
-    "dim_covariance_jl16": (0, 0),
-    "hybrid_rrf_fast": (6, 3),
-    "compact_table_roundtrip": (1, 0),
-    "stream_embedding_neardup": (1, 0),
-    "snapshot_time_travel": (4, 1),
-    "stream_bm25_index": (3, 0),
-    "multimodal_decode_gif": (1, 0),
-    "snapshot_pruned_read": (1, 0),
-    "snapshot_partitioned_roundtrip": (1, 0),
-    "stream_snapshot_cdc": (1, 0),
-    "snapshot_zorder_pruned_read": (1, 0),
-    "snapshot_mor_delete": (2, 0),
-    "snapshot_change_feed": (3, 1),
-    "snapshot_incremental_mirror": (1, 0),
-    "dedup_cc_multistar": (0, 0),
-    "zip_ingest_members": (1, 0),
+# The plan-shape gate. A headline query's shape is everything it plans or
+# runs: the declared plan of the frame it returns, and every SQL execution
+# that building the frame already ran (eager collects, approxQuantile cuts,
+# snapshot commits, localCheckpoint pins, stream micro-batches), read from
+# the SQL status store between two execution ids. Nothing here launches a
+# job. Plans are read in the "formatted" explain mode the status store
+# records, and an adaptive plan is counted by its initial plan, the one a
+# frame that has not run declares.
+
+_TREE_NODE = re.compile(r"^([ :+\-*]*)(\S.*?) \((\d+)\)(?:, Statistics\(.*\))?$")
+_DETAIL = re.compile(r"^\((\d+)\) ")
+_SORT_KEY = re.compile(r"(?:ASC|DESC) NULLS (?:FIRST|LAST)$")
+_COUNTED = {
+    "CartesianProduct": "cartesian",
+    "BatchEvalPython": "row_udf",
+    "BroadcastNestedLoopJoin": "bnlj",
+}
+# window operators -> leading argument lists that are window expressions
+_WINDOWS = {"Window": 1, "ArrowWindowPython": 1, "WindowGroupLimit": 0}
+
+
+def _operators(text: str) -> list[tuple[str, dict]]:
+    """(name, detail fields) of each operator of a formatted plan, main tree
+    and subqueries, each operator id once. An adaptive plan lists its nodes
+    under both ``Final Plan`` and ``Initial Plan``; the final one is
+    skipped."""
+    details: dict[str, dict] = {}
+    names: dict[str, str] = {}
+    block = final = None
+    for line in text.splitlines():
+        if line.startswith("===== Adaptively Optimized Out"):
+            break
+        if m := _DETAIL.match(line):
+            block = details[m[1]] = {}
+        elif block is not None:
+            if not line:
+                block = None
+            elif ": " in line:
+                key, value = line.split(": ", 1)
+                block[key] = value
+        elif "== Final Plan ==" in line:
+            final = line.index("==")
+        elif "== Initial Plan ==" in line:
+            final = None
+        elif (m := _TREE_NODE.match(line)) and (final is None or len(m[1]) < final):
+            names[m[3]] = m[2].strip()
+    return [(name, details.get(i, {})) for i, name in names.items()]
+
+
+def _bracket_lists(args: str) -> list[str]:
+    """The top-level ``[...]`` lists of an ``Arguments`` field."""
+    out, depth, start = [], 0, 0
+    for i, ch in enumerate(args):
+        if ch == "[":
+            start = i + 1 if depth == 0 else start
+            depth += 1
+        elif ch == "]":
+            depth -= 1
+            if depth == 0:
+                out.append(args[start:i])
+    return out
+
+
+def shape_counts(plans: list[str]) -> Counter:
+    """Scans, duplicate wide scans (a scan of the same files with the same
+    read schema as an earlier one), cartesian products, row-at-a-time Python
+    UDFs, broadcast nested-loop joins, single-partition exchanges and
+    windows with an empty partition spec, over formatted plans. Windows
+    are read from their arguments, not from the exchange below them:
+    Catalyst folds ``partitionBy(lit(0))`` away, and over input already in
+    one partition such a window plans no exchange at all. Spark prints no
+    empty argument list, so a window is unpartitioned when every list after
+    its window expressions is a sort order."""
+    c: Counter = Counter()
+    seen: Counter = Counter()
+    for text in plans:
+        for name, field in _operators(text):
+            op = name.split(" ", 1)[0]
+            args = field.get("Arguments", "")
+            if "ReadSchema" in field:
+                c["scans"] += 1
+                seen[field.get("Location"), field["ReadSchema"]] += 1
+            elif op in _COUNTED:
+                c[_COUNTED[op]] += 1
+            elif op == "Exchange" and args.startswith("SinglePartition"):
+                c["single_partition"] += 1
+            elif op in _WINDOWS:
+                specs = _bracket_lists(args)[_WINDOWS[op]:]
+                c["nopart_window"] += all(_SORT_KEY.search(s) for s in specs)
+    c["dup_wide_scans"] = sum(n - 1 for n in seen.values())
+    return c
+
+
+def _planned_and_run(spark, build) -> list[str]:
+    """The formatted plan of the frame ``build()`` returns, then the plan
+    of each SQL execution that ``build`` ran."""
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def last() -> int:
+        bus.waitUntilEmpty()
+        n = int(store.executionsCount())
+        return store.executionsList(n - 1, 1).apply(0).executionId() if n else -1
+
+    mark = last()
+    df = build()
+    ran = [store.execution(e) for e in range(mark + 1, last() + 1)]
+    frame = sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
+    return [frame] + [r.get().physicalPlanDescription() for r in ran if r.isDefined()]
+
+
+def _shape(spark, build) -> Counter:
+    return shape_counts(_planned_and_run(spark, build))
+
+
+def test_shape_counts_cartesian_and_row_udf(spark):
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        c = _shape(spark, lambda: spark.range(4).crossJoin(spark.range(3).toDF("j")))
+    finally:
+        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    assert c["cartesian"] == 1 and c["bnlj"] == 0
+    plus_one = F.udf(lambda x: x + 1, "long")
+    assert _shape(spark, lambda: spark.range(4).select(plus_one("id")))["row_udf"] == 1
+
+
+def test_shape_counts_unpartitioned_windows_and_single_partition(spark):
+    df = spark.range(0, 100, numPartitions=4).withColumn("g", F.col("id") % 3)
+    ordered = Window.orderBy("id")
+    folded = Window.partitionBy(F.lit(0)).orderBy(F.desc("id"))
+    keyed = Window.partitionBy("g").orderBy("id")
+    c = _shape(
+        spark,
+        lambda: df.withColumn("a", F.row_number().over(ordered))
+        .withColumn("b", F.sum("id").over(folded))
+        .withColumn("c", F.row_number().over(keyed)),
+    )
+    assert c["nopart_window"] == 2
+    limited = _shape(spark, lambda: df.limit(5).distinct())
+    assert limited["single_partition"] == 1 and limited["nopart_window"] == 0
+
+
+def test_shape_counts_eager_pre_step_scans(spark, tmp_path):
+    path = str(tmp_path / "t")
+    spark.range(10).write.parquet(path)
+    pinned = lambda: spark.read.parquet(path).localCheckpoint()  # noqa: E731
+    plans = _planned_and_run(spark, pinned)
+    assert shape_counts(plans[:1])["scans"] == 0  # the frame reads the pin
+    assert _shape(spark, pinned)["scans"] == 1
+    both = lambda: pinned().union(spark.read.parquet(path))  # noqa: E731
+    assert _shape(spark, both)["dup_wide_scans"] == 1
+
+
+# The reviewed classes of a bounded relation. Every broadcast nested-loop
+# join, single-partition exchange and unpartitioned window on a headline
+# query runs over one; the exchange that builds a one-row relation carries
+# that relation's class.
+SHAPE_CLASSES = {
+    "a": "a global aggregate (threshold, total, count): one row, joined back or read by the driver",
+    "b": "one-row sketch or corpus stats: BM25 n_docs/sum_dl, vocabulary size, n-gram totals",
+    "c": "PageRank's per-iteration one-row node count",
+    "d": "a probe or query relation, bounded by the probe set",
+    "e": "a literal broadcast list: quantile list, JL sign-matrix rows, planted ids",
+    "f": "crossJoin of one-row stats in profile, covariance and graph-count queries",
+    "k-row head": "at most k rows, k set by the query: a limit or ranked head, "
+    "per-range-bucket counts (k = num_ranges), per-class or per-source totals",
+}
+
+
+def _allow(scans: int, dup: int = 0, **shapes: dict) -> dict:
+    return {"scans": scans, "dup_wide_scans": dup, **shapes}
+
+
+_K = "k-row head"
+# Allowed shape per bench.HEADLINE query on the tier-1 fixture. A plan lists
+# a subtree once per consumer before stage reuse, so a relation consumed
+# twice that stops canonicalizing equal shows up as extra scans. The reuse
+# pins hold these counts: without its localCheckpoint, nb_classify,
+# gram_novelty, lm_surprisal, chi_square_from_counts (source_term_drift) and
+# embedding_dim_covariance each plan more scans. Scans above a frame's own
+# count come from the eager pre-step named in the comment. A count that
+# falls may be tightened here; one that rises needs a reason, not a bigger
+# number.
+_HEADLINE_SHAPES = {
+    "q1_pricing_summary": _allow(1),
+    "q3_top_revenue": _allow(3),
+    "q5_region_revenue": _allow(6),
+    "agg_rollup": _allow(1),
+    "agg_stats": _allow(1),
+    "window_running_sum": _allow(1),
+    "topn_per_group": _allow(1),
+    "join_range": _allow(2),
+    "asof_join_events": _allow(2),
+    "window_tumbling": _allow(1),
+    "flatten_json_props": _allow(1),
+    "dedup_exact": _allow(1),
+    "dedup_minhash_pairs": _allow(2, 1),
+    "topk_cosine": _allow(2, 1, bnlj={"d": 1}),
+    "text_quality": _allow(1),
+    "lang_profile": _allow(1),
+    "copurchase_triangles": _allow(34, 33, bnlj={"f": 1}, single_partition={"f": 2}),
+    "pagerank_copurchase": _allow(44, 43, bnlj={"c": 4}, single_partition={"c": 4}),
+    # + the approxQuantile cut of the range buckets
+    "zorder_key_stats": _allow(4, single_partition={_K: 2}, nopart_window={_K: 4}),
+    "dq_orders_constraints": _allow(3, single_partition={"a": 2}),
+    "kmeans_clusters_exact": _allow(6, 4),
+    "ngram_lm_counts": _allow(1),
+    # + the pinned gram table
+    "gram_novelty_scores": _allow(2),
+    "bloom_prune_orders": _allow(5, 3),
+    # + the approxQuantile cut of the range buckets
+    "contrastive_negatives": _allow(5, 4, single_partition={_K: 2}, nopart_window={_K: 3}),
+    "copurchase_2hop_reach": _allow(12, 11),
+    "chunk_sliding_docs": _allow(1),
+    "bm25_top_docs_query": _allow(
+        3, 1, bnlj={"b": 1}, single_partition={"b": 1}, nopart_window={_K: 1}
+    ),
+    # both windows run over per-language totals
+    "mixture_temperature_lang": _allow(2, single_partition={_K: 1}, nopart_window={_K: 2}),
+    # the corpus pass sits behind the pinned (group, term, count) relation;
+    # the window runs over per-source totals
+    "source_term_drift": _allow(1, single_partition={_K: 1}, nopart_window={_K: 1}),
+    # the corpus passes sit behind the pinned centred-vector relation
+    "embedding_dim_covariance": _allow(3, 2, bnlj={"f": 1}, single_partition={"f": 1}),
+    "dedup_span_c4": _allow(2, 1),
+    "embedding_standardize_head": _allow(2),
+    # these three: + the approxQuantile cut of the range buckets
+    "feature_binning_decile": _allow(3, 1, single_partition={_K: 1}, nopart_window={_K: 2}),
+    "pareto_part_classes": _allow(3, 2, single_partition={_K: 1}, nopart_window={_K: 2}),
+    "revenue_gini": _allow(3, 2, single_partition={"a": 1, _K: 1}, nopart_window={_K: 2}),
+    # + the pinned vector relation
+    "dedup_semantic_planted": _allow(4, 2),
+    # + the pinned n-gram counts
+    "lm_surprisal_scores": _allow(2, bnlj={"b": 1}, single_partition={"b": 1}),
+    # + the pinned class-term aggregate; the class list is k rows
+    "nb_lang_confusion": _allow(4, bnlj={"b": 2, _K: 1}, single_partition={"b": 2}),
+    # one argmax collect per merge round (8), each listing the corpus scan
+    # under the cached word table, which serves every round after the first
+    "bpe_train_merges": _allow(8, 7),
+    "dsir_weights": _allow(4, 2, bnlj={"b": 1}, single_partition={"b": 1}),
+    "embedding_quantize_int8": _allow(2),
+    "topk_pq_exact": _allow(14, 13),
+    "cluster_top_terms": _allow(8, 5),
+    "hybrid_rrf_topk": _allow(15, 11, bnlj={"b": 1}, single_partition={"b": 1}),
+    # the corpus passes sit behind the pinned projection, joined with the
+    # sign-matrix rows
+    "dim_covariance_jl16": _allow(6, 4, bnlj={"e": 3, "f": 1}, single_partition={"f": 1}),
+    # + the IVF centroid collects
+    "hybrid_rrf_fast": _allow(10, 6, bnlj={"b": 1}, single_partition={"b": 1}),
+    # + the plain-parquet write, its compaction and both row counts
+    "compact_table_roundtrip": _allow(5, single_partition={"a": 2}),
+    # + the micro-batches
+    "stream_embedding_neardup": _allow(2),
+    # + one commit per version
+    "snapshot_time_travel": _allow(8, 3, single_partition={"a": 4}),
+    # + the micro-batches, the index writes and the stats collect
+    "stream_bm25_index": _allow(6, bnlj={"b": 1}, single_partition={"b": 1, _K: 1}),
+    "multimodal_decode_gif": _allow(1),
+    # + the layout's key-range collect and the commit
+    "snapshot_pruned_read": _allow(3, single_partition={"a": 2}),
+    # + the two partitioned commits
+    "snapshot_partitioned_roundtrip": _allow(3, 1),
+    # + the micro-batches; a 1-row limit checks for an empty batch
+    "stream_snapshot_cdc": _allow(2, single_partition={_K: 1}),
+    # + the clustered commit: its approxQuantile cut and range buckets
+    "snapshot_zorder_pruned_read": _allow(
+        7, 2, single_partition={"a": 2, _K: 2}, nopart_window={_K: 4}
+    ),
+    # these three: + the commits, merges and deletes that build the
+    # versions, with their row counts and pinned key sets
+    "snapshot_mor_delete": _allow(6, single_partition={"a": 3}),
+    "snapshot_change_feed": _allow(11, 3, single_partition={"a": 2}),
+    "snapshot_incremental_mirror": _allow(18, 7, single_partition={"a": 3}),
+    # builds its edges with createDataFrame, so no file scan; the round
+    # loop's convergence counts read one row each
+    "dedup_cc_multistar": _allow(0, single_partition={"a": 3}),
+    # + the member listing collect
+    "zip_ingest_members": _allow(2),
 }
 
 
 @pytest.mark.parametrize("query", bench.HEADLINE)
 def test_headline_scans_within_allow_list(spark, sf_dir, qs, query):
-    c = plan_counts(qs[query](spark, sf_dir))
-    scans, dup_wide = _HEADLINE_SCANS[query]
-    assert c["plan.scans"] <= scans, f"{query}: {c['plan.scans']} scans > {scans}"
-    assert c["plan.dup_wide_scans"] <= dup_wide, (
-        f"{query}: {c['plan.dup_wide_scans']} duplicate wide scans > {dup_wide}"
-    )
+    c = _shape(spark, lambda: qs[query](spark, sf_dir))
+    allowed = _HEADLINE_SHAPES[query]
+    bad = [f"{c[key]} {key}" for key in ("cartesian", "row_udf") if c[key]]
+    bad += [
+        f"{c[key]} {key} > {allowed[key]}"
+        for key in ("scans", "dup_wide_scans")
+        if c[key] > allowed[key]
+    ]
+    for key in ("bnlj", "single_partition", "nopart_window"):
+        classes = allowed.get(key, {})
+        assert set(classes) <= set(SHAPE_CLASSES), f"{query}: unknown class in {classes}"
+        if c[key] > sum(classes.values()):
+            bad.append(f"{c[key]} {key} > {classes}")
+    assert not bad, f"{query}: " + "; ".join(bad)

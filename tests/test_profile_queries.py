@@ -49,6 +49,8 @@ def test_one_aggregation_counters(spark, pq, probe):
     assert c["spark.shuffle_write_bytes"] > 0
     assert c["plan.exchanges"] >= 1
     assert not any(k.startswith("manifest.") for k in c)
+    for key in ("jvm.jit_s", "jvm.classes_loaded", "spark.codegen_compiles"):
+        assert c[key] >= 0
     assert len(entry["jobs"]) == c["spark.jobs"]
     assert "Exchange" in entry["plan"]
 

@@ -1927,6 +1927,42 @@ def test_optimize_reclusters_and_prunes(spark, tmp_path):
     assert m2["op"] == "replace"
 
 
+
+def test_compact_and_optimize_size_from_the_manifest(spark, tmp_path, monkeypatch):
+    """Every commit records each new file's byte length in the manifest's
+    ``bytes`` map, so compaction sizes its output with no status call per
+    live file."""
+    base = str(tmp_path / "tbl")
+    sn.snapshot_commit(_kv(spark, 0, 2000).repartition(4), base, "append")
+    m1 = sn._read_manifest(spark, base, 1)
+    assert m1["bytes"] == {rel: os.path.getsize(f"{base}/{rel}") for rel in m1["files"]}
+
+    def no_status_calls(*args):
+        raise AssertionError("a status call per live file")
+
+    monkeypatch.setattr(sn, "_live_files", no_status_calls)
+    sn.snapshot_compact(spark, base, target_mb=128)
+    v3 = sn.snapshot_optimize(spark, base, ["k"])
+    m3 = sn._read_manifest(spark, base, v3)
+    assert m3["bytes"] == {rel: os.path.getsize(f"{base}/{rel}") for rel in m3["files"]}
+    assert _keys(spark, base) == list(range(2000))
+
+
+def test_compact_sizes_a_manifest_without_bytes_by_status_calls(spark, tmp_path):
+    """A manifest written before the ``bytes`` map compacts to the same file
+    count: the sizes then come from one status call per file."""
+    import math
+
+    base = str(tmp_path / "tbl")
+    sn.snapshot_commit(_kv(spark, 0, 2000).repartition(8), base, "append")
+    total = sum(sn._read_manifest(spark, base, 1)["bytes"].values())
+    _strip_manifest_key(base, 1, "bytes")
+    target_mb = total / 2.5 / (1024 * 1024)
+    v2 = sn.snapshot_compact(spark, base, target_mb=target_mb)
+    n_files = len(sn._read_manifest(spark, base, v2)["files"])
+    assert n_files == math.ceil(total / (target_mb * 1024 * 1024)) == 3
+    assert _keys(spark, base) == list(range(2000))
+
 def test_optimize_zorder_absorbs_mor_entries(spark, tmp_path):
     import pyspark.sql.functions as F
 
