@@ -288,93 +288,139 @@ def _move(fs, src, dst, what: str) -> None:
         raise IOError(f"{what}: rename {src} -> {dst} failed")
 
 
-def staging_path(path: str) -> str:
-    """The ONE temp-dir name :func:`overwrite_parquet` writes,
-    :func:`swap_directory` swaps in and :func:`recover_swapped` probes;
-    owning the convention in one place is what lets crash recovery find
-    the newest complete copy."""
-    return path + ".__tmp__"
+# The one crash-safe commit for plain parquet directories. A writer
+# stages its files under the staging dir of ``path``, then publishes one
+# manifest by rename: the commit point. The manifest lists the staged
+# file -> destination moves and the files to delete; finishing it is
+# idempotent, so :func:`recover` simply runs the finish again.
+
+
+def _commit_siblings(path: str) -> tuple[str, str, str]:
+    """(staging dir, manifest, manifest being written) of the commit on
+    ``path``: the names its writers, :func:`recover` and a fresh-start
+    wipe share."""
+    base = path.rstrip("/")
+    return base + ".__staging__", base + ".__manifest__", base + ".__manifest__.tmp"
+
+
+def _list_data_files(spark: SparkSession, path: str):
+    """Recursively list a table's parquet data files as
+    (relative_dir, absolute_path, bytes) via the Hadoop FS API —
+    any scheme. Committer metadata is excluded the way Spark's own
+    InMemoryFileIndex excludes it: a hidden ('_'/'.'-prefixed) name
+    ANYWHERE on the relative path hides the file — a crashed append's
+    uncommitted task outputs under ``_temporary/`` must never be
+    treated as table data (compacting them in would resurrect rows the
+    reader itself would not return)."""
+    out = []
+    for rel, st in _walk_files(spark, path):
+        segs = rel.split("/")
+        if not segs[-1].endswith(".parquet"):
+            continue
+        if any(s.startswith(("_", ".")) for s in segs):
+            continue
+        out.append((rel.rpartition("/")[0], st.getPath().toString(), int(st.getLen())))
+    return out
+
+
+def _commit(
+    spark: SparkSession,
+    path: str,
+    outputs: list[tuple[str, str]],
+    delete: Iterable[str] = (),
+) -> None:
+    """Land staged directories in one crash-safe step. ``outputs`` pairs
+    each directory staged under the staging dir of ``path`` with its
+    destination: every data file in it moves to the same relative path
+    there (committer markers stay behind). The files in ``delete`` go.
+    The manifest naming all of it is renamed into place before anything
+    moves, so a crash leaves either nothing promised or a commit
+    :func:`recover` finishes. Destinations must share the filesystem of
+    ``path``: qualifying one that does not raises here, before the
+    manifest could promise a rename that cannot happen."""
+    import json
+
+    fs, _, jvm = _fs_and_path(spark, path)
+    Path = jvm.org.apache.hadoop.fs.Path
+    moves = []
+    for staged, dest in outputs:
+        root = fs.makeQualified(Path(dest)).toString().rstrip("/")
+        for rel_dir, full, _ in _list_data_files(spark, staged):
+            rel = (rel_dir + "/" if rel_dir else "") + full.rsplit("/", 1)[1]
+            moves.append((full, f"{root}/{rel}"))
+    _, manifest, tmp = _commit_siblings(path)
+    _write_bytes(spark, tmp, json.dumps({"moves": moves, "delete": list(delete)}).encode())
+    _move(fs, Path(tmp), Path(manifest), "commit manifest")
+    _finish_commit(spark, path)
+
+
+def _finish_commit(spark: SparkSession, path: str) -> None:
+    """Finish the published commit on ``path``, idempotently so crash
+    recovery can simply re-run it: move every staged file in (skip the
+    already-moved), then delete the listed files (skip the
+    already-deleted), then clear staging and manifest. At no instant is
+    any row ONLY in a deleted file: staged files move in before anything
+    is removed, so the transient state is duplication (repaired here),
+    never loss."""
+    import json
+
+    fs, _, jvm = _fs_and_path(spark, path)
+    Path = jvm.org.apache.hadoop.fs.Path
+    staging, manifest, _ = _commit_siblings(path)
+    listed = json.loads(_read_bytes(spark, manifest))
+
+    def _move_in(pair: list[str]) -> None:
+        src, dst = Path(pair[0]), Path(pair[1])
+        if not fs.exists(src):
+            return  # moved by a previous (crashed) finish
+        fs.mkdirs(dst.getParent())
+        _move(fs, src, dst, "commit")
+
+    # a sliver-heavy commit issues hundreds of independent move/delete
+    # RPCs; delete() returns False when already gone — the
+    # idempotent-replay skip without a separate exists() RPC per file
+    _fan_out(_move_in, listed["moves"])
+    _fan_out(lambda full: fs.delete(Path(full), False), listed["delete"])
+    fs.delete(Path(staging), True)
+    fs.delete(Path(manifest), False)
+
+
+def recover(spark: SparkSession, path: str) -> bool:
+    """Repair a commit on ``path`` interrupted at any point, then report
+    whether ``path`` exists. The manifest is the commit point: present,
+    the staged files are complete and the finish runs again; absent,
+    nothing was promised and the staging leftovers are discarded. Call
+    before reading a directory a writer may have died on, and branch on
+    the result rather than a bare exists(): a torn commit must neither
+    read as "no table yet" nor show its rows twice."""
+    fs, root, jvm = _fs_and_path(spark, path)
+    Path = jvm.org.apache.hadoop.fs.Path
+    staging, manifest, tmp = _commit_siblings(path)
+    if fs.exists(Path(manifest)):
+        _finish_commit(spark, path)
+    else:
+        fs.delete(Path(staging), True)
+        fs.delete(Path(tmp), False)
+    return bool(fs.exists(root))
 
 
 def overwrite_parquet(
     df: DataFrame, path: str, partition_by: list[str] | None = None
 ) -> None:
     """Crash-safe overwrite of the parquet directory ``path`` with ``df``:
-    write to :func:`staging_path` first, then :func:`swap_directory` it in.
-    ``df`` may still be reading ``path`` (state folds, control tables,
-    index compaction): Spark reads lazily, so writing straight over the
-    source would corrupt the plan mid-read."""
+    stage it, then :func:`_commit` it with every current data file of
+    ``path`` in the delete list. ``df`` may still be reading ``path``
+    (state folds, index compaction): Spark reads lazily, so writing
+    straight over the source would corrupt the plan mid-read. Build such
+    a ``df`` after :func:`recover`, so it never reads a torn commit."""
+    spark = df.sparkSession
+    staging = _commit_siblings(path)[0]
     writer = df.write.mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
-    writer.parquet(staging_path(path))
-    swap_directory(df.sparkSession, path)
-
-
-def swap_directory(spark: SparkSession, path: str) -> None:
-    """Crash-safe swap of the freshly-written :func:`staging_path` dir
-    into ``path``.
-
-    Two-phase: the live dir is renamed ASIDE (``path.__old__``) before the
-    temp is renamed in, so at every instant at least one complete copy of
-    the table survives on disk — a plain delete-then-rename has a window
-    where a crash leaves NOTHING at ``path``, and a streaming checkpoint
-    that already marked the batch committed would then silently rebuild
-    state from scratch. ``recover_swapped`` is the matching read-side
-    repair. Hadoop FS API so the swap works on any scheme, not just
-    file:// (object stores without atomic rename need a manifest-commit
-    protocol instead; this is the HDFS-class discipline).
-
-    Hadoop ``rename`` reports failure by RETURNING FALSE, not raising —
-    every step checks the return so a failed rename can never fall
-    through to the cleanup delete and destroy the sole surviving copy.
-    """
-    tmp_path = staging_path(path)
-    fs, dst, jvm = _fs_and_path(spark, path)
-    src = jvm.org.apache.hadoop.fs.Path(tmp_path)
-    old = jvm.org.apache.hadoop.fs.Path(path + ".__old__")
-    if fs.exists(old):  # leftover from a crash after a previous swap's rename
-        fs.delete(old, True)
-    if fs.exists(dst):
-        if not fs.rename(dst, old):
-            raise IOError(f"rename {path} -> {path}.__old__ failed; aborting swap")
-    if not fs.rename(src, dst):
-        # put the live copy back so the table is never left missing
-        if fs.exists(old):
-            fs.rename(old, dst)
-        raise IOError(f"rename {tmp_path} -> {path} failed; previous state restored")
-    if fs.exists(old):
-        fs.delete(old, True)
-
-
-def recover_swapped(spark: SparkSession, path: str) -> bool:
-    """If a crash mid-:func:`swap_directory` left ``path`` missing, promote
-    the surviving complete copy back into place. Preference order: the temp
-    (written in full BEFORE any swap step runs, and strictly newer than the
-    set-aside copy), then ``path.__old__``. Returns True iff ``path``
-    exists after recovery — callers branch on this instead of a bare
-    exists() so a torn swap can never masquerade as 'no table yet'."""
-    fs, dst, jvm = _fs_and_path(spark, path)
-    if fs.exists(dst):
-        return True
-    candidates = (staging_path(path), f"{path}.__old__")
-    promoted = False
-    for cand in candidates:
-        cp = jvm.org.apache.hadoop.fs.Path(cand)
-        if not fs.exists(cp):
-            continue
-        # _SUCCESS is written LAST by the parquet committer: its presence
-        # distinguishes a complete copy from a write that itself crashed
-        # (a partial temp must never be promoted to live).
-        if not promoted and fs.exists(
-            jvm.org.apache.hadoop.fs.Path(cand + "/_SUCCESS")
-        ):
-            promoted = bool(fs.rename(cp, dst))
-        else:
-            # stale or partial leftover — remove so it can't be promoted
-            # by a later recovery when it is no longer the newest state
-            fs.delete(cp, True)
-    return promoted
+    writer.parquet(staging)
+    old = [full for _, full, _ in _list_data_files(spark, path)] if path_exists(spark, path) else []
+    _commit(spark, path, [(staging, path)], old)
 
 
 def fetch_url(url: str, dest_path: str, chunk_bytes: int = 1 << 20) -> str:
@@ -494,90 +540,6 @@ def retry(
     raise last
 
 
-def _compact_manifest_path(path: str) -> str:
-    return path.rstrip("/") + ".__compact_manifest__"
-
-
-def _compact_staging_path(path: str) -> str:
-    return path.rstrip("/") + ".__compact__"
-
-
-def _list_data_files(spark: SparkSession, path: str):
-    """Recursively list a table's parquet data files as
-    (relative_dir, absolute_path, bytes) via the Hadoop FS API —
-    any scheme. Committer metadata is excluded the way Spark's own
-    InMemoryFileIndex excludes it: a hidden ('_'/'.'-prefixed) name
-    ANYWHERE on the relative path hides the file — a crashed append's
-    uncommitted task outputs under ``_temporary/`` must never be
-    treated as table data (compacting them in would resurrect rows the
-    reader itself would not return)."""
-    out = []
-    for rel, st in _walk_files(spark, path):
-        segs = rel.split("/")
-        if not segs[-1].endswith(".parquet"):
-            continue
-        if any(s.startswith(("_", ".")) for s in segs):
-            continue
-        out.append((rel.rpartition("/")[0], st.getPath().toString(), int(st.getLen())))
-    return out
-
-
-def _finish_compaction(spark: SparkSession, path: str) -> None:
-    """Commit phase of :func:`compact_table`, idempotent so crash
-    recovery can simply re-run it: move every staged file into its
-    table directory (skip the already-moved), then delete the
-    manifest-listed originals (skip the already-deleted), then clear
-    manifest + staging. At no instant is any row ONLY in a deleted
-    file: staged copies move in before their sources are removed, so
-    the transient state is duplication (repaired here), never loss."""
-    import json
-
-    fs, _, jvm = _fs_and_path(spark, path)
-    Path = jvm.org.apache.hadoop.fs.Path
-    manifest = json.loads(_read_bytes(spark, _compact_manifest_path(path)))
-    staging = _compact_staging_path(path)
-
-    def _move_in(rel: str) -> None:
-        src = Path(staging + "/" + rel)
-        dst = Path(path.rstrip("/") + "/" + rel)
-        if not fs.exists(src):
-            return  # moved by a previous (crashed) commit attempt
-        if not fs.exists(dst.getParent()):
-            fs.mkdirs(dst.getParent())
-        _move(fs, src, dst, "compaction commit")
-
-    # a sliver-heavy commit issues hundreds of independent move/delete
-    # RPCs; delete() returns False when already gone — the
-    # idempotent-replay skip without a separate exists() RPC per file
-    _fan_out(_move_in, manifest["staged"])
-    _fan_out(lambda full: fs.delete(Path(full), False), manifest["delete"])
-    fs.delete(Path(staging), True)
-    fs.delete(Path(_compact_manifest_path(path)), False)
-
-
-def recover_compaction(spark: SparkSession, path: str) -> bool:
-    """Repair a :func:`compact_table` interrupted at any point. The
-    manifest is the commit point (renamed into place atomically):
-    absent ⇒ the table was never touched — discard any staging
-    leftovers; present ⇒ the staged files are complete — re-run the
-    idempotent commit. Returns True iff a repair ran. Call before
-    reading a table a compactor may have died on (the recover_swapped
-    discipline)."""
-    fs, root, jvm = _fs_and_path(spark, path)
-    mpath = jvm.org.apache.hadoop.fs.Path(_compact_manifest_path(path))
-    staging = jvm.org.apache.hadoop.fs.Path(_compact_staging_path(path))
-    tmp = jvm.org.apache.hadoop.fs.Path(_compact_manifest_path(path) + ".tmp")
-    if fs.exists(mpath):
-        _finish_compaction(spark, path)
-        return True
-    repaired = False
-    for leftover in (staging, tmp):
-        if fs.exists(leftover):
-            fs.delete(leftover, True)
-            repaired = True
-    return repaired
-
-
 def compact_table(
     spark: SparkSession,
     path: str,
@@ -588,7 +550,7 @@ def compact_table(
     """In-place incremental small-file compaction (the OPTIMIZE shape)
     for a parquet table, partitioned or not: every table directory's
     files SMALLER than ``small_ratio * target_file_mb`` are read once,
-    rewritten as ~``target_file_mb`` files, and swapped in under a
+    rewritten as ~``target_file_mb`` files, and landed by one
     manifest commit; files already at scan size are NEVER touched. Cost
     therefore scales with the accumulated small-file (delta) bytes, not
     the table — the property that lets a daily pipeline afford running
@@ -596,15 +558,13 @@ def compact_table(
     ivf_compact_index / bm25_merge_many, are this operator specialized
     to their own layouts).
 
-    Crash safety (:func:`recover_compaction` is the read-side repair):
-    the compacted replacement is fully written to a staging dir FIRST,
-    then a manifest naming (staged files to move in, original files to
-    delete) is renamed into place — the atomic commit point — and only
-    then do files move. A crash before the manifest leaves the table
-    byte-identical; after it, the idempotent commit replays. The
-    transient mid-commit state is row duplication, never loss, and
-    single-writer discipline is assumed (same contract as
-    swap_directory).
+    Crash safety: the compacted replacement is staged in full, then
+    lands through :func:`_commit` with the small files in its delete
+    list (:func:`recover` is the read-side repair). A crash before the
+    manifest leaves the table byte-identical; after it, the idempotent
+    finish replays. The transient mid-commit state is row duplication,
+    never loss, and single-writer discipline is assumed, as for every
+    commit on a plain directory.
 
     Rewrites preserve the partition layout: staged files are written
     with the same ``partitionBy`` the directory structure encodes, one
@@ -628,9 +588,7 @@ def compact_table(
 
     Returns {files_before, files_after, dirs_compacted,
     bytes_rewritten}."""
-    import json
-
-    recover_compaction(spark, path)
+    recover(spark, path)
     files = _list_data_files(spark, path)
     files_before = len(files)
     threshold = int(small_ratio * target_file_mb * 1024 * 1024)
@@ -654,10 +612,8 @@ def compact_table(
         for seg in next(iter(work)).split("/")
         if "=" in seg
     ]
-    staging = _compact_staging_path(path)
-    fs, root, jvm = _fs_and_path(spark, path)
-    Path = jvm.org.apache.hadoop.fs.Path
-    fs.delete(Path(staging), True)
+    staging = _commit_siblings(path)[0]
+    fs, root, _ = _fs_and_path(spark, path)
     base_uri = fs.makeQualified(root).toString()
     # partition values must round-trip VERBATIM: type inference would
     # parse a string dir value that looks numeric (k=00123) as int and
@@ -708,15 +664,7 @@ def compact_table(
         rep.write.mode("overwrite").option(
             "maxRecordsPerFile", rows_per_file
         ).parquet(staging)
-    staged = [
-        (rel_dir + "/" if rel_dir else "") + full.rsplit("/", 1)[1]
-        for rel_dir, full, _ in _list_data_files(spark, staging)
-    ]
-    manifest = {"staged": staged, "delete": small_paths}
-    mtmp = _compact_manifest_path(path) + ".tmp"
-    _write_bytes(spark, mtmp, json.dumps(manifest).encode())
-    _move(fs, Path(mtmp), Path(_compact_manifest_path(path)), "compaction manifest")
-    _finish_compaction(spark, path)
+    _commit(spark, path, [(staging, path)], small_paths)
     return {
         "files_before": files_before,
         "files_after": len(_list_data_files(spark, path)),

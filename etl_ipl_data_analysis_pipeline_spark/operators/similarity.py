@@ -1638,8 +1638,12 @@ def pq_search_index(
     re-explode the codes array to (vec_id, subspace, code), and run the
     shared ADC stage. The scan reads ONLY the codes table — the raw
     vectors never leave cold storage, which is the PQ promise at
-    100 TB."""
+    100 TB. The codes table is read after io.recover, which finishes a
+    pq_compact_index commit a crash tore."""
+    from ..io import recover
+
     cents = spark.read.parquet(path + "/codebooks")
+    recover(spark, path + "/codes")
     codes = spark.read.parquet(path + "/codes").select(
         "vec_id",
         F.posexplode("codes").alias("subspace", "code"),
@@ -1818,16 +1822,18 @@ def ivf_compact_index(spark, path: str) -> None:
     overhead instead of scan throughput. The fix is a pure REWRITE:
     repartition the cells table BY the cell key (all rows of a cell
     hash to one task, so each partition directory collapses to one
-    file), write to the staging path, and crash-safely swap it in
-    (io.overwrite_parquet — at every instant a complete copy exists on
-    disk). The model is untouched and rows are only moved, never
-    re-routed, so search results are value-identical before and after —
-    pytest-pinned. Cost scales with the INDEX (vectors x dim), never
+    file) and land it through io.overwrite_parquet's one manifest
+    commit (a crash leaves the old files or a commit the next
+    io.recover finishes; io.recover runs first, so a torn earlier
+    compaction is finished before the cells are read). The model is
+    untouched and rows are only moved, never re-routed, so search
+    results are value-identical before and after — pytest-pinned. Cost scales with the INDEX (vectors x dim), never
     with re-clustering; at 100 TB run it per-cell-range on a cadence,
     exactly like any small-file compaction job."""
-    from ..io import overwrite_parquet
+    from ..io import overwrite_parquet, recover
 
     cells = path.rstrip("/") + "/cells"
+    recover(spark, cells)
     overwrite_parquet(
         spark.read.parquet(cells).repartition(F.col("cell")), cells, ["cell"]
     )
@@ -1836,13 +1842,15 @@ def ivf_compact_index(spark, path: str) -> None:
 def pq_compact_index(spark, path: str, num_files: int = 1) -> None:
     """Compact a persisted PQ index's codes table after N delta appends
     (pq_append_index): the codes are the ONLY thing a search scans, so
-    small-file buildup taxes every query. A pure coalesced rewrite via
-    the crash-safe staging swap; codes are untouched integers, so
+    small-file buildup taxes every query. A pure coalesced rewrite
+    landed by io.overwrite_parquet's manifest commit, after io.recover
+    finishes any torn earlier one; codes are untouched integers, so
     search results are value-identical — pytest-pinned alongside the
     IVF twin."""
-    from ..io import overwrite_parquet
+    from ..io import overwrite_parquet, recover
 
     codes = path.rstrip("/") + "/codes"
+    recover(spark, codes)
     overwrite_parquet(spark.read.parquet(codes).repartition(num_files), codes)
 
 
@@ -1863,6 +1871,8 @@ def ivf_search_index_exact(
     score in-cell cosine with the (sim DESC, vec_id) top-k. Every value
     matches ivf_topk_exact bit for bit, so the whole persisted lifecycle
     sits under the _ivf_exact_oracle CTE chain."""
+    from ..io import recover
+
     base = path.rstrip("/")
     cm = spark.read.parquet(base + "/centroids")
     pex = probes.select(
@@ -1885,6 +1895,7 @@ def ivf_search_index_exact(
         .select("query_id", F.col("cid").alias("cell"))
     )
     cell_ids = sorted({r["cell"] for r in routed.select("cell").distinct().collect()})
+    recover(spark, base + "/cells")  # finish a compaction a crash tore
     members = spark.read.parquet(base + "/cells").filter(
         F.col("cell").isin(cell_ids)
     )

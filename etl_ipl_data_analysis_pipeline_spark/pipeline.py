@@ -15,8 +15,11 @@ holding the keys it landed, and one file to the schema registry when the
 schema is new or drifted; no run rewrites either table, so their write
 cost is O(batch), and both are read with their schemas pinned. The
 discovery read opens one ledger file per past run; ``compact_after``
-merges them. The data append and the ledger append are two steps: a
-crash between them lands the batch again on the rerun.
+merges them. A run stages its rows, its quarantine rows, its registry
+version and its ledger keys, and lands all four in one io commit whose
+manifest sits next to ``out_dir``: a crash before that manifest leaves
+nothing behind, and the next run finishes a commit published before
+one, so a batch lands exactly once.
 
 Every Spark job a run launches carries the description
 ``run_ingest:<phase>``, phase one of ``discover``, ``registry``, ``write``
@@ -35,11 +38,13 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Observation, SparkSession
 
 from .io import (
+    _commit,
+    _commit_siblings,
     compact_table,
     expand_zip,
     fetch_url,
     read_binary_files,
-    recover_swapped,
+    recover,
     write_parquet,
 )
 from .io import read_json as _read_json
@@ -120,13 +125,13 @@ def run_ingest(
     """One pipeline run. ``source`` is a zip path or http(s) URL; JSON
     members land in ``landing_dir``, flattened rows append to ``out_dir``.
 
-    ``compact_after``: run :func:`io.compact_table` on ``out_dir`` after
-    the append and on ``ledger_path`` after the ledger append — the
-    maintenance step that keeps a daily append-mode table from
-    accumulating one sliver per run per partition (cost
-    scales with the accumulated small-file bytes, so running it every
-    ingest is affordable by construction; crash mid-compaction is
-    repaired by the recover pass the next run performs).
+    ``compact_after``: run :func:`io.compact_table` on ``out_dir`` and
+    on ``ledger_path`` once the batch has landed — the maintenance step
+    that keeps a daily append-mode table from accumulating one sliver
+    per run per partition (cost scales with the accumulated small-file
+    bytes, so running it every ingest is affordable by construction; a
+    crash mid-compaction is repaired by the recover pass the next run
+    performs).
 
     Drift gate: the flattened schema is compared against the newest
     snapshot in ``schema_registry_path``; ``on_drift='block'`` raises
@@ -137,6 +142,9 @@ def run_ingest(
     are captured PERMISSIVE-ly, written there as (path, raw text), and
     excluded from the flatten — one corrupt file degrades to a quarantine
     row instead of failing the whole run.
+
+    The staged outputs land by rename, so ``out_dir``, ``ledger_path``,
+    the registry and the quarantine directory share one filesystem.
     """
     if on_drift not in ("warn", "block"):
         raise ValueError("on_drift must be 'warn' or 'block'")
@@ -156,18 +164,19 @@ def run_ingest(
     members = expand_zip(archive, landing_dir, suffix=".json")
 
     # 2. incremental discovery (L1): this run's members vs the ledger by
-    # normalized key. No ledger means every member is fresh and no job
-    # runs. Otherwise one anti-join against the ledger (read with its
+    # normalized key. recover(out_dir) first: it finishes a previous run
+    # that died after publishing its commit, so that run's keys are in
+    # the ledger before discovery reads it, and discards the staging of
+    # one that died before. No ledger means every member is fresh and no
+    # job runs. Otherwise one anti-join against the ledger (read with its
     # schema pinned, so no inference job) collects the fresh rows — no
-    # more than the member list the driver already holds. recover_swapped
-    # repairs a swap torn by a crash of an older run, which rewrote the
-    # ledger by swapping directories: an absent-looking ledger would
-    # re-ingest everything.
+    # more than the member list the driver already holds.
     _phase(spark, "discover")
+    recover(spark, out_dir)
     fresh = spark.createDataFrame(
         [(m,) for m in sorted(members)], "path string"
     ).withColumn("file_key", strip_extension(F.expr("reverse(split(path, '/'))[0]")))
-    if recover_swapped(spark, ledger_path):
+    if recover(spark, ledger_path):
         ledger = spark.read.schema(LEDGER_SCHEMA).parquet(ledger_path)
         # the anti-join puts the key column first: restore fresh's column
         # order before the rows are re-framed positionally
@@ -178,6 +187,15 @@ def run_ingest(
         paths = sorted(members)
     if not paths:
         return RunResult(0, 0, None, skipped=True)
+
+    # every output is staged under the commit's staging dir and lands in
+    # step 7; recover(out_dir) above left that dir empty
+    staging = _commit_siblings(out_dir)[0]
+    outputs: list[tuple[str, str]] = []
+
+    def stage(df: DataFrame, name: str, dest: str) -> None:
+        write_parquet(df, f"{staging}/{name}")
+        outputs.append((f"{staging}/{name}", dest))
 
     # 3. read + flatten (SRC3, P1-P4): exactly the fresh files, each path
     # escaped so the sources' globbing matches it literally.
@@ -207,7 +225,7 @@ def run_ingest(
         )
         n_quarantined = bad.count()
         if n_quarantined:
-            write_parquet(bad, quarantine_dir, mode="append")
+            stage(bad, "quarantine", quarantine_dir)
         cached_raw = raw
         raw = raw.filter(F.col("_corrupt").isNull()).drop("_corrupt", "_src")
     elif json_schema is not None:
@@ -223,14 +241,14 @@ def run_ingest(
 
     # 4. drift gate (J3/SE2/SE3) against the newest registry snapshot; the
     # diff is collected once and the report built from those rows. A new
-    # or drifted schema appends its version's rows as one file. A registry
+    # or drifted schema adds its version's rows as one file. A registry
     # with no versions is a new one: an append that died before its first
     # commit leaves the directory behind holding only `_temporary`.
     drift_msg = None
     if schema_registry_path is not None:
         _phase(spark, "registry")
         new_version = 1
-        if recover_swapped(spark, schema_registry_path):
+        if recover(spark, schema_registry_path):
             registry = spark.read.schema(SNAPSHOT_SCHEMA).parquet(schema_registry_path)
             latest = registry.agg(F.max("version_id")).first()[0]
             if latest is not None:
@@ -244,28 +262,30 @@ def run_ingest(
                 new_version = latest + 1 if diff else None
         if new_version is not None:
             snapshot = schema_snapshot(spark, flat, version_id=new_version)
-            write_parquet(snapshot.coalesce(1), schema_registry_path, mode="append")
+            stage(snapshot.coalesce(1), "registry", schema_registry_path)
 
-    # 5. write (SNK1). Append — each run adds only its new files' rows,
-    # counted by an observation on the write itself.
+    # 5. write (SNK1). Each run adds only its new files' rows, counted by
+    # an observation on the write itself.
     _phase(spark, "write")
     counted = Observation()
-    write_parquet(flat.observe(counted, F.count(F.lit(1)).alias("n")), out_dir, mode="append")
+    stage(flat.observe(counted, F.count(F.lit(1)).alias("n")), "rows", out_dir)
     rows_written = counted.get["n"]
     if cached_raw is not None:
         cached_raw.unpersist()  # executor memory back; batch is re-readable
-    if compact_after:
-        # recover-then-compact is inside compact_table: a previous run's
-        # torn commit replays before this run's bin-packing plan is made
-        compact_table(spark, out_dir, target_file_mb=compact_target_mb)
 
-    # 6. ledger update (L2/L3): append one file of rows, one per fresh
-    # key, ingested through crawled/transformed (this runner performs
-    # both stages); the rows carry the ledger's declared column order.
+    # 6. ledger update (L2/L3): one file of rows, one per fresh key,
+    # ingested through crawled/transformed (this runner performs both
+    # stages); the rows carry the ledger's declared column order.
     _phase(spark, "ledger")
     new_rows = ledger_rows(fresh.select("file_key"), ("ingested", "crawled", "transformed"))
-    write_parquet(new_rows.coalesce(1), ledger_path, mode="append")
+    stage(new_rows.coalesce(1), "ledger", ledger_path)
+
+    # 7. land all four outputs at once (driver-side renames, no job)
+    _commit(spark, out_dir, outputs)
     if compact_after:
+        _phase(spark, "write")
+        compact_table(spark, out_dir, target_file_mb=compact_target_mb)
+        _phase(spark, "ledger")
         compact_table(spark, ledger_path, target_file_mb=compact_target_mb)
 
     return RunResult(len(paths), rows_written, drift_msg, skipped=False, quarantined=n_quarantined)

@@ -803,7 +803,7 @@ def topk_ivf_appended_compacted_exact(spark: SparkSession, sf_dir: str) -> DataF
     index is built on the even half (frozen decimal-Lloyd model), the
     odd half is appended under that model, the accumulated small files
     are compacted (similarity.ivf_compact_index: cell-keyed rewrite
-    behind the crash-safe staging swap — rows move, nothing re-routes),
+    landed by the one manifest commit — rows move, nothing re-routes),
     and the from-disk search of the ENTIRE result set — every
     approximate neighbor, every score — is replayed by the half-trained
     unrolled-Lloyd CTE chain with full-corpus assignment. A model that

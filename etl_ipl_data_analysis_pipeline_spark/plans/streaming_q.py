@@ -14,18 +14,22 @@ from . import load, register
 
 
 def _wipe_stream_state(*paths: str) -> None:
-    """rm -rf each state path AND its crash-swap leftovers. A previous
-    run killed inside io.overwrite_parquet can leave a COMPLETE stale
-    copy at <path>.__tmp__ (staged, newer) or <path>.__old__ (set
-    aside); recover_swapped would then PROMOTE it inside this run's
-    first micro-batch and contaminate a deliberately-fresh accumulation
-    with the dead run's state. Fresh-start queries must clear all
-    three."""
+    """rm -rf each state path AND its commit siblings. A previous run
+    killed inside io.overwrite_parquet can leave a published manifest
+    and its staged files; io.recover would then FINISH that commit
+    inside this run's first micro-batch and contaminate a
+    deliberately-fresh accumulation with the dead run's state.
+    Fresh-start queries must clear all of them."""
+    import os
     import shutil
 
+    from ..io import _commit_siblings
+
     for p in paths:
-        for suffix in ("", ".__tmp__", ".__old__"):
-            shutil.rmtree(p + suffix, ignore_errors=True)
+        for sib in (p, *_commit_siblings(p)):
+            if os.path.isfile(sib):  # the manifests
+                os.remove(sib)
+            shutil.rmtree(sib, ignore_errors=True)
 
 
 @register(
@@ -1138,7 +1142,7 @@ def stream_snapshot_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     regress a key — the final state equals the relational arg-max the
     oracle computes, regardless of micro-batch boundaries (1-file
     batching, cross-batch staleness, time travel and replay idempotence
-    are pytest-forced in tests/test_streaming.py). vs the swap-file CDC
+    are pytest-forced in tests/test_streaming.py). vs the whole-state CDC
     (stream_cdc_latest_value): per-batch cost is O(touched files) via
     the manifests' key-range stats, not a whole-state rewrite, and
     every batch's state stays time-travelable."""

@@ -8,9 +8,10 @@ the persisted state by re-running the same arg-max over
 ``state UNION batch-latest`` — an associative, commutative merge, so the
 result is independent of how the stream was micro-batched (proven in
 tests/test_streaming.py by comparing 1-file-per-trigger against
-one-shot). State writes go through incremental.fold_into's temp-path +
-atomic-rename swap so a crashed batch never leaves a torn table;
-re-running a batch is idempotent because the merge is.
+one-shot). State writes go through incremental.fold_into, whose one
+manifest commit a crashed batch cannot leave torn: the next fold
+finishes or discards it. Re-running a batch is idempotent because the
+merge is.
 
 At fleet scale the state table is O(live keys), not O(event history) —
 each batch shuffles O(batch + live keys touched), never the history.

@@ -14,7 +14,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..io import overwrite_parquet, recover_swapped
+from ..io import overwrite_parquet, recover
 
 
 def _stream_reader(spark: SparkSession, path: str, fmt: str, schema):
@@ -94,12 +94,12 @@ def drain(stream_df: DataFrame, apply_batch, checkpoint: str) -> None:
 def fold_into(incoming: DataFrame, path: str, merge) -> None:
     """Crash-safely overwrite the parquet state at ``path`` with
     ``merge(current, incoming)``, or with ``incoming`` alone when no
-    state exists yet. recover_swapped (not a bare exists): a crash
-    mid-swap must not read as "no state yet" — the checkpoint already
-    marks prior batches committed, so rebuilding from this batch alone
-    would silently drop all accumulated state."""
+    state exists yet. io.recover (not a bare exists) finishes a commit a
+    crash tore: read mid-commit, the state would show old and new rows
+    at once, and read as absent, it would be rebuilt from this batch
+    alone although the checkpoint marks prior batches committed."""
     sess = incoming.sparkSession
-    if recover_swapped(sess, path):
+    if recover(sess, path):
         incoming = merge(sess.read.parquet(path), incoming)
     overwrite_parquet(incoming, path)
 

@@ -17,9 +17,9 @@ into persisted state with ``foreachBatch``.
   pair streams (text MinHash, media fingerprints, embeddings).
 - :func:`run_bm25_index_stream` — per-batch delta indexes, folded once.
 
-State writes go through io.overwrite_parquet's crash-safe temp-path +
-atomic-rename swap, and every stream here drains through
-incremental.drain.
+State writes go through io.overwrite_parquet, which lands the new state
+and removes the old in one manifest commit, and every stream here drains
+through incremental.drain.
 """
 
 from __future__ import annotations
@@ -27,7 +27,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-from ..io import overwrite_parquet, recover_swapped
+from ..io import overwrite_parquet, recover
 from ..operators import sketches
 from .incremental import drain, fold_into
 
@@ -49,7 +49,7 @@ def _fold_stream(
         state_path.rstrip("/") + "__checkpoint",
     )
     spark = stream_df.sparkSession
-    if recover_swapped(spark, state_path):
+    if recover(spark, state_path):
         return spark.read.parquet(state_path)
     return build(spark.createDataFrame([], stream_df.schema))
 
@@ -79,9 +79,9 @@ def run_kmv_stream(
 
 
 #: constant marker column persisted WITH the count state in the same
-#: atomic swap: the id of the last batch folded in. Summation is additive
+#: commit: the id of the last batch folded in. Summation is additive
 #: (NOT idempotent), so foreachBatch's at-least-once replay — crash after
-#: the state swap but before the checkpoint commits — would double-count
+#: the state commit but before the checkpoint commits — would double-count
 #: without it.
 _BATCH_MARKER = "__last_batch_id"
 
@@ -95,7 +95,7 @@ def _merge_count_batch(
 ) -> None:
     """Fold one micro-batch into the persisted count table, exactly once:
     the state carries the last applied batch id in every row (written in
-    the SAME atomic rename as the counts, so marker and counts can never
+    the SAME commit as the counts, so marker and counts can never
     disagree), and a batch whose id EQUALS the stored marker is a no-op —
     the replay-after-crash case the additive merge can't absorb on its
     own (the checkpoint can only re-deliver the one batch whose commit
@@ -110,7 +110,7 @@ def _merge_count_batch(
         F.count(F.lit(1)).cast("long").alias(count_col)
     )
     sess = batch.sparkSession
-    if recover_swapped(sess, state_path):
+    if recover(sess, state_path):
         current = sess.read.parquet(state_path)
         if _BATCH_MARKER in current.columns:
             last = current.select(F.max(_BATCH_MARKER)).first()[0]
@@ -150,8 +150,8 @@ def run_count_stream(
     final table is bit-identical to a single-shot batch groupBy-count
     whatever the micro-batch boundaries. Unlike the OR-idempotent bloom
     and bottom-k KMV twins, summation is NOT replay-safe, so the state
-    carries a last-applied batch-id marker written in the same atomic
-    swap and re-delivered batches are skipped (see _merge_count_batch) —
+    carries a last-applied batch-id marker written in the same commit
+    and re-delivered batches are skipped (see _merge_count_batch) —
     exactly-once effective semantics under foreachBatch's at-least-once
     contract. Per batch: O(batch) reduction + O(state) merge, never
     O(history). The KMV twin above maintains a bounded sketch; this
@@ -167,7 +167,7 @@ def run_count_stream(
         state_path.rstrip("/") + "__checkpoint",
     )
     spark = stream_df.sparkSession
-    if recover_swapped(spark, state_path):
+    if recover(spark, state_path):
         state = spark.read.parquet(state_path)
         return state.drop(_BATCH_MARKER)
     return (
@@ -289,7 +289,7 @@ def _run_pair_stream(
         sess = batch.sparkSession
         rows = prep(batch)
         new_pairs = intra(rows)
-        have_index = recover_swapped(sess, index_path)
+        have_index = recover(sess, index_path)
         if have_index:
             index = sess.read.parquet(index_path)
             found = cross(rows, index)
@@ -312,7 +312,7 @@ def _run_pair_stream(
 
     drain(stream_df, apply_batch, pairs_path.rstrip("/") + "__checkpoint")
     spark = stream_df.sparkSession
-    if recover_swapped(spark, pairs_path):
+    if recover(spark, pairs_path):
         return spark.read.parquet(pairs_path)
     if empty_schema is not None:
         return spark.createDataFrame([], empty_schema)

@@ -163,54 +163,76 @@ def test_synthetic_datasource(spark):
     assert again == set(rows)
 
 
-def test_swap_directory_crash_recovery(spark, tmp_path):
-    """A swap torn at ANY step must leave a recoverable complete copy:
-    recover_swapped restores the newest complete state, and a partial
-    (no _SUCCESS) temp is never promoted."""
-    from etl_ipl_data_analysis_pipeline_spark.io import (
-        recover_swapped,
-        swap_directory,
-    )
-
+def test_overwrite_commit_crash_recovery(spark, tmp_path, monkeypatch):
+    """overwrite_parquet lands through the one manifest commit, and a
+    crash at any step leaves a state recover repairs: before the
+    manifest the old state reads and the staging is discarded; after it
+    the new state rolls forward and reads once, with no old rows mixed
+    in; a partial staging is never promoted; a path never written
+    reports False."""
     path = str(tmp_path / "state")
+    staging, manifest, manifest_tmp = tio._commit_siblings(path)
 
-    def write_state(val: int, dest: str):
-        spark.range(val, val + 3).coalesce(1).write.mode("overwrite").parquet(dest)
+    def write_state(val: int):
+        tio.overwrite_parquet(spark.range(val, val + 3).coalesce(1), path)
 
     def read_ids():
         return sorted(r["id"] for r in spark.read.parquet(path).collect())
 
-    # normal swap: v1 in place, then v2 swapped over it
-    write_state(0, f"{path}.__tmp__")
-    swap_directory(spark, path)
+    def crashed_write(val: int, attr: str, fail_on_call: int):
+        calls = []
+        real = getattr(tio, attr)
+
+        def dies(*a):
+            calls.append(a)
+            if len(calls) == fail_on_call:
+                raise IOError(f"injected crash in {attr}")
+            return real(*a)
+
+        with monkeypatch.context() as m:
+            m.setattr(tio, attr, dies)
+            with pytest.raises(IOError, match="injected"):
+                write_state(val)
+
+    write_state(0)
     assert read_ids() == [0, 1, 2]
-    write_state(10, f"{path}.__tmp__")
-    swap_directory(spark, path)
+    write_state(10)
     assert read_ids() == [10, 11, 12]
-    assert not os.path.exists(f"{path}.__old__")
+    assert not any(map(os.path.exists, (staging, manifest, manifest_tmp)))
 
-    # torn swap: live renamed aside, temp complete, dst missing (the exact
-    # window ADVICE flagged) -> recovery promotes the NEWER temp
-    write_state(20, f"{path}.__tmp__")
-    os.rename(path, f"{path}.__old__")
-    assert recover_swapped(spark, path)
-    assert read_ids() == [20, 21, 22]
-    assert not os.path.exists(f"{path}.__old__")  # stale copy cleaned
+    # crash before the manifest (its rename is the commit's first move):
+    # the old state reads, and recover discards the staging
+    crashed_write(20, "_move", 1)
+    assert os.path.exists(staging) and os.path.exists(manifest_tmp)
+    assert not os.path.exists(manifest)
+    assert read_ids() == [10, 11, 12]
+    assert tio.recover(spark, path)
+    assert not any(map(os.path.exists, (staging, manifest, manifest_tmp)))
+    assert read_ids() == [10, 11, 12]
 
-    # crash mid-temp-write (partial dir, no _SUCCESS), dst gone, old aside:
-    # recovery must skip the partial temp and fall back to the old copy
-    os.rename(path, f"{path}.__old__")
-    os.makedirs(f"{path}.__tmp__")
-    with open(f"{path}.__tmp__/part-00000.parquet", "wb") as f:
+    # crash after the manifest, before any move: rolls forward
+    crashed_write(30, "_finish_commit", 1)
+    assert os.path.exists(manifest)
+    assert tio.recover(spark, path)
+    assert read_ids() == [30, 31, 32]
+
+    # crash after the moves, before the deletes: on disk the old and new
+    # rows both show; recover leaves the new ones, once
+    crashed_write(40, "_fan_out", 2)
+    assert read_ids() == [30, 31, 32, 40, 41, 42]
+    assert tio.recover(spark, path)
+    assert read_ids() == [40, 41, 42]
+    assert not any(map(os.path.exists, (staging, manifest, manifest_tmp)))
+
+    # a staging whose write itself died (no manifest) is never promoted
+    os.makedirs(staging)
+    with open(f"{staging}/part-00000.parquet", "wb") as f:
         f.write(b"\x00" * 16)  # truncated garbage, not a parquet footer
-    assert recover_swapped(spark, path)
-    assert read_ids() == [20, 21, 22]
-    # recovery cleans the partial temp and the promoted source slot
-    assert not os.path.exists(f"{path}.__tmp__")
-    assert not os.path.exists(f"{path}.__old__")
+    assert tio.recover(spark, path)
+    assert not os.path.exists(staging)
+    assert read_ids() == [40, 41, 42]
 
-    # nothing anywhere -> False
-    assert not recover_swapped(spark, str(tmp_path / "never_written"))
+    assert not tio.recover(spark, str(tmp_path / "never_written"))
 
 
 def test_jdbc_roundtrip_embedded_derby(spark, tmp_path):
@@ -298,29 +320,30 @@ def test_compact_table_leaves_scan_sized_files_alone(spark, tmp_path):
 
 def test_compact_table_crash_recovery(spark, tmp_path, monkeypatch):
     """crash at the commit point (manifest renamed, nothing moved):
-    the table still reads byte-identically, and recover_compaction
+    the table still reads byte-identically, and recover
     replays the idempotent commit to the compacted layout."""
     path = str(tmp_path / "crash")
     want = _mk_partitioned(spark, path)
 
     calls = {"n": 0}
-    real = tio._finish_compaction
+    real = tio._finish_commit
 
     def boom(sp, p):
         calls["n"] += 1
         raise IOError("injected crash at commit")
 
-    monkeypatch.setattr(tio, "_finish_compaction", boom)
+    monkeypatch.setattr(tio, "_finish_commit", boom)
     with pytest.raises(IOError, match="injected"):
         tio.compact_table(spark, path, target_file_mb=64)
     assert calls["n"] == 1
     # manifest exists, staged files unmoved, originals intact => readable
-    assert tio.path_exists(spark, tio._compact_manifest_path(path))
+    staging, manifest, _ = tio._commit_siblings(path)
+    assert tio.path_exists(spark, manifest)
     assert _table_rows(spark, path) == want
-    monkeypatch.setattr(tio, "_finish_compaction", real)
-    assert tio.recover_compaction(spark, path) is True
-    assert not tio.path_exists(spark, tio._compact_manifest_path(path))
-    assert not tio.path_exists(spark, tio._compact_staging_path(path))
+    monkeypatch.setattr(tio, "_finish_commit", real)
+    assert tio.recover(spark, path) is True
+    assert not tio.path_exists(spark, manifest)
+    assert not tio.path_exists(spark, staging)
     assert len(tio._list_data_files(spark, path)) == 3
     assert _table_rows(spark, path) == want
 
@@ -330,12 +353,14 @@ def test_compact_table_precommit_leftovers_discarded(spark, tmp_path):
     must discard it and leave the table untouched."""
     path = str(tmp_path / "precommit")
     want = _mk_partitioned(spark, path)
-    staging = tio._compact_staging_path(path)
+    staging = tio._commit_siblings(path)[0]
     spark.range(5).write.mode("overwrite").parquet(staging)
-    assert tio.recover_compaction(spark, path) is True
+    assert tio.recover(spark, path) is True
     assert not tio.path_exists(spark, staging)
     assert _table_rows(spark, path) == want
-    assert tio.recover_compaction(spark, path) is False
+    # recover reports whether the table exists, not whether it repaired
+    assert tio.recover(spark, path) is True
+    assert _table_rows(spark, path) == want
 
 
 def test_write_parquet_skew_knobs(spark, tmp_path):
@@ -419,31 +444,28 @@ def test_compact_table_midmove_crash_recovery(spark, tmp_path):
     # plan a compaction by hand up to the commit point: stage + manifest
     files = tio._list_data_files(spark, path)
     smalls = [full for _, full, _ in files]
-    staging = tio._compact_staging_path(path)
+    staging, mpath, _ = tio._commit_siblings(path)
     df = spark.read.option("basePath", path).parquet(*smalls)
     df.repartition(F.col("grp")).write.mode("overwrite").partitionBy(
         "grp"
     ).parquet(staging)
-    staged = [
-        (rel + "/" if rel else "") + full.rsplit("/", 1)[1]
+    moves = [
+        (full, f"{path}/{rel}/{full.rsplit('/', 1)[1]}")
         for rel, full, _ in tio._list_data_files(spark, staging)
     ]
-    manifest = {"staged": staged, "delete": smalls}
-    mpath = tio._compact_manifest_path(path)
+    manifest = {"moves": moves, "delete": smalls}
     with open(mpath, "w") as fh:
         json.dump(manifest, fh)
 
     # simulate a crash mid-move: move the FIRST staged file in by hand
     jvm = spark._jvm
     fs, _, _ = tio._fs_and_path(spark, path)
-    first = staged[0]
-    src = jvm.org.apache.hadoop.fs.Path(staging + "/" + first)
-    dst = jvm.org.apache.hadoop.fs.Path(path + "/" + first)
+    src, dst = (jvm.org.apache.hadoop.fs.Path(p) for p in moves[0])
     assert fs.rename(src, dst)
     # mid-commit state: duplication (moved file + originals), never loss
     assert sorted(set(_table_rows(spark, path))) == want
 
-    assert tio.recover_compaction(spark, path) is True
+    assert tio.recover(spark, path) is True
     assert not tio.path_exists(spark, mpath)
     assert not tio.path_exists(spark, staging)
     assert _table_rows(spark, path) == want  # exact multiset, no dups

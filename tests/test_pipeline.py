@@ -355,3 +355,106 @@ def test_compact_after_bounds_small_files(spark, tmp_path, pipe_args):
     assert len(gio._list_data_files(spark, pipe_args["ledger_path"])) == 1
     ledger = spark.read.parquet(pipe_args["ledger_path"])
     assert sorted(r.file_key for r in ledger.collect()) == ["f0", "f1", "f2"]
+
+
+class _Crash(Exception):
+    """The process dies here: a fault injected into one ingest run."""
+
+
+def _crash_on_call(fn, n):
+    """``fn``, except that its ``n``-th call raises before doing anything."""
+    calls = []
+
+    def dies(*a, **kw):
+        calls.append(a)
+        if len(calls) == n:
+            raise _Crash(fn.__name__)
+        return fn(*a, **kw)
+
+    return dies
+
+
+def _crash_after(fn):
+    def dies(*a, **kw):
+        fn(*a, **kw)
+        raise _Crash(fn.__name__)
+
+    return dies
+
+
+def _crash_in_ledger_write(fn):
+    def dies(df, *a, **kw):
+        if df.sparkSession.sparkContext.getLocalProperty("spark.job.description") == "run_ingest:ledger":
+            raise _Crash("ledger write")
+        return fn(df, *a, **kw)
+
+    return dies
+
+
+def _crash_after_first_move(fn):
+    """``_fan_out`` whose first call (a commit's moves) moves one file and dies."""
+    calls = []
+
+    def dies(move, items):
+        calls.append(items)
+        if len(calls) == 1:
+            move(items[0])
+            raise _Crash("after the first move")
+        return fn(move, items)
+
+    return dies
+
+
+# (module attribute, fault, compact_after, the rerun finds the batch landed)
+INGEST_FAULTS = {
+    "after_expand_zip": ("pipeline.expand_zip", _crash_after, False, False),
+    "staged_data_no_ledger_keys": ("pipeline.write_parquet", _crash_in_ledger_write, False, False),
+    "staged_before_manifest": ("io._move", lambda f: _crash_on_call(f, 1), False, False),
+    "manifest_before_moves": ("io._finish_commit", lambda f: _crash_on_call(f, 1), False, True),
+    "after_first_move": ("io._fan_out", _crash_after_first_move, False, True),
+    "inside_compaction": ("io._finish_commit", lambda f: _crash_on_call(f, 2), True, True),
+}
+
+
+@pytest.mark.parametrize("fault", list(INGEST_FAULTS))
+def test_ingest_lands_exactly_once_after_a_crash(spark, tmp_path, pipe_args, monkeypatch, fault):
+    """One fault per run at each step of a run: the rerun leaves exactly
+    the batch's rows, each ledger key once, the quarantine rows once and
+    one registry version, and a third run finds nothing to do. The rows,
+    quarantine rows, registry version and ledger keys land in one commit,
+    so a crash before its manifest lands nothing and one after it is
+    finished by the next run's recovery."""
+    import etl_ipl_data_analysis_pipeline_spark.io as gio
+    import etl_ipl_data_analysis_pipeline_spark.pipeline as pl
+    from etl_ipl_data_analysis_pipeline_spark.operators.schema_diff import SNAPSHOT_SCHEMA
+
+    docs = {f"m{i}.json": [{"id": 10 * i + j, "v": f"x{i}"} for j in range(2)] for i in range(3)}
+    path = make_zip(tmp_path, "b.zip", docs)
+    with zipfile.ZipFile(path, "a") as zf:
+        zf.writestr("broken.json", '{"id": 99, "v": ')  # truncated
+    qdir = str(tmp_path / "quarantine")
+    target, fault_of, compact_after, landed = INGEST_FAULTS[fault]
+    owner, attr = target.split(".")
+
+    def run():
+        return run_ingest(
+            spark, path, **pipe_args, json_schema="id long, v string",
+            quarantine_dir=qdir, compact_after=compact_after,
+        )
+
+    with monkeypatch.context() as m:
+        mod = pl if owner == "pipeline" else gio
+        m.setattr(mod, attr, fault_of(getattr(mod, attr)))
+        with pytest.raises(_Crash):
+            run()
+    rerun = run()
+    assert rerun.skipped == landed
+    want = sorted(r["id"] for rows in docs.values() for r in rows)
+    assert sorted(r.id for r in spark.read.parquet(pipe_args["out_dir"]).collect()) == want
+    keys = [r.file_key for r in spark.read.parquet(pipe_args["ledger_path"]).collect()]
+    assert sorted(keys) == ["broken", "m0", "m1", "m2"]
+    assert spark.read.parquet(qdir).count() == 1
+    registry = spark.read.schema(SNAPSHOT_SCHEMA).parquet(pipe_args["schema_registry_path"])
+    assert {r.version_id for r in registry.collect()} == {1}
+    assert registry.count() == registry.select("name").distinct().count()
+    assert run().skipped

@@ -299,7 +299,7 @@ def test_outer_attribution_stream_properties(spark, sf_dir):
 def test_kmv_stream_batch_boundary_independence(spark, tmp_path):
     """Micro-batched KMV maintenance must produce the identical sketch
     state as a one-shot build — the merge is associative, and a crashed
-    run can resume (state is swap-written, checkpointed source)."""
+    run can resume (state lands by one manifest commit, checkpointed source)."""
     import pyspark.sql.functions as F
 
     from etl_ipl_data_analysis_pipeline_spark.operators import sketches
@@ -362,6 +362,57 @@ def test_count_stream_is_batch_boundary_independent(spark, tmp_path):
     # min_count=30 prune would have dropped every partial - read-time
     # filtering keeps the full counts
     assert got.filter(F.col("n_occurrences") >= 28).count() == 7
+
+
+def test_count_stream_survives_a_crash_inside_a_state_commit(spark, tmp_path, monkeypatch):
+    """A run_count_stream fold that dies after its state commit's
+    manifest is published and after one of its moves leaves state the
+    next fold must finish, not read: rerun from the same checkpoint, the
+    re-delivered batch is the one the finished commit already holds, so
+    the __last_batch_id marker skips it and the counts equal one batch
+    groupBy-count."""
+    from etl_ipl_data_analysis_pipeline_spark import io as gio
+    from etl_ipl_data_analysis_pipeline_spark.streaming import sketch_stream
+
+    rows = [(i, f"g{i % 5}") for i in range(60)]
+    df = spark.createDataFrame(rows, "row_id long, gram string")
+    src = str(tmp_path / "crash_src")
+    for i in range(3):
+        df.filter((F.col("row_id") % 3) == i).coalesce(1).write.parquet(f"{src}/f{i}")
+
+    def stream():
+        return (
+            spark.readStream.schema(df.schema)
+            .option("maxFilesPerTrigger", 1)
+            .option("recursiveFileLookup", "true")
+            .parquet(src)
+            .select("gram")
+        )
+
+    real_finish, real_fan_out, finishes = gio._finish_commit, gio._fan_out, []
+
+    def torn_second_finish(sp, path):
+        finishes.append(path)
+        if len(finishes) != 2:
+            return real_finish(sp, path)
+
+        def first_move_then_die(move, items):
+            move(items[0])
+            raise OSError("injected crash inside the state commit")
+
+        with monkeypatch.context() as m:
+            m.setattr(gio, "_fan_out", first_move_then_die)
+            real_finish(sp, path)
+
+    state = str(tmp_path / "crash_state")
+    with monkeypatch.context() as m:
+        m.setattr(gio, "_finish_commit", torn_second_finish)
+        with pytest.raises(Exception, match="injected crash"):
+            sketch_stream.run_count_stream(stream(), state, keys=["gram"])
+    assert gio._fan_out is real_fan_out and os.path.exists(gio._commit_siblings(state)[1])
+    got = sketch_stream.run_count_stream(stream(), state, keys=["gram"])
+    want = df.groupBy("gram").agg(F.count(F.lit(1)).cast("long").alias("n_occurrences"))
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
 
 
 def test_count_stream_zero_batches_returns_empty(spark, tmp_path):
@@ -483,7 +534,7 @@ def test_state_and_pair_streams_zero_batches_return_empty(spark, tmp_path, case)
 def test_count_stream_replay_is_noop(spark, tmp_path):
     """foreachBatch is at-least-once: a crash between the state swap and
     the checkpoint commit re-delivers the batch. Summation is not
-    idempotent, so the batch-id marker (written in the same atomic swap)
+    idempotent, so the batch-id marker (written in the same commit)
     must turn the re-delivery into a no-op — and a genuinely NEW batch id
     must still merge."""
     import pyspark.sql.functions as F
