@@ -13,8 +13,9 @@ both sides so summation order can't flip the hash.
 
 from __future__ import annotations
 
+import functools
 import os
-from collections.abc import Callable
+from collections.abc import Callable, Iterator, Mapping
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -193,7 +194,8 @@ _DRIVER_WINDOW_PRIORITY: tuple[str, ...] = (
 )
 
 
-def load_all() -> dict[str, QuerySpec]:
+@functools.cache
+def _load() -> dict[str, QuerySpec]:
     """Import all plan modules (side-effect: registration) and return
     REGISTRY, reordered so _DRIVER_WINDOW_PRIORITY comes first."""
     from . import (  # noqa: F401
@@ -215,3 +217,28 @@ def load_all() -> dict[str, QuerySpec]:
     REGISTRY.clear()
     REGISTRY.update(ordered)
     return REGISTRY
+
+
+class _Catalog(Mapping[str, QuerySpec]):
+    """Read-only view of REGISTRY that loads the plan modules on first read."""
+
+    def __getitem__(self, name: str) -> QuerySpec:
+        return _load()[name]
+
+    def __iter__(self) -> Iterator[str]:
+        return iter(_load())
+
+    def __len__(self) -> int:
+        return len(_load())
+
+
+def load_all() -> Mapping[str, QuerySpec]:
+    """The query catalog: name -> QuerySpec, _DRIVER_WINDOW_PRIORITY first,
+    then every other query in registration order.
+
+    Lazy: the seven plan modules, and the operator modules they import, are
+    imported on the first read (lookup, ``in``, ``get``, iteration or
+    ``len``), not by this call, so a process that builds a session but runs
+    no catalog query never compiles them. The contents and order are the
+    same as an eager import's. The mapping is read-only."""
+    return _Catalog()

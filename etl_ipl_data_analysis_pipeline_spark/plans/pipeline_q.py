@@ -633,6 +633,37 @@ def _scratch_dir(sf_dir: str, tag: str) -> str:
     )
 
 
+def _orders_by_key_range(
+    spark: SparkSession, sf_dir: str, base: str
+) -> tuple[DataFrame, int]:
+    """Load orders (``o_orderkey``, ``o_totalprice``) and commit them to the
+    snapshot table at ``base`` as 8 o_orderkey-range files cut from the
+    data alone: one task sorts by key and rolls a new file every
+    ceil(rows / 8) rows. A range exchange would draw its bounds from a
+    sample whose seed follows the RDD id, so the files, and the tasks and
+    bytes of every later step over them, would move with whatever the
+    session ran before. The frame is the whole table, so its row count is
+    the sum of its files' parquet footer counts, read on the driver; a
+    count job would add a scan to each fixture's plan. Returns the frame
+    and the committed version."""
+    import pyarrow.parquet as pq
+
+    from .. import snapshots as sn
+
+    o = load(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
+    rows = sum(pq.read_metadata(sn._uri_path(f)).num_rows for f in o.inputFiles())
+    per_file = "spark.sql.files.maxRecordsPerFile"
+    was = spark.conf.get(per_file)
+    spark.conf.set(per_file, str(-(-rows // 8)))
+    try:
+        v = sn.snapshot_commit(
+            o.coalesce(1).sortWithinPartitions("o_orderkey"), base, "append"
+        )
+    finally:
+        spark.conf.set(per_file, was)
+    return o, v
+
+
 @register(
     "orc_partitioned_roundtrip",
     oracle="""
@@ -1064,8 +1095,7 @@ def snapshot_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     base = _scratch_dir(sf_dir, "snapshot_merge_orders")
     shutil.rmtree(base, ignore_errors=True)
-    o = load(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-    sn.snapshot_commit(o.repartitionByRange(8, "o_orderkey"), base, "append")
+    o, _ = _orders_by_key_range(spark, sf_dir, base)
     bound = o.agg(F.max("o_orderkey")).collect()[0][0] // 8
     updated = (
         o.filter((F.col("o_orderkey") % 7 == 0) & (F.col("o_orderkey") <= bound))
@@ -1121,13 +1151,9 @@ def snapshot_pruned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     predicate; the oracle computes it relationally over orders). At
     10^5 files this is the difference between scheduling ~4 tasks and
     scheduling all of them — parquet row-group skipping never sees the
-    pruned-out files at all.
-
-    The 8 files are cut from the data alone: one task sorts orders by
-    key and rolls a new file every ceil(rows / 8) rows. A range
-    exchange would draw its bounds from a sample whose seed follows the
-    RDD id, so the files this read keeps would move with whatever the
-    session ran before."""
+    pruned-out files at all. The 8 files are cut from the data alone
+    (``_orders_by_key_range``), so the files this read keeps do not move
+    with whatever the session ran before."""
     import shutil
 
     from .. import snapshots as sn
@@ -1135,17 +1161,8 @@ def snapshot_pruned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     base = _scratch_dir(sf_dir, "snapshot_pruned_orders")
     shutil.rmtree(base, ignore_errors=True)
-    o = load(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-    mx, n = o.agg(F.max("o_orderkey"), F.count(F.lit(1))).collect()[0]
-    per_file = "spark.sql.files.maxRecordsPerFile"
-    was = spark.conf.get(per_file)
-    spark.conf.set(per_file, str(-(-n // 8)))
-    try:
-        sn.snapshot_commit(
-            o.coalesce(1).sortWithinPartitions("o_orderkey"), base, "append"
-        )
-    finally:
-        spark.conf.set(per_file, was)
+    o, _ = _orders_by_key_range(spark, sf_dir, base)
+    mx = o.agg(F.max("o_orderkey")).collect()[0][0]
     lo, hi = mx // 8, mx // 4
     m = sn._read_manifest(spark, base, 1)
     assert len(m.get("stats", {})) == len(m["files"])  # footer stats captured
@@ -1383,8 +1400,7 @@ def snapshot_mor_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     base = _scratch_dir(sf_dir, "snapshot_mor_orders")
     shutil.rmtree(base, ignore_errors=True)
-    o = load(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-    v1 = sn.snapshot_commit(o.repartitionByRange(8, "o_orderkey"), base, "append")
+    o, v1 = _orders_by_key_range(spark, sf_dir, base)
     keys = o.filter(F.col("o_orderkey") % 19 == 0).select("o_orderkey")
     v2 = sn.snapshot_delete_keys(keys, base)
     m1 = sn._read_manifest(spark, base, v1)
@@ -1455,8 +1471,7 @@ def snapshot_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     base = _scratch_dir(sf_dir, "snapshot_cdf_orders")
     shutil.rmtree(base, ignore_errors=True)
-    o = load(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-    v1 = sn.snapshot_commit(o.repartitionByRange(8, "o_orderkey"), base, "append")
+    o, v1 = _orders_by_key_range(spark, sf_dir, base)
     upd = o.filter(F.col("o_orderkey") % 7 == 0).withColumn(
         "o_totalprice", F.col("o_totalprice") * 2
     )
@@ -1621,8 +1636,7 @@ def snapshot_incremental_mirror(spark: SparkSession, sf_dir: str) -> DataFrame:
     dst = _scratch_dir(sf_dir, "snapshot_mirror_dst")
     for p in (src, dst):
         shutil.rmtree(p, ignore_errors=True)
-    o = load(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-    sn.snapshot_commit(o.repartitionByRange(8, "o_orderkey"), src, "append")
+    o, _ = _orders_by_key_range(spark, sf_dir, src)
     assert mirror_snapshot_changes(spark, src, dst, ["o_orderkey"]) == 1
     upd = o.filter(F.col("o_orderkey") % 7 == 0).withColumn(
         "o_totalprice", F.col("o_totalprice") * 2
@@ -1698,8 +1712,7 @@ def snapshot_change_log(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     base = _scratch_dir(sf_dir, "snapshot_chlog_orders")
     shutil.rmtree(base, ignore_errors=True)
-    o = load(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-    v1 = sn.snapshot_commit(o.repartitionByRange(8, "o_orderkey"), base, "append")
+    o, v1 = _orders_by_key_range(spark, sf_dir, base)
     upd = o.filter(F.col("o_orderkey") % 7 == 0).withColumn(
         "o_totalprice", F.col("o_totalprice") * 2
     )

@@ -19,6 +19,11 @@ session and noop sink. The measured run records:
 Each frame's ``explain("formatted")`` plan goes to ``<out stem>.plans/``.
 Nothing here launches a Spark job of its own.
 
+Beside the query entries, a ``_meta`` entry of the same shape holds one
+counter, ``catalog_read_cpu_s``: the CPU seconds of the first read of
+``plans.load_all()``, which imports the plan modules (``load_all`` itself
+imports none).
+
 Usage:
     SPARK_GRAFT_SF_DIR=<parquet dir> python scripts/profile_queries.py OUT.json [query ...]
     python scripts/profile_queries.py diff OLD.json NEW.json
@@ -144,10 +149,12 @@ def profile(out: str, names: list[str]) -> int:
     sf_dir = os.environ["SPARK_GRAFT_SF_DIR"]
     spark = bench.build_spark(int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
     registry = load_all()
+    c0 = time.process_time()
+    len(registry)  # the first read imports the plan modules
+    entries: dict = {"_meta": {"counters": {"catalog_read_cpu_s": round(time.process_time() - c0, 6)}}}
     probe = SparkProbe(spark)
     plans_dir = os.path.splitext(out)[0] + ".plans"
     os.makedirs(plans_dir, exist_ok=True)
-    entries: dict = {}
     with ManifestTimer() as manifest:
         for name in names or bench.HEADLINE:
             try:

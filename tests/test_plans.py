@@ -2,7 +2,11 @@
 (pushdown, pruning, broadcast, bounded shuffles) hold in the actual
 executed plans, not just in docstrings."""
 
+import json
+import os
 import re
+import subprocess
+import sys
 from collections import Counter
 
 import pyspark.sql.functions as F
@@ -25,6 +29,78 @@ def _optimized(df) -> str:
 @pytest.fixture(scope="module")
 def qs():
     return entry.queries()
+
+
+_PKG = "etl_ipl_data_analysis_pipeline_spark"
+_PLAN_MODULES = tuple(
+    f"plans.{m}"
+    for m in ("curation_q", "events_q", "ext_q", "llm_ops", "pipeline_q", "relational", "streaming_q")
+)
+_OPERATOR_MODULES = (
+    "operators.dedup", "operators.similarity", "operators.textstats", "operators.multimodal",
+    "operators.curation", "operators.joins", "operators.bloom", "functions",
+)
+
+
+def _fresh(code: str):
+    """Run ``code`` in a new interpreter at the repository root and return
+    the JSON it prints last."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=root, capture_output=True, text=True, timeout=300,
+        env={**os.environ, "PYTHONPATH": root},
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    return json.loads(out.stdout.splitlines()[-1])
+
+
+def test_catalog_imports_plan_modules_on_first_read():
+    """load_all() imports no plan or operator module; the first read
+    imports the seven plan modules and serves the eager catalog: the
+    priority names first, then the rest in registration order (plan
+    modules in import order, queries in source order)."""
+    got = _fresh(f"""
+import json, sys
+from {_PKG} import plans
+loaded = lambda names: [n for n in names if f"{_PKG}.{{n}}" in sys.modules]
+cat = plans.load_all()
+before = loaded({_PLAN_MODULES} + {_OPERATOR_MODULES})
+nope = cat.get("nope")
+after = loaded({_PLAN_MODULES})
+try:
+    cat["x"] = None
+    assigned = True
+except TypeError:
+    assigned = False
+where = {{n: [s.fn.__module__, s.fn.__code__.co_firstlineno] for n, s in cat.items()}}
+print(json.dumps(dict(before=before, after=after, nope=nope, assigned=assigned,
+      names=list(cat), again=list(plans.load_all()), where=where,
+      priority=list(plans._DRIVER_WINDOW_PRIORITY))))
+""")
+    assert got["before"] == []
+    assert got["after"] == list(_PLAN_MODULES)
+    assert got["nope"] is None and not got["assigned"]
+    names, priority, where = got["names"], got["priority"], got["where"]
+    assert len(names) == len(set(names)) == 281 and got["again"] == names
+    assert set(priority) <= set(names)
+    modules = [f"{_PKG}.{m}" for m in _PLAN_MODULES]
+    rest = sorted(
+        (n for n in names if n not in priority),
+        key=lambda n: (modules.index(where[n][0]), where[n][1]),
+    )
+    assert names == priority + rest
+
+
+def test_etl_path_imports_no_catalog():
+    """The paper's ETL path (run_ingest into a snapshot table) loads no
+    plan module and none of the curation-side operators."""
+    got = _fresh(f"""
+import json, sys
+import {_PKG}.pipeline, {_PKG}.snapshots
+print(json.dumps(sorted(m for m in sys.modules if m.startswith("{_PKG}."))))
+""")
+    heavy = [f"{_PKG}.{m}" for m in _OPERATOR_MODULES[:5]]
+    assert not [m for m in got if m.startswith(f"{_PKG}.plans.") or m in heavy], got
 
 
 def test_filter_and_projection_reach_parquet_scan(spark, sf_dir, qs):

@@ -471,6 +471,34 @@ def test_snapshot_read_prunes_by_manifest_stats(spark, tmp_path):
     assert sn._prune_files_by_range(m, "k", "a", "b") == m["files"]
 
 
+def test_key_range_fixture_commit_ignores_process_history(spark, tmp_path):
+    """The snapshot fixtures' 8-file key-range commit cuts its files from
+    the data alone: the same orders table committed twice, with an
+    unrelated range exchange in between, lands the same file boundaries
+    and row counts, and the writer's conf is restored."""
+    import pyspark.sql.functions as F
+
+    from etl_ipl_data_analysis_pipeline_spark.plans.pipeline_q import _orders_by_key_range
+
+    # enough rows that the range sample is not the whole input
+    spark.range(0, 20000, numPartitions=4).select(
+        ((F.col("id") * 7919) % 20000).alias("o_orderkey"),
+        F.col("id").cast("double").alias("o_totalprice"),
+    ).write.parquet(str(tmp_path / "orders.parquet"))
+    per_file = spark.conf.get("spark.sql.files.maxRecordsPerFile")
+
+    def layout(path):
+        _, v = _orders_by_key_range(spark, str(tmp_path), path)
+        m = sn._read_manifest(spark, path, v)
+        return sorted((tuple(m["stats"][f]["o_orderkey"]), m["rows"][f]) for f in m["files"])
+
+    first = layout(str(tmp_path / "a"))
+    spark.range(0, 777, numPartitions=3).repartitionByRange(5, "id").count()
+    assert layout(str(tmp_path / "b")) == first
+    assert [r for _, r in first] == [2500] * 8
+    assert spark.conf.get("spark.sql.files.maxRecordsPerFile") == per_file
+
+
 def test_partitioned_snapshot_roundtrip_and_pruned_read(spark, tmp_path):
     """partition_by lays data under Hive col=value dirs; reads restore
     the partition column via basePath, appends inherit the layout, a
