@@ -43,10 +43,10 @@ def read_json(
     spark: SparkSession,
     path: str | list[str],
     schema=None,
-    multiline: bool = True,
     corrupt_col: str | None = None,
 ) -> DataFrame:
-    """SRC3 (transformation_job.py:37-38): JSON scan.
+    """SRC3 (transformation_job.py:37-38): JSON scan, one document per
+    file (``multiLine``).
 
     Schema inference is a full extra pass over the data — at 100 TB pass an
     explicit ``schema`` (pin once, then reuse) instead of inferring per run.
@@ -57,7 +57,7 @@ def read_json(
     Requires an explicit ``schema`` (Spark drops the corrupt column during
     inference), and the column must be declared StringType in it.
     """
-    reader = spark.read.option("multiLine", "true" if multiline else "false")
+    reader = spark.read.option("multiLine", "true")
     if corrupt_col is not None:
         if schema is None:
             raise ValueError("corrupt_col requires an explicit schema")
@@ -82,12 +82,12 @@ def read_binary_files(spark: SparkSession, path: str | list[str]) -> DataFrame:
 def write_parquet(
     df: DataFrame,
     path: str,
-    mode: str = "overwrite",
     partition_by: Iterable[str] | None = None,
     files_per_partition: int = 1,
     max_records_per_file: int | None = None,
 ) -> None:
-    """SNK1 (transformation_job.py:45) + partitioning for scale.
+    """SNK1 (transformation_job.py:45) + partitioning for scale; replaces
+    whatever ``path`` held.
 
     ``partition_by`` turns downstream equality filters on those columns into
     partition pruning (whole directories skipped at planning time).
@@ -147,12 +147,12 @@ def write_parquet(
             rep = df.repartition(n, *keys)
         else:
             rep = df.repartition(*keys)
-        writer = rep.write.mode(mode)
+        writer = rep.write.mode("overwrite")
         if max_records_per_file is not None:
             writer = writer.option("maxRecordsPerFile", max_records_per_file)
         writer.partitionBy(*cols).parquet(path)
         return
-    writer = df.write.mode(mode)
+    writer = df.write.mode("overwrite")
     if max_records_per_file is not None:
         writer = writer.option("maxRecordsPerFile", max_records_per_file)
     writer.parquet(path)
@@ -165,9 +165,9 @@ def write_bucketed(
     num_buckets: int = 32,
     sort_cols: Iterable[str] | None = None,
     path: str | None = None,
-    mode: str = "overwrite",
 ) -> None:
-    """SNK1 scale variant: hash-bucketed (optionally sorted) parquet table.
+    """SNK1 scale variant: hash-bucketed (optionally sorted) parquet table,
+    replacing ``table``.
 
     Two tables bucketed on the same key with the same bucket count join
     WITHOUT a shuffle (sort-merge over co-located buckets; with sort_cols
@@ -176,7 +176,7 @@ def write_bucketed(
     Catalog-backed because bucket metadata lives in the table definition
     (plain ``.parquet(path)`` files can't record it).
     """
-    writer = df.write.format("parquet").mode(mode).bucketBy(num_buckets, *bucket_cols)
+    writer = df.write.format("parquet").mode("overwrite").bucketBy(num_buckets, *bucket_cols)
     if sort_cols:
         writer = writer.sortBy(*sort_cols)
     if path:
@@ -190,18 +190,18 @@ def write_jdbc(
     table: str,
     mode: str = "append",
     properties: dict[str, str] | None = None,
-    batchsize: int = 10_000,
 ) -> None:
     """SNK2 (etl_glue_job.py:18-43): warehouse load.
 
     The reference stages through S3 for Redshift COPY; plain JDBC writes one
     batch-insert stream per partition — repartition the input to control
-    warehouse write concurrency. Round-trip-tested against embedded Derby
+    warehouse write concurrency; each insert batch is 10,000 rows (Spark's
+    default is 1,000). Round-trip-tested against embedded Derby
     (tests/test_io.py::test_jdbc_roundtrip_embedded_derby) — the same
     batched-insert path a warehouse load uses.
     """
     writer = df.write.mode(mode).format("jdbc").option("url", url).option("dbtable", table)
-    writer = writer.option("batchsize", str(batchsize))
+    writer = writer.option("batchsize", "10000")
     for k, v in (properties or {}).items():
         writer = writer.option(k, v)
     writer.save()
@@ -423,18 +423,16 @@ def overwrite_parquet(
     _commit(spark, path, [(staging, path)], old)
 
 
-def fetch_url(url: str, dest_path: str, chunk_bytes: int = 1 << 20) -> str:
+def fetch_url(url: str, dest_path: str) -> str:
     """SRC1 (data_ingestion_func.py:19-21): stream a remote archive to local/
-    object storage without buffering whole in memory. Driver-side utility —
-    at scale fetch a manifest and fan out reads via ``read_binary_files``."""
+    object storage in 1 MiB chunks, never buffering it whole. Driver-side
+    utility — at scale fetch a manifest and fan out reads via
+    ``read_binary_files``."""
+    import shutil
     import urllib.request
 
     with urllib.request.urlopen(url) as resp, open(dest_path, "wb") as out:  # noqa: S310
-        while True:
-            chunk = resp.read(chunk_bytes)
-            if not chunk:
-                break
-            out.write(chunk)
+        shutil.copyfileobj(resp, out, 1 << 20)
     return dest_path
 
 
@@ -571,10 +569,12 @@ def compact_table(
     output task per directory capped by ``maxRecordsPerFile`` sized
     from the measured small-file bytes-per-row.
 
-    ``sort_by``: sort rows on these columns WITHIN each rewrite task
-    before writing (sortWithinPartitions — no extra shuffle), so the
-    merged files carry tight parquet footer min/max ranges on those
-    columns. A clustered table (zorder_write's per-file bounds, a
+    ``sort_by``: sort the rewritten rows on these columns so the merged
+    files carry tight parquet footer min/max ranges on them. A
+    partitioned table sorts within each directory's rewrite task (no
+    extra shuffle); an unpartitioned one range-partitions the delta on
+    ``sort_by`` before the sort, which costs one more job to sample the
+    range bounds. A clustered table (zorder_write's per-file bounds, a
     time-ordered ledger) loses its clustering if slivers are
     bin-packed unsorted; with sort_by the compaction preserves the
     skip-index property the layout paid for.

@@ -681,8 +681,11 @@ def connected_components(
     (node, component) where component is the smallest node id in the
     component. Alternating large-star / small-star contraction (Kiveris et
     al., "Connected Components in MapReduce and Beyond", SoCC'14) —
-    converges in O(log n) rounds, each round two shuffles (a groupBy-min
-    and a join), never materializing anything bigger than the edge list.
+    converges in O(log n) rounds, never materializing anything bigger
+    than the edge list. A round runs two min aggregates (large-star's
+    neighbor min, small-star's), two joins, two distincts and the
+    convergence probe's aggregate: one action, which AQE splits into
+    about 10 jobs (one per query stage).
 
     Used for full transitive closure of near-duplicate clusters, where the
     one-hop compromise in :func:`minhash_dedup` over- or under-merges
@@ -874,8 +877,8 @@ def semantic_dedup(
     smoke's replicated corpus went 102.8s -> flat, see SCALE_SMOKE_r07.json
     in git history).
 
-    Clustering is :func:`similarity.kmeans_exact` + the decimal
-    squared-distance argmin (the ivf_topk_exact assignment): every
+    Clustering is :func:`similarity.kmeans_exact` + the exact family's
+    nearest-centroid pick (the ivf_topk_exact assignment): every
     routing decision is partitioning-independent and replayable in SQL,
     so the FULL result — which natural near-duplicates get caught, not
     just a planted floor — sits under an exact DuckDB oracle (collapse
@@ -1027,7 +1030,7 @@ def semantic_dedup(
                     ).alias("cell"),
                 )
     else:
-        from .similarity import _exploded, _keyed_corpus
+        from .similarity import _exploded, _keyed_corpus, _nearest, _sq_dists
 
         cents = kmeans_exact(
             rep_emb, k=k, iters=iters, id_col=id_col, vec_col=vec_col
@@ -1037,17 +1040,8 @@ def semantic_dedup(
         # internally — ReuseExchange serves the routing pass and the
         # vector back-join from the one collapsed-reps materialization
         base = _keyed_corpus(rep_emb, id_col, vec_col)
-        ex = _exploded(base)
-        term = F.col("v") - F.col("c")
-        dists = (
-            ex.join(F.broadcast(cm), "pos")
-            .groupBy("vid", "cid")
-            .agg(F.sum(F.floor(term * term * F.lit(1e12) + F.lit(0.5))).alias("dist"))
-        )
-        w = Window.partitionBy("vid").orderBy("dist", "cid")
         members = (
-            dists.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
+            _nearest(_sq_dists(_exploded(base), cm, ["vid"]), ["vid"])
             .select("vid", F.col("cid").alias("cell"))
             .join(base, "vid")
             .select(

@@ -1,14 +1,28 @@
-"""Vector similarity search (SURVEY.md §2.11 X3, §2.3 J10).
+"""Vector similarity search and embedding statistics (SURVEY.md §2.11 X3,
+§2.3 J10).
 
-Three tiers, same output contract (query_id, vec_id, sim):
-- ``brute_force_topk``  — exact, O(probes × corpus); correctness baseline.
-- ``ivf_topk``          — inverted-file: assign corpus to centroids, probe
-  only the nearest ``nprobe`` cells; the 100 TB path.
-- ``lsh_topk``          — random-hyperplane LSH bucketing (cosine).
+Top-k search, one output contract (query_id, vec_id, sim):
+- ``brute_force_topk`` — exact, O(probes × corpus); correctness baseline.
+- ``ivf_topk`` / ``lsh_topk`` — the fast approximate tiers: inverted-file
+  routing by an Arrow-matmul model, random-hyperplane LSH buckets; the
+  persisted IVF index (``ivf_build_index``/``ivf_search_index``).
+- The exact family, every step replayable by a DuckDB oracle:
+  ``kmeans_exact``, ``ivf_topk_exact``, product quantization
+  (``pq_model_exact``, ``pq_topk_exact``) and the persisted IVF and PQ
+  indexes built, appended, compacted and searched from disk
+  (``ivf_*_index_exact``, ``pq_*_index``).
 
-Vector scoring is higher-order functions (JVM-side); the IVF/LSH index-
-build steps use Arrow-vectorized pandas UDFs (numpy matmul) where the
-expression form would re-evaluate per element — see each docstring.
+The exact family applies ONE distance rule, written once: a vector's
+squared L2 distance to a centroid is the sum of its 12dp fixed-point
+squared terms (:func:`_sq_dists`), and a vector's nearest centroids are
+picked by (dist, cid) (:func:`_nearest`).
+
+Also here: embedding statistics (dimension covariance, JL projection,
+standardization, uint8 quantization, norm outliers) and embedding
+near-duplicate pairs. Vector scoring is higher-order functions
+(JVM-side); the fast tiers' index builds use Arrow-vectorized pandas UDFs
+(numpy matmul) where the expression form would re-evaluate per element —
+see each docstring.
 """
 
 from __future__ import annotations
@@ -68,6 +82,47 @@ def _exploded(base: DataFrame) -> DataFrame:
     return base.select(
         "vid", F.posexplode("__vec").alias("pos0", "v")
     ).select("vid", (F.col("pos0") + 1).alias("pos"), "v")
+
+
+def _sq_dists(
+    ex: DataFrame, cents: DataFrame, key: list[str], on: str | list[str] = "pos"
+) -> DataFrame:
+    """The exact family's distance: (*key, cid, dist) for every long-form
+    vector ``ex`` (*key, *on, v) against every long-form centroid
+    ``cents`` (cid, *on, c), joined on ``on`` (pos; subspace and pos for
+    PQ).
+
+    Determinism discipline, term by term: the squared-distance TERMS
+    (v-c)^2 are single IEEE double ops identical in any engine; each term
+    is quantized to 12dp fixed point as ``floor(t*1e12 + 0.5)`` (the same
+    half-up rounding a DECIMAL(38,12) cast performs on the non-negative
+    squares, but the result is a BIGINT); and the per-(vector, centroid)
+    SUM is exact integer addition — reduction order can't flip an
+    argmin, and the aggregate stays on the long-backed codegen fast path
+    instead of boxed BigDecimal (measured ~5x on the sf0.1 dist pass;
+    overflow would need a squared L2 distance over ~9.2e6 per pair,
+    orders of magnitude past any normalized-embedding regime). Every
+    oracle replays it as ``sum(CAST(floor((v - c) * (v - c) * 1e12 +
+    0.5) AS BIGINT))``.
+
+    Shape: the centroid relation is BROADCAST (k×dim rows, tiny at any
+    corpus size), so ``ex``'s partitioning carries through the join, and
+    over a _keyed_corpus the per-(vector, centroid) aggregate runs
+    without an exchange."""
+    term = F.col("v") - F.col("c")
+    return (
+        ex.join(F.broadcast(cents), on)
+        .groupBy(*key, "cid")
+        .agg(F.sum(F.floor(term * term * F.lit(1e12) + F.lit(0.5))).alias("dist"))
+    )
+
+
+def _nearest(dists: DataFrame, key: list[str], n: int = 1) -> DataFrame:
+    """Each ``key``'s ``n`` nearest rows of a :func:`_sq_dists`
+    relation, ranked by (dist, cid): an exact distance tie goes to the
+    lower centroid id, in every engine."""
+    w = Window.partitionBy(*key).orderBy("dist", "cid")
+    return dists.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= n)
 
 
 def topk_per_query(scored: DataFrame, k: int) -> DataFrame:
@@ -691,19 +746,10 @@ def kmeans_exact(
     clustering, where kmeans_centroids above is the fast rows-only
     model-building twin.
 
-    Determinism discipline, term by term: init = the k lowest-id vectors
-    (cid by id order); squared-distance TERMS (v-c)^2 are single IEEE
-    double ops identical in any engine, each term is quantized to 12dp
-    fixed point as ``floor(t*1e12 + 0.5)`` (the same half-up rounding a
-    DECIMAL(38,12) cast performs on the non-negative squares, but the
-    result is a BIGINT), and the per-(vector, centroid) SUM is exact
-    integer addition — reduction order can't flip an argmin, and the
-    aggregate stays on the long-backed codegen fast path instead of
-    boxed BigDecimal (measured ~5x on the sf0.1 dist pass; overflow
-    would need a squared L2 distance over ~9.2e6 per pair, orders of
-    magnitude past any normalized-embedding regime);
-    assignment breaks exact ties by centroid id; the centroid update
-    sums coordinates in DECIMAL(38,10) and performs ONE double division.
+    Determinism discipline, step by step: init = the k lowest-id vectors
+    (cid by id order); assignment is the family's one distance rule
+    (:func:`_sq_dists`, :func:`_nearest`); the centroid update sums
+    coordinates in DECIMAL(38,10) and performs ONE double division.
     The oracle twin unrolls the same ``iters`` rounds as chained CTEs.
 
     Scale shape: the corpus is projected to (vid, vec) and
@@ -738,18 +784,7 @@ def kmeans_exact(
     )
     updated = None
     for _ in range(iters):
-        term = F.col("v") - F.col("c")
-        dists = (
-            ex.join(F.broadcast(cents), "pos")
-            .groupBy("vid", "cid")
-            .agg(F.sum(F.floor(term * term * F.lit(1e12) + F.lit(0.5))).alias("dist"))
-        )
-        w = Window.partitionBy("vid").orderBy("dist", "cid")
-        assign = (
-            dists.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .select("vid", "cid")
-        )
+        assign = _nearest(_sq_dists(ex, cents, ["vid"]), ["vid"]).select("vid", "cid")
         updated = assign.join(ex, "vid").groupBy("cid", "pos").agg(
             (
                 F.sum(F.col("v").cast("decimal(38,10)")).cast("double")
@@ -779,10 +814,10 @@ def ivf_topk_exact(
 ) -> DataFrame:
     """ivf_topk's cross-engine EXACT twin: centroids from
     :func:`kmeans_exact` (decimal-summed Lloyd rounds, 6dp-floored
-    coordinates), corpus assignment and probe routing by the same
-    fixed-point 12dp squared-distance argmin with (dist, cid) tie-break —
-    every routing decision is partitioning-independent and replayable in
-    SQL, so the full seeded build-and-search pipeline sits under an
+    coordinates), corpus assignment and probe routing by the family's
+    distance rule (:func:`_sq_dists`, :func:`_nearest`) — every routing
+    decision is partitioning-independent and replayable in SQL, so the
+    full seeded build-and-search pipeline sits under an
     exact DuckDB oracle (chained-CTE Lloyd rounds + the same assignment
     and scoring CTEs). The Arrow-matmul :func:`ivf_topk` stays the
     throughput default. Probes must be drawn from the corpus (routing
@@ -799,17 +834,9 @@ def ivf_topk_exact(
     # ReuseExchange serves the assignment pass and the vector back-join
     # from the one corpus materialization (guide §2.4/§6)
     base = _keyed_corpus(corpus, id_col, vec_col)
-    ex = _exploded(base)
-    term = F.col("v") - F.col("c")
-    dists = (
-        ex.join(F.broadcast(cm), "pos")
-        .groupBy("vid", "cid")
-        .agg(F.sum(F.floor(term * term * F.lit(1e12) + F.lit(0.5))).alias("dist"))
-    )
-    w = Window.partitionBy("vid").orderBy("dist", "cid")
+    dists = _sq_dists(_exploded(base), cm, ["vid"])
     assigned = (
-        dists.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
+        _nearest(dists, ["vid"])
         .select("vid", F.col("cid").alias("cell"))
         .join(base.select("vid", F.col("__vec").alias("__cvec")), "vid")
         .select(F.col("vid").alias("vec_id"), "cell", "__cvec")
@@ -825,12 +852,13 @@ def ivf_topk_exact(
     # (guide §2.3; per-vid ranking is unchanged by the join, so
     # rn <= nprobe selects exactly the same cells)
     routed = (
-        dists.join(
-            probe_ids.select(F.col("query_id").alias("vid"), "__pvec"), "vid"
-        )
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= nprobe)
-        .select(F.col("vid").alias("query_id"), F.col("cid").alias("cell"), "__pvec")
+        _nearest(
+            dists.join(
+                probe_ids.select(F.col("query_id").alias("vid"), "__pvec"), "vid"
+            ),
+            ["vid"],
+            nprobe,
+        ).select(F.col("vid").alias("query_id"), F.col("cid").alias("cell"), "__pvec")
     )
     scored = (
         assigned.join(F.broadcast(routed), "cell")
@@ -1316,11 +1344,10 @@ def pq_model_exact(
     ``m`` contiguous subspaces and learn an independent ``k``-centroid
     codebook per subspace with the :func:`kmeans_exact` recurrence
     (fixed-point Lloyd rounds, 6dp-floored coordinates) run under a
-    subspace key, then code each vector as its
-    per-subspace nearest centroid under the same fixed-point 12dp
-    squared-distance argmin with (dist, cid) tie-break — so the whole
-    model, codes included, is bit-identical across engines and replayable
-    as chained SQL CTEs.
+    subspace key, then code each vector as its per-subspace nearest
+    centroid under the family's distance rule — so the whole model,
+    codes included, is bit-identical across engines and replayable as
+    chained SQL CTEs.
 
     Vectors whose length is not exactly m x sub_dim are dropped (the
     fixed-dimensionality contract of the embedding family; mirror the
@@ -1377,21 +1404,11 @@ def pq_model_exact(
         "pos",
         F.col("v").alias("c"),
     )
-    term = F.col("v") - F.col("c")
+    key, on = ["vec_id", "subspace"], ["subspace", "pos"]
     for _ in range(iters):
-        dists = (
-            sub_ex.join(F.broadcast(cents), ["subspace", "pos"])
-            .groupBy("vec_id", "subspace", "cid")
-            .agg(F.sum(F.floor(term * term * F.lit(1e12) + F.lit(0.5))).alias("__dist"))
-        )
-        w = Window.partitionBy("vec_id", "subspace").orderBy("__dist", "cid")
-        assign = (
-            dists.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .select("vec_id", "subspace", "cid")
-        )
+        assign = _nearest(_sq_dists(sub_ex, cents, key, on), key).select(*key, "cid")
         cents = (
-            assign.join(sub_ex, ["vec_id", "subspace"])
+            assign.join(sub_ex, key)
             .groupBy("subspace", "cid", "pos")
             .agg(
                 (
@@ -1406,16 +1423,8 @@ def pq_model_exact(
         "pos",
         (F.floor(F.col("c") * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)).alias("c"),
     )
-    dists = (
-        sub_ex.join(F.broadcast(cm), ["subspace", "pos"])
-        .groupBy("vec_id", "subspace", "cid")
-        .agg(F.sum(F.floor(term * term * F.lit(1e12) + F.lit(0.5))).alias("__dist"))
-    )
-    w = Window.partitionBy("vec_id", "subspace").orderBy("__dist", "cid")
-    codes = (
-        dists.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .select("vec_id", "subspace", F.col("cid").alias("code"))
+    codes = _nearest(_sq_dists(sub_ex, cm, key, on), key).select(
+        *key, F.col("cid").alias("code")
     )
     return codes, cm
 
@@ -1440,10 +1449,9 @@ def pq_topk_exact(
     vectors are never re-read at query time, which is the entire point
     of PQ at scale (the codes are 8x-256x smaller than the vectors and
     the distance table is O(probes x m x k), broadcastable at any corpus
-    size). Every distance is a fixed-point 12dp bigint sum of mirrored double
-    terms, so ranking (adc ASC, vec_id ASC) is partitioning-independent
-    and the whole build-code-search lifecycle carries an exact SQL
-    oracle. Self-matches are excluded; the returned ``adc`` is the 6dp
+    size). Every table entry is a :func:`_sq_dists` distance, so ranking
+    (adc ASC, vec_id ASC) is partitioning-independent and the whole
+    build-code-search lifecycle carries an exact SQL oracle. Self-matches are excluded; the returned ``adc`` is the 6dp
     floor-rounded double of the exact decimal.
 
     Scale: codebooks/table broadcast; the scored relation is m rows per
@@ -1478,24 +1486,20 @@ def _pq_adc_search(
         _as_double_array(F.col(vec_col)).alias("__pvec"),
     ).filter(F.size("__pvec") == m * sub_dim)
     pex = p.select(
-        "query_id", F.posexplode("__pvec").alias("pos0", "__v")
+        "query_id", F.posexplode("__pvec").alias("pos0", "v")
     ).select(
         "query_id",
         F.expr(f"pos0 div {sub_dim}").cast("int").alias("subspace"),
         (F.col("pos0") % sub_dim + 1).alias("pos"),
-        "__v",
+        "v",
     )
-    term = F.col("__v") - F.col("c")
-    dtab = (
-        pex.join(F.broadcast(cents), ["subspace", "pos"])
-        .groupBy("query_id", "subspace", "cid")
-        .agg(F.sum(F.floor(term * term * F.lit(1e12) + F.lit(0.5))).alias("__d"))
-        .select("query_id", "subspace", F.col("cid").alias("code"), "__d")
-    )
+    dtab = _sq_dists(
+        pex, cents, ["query_id", "subspace"], ["subspace", "pos"]
+    ).select("query_id", "subspace", F.col("cid").alias("code"), "dist")
     scored = (
         codes.join(F.broadcast(dtab), ["subspace", "code"])
         .groupBy("query_id", "vec_id")
-        .agg(F.sum("__d").alias("__adc"))
+        .agg(F.sum("dist").alias("__adc"))
         .filter(F.col("vec_id") != F.col("query_id"))
     )
     top = topk_per_query(
@@ -1569,7 +1573,7 @@ def pq_append_index(
     """Append a NEW vector batch to a persisted PQ index under its FROZEN
     codebooks — the compressed-domain twin of ivf_append_index_exact:
     each new vector's subspace slices are coded by the same
-    fixed-point 12dp argmin the build used (deterministic: an appended
+    distance rule the build used (deterministic: an appended
     copy of an indexed vector gets byte-identical codes, test-pinned),
     and only the m-int code rows are appended — old vectors and old
     codes are never read. Model retraining stays a rebuild-cadence
@@ -1586,7 +1590,7 @@ def pq_append_index(
     )
     ex = new_corpus.select(
         F.col(id_col).alias("vec_id"),
-        F.posexplode(_as_double_array(F.col(vec_col))).alias("gpos0", "__v"),
+        F.posexplode(_as_double_array(F.col(vec_col))).alias("gpos0", "v"),
     ).select(
         "vec_id",
         # integer div, matching pq_model_exact/_pq_adc_search exactly
@@ -1594,19 +1598,11 @@ def pq_append_index(
         # the byte-identical-codes determinism discipline)
         F.expr(f"gpos0 div {sub_dim}").cast("int").alias("subspace"),
         (F.col("gpos0") % F.lit(sub_dim) + 1).alias("pos"),
-        "__v",
+        "v",
     )
-    term = F.col("__v") - F.col("c")
-    dists = (
-        ex.join(F.broadcast(cents), ["subspace", "pos"])
-        .groupBy("vec_id", "subspace", "cid")
-        .agg(F.sum(F.floor(term * term * F.lit(1e12) + F.lit(0.5))).alias("dist"))
-    )
-    w = Window.partitionBy("vec_id", "subspace").orderBy("dist", "cid")
-    codes = (
-        dists.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "subspace", F.col("cid").alias("code"))
+    key = ["vec_id", "subspace"]
+    codes = _nearest(_sq_dists(ex, cents, key, ["subspace", "pos"]), key).select(
+        *key, F.col("cid").alias("code")
     )
     wide = (
         codes.groupBy("vec_id")
@@ -1665,7 +1661,7 @@ def ivf_build_index_exact(
     """Persist the EXACT-gated IVF index: centroids from kmeans_exact
     (decimal-summed Lloyd rounds, 6dp-floored coordinates — fully
     SQL-replayable, unlike ivf_build_index's seeded Arrow model) and the
-    corpus PARTITIONED by its decimal-argmin cell assignment. Layout:
+    corpus PARTITIONED by its nearest-centroid cell. Layout:
 
     - ``path/centroids``: long-form (cid, pos, c) — the 6dp model,
       k*dim rows, one file.
@@ -1686,17 +1682,8 @@ def ivf_build_index_exact(
     # pass and the vector back-join reuse kmeans_exact's one corpus
     # scan + shuffle instead of re-scanning per reference
     base = _keyed_corpus(corpus, id_col, vec_col)
-    ex = _exploded(base)
-    term = F.col("v") - F.col("c")
-    dists = (
-        ex.join(F.broadcast(cm), "pos")
-        .groupBy("vid", "cid")
-        .agg(F.sum(F.floor(term * term * F.lit(1e12) + F.lit(0.5))).alias("dist"))
-    )
-    w = Window.partitionBy("vid").orderBy("dist", "cid")
     assigned = (
-        dists.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
+        _nearest(_sq_dists(_exploded(base), cm, ["vid"]), ["vid"])
         .select("vid", F.col("cid").alias("cell"))
         .join(base, "vid")
         .select(
@@ -1725,7 +1712,7 @@ def ivf_append_index_exact(
     """Append a NEW vector batch to a persisted exact IVF index under its
     FROZEN centroid model — incremental ANN ingestion (crawl N+1): the
     stored 6dp centroids route the new vectors by the same
-    fixed-point 12dp argmin that built the index, and the rows land in
+    distance rule that built the index, and the rows land in
     their cells' partition directories via a partitioned append — old
     vectors are never read, let alone re-clustered. Standard IVF
     practice: the model is retrained on a cadence (rebuild), not per
@@ -1737,26 +1724,16 @@ def ivf_append_index_exact(
     idempotence job, as for minhash_sig_index)."""
     cm = spark.read.parquet(path.rstrip("/") + "/centroids")
     c = new_corpus.select(
-        F.col(id_col).alias("vec_id"),
-        _as_double_array(F.col(vec_col)).alias("embedding"),
+        F.col(id_col).alias("vid"),
+        _as_double_array(F.col(vec_col)).alias("__vec"),
     )
-    ex = c.select(
-        F.col("vec_id").alias("vid"),
-        F.posexplode("embedding").alias("pos0", "v"),
-    ).select("vid", (F.col("pos0") + 1).alias("pos"), "v")
-    term = F.col("v") - F.col("c")
-    dists = (
-        ex.join(F.broadcast(cm), "pos")
-        .groupBy("vid", "cid")
-        .agg(F.sum(F.floor(term * term * F.lit(1e12) + F.lit(0.5))).alias("dist"))
-    )
-    w = Window.partitionBy("vid").orderBy("dist", "cid")
     assigned = (
-        dists.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
+        _nearest(_sq_dists(_exploded(c), cm, ["vid"]), ["vid"])
         .select("vid", F.col("cid").alias("cell"))
-        .join(c, F.col("vid") == F.col("vec_id"))
-        .select("vec_id", "embedding", "cell")
+        .join(c, "vid")
+        .select(
+            F.col("vid").alias("vec_id"), F.col("__vec").alias("embedding"), "cell"
+        )
     )
     # one file per touched cell PER APPEND (delta-sized shuffle);
     # cross-append accumulation is ivf_compact_index's job
@@ -1864,11 +1841,11 @@ def ivf_search_index_exact(
     probe_id_col: str = "query_id",
 ) -> DataFrame:
     """Search a persisted exact IVF index (ivf_build_index_exact) from
-    disk: route each probe by the same fixed-point 12dp squared-distance
-    argmin over the loaded 6dp centroid relation, collect the routed
-    cell ids (<= probes x nprobe rows — the kmeans k-row-collect shape)
-    as LITERAL partition filters, scan only those inverted lists, and
-    score in-cell cosine with the (sim DESC, vec_id) top-k. Every value
+    disk: route each probe by the family's distance rule over the loaded
+    6dp centroid relation, collect the routed cell ids (<= probes x
+    nprobe rows — the kmeans k-row-collect shape) as LITERAL partition
+    filters, scan only those inverted lists, and score in-cell cosine
+    with the (sim DESC, vec_id) top-k. Every value
     matches ivf_topk_exact bit for bit, so the whole persisted lifecycle
     sits under the _ivf_exact_oracle CTE chain."""
     from ..io import recover
@@ -1879,20 +1856,11 @@ def ivf_search_index_exact(
         F.col(probe_id_col).alias("query_id"),
         _as_double_array(F.col(vec_col)).alias("__pvec"),
     )
-    pxp = pex.select(
-        "query_id", F.posexplode("__pvec").alias("pos0", "v")
-    ).select("query_id", (F.col("pos0") + 1).alias("pos"), "v")
-    term = F.col("v") - F.col("c")
-    pdists = (
-        pxp.join(F.broadcast(cm), "pos")
-        .groupBy("query_id", "cid")
-        .agg(F.sum(F.floor(term * term * F.lit(1e12) + F.lit(0.5))).alias("dist"))
+    pxp = _exploded(
+        pex.select(F.col("query_id").alias("vid"), F.col("__pvec").alias("__vec"))
     )
-    w = Window.partitionBy("query_id").orderBy("dist", "cid")
-    routed = (
-        pdists.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= nprobe)
-        .select("query_id", F.col("cid").alias("cell"))
+    routed = _nearest(_sq_dists(pxp, cm, ["vid"]), ["vid"], nprobe).select(
+        F.col("vid").alias("query_id"), F.col("cid").alias("cell")
     )
     cell_ids = sorted({r["cell"] for r in routed.select("cell").distinct().collect()})
     recover(spark, base + "/cells")  # finish a compaction a crash tore

@@ -120,7 +120,6 @@ def run_ingest(
     on_drift: str = "warn",
     quarantine_dir: str | None = None,
     compact_after: bool = False,
-    compact_target_mb: int = 128,
 ) -> RunResult:
     """One pipeline run. ``source`` is a zip path or http(s) URL; JSON
     members land in ``landing_dir``, flattened rows append to ``out_dir``.
@@ -284,8 +283,8 @@ def run_ingest(
     _commit(spark, out_dir, outputs)
     if compact_after:
         _phase(spark, "write")
-        compact_table(spark, out_dir, target_file_mb=compact_target_mb)
+        compact_table(spark, out_dir)
         _phase(spark, "ledger")
-        compact_table(spark, ledger_path, target_file_mb=compact_target_mb)
+        compact_table(spark, ledger_path)
 
     return RunResult(len(paths), rows_written, drift_msg, skipped=False, quarantined=n_quarantined)

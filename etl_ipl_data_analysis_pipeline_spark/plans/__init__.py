@@ -97,25 +97,51 @@ def normalize_nanos_ts(df: DataFrame) -> DataFrame:
 # EXPLICITLY so the queries whose evidence is most valuable come first.
 # Current rotation, so the first 50 entries sample the code that changed
 # most recently:
-# (0) the 12 snapshot-family queries over the one file layer (the shared
+# (0) the 16 exact vector family queries over the one distance rule
+# (similarity._sq_dists and _nearest: k-means, exact IVF in memory and
+# persisted, PQ, semantic dedup's exact routing, cluster terms, the PQ
+# recall truth leg);
+# (1) the 3 queries over io functions whose unused options became
+# constants (fetch_url, write_bucketed, write_parquet);
+# (2) the 12 snapshot-family queries over the one file layer (the shared
 # small-file read/write, fan-out, walk and move steps under io.py and
 # snapshots.py; snapshot_scan as the one pruned read, with
 # snapshot_pruned_read's data-derived file layout; the one compaction
 # body; the rename log replayed once; CDC's key-range filter);
-# (1) the 10 queries over the round-14 shared-subtree pins and the
+# (3) the 7 other queries over the round-14 shared-subtree pins and the
 # operators cut down since (nb_classify without its vocab fence, the one
-# BM25 table path, semantic_dedup without its hierarchical engine, the
-# n-gram/LM and covariance pins, the exact vector family);
-# (2) the remaining round-12 snapshot queries (change-feed incremental
+# BM25 table path, the n-gram/LM and covariance pins);
+# (4) the remaining round-12 snapshot queries (change-feed incremental
 # cross-table mirror; type-widening schema evolution; CDC tombstone
 # deletes);
-# (3) the 9-query evidence tail at r11 positions 51-59 — the ONLY
-# queries whose latest driver evidence predated round 6;
-# (4) the r6-evidence cohort, alphabetical, minus the queries moved up;
-# its first entries close the window of 50.
+# (5) the 9-query evidence tail at r11 positions 51-59 — the ONLY
+# queries whose latest driver evidence predated round 6; it closes the
+# window of 50;
+# (6) the r6-evidence cohort, alphabetical, minus the queries moved up.
 # scripts/evidence_map.py regenerates the per-query history
 # (EVIDENCE.md) justifying this ordering.
 _DRIVER_WINDOW_PRIORITY: tuple[str, ...] = (
+    # -- the exact vector family over the one distance rule --
+    "hybrid_rrf_topk",
+    "topk_cosine_ivf",
+    "ivf_recall_audit",
+    "topk_ivf_persisted_exact",
+    "topk_ivf_appended_planted",
+    "topk_ivf_multi_appended_planted",
+    "topk_ivf_appended_compacted_exact",
+    "topk_ivf_sharded_planted",
+    "kmeans_clusters_exact",
+    "dedup_semantic_planted",
+    "cluster_top_terms",
+    "topk_pq_exact",
+    "topk_pq_planted",
+    "topk_pq_persisted_planted",
+    "hybrid_rrf_persisted",
+    "pq_recall_audit",
+    # -- io functions whose unused options became constants --
+    "zip_ingest_members",
+    "catalog_scan_bucketed",
+    "parquet_skewed_write_roundtrip",
     # -- the snapshot family over the one file layer --
     "snapshot_pruned_read",
     "snapshot_partitioned_roundtrip",
@@ -131,9 +157,6 @@ _DRIVER_WINDOW_PRIORITY: tuple[str, ...] = (
     "stream_snapshot_ingest",
     # -- round-14 pins and the operators cut down since --
     "nb_lang_confusion",
-    "hybrid_rrf_topk",
-    "topk_cosine_ivf",
-    "dedup_semantic_planted",
     "lm_surprisal_scores",
     "gram_novelty_scores",
     "lm_backoff_heldout",
@@ -172,7 +195,6 @@ _DRIVER_WINDOW_PRIORITY: tuple[str, ...] = (
     "embedding_standardize_head",
     "flatten_nested",
     "flatten_reference_mode",
-    "kmeans_clusters_exact",
     "kmv_user_overlap",
     "ledger_latest_state",
     "ledger_mark_stage",

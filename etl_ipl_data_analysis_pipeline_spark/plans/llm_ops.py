@@ -3835,17 +3835,8 @@ def cluster_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     # builds internally, so ReuseExchange serves it from kmeans' one
     # corpus scan + shuffle instead of re-scanning the embeddings
     ex = similarity._exploded(similarity._keyed_corpus(e, "vec_id", "embedding"))
-    term = F.col("v") - F.col("c")
-    dists = (
-        ex.join(F.broadcast(cm), "pos")
-        .groupBy("vid", "cid")
-        .agg(F.sum(F.floor(term * term * F.lit(1e12) + F.lit(0.5))).alias("__dist"))
-    )
-    w = Window.partitionBy("vid").orderBy("__dist", "cid")
-    asg = (
-        dists.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .select(F.col("vid").alias("vec_id"), "cid")
+    asg = similarity._nearest(similarity._sq_dists(ex, cm, ["vid"]), ["vid"]).select(
+        F.col("vid").alias("vec_id"), "cid"
     )
     d = load(spark, sf_dir, "documents").select("doc_id", "text")
     toks = (
@@ -5227,22 +5218,20 @@ def pq_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("query_id"), "embedding"
     )
     approx = similarity.pq_topk_exact(e, probes, k=5)
+    # the probes stand in as the broadcast centroids (cid = query_id) and
+    # the corpus streams; swapping the ids back lets the (dist, cid) pick
+    # break ties by vec_id
     pex = probes.select(
-        "query_id", F.posexplode("embedding").alias("pos", "pv")
+        F.col("query_id").alias("cid"), F.posexplode("embedding").alias("pos", "c")
     )
-    cex = e.select("vec_id", F.posexplode("embedding").alias("pos", "cv"))
-    term = F.col("pv") - F.col("cv")
+    cex = e.select("vec_id", F.posexplode("embedding").alias("pos", "v"))
     dists = (
-        pex.join(cex, "pos")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .groupBy("query_id", "vec_id")
-        .agg(F.sum(F.floor(term * term * F.lit(1e12) + F.lit(0.5))).alias("dist"))
+        similarity._sq_dists(cex, pex, ["vec_id"])
+        .select(F.col("cid").alias("query_id"), F.col("vec_id").alias("cid"), "dist")
+        .filter(F.col("cid") != F.col("query_id"))
     )
-    w = Window.partitionBy("query_id").orderBy("dist", "vec_id")
-    truth = (
-        dists.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= 5)
-        .select("query_id", "vec_id")
+    truth = similarity._nearest(dists, ["query_id"], 5).select(
+        "query_id", F.col("cid").alias("vec_id")
     )
     hits = truth.join(
         approx.select("query_id", "vec_id").withColumn("__hit", F.lit(1)),

@@ -1506,11 +1506,10 @@ def snapshot_optimize(
     cluster_by: list[str],
     cluster_method: str = "range",
     cluster_tiebreak: str | None = None,
-    target_mb: int = 128,
     target_files: int | None = None,
 ) -> int:
     """RE-CLUSTER the latest version in place (the OPTIMIZE ZORDER
-    equivalent): rewrite its files ~target_mb-sized, range- or
+    equivalent): rewrite its files ~128 MB-sized, range- or
     z-order-clustered on ``cluster_by``, as a NEW 'replace' version —
     so footer min/max stats become tight and every downstream prune
     (snapshot_scan filters, merge locate probes, CDC winner reads)
@@ -1522,7 +1521,7 @@ def snapshot_optimize(
     a concurrent append rebases cleanly (its files ride the new
     manifest verbatim) while a concurrent rewrite conflicts."""
     return _rewrite_head(
-        spark, path, target_mb, target_files,
+        spark, path, 128, target_files,
         lambda cur, n: _cluster_df(
             cur, list(cluster_by), n, cluster_method, cluster_tiebreak
         ),
@@ -2027,9 +2026,7 @@ def snapshot_delete(spark: SparkSession, path: str, condition) -> int:
     )
 
 
-def snapshot_delete_keys(
-    keys: DataFrame, path: str, batch_id: int | None = None
-) -> int:
+def snapshot_delete_keys(keys: DataFrame, path: str) -> int:
     """MERGE-ON-READ equality delete: remove every row whose key columns
     (= ``keys``'s columns) match a row of ``keys`` — WITHOUT reading or
     rewriting ANY data file. The commit writes only the (small) key set
@@ -2124,10 +2121,7 @@ def snapshot_delete_keys(
             }
             for rel, size in staged.items()
         ]
-        return {
-            "deletes": (head.get("deletes") or []) + entries,
-            "batch_id": batch_id,
-        }
+        return {"deletes": (head.get("deletes") or []) + entries}
 
     return _publish(spark, base, "delete_keys", build, (head_version, head))
 
@@ -2479,10 +2473,7 @@ def snapshot_changes_by_version(
 
 
 def snapshot_row_count(
-    spark: SparkSession,
-    path: str,
-    version: int | None = None,
-    as_of_ts: float | None = None,
+    spark: SparkSession, path: str, version: int | None = None
 ) -> int:
     """COUNT(*) for a table version from the MANIFEST alone when
     possible: every commit's footer pass records each new file's row
@@ -2495,7 +2486,7 @@ def snapshot_row_count(
     file predates the map (legacy commits) or when equality-delete
     entries mask an unknown number of rows."""
     base = path.rstrip("/")
-    v = _resolve_version(spark, base, version, as_of_ts)
+    v = _resolve_version(spark, base, version, None)
     manifest = _read_manifest(spark, base, v)
     rows = manifest.get("rows") or {}
     if not manifest.get("deletes") and all(

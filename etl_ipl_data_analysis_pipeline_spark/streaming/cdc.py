@@ -75,8 +75,6 @@ def run_snapshot_cdc_stream(
     keys: list[str],
     order_cols: list[str],
     checkpoint: str | None = None,
-    compact_every: int | None = None,
-    expire_retain: int | None = None,
     delete_col: str | None = None,
 ) -> DataFrame:
     """CDC-apply INTO a versioned snapshot table: each micro-batch
@@ -96,8 +94,7 @@ def run_snapshot_cdc_stream(
     UNION the batch arg-max`` over the same total order, so a stale
     batch re-asserts the existing row rather than overwriting it —
     micro-batch-boundary independence is pinned in tests against the
-    one-shot arg-max. ``compact_every``/``expire_retain`` bound file and
-    version counts exactly as in run_snapshot_ingest_stream.
+    one-shot arg-max.
 
     ``delete_col`` (a boolean column on the stream) makes this a FULL
     CDC apply: an event whose marker is true is a DELETE op — if it
@@ -113,10 +110,8 @@ def run_snapshot_cdc_stream(
     from .. import snapshots as sn
 
     spark = stream_df.sparkSession
-    committed = 0
 
     def apply_batch(batch: DataFrame, batch_id: int) -> None:
-        nonlocal committed
         sess = batch.sparkSession
         last = sn.snapshot_latest_batch_id(sess, table_path)
         if last is not None and int(batch_id) <= last:
@@ -191,13 +186,6 @@ def run_snapshot_cdc_stream(
             sn.snapshot_commit(
                 first, table_path, "append", batch_id=int(batch_id)
             )
-        committed += 1
-        if compact_every and committed % compact_every == 0:
-            sn.snapshot_compact(sess, table_path)
-            if expire_retain:
-                sn.snapshot_expire(
-                    sess, table_path, keep_last=expire_retain, staging_grace_s=0
-                )
 
     drain(
         stream_df, apply_batch, checkpoint or table_path.rstrip("/") + "__checkpoint"

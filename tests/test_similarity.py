@@ -199,6 +199,40 @@ def test_kmeans_exact_tie_breaks_to_lower_cid(spark):
     assert out[(1, 1)] == (1, 2.0)
 
 
+# (1, y) vectors: the seeds are vec 0 (y=0, cid 0) and vec 1 (y=4, cid 1);
+# one Lloyd round, with vec 2 joining cid 0 at its tie, moves the
+# centroids to exactly y=1 and y=3, so vec 2 (y=2) stays equidistant.
+_TIE_ROWS = [
+    (0, [1.0, 0.0]), (1, [1.0, 4.0]), (2, [1.0, 2.0]),
+    (3, [1.0, 1.0]), (4, [1.0, 2.5]), (5, [1.0, 2.5]),
+]
+
+
+@pytest.mark.parametrize("site", ["ivf_assign", "ivf_persisted_route", "pq_code"])
+def test_exact_family_tie_goes_to_lower_cid(spark, tmp_path, site):
+    """Every exact-family site breaks an exact distance tie to the lower
+    centroid id: corpus assignment, nprobe routing from a persisted
+    index, and PQ coding."""
+    df = spark.createDataFrame(_TIE_ROWS, "vec_id long, embedding array<double>")
+
+    def probe(i):
+        return df.filter(F.col("vec_id") == i).withColumnRenamed("vec_id", "query_id")
+
+    if site == "ivf_assign":
+        # probe 3 searches cell 0 alone, which holds vec 2 only if the
+        # tie went to cid 0
+        out = similarity.ivf_topk_exact(df, probe(3), k=5, n_centroids=2, nprobe=1, iters=1)
+        assert {r.vec_id for r in out.collect()} == {0, 2}
+    elif site == "ivf_persisted_route":
+        idx = str(tmp_path / "ivf")
+        similarity.ivf_build_index_exact(df, idx, n_centroids=2, iters=1)
+        out = similarity.ivf_search_index_exact(spark, idx, probe(2), k=5, nprobe=1)
+        assert {r.vec_id for r in out.collect()} == {0, 3}  # cell 0 minus vec 2
+    else:
+        codes, _ = similarity.pq_model_exact(df, m=1, sub_dim=2, k=2, iters=1)
+        assert {r.vec_id: r.code for r in codes.collect()}[2] == 0
+
+
 def test_ivf_persisted_index_matches_in_memory(spark, sf_dir, tmp_path):
     """Build-to-parquet + search-from-disk must return the exact rows of
     the in-memory ivf_topk at the same params/seed (the model and
