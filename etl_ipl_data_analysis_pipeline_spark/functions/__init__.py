@@ -78,9 +78,10 @@ def normalized_text(text) -> Column:
     return F.trim(F.regexp_replace(F.lower(text), r"\s+", " "))
 
 
-def content_hash(text, bits: int = 256) -> Column:
-    """Stable content hash for exact dedup (SURVEY §2.8 F7 / §2.11 X1)."""
-    return F.sha2(normalized_text(text), bits)
+def content_hash(text) -> Column:
+    """Stable content hash for exact dedup (SURVEY §2.8 F7 / §2.11 X1):
+    SHA-256 of the normalized text."""
+    return F.sha2(normalized_text(text), 256)
 
 
 #: 2^31 - 1 (Mersenne prime) — the shared modulus of the portable
@@ -112,14 +113,14 @@ def portable_hash31(col, salt: str = "") -> Column:
     return F.pmod(portable_hash64(col, salt), F.lit(PORTABLE_MOD))
 
 
-def sort_key_int(col, default: int = 0) -> Column:
-    """SO2: integer sort key from a string column, non-numeric -> default
+def sort_key_int(col) -> Column:
+    """SO2: integer sort key from a string column, non-numeric -> 0
     (reference: compare_schema.py:66-70 casts version labels to int with a
     0 fallback so non-numeric names sort first deterministically)."""
     c = F.col(col) if isinstance(col, str) else col
     # try_cast: ANSI mode (Spark 4 default) makes a plain cast THROW on
     # malformed strings instead of yielding NULL.
-    return F.coalesce(c.try_cast("int"), F.lit(default))
+    return F.coalesce(c.try_cast("int"), F.lit(0))
 
 
 def stable_sum(col, digits: int = 2) -> Column:
@@ -136,15 +137,13 @@ def stable_sum(col, digits: int = 2) -> Column:
     return F.round(F.sum(c.cast("decimal(38,10)")).cast("double"), digits)
 
 
-def stable_avg(col, digits: int = 4) -> Column:
-    """Order-independent rounded mean of a double column (see stable_sum);
+def stable_avg(col) -> Column:
+    """Order-independent mean of a double column rounded to 4dp (see stable_sum);
     exact decimal sum divided by the non-null count in double — one
     deterministic division. Oracle twin: round(CAST(sum(CAST(x AS
-    DECIMAL(38,10))) AS DOUBLE) / count(x), d)."""
+    DECIMAL(38,10))) AS DOUBLE) / count(x), 4)."""
     c = F.col(col) if isinstance(col, str) else col
-    return F.round(
-        F.sum(c.cast("decimal(38,10)")).cast("double") / F.count(c), digits
-    )
+    return F.round(F.sum(c.cast("decimal(38,10)")).cast("double") / F.count(c), 4)
 
 
 def stable_avg_long(col, digits: int = 4) -> Column:

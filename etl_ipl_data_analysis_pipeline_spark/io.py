@@ -492,9 +492,9 @@ def expand_zip_distributed(spark: SparkSession, zips_path: str, suffix: str = ".
     )
 
 
-def load_star(spark: SparkSession, sf_dir: str, register_views: bool = True):
-    """Load the driver's star-schema fixtures; optionally register temp views
-    so the SQL surface (spark.sql) works over the same names as DuckDB."""
+def load_star(spark: SparkSession, sf_dir: str):
+    """Load the star-schema fixtures and register them as temp views, so
+    the SQL surface (spark.sql) works over the same names as DuckDB."""
     from .plans import ensure_read_confs, normalize_nanos_ts
 
     ensure_read_confs(spark)
@@ -504,21 +504,15 @@ def load_star(spark: SparkSession, sf_dir: str, register_views: bool = True):
         if os.path.exists(path):
             df = normalize_nanos_ts(spark.read.parquet(path))
             dfs[name] = df
-            if register_views:
-                df.createOrReplaceTempView(name)
+            df.createOrReplaceTempView(name)
     return dfs
 
 
-def retry(
-    fn,
-    attempts: int = 5,
-    base_delay: float = 1.0,
-    exceptions: tuple[type[BaseException], ...] = (Exception,),
-    sleep=None,
-):
-    """L4 (final_DAG.py:216-230): call ``fn()`` with exponential backoff —
-    attempt n sleeps base_delay * 2**n before retrying; the last failure
-    re-raises. ``sleep`` is injectable for tests.
+def retry(fn, sleep=None):
+    """L4 (final_DAG.py:216-230): call ``fn()`` up to 5 times with
+    exponential backoff — after failed attempt n (from 0) it sleeps 2**n
+    seconds; the fifth failure re-raises. ``sleep`` is injectable for
+    tests.
 
     Driver-side orchestration only (fetches, warehouse loads, flaky
     metastore calls) — never wrap per-row work in this; executor-side
@@ -527,27 +521,29 @@ def retry(
 
     sleep = sleep or _time.sleep
     last: BaseException | None = None
-    for attempt in range(attempts):
+    for attempt in range(5):
         try:
             return fn()
-        except exceptions as e:  # noqa: PERF203
+        except Exception as e:  # noqa: PERF203
             last = e
-            if attempt < attempts - 1:
-                sleep(base_delay * (2**attempt))
+            if attempt < 4:
+                sleep(2.0**attempt)
     assert last is not None
     raise last
+
+
+# compact_table rewrites the files smaller than this share of its target size
+COMPACT_SMALL_RATIO = 0.5
 
 
 def compact_table(
     spark: SparkSession,
     path: str,
     target_file_mb: int = 128,
-    small_ratio: float = 0.5,
-    sort_by: "Iterable[str] | None" = None,
 ) -> dict:
     """In-place incremental small-file compaction (the OPTIMIZE shape)
     for a parquet table, partitioned or not: every table directory's
-    files SMALLER than ``small_ratio * target_file_mb`` are read once,
+    files SMALLER than ``COMPACT_SMALL_RATIO * target_file_mb`` are read once,
     rewritten as ~``target_file_mb`` files, and landed by one
     manifest commit; files already at scan size are NEVER touched. Cost
     therefore scales with the accumulated small-file (delta) bytes, not
@@ -569,16 +565,6 @@ def compact_table(
     output task per directory capped by ``maxRecordsPerFile`` sized
     from the measured small-file bytes-per-row.
 
-    ``sort_by``: sort the rewritten rows on these columns so the merged
-    files carry tight parquet footer min/max ranges on them. A
-    partitioned table sorts within each directory's rewrite task (no
-    extra shuffle); an unpartitioned one range-partitions the delta on
-    ``sort_by`` before the sort, which costs one more job to sample the
-    range bounds. A clustered table (zorder_write's per-file bounds, a
-    time-ordered ledger) loses its clustering if slivers are
-    bin-packed unsorted; with sort_by the compaction preserves the
-    skip-index property the layout paid for.
-
     Driver-side cost: the file listing, manifest, and commit loop are
     O(small files) FS calls on the driver (the data move itself is the
     cluster's). Compaction run on a cadence bounds that count — the
@@ -591,7 +577,7 @@ def compact_table(
     recover(spark, path)
     files = _list_data_files(spark, path)
     files_before = len(files)
-    threshold = int(small_ratio * target_file_mb * 1024 * 1024)
+    threshold = int(COMPACT_SMALL_RATIO * target_file_mb * 1024 * 1024)
     by_dir: dict[str, list[tuple[str, int]]] = {}
     for rel_dir, full, size in files:
         if size < threshold:
@@ -638,30 +624,18 @@ def compact_table(
         1, int(target_file_mb * 1024 * 1024 * n_rows / max(1, small_bytes))
     )
     if part_cols:
-        rep = df.repartition(*[F.col(c) for c in part_cols])
-        if sort_by:
-            rep = rep.sortWithinPartitions(*sort_by)
         (
-            rep.write.mode("overwrite")
+            df.repartition(*[F.col(c) for c in part_cols])
+            .write.mode("overwrite")
             .option("maxRecordsPerFile", rows_per_file)
             .partitionBy(*part_cols)
             .parquet(staging)
         )
     else:
         # unpartitioned: the small-file read yields ~1 task per input
-        # file, so bin to the byte-derived target count. With sort_by
-        # the bins must be RANGE partitions — a round-robin repartition
-        # gives every task a uniform sample of the key domain, so each
-        # sorted file would still span the whole domain and the footer
-        # min/max property would be lost the moment the delta needs
-        # more than one file.
+        # file, so bin to the byte-derived target count
         n_target = max(1, -(-small_bytes // (target_file_mb * 1024 * 1024)))
-        if sort_by:
-            rep = df.repartitionByRange(n_target, *sort_by)
-            rep = rep.sortWithinPartitions(*sort_by)
-        else:
-            rep = df.repartition(n_target)
-        rep.write.mode("overwrite").option(
+        df.repartition(n_target).write.mode("overwrite").option(
             "maxRecordsPerFile", rows_per_file
         ).parquet(staging)
     _commit(spark, path, [(staging, path)], small_paths)

@@ -17,7 +17,7 @@ already-pruned remnant.
 Determinism is the whole design: positions are md5-derived (first 15
 hex chars = 60 bits, exactly double-representable — the same domain
 trick as operators/sketches.py KMV), so the filter — false positives
-included — is a pure function of (keys, num_bits, num_hashes, salt)
+included — is a pure function of (keys, num_bits, num_hashes)
 and any engine reproduces it bit-for-bit. The DuckDB oracle twins
 mirror the position arithmetic as a distinct-position set membership:
 packing positions into words is storage, not semantics, so the two
@@ -43,15 +43,14 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
 
-def bloom_position(key: Column, i: int, num_bits: int, salt: str = "") -> Column:
-    """Position of hash ``i`` for ``key``: md5(key ':' i [':' salt]) read
+def bloom_position(key: Column, i: int, num_bits: int) -> Column:
+    """Position of hash ``i`` for ``key``: md5(key ':' i) read
     as a 60-bit int, mod num_bits. CAST-to-string rendering of integer
     keys is identical across engines, so the oracle reproduces this
     exactly with ('0x' || substr(md5(...), 1, 15))::BIGINT % num_bits."""
-    parts = [key.cast("string"), F.lit(f":{i}")]
-    if salt:
-        parts.append(F.lit(f":{salt}"))
-    h = F.conv(F.substring(F.md5(F.concat(*parts)), 1, 15), 16, 10)
+    h = F.conv(
+        F.substring(F.md5(F.concat(key.cast("string"), F.lit(f":{i}"))), 1, 15), 16, 10
+    )
     return h.cast("long") % num_bits
 
 
@@ -60,7 +59,6 @@ def bloom_build(
     key_col: str,
     num_bits: int = 4096,
     num_hashes: int = 3,
-    salt: str = "",
 ) -> DataFrame:
     """Build the word table ``(word_idx long, word long)`` from the keys
     of ``df``: every key sets ``num_hashes`` bits; bits pack into 64-bit
@@ -76,7 +74,7 @@ def bloom_build(
     positions = df.select(
         F.explode(
             F.array(
-                *[bloom_position(key, i, num_bits, salt) for i in range(num_hashes)]
+                *[bloom_position(key, i, num_bits) for i in range(num_hashes)]
             )
         ).alias("__pos")
     )
@@ -98,7 +96,6 @@ def bloom_probe(
     bloom: DataFrame,
     num_bits: int = 4096,
     num_hashes: int = 3,
-    salt: str = "",
     out_col: str = "bloom_pass",
 ) -> DataFrame:
     """Append boolean ``out_col``: True iff every one of the key's
@@ -113,7 +110,7 @@ def bloom_probe(
     out = df
     tests = []
     for i in range(num_hashes):
-        pos = bloom_position(key, i, num_bits, salt)
+        pos = bloom_position(key, i, num_bits)
         # compute once per hash: position, then word lookup via broadcast join
         out = out.withColumn(f"__bp{i}", pos)
         lut = bloom.select(

@@ -88,7 +88,6 @@ def weighted_group_split(
     group_col: str,
     weight_col: str,
     splits: Sequence[tuple[str, float]],
-    salt: str = "",
     out_col: str = "split",
     num_ranges: int = 0,
 ) -> DataFrame:
@@ -99,7 +98,7 @@ def weighted_group_split(
     (hashing assigns 80% of GROUPS to train; one giant group is 60% of the
     tokens wherever it lands).
 
-    Mechanism: per-group weights, groups ordered by md5(group||salt) (group
+    Mechanism: per-group weights, groups ordered by md5(group) (group
     as tiebreak — a deterministic shuffle), exclusive running weight over
     that order, and each group assigned to the split whose cumulative
     target interval contains its running-weight START. This "cut the
@@ -133,7 +132,7 @@ def weighted_group_split(
     if len(splits) < 1:
         raise ValueError("need at least one split")
     gw = df.groupBy(group_col).agg(F.sum(weight_col).alias("__w"))
-    order_key = _hash_bucket(group_col, salt)
+    order_key = _hash_bucket(group_col)
     if num_ranges > 1:
         # first 4 hex chars read as an int: monotone in the lexicographic
         # order of the fixed-width lowercase hash, so buckets are
@@ -215,7 +214,6 @@ def mixture_sample(
     group_col: str,
     fractions: dict[str, float],
     default: float = 0.0,
-    salt: str = "",
 ) -> DataFrame:
     """Per-group deterministic downsampling to target mixture weights.
 
@@ -227,7 +225,7 @@ def mixture_sample(
     literal CASE chain for a broadcast join against a (group, threshold)
     dim — same semantics, same determinism.
     """
-    bucket = _hash_bucket(key_col, salt)
+    bucket = _hash_bucket(key_col)
     thr = F.lit(hex_threshold(default))
     for g, frac in sorted(fractions.items()):
         thr = F.when(F.col(group_col) == g, F.lit(hex_threshold(frac))).otherwise(thr)
@@ -239,7 +237,6 @@ def stratified_sample(
     group_col: str,
     key_col: str,
     n_per_group: int,
-    salt: str = "",
 ) -> DataFrame:
     """Exactly-N-per-group deterministic sample: rank rows within each
     group by md5(key) (key itself as tiebreak) and keep the first N. Unlike
@@ -251,7 +248,7 @@ def stratified_sample(
     single giant group use the partial-top-N pattern from similarity.topk.
     """
     w = Window.partitionBy(group_col).orderBy(
-        _hash_bucket(key_col, salt), F.col(key_col)
+        _hash_bucket(key_col), F.col(key_col)
     )
     return (
         df.withColumn("__rn", F.row_number().over(w))
@@ -497,7 +494,6 @@ def weighted_sample(
     df: DataFrame,
     key_col: str,
     weight_col,
-    salt: str = "",
 ) -> DataFrame:
     """Per-ROW deterministic importance sampling: keep each row with
     probability equal to its own ``weight_col`` value (clamped to [0, 1])
@@ -506,14 +502,14 @@ def weighted_sample(
 
     mixture_sample keys the threshold on a GROUP; here it is computed per
     row, so the comparison is integer-vs-integer: the first 8 hex chars
-    of md5(key||salt) read as a uint32 draw against floor(w * 2^32).
-    Membership still depends only on (key, salt, weight) — stable across
+    of md5(key) read as a uint32 draw against floor(w * 2^32).
+    Membership still depends only on (key, weight) — stable across
     runs, engines, and partitionings. DuckDB twin:
     CAST(('0x' || substr(md5(...), 1, 8)) AS UBIGINT)
       < floor(least(greatest(w, 0), 1) * 4294967296).
     Scale: narrow filter, no shuffle, no state."""
     weight = F.col(weight_col) if isinstance(weight_col, str) else weight_col
-    draw = F.conv(_hash_bucket(key_col, salt), 16, 10).cast("bigint")
+    draw = F.conv(_hash_bucket(key_col), 16, 10).cast("bigint")
     thr = F.floor(
         F.least(F.greatest(weight, F.lit(0.0)), F.lit(1.0)) * F.lit(4294967296.0)
     )
@@ -524,7 +520,6 @@ def negative_samples(
     df: DataFrame,
     id_col: str,
     k: int = 3,
-    salt: str = "",
     num_ranges: int = 32,
     group_col: str | None = None,
 ) -> DataFrame:
@@ -532,7 +527,7 @@ def negative_samples(
     every row with ``k`` pseudo-random OTHER rows of the corpus — or,
     with ``group_col``, of the row's OWN group (stratified "hard-ish"
     negatives: same language/domain/source) — as a pure function of
-    (ids, k, salt), reproducible across runs, engines and cluster
+    (ids, k), reproducible across runs, engines and cluster
     sizes, so the pair set itself sits under the exact cross-engine
     gate.
 
@@ -543,7 +538,7 @@ def negative_samples(
     offsets, the pack_token_shards / layout ntile machinery; boundaries
     steer parallelism, never the result, and sub-bucketing inside each
     group keeps a 100 TB-dominant group from pinning one reducer. Draw
-    j of a row is the md5-derived 60-bit value of (id ':' j ':' salt)
+    j of a row is the md5-derived 60-bit value of (id ':' j)
     modulo N-1 (its draw-domain size minus self), shifted up by one
     when >= p — uniform over the positions that are not the row's own
     up to the negligible modulo bias of reducing a 2^60 draw domain
@@ -616,7 +611,6 @@ def negative_samples(
                             F.col("__id").cast("string"),
                             F.lit(":"),
                             F.col("j").cast("string"),
-                            F.lit(f":{salt}") if salt else F.lit(""),
                         )
                     ),
                     1,
@@ -731,7 +725,6 @@ def temperature_mixture_sample(
     key_col: str,
     alpha: float = 0.5,
     target_frac: float = 0.5,
-    salt: str = "",
 ) -> DataFrame:
     """Temperature-scaled mixture resampling — the multilingual / multi-
     domain rebalancing step (mT5, The Pile): sample group g with
@@ -741,7 +734,7 @@ def temperature_mixture_sample(
     group's keep rate is min(1, q_g * target_frac * C / c_g) with
     q_g = p_g^alpha / sum_h p_h^alpha; membership is the usual
     deterministic md5 uint32 draw against floor(rate * 2^32), so the
-    sample is a pure function of (key, salt, corpus counts).
+    sample is a pure function of (key, corpus counts).
 
     ``alpha`` must be 1.0, 0.5, or 0.25: p^0.5 and p^0.25 are sqrt
     chains, and IEEE-754 sqrt is CORRECTLY ROUNDED — bit-identical in
@@ -793,7 +786,7 @@ def temperature_mixture_sample(
     dim = sized.select(
         group_col, F.floor(rate * F.lit(4294967296.0)).alias("__thr")
     )
-    draw = F.conv(_hash_bucket(key_col, salt), 16, 10).cast("bigint")
+    draw = F.conv(_hash_bucket(key_col), 16, 10).cast("bigint")
     return df.join(F.broadcast(dim), group_col).filter(draw < F.col("__thr")).drop(
         "__thr"
     )
@@ -868,12 +861,14 @@ def containment_pairs(
     ).filter(F.col("containment") >= F.lit(min_containment))
 
 
+DSIR_BUCKETS = 4096  # hashed n-gram feature buckets
+
+
 def dsir_importance(
     df: DataFrame,
     target: Column,
     id_col: str = "doc_id",
     text_col: str = "text",
-    n_buckets: int = 4096,
 ) -> DataFrame:
     """DSIR-style importance weights for target-domain data selection
     (Xie et al. 2023, "Data Selection for Language Models via Importance
@@ -884,7 +879,7 @@ def dsir_importance(
     documents as "target-like" pretraining data.
 
     Features are unigrams + bigrams of the normalized whitespace tokens,
-    hashed into ``n_buckets`` buckets with the portable md5 60-bit hash
+    hashed into DSIR_BUCKETS buckets with the portable md5 60-bit hash
     (functions.portable_hash64, salt ``"dsir"``), exactly as the paper
     hashes grams into a fixed feature space. Both bucket distributions
     are add-one smoothed over the bucket space, and the per-bucket
@@ -906,7 +901,7 @@ def dsir_importance(
 
     Scale: one explode of the corpus into gram occurrences, one
     (doc, bucket)-keyed partial-agg shuffle, ONE bucket-keyed aggregate
-    producing a <= n_buckets-row score table that is broadcast back, one
+    producing a <= DSIR_BUCKETS-row score table that is broadcast back, one
     doc-keyed aggregate. The raw corpus is never joined to itself and
     nothing unbounded is collected; the bucket table is O(B) regardless
     of corpus size, which is the entire point of hashed features at
@@ -937,7 +932,7 @@ def dsir_importance(
     ).select(
         F.col(id_col),
         "__tgt",
-        F.pmod(portable_hash64("__gram", salt="dsir"), F.lit(n_buckets)).alias(
+        F.pmod(portable_hash64("__gram", salt="dsir"), F.lit(DSIR_BUCKETS)).alias(
             "__b"
         ),
     )
@@ -954,10 +949,10 @@ def dsir_importance(
     )
     # integer div, NOT double /: bin() of a double would round through 2^53
     surp_raw = F.length(
-        F.bin(F.expr(f"(__n_raw + {n_buckets}) div (__c_raw + 1)"))
+        F.bin(F.expr(f"(__n_raw + {DSIR_BUCKETS}) div (__c_raw + 1)"))
     ) - F.lit(1)
     surp_tgt = F.length(
-        F.bin(F.expr(f"(__n_tgt + {n_buckets}) div (__c_tgt + 1)"))
+        F.bin(F.expr(f"(__n_tgt + {DSIR_BUCKETS}) div (__c_tgt + 1)"))
     ) - F.lit(1)
     scores = (
         bs.crossJoin(F.broadcast(tot))
@@ -989,7 +984,6 @@ def dsir_topk(
     k: int,
     id_col: str = "doc_id",
     text_col: str = "text",
-    n_buckets: int = 4096,
 ) -> DataFrame:
     """The selection step of DSIR: the ``k`` documents whose importance
     weight says they are most target-like, deterministically tie-broken
@@ -997,7 +991,7 @@ def dsir_topk(
     each partition keeps a local k-row heap and the driver merges k-row
     heads, so the global sort never materializes at any scale."""
     w = dsir_importance(
-        df, target, id_col=id_col, text_col=text_col, n_buckets=n_buckets
+        df, target, id_col=id_col, text_col=text_col
     )
     return w.orderBy(F.desc("weight"), F.asc(id_col)).limit(k)
 

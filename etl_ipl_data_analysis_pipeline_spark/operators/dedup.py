@@ -83,24 +83,24 @@ def shingles_from_tokens(toks, n: int = 3):
     return F.array_distinct(grams)
 
 
-def shingles(text, n: int = 3):
-    """Distinct word n-gram shingles of a text column (JVM-side only).
+def shingles(text):
+    """Distinct word 3-gram shingles of a text column (JVM-side only).
 
     Convenience form for small inputs / tests. Hot paths pre-project
     :func:`tokens` into a column and use :func:`shingles_from_tokens` —
     see that docstring for why (interpreted-lambda recompute).
     """
-    return shingles_from_tokens(tokens(text), n)
+    return shingles_from_tokens(tokens(text))
 
 
-def minhash_signature(shingle_col, num_hashes: int = 32, seed: int = 42):
-    """MinHash signature as array<bigint>: min over shingles of
-    xxhash64(xxhash64(shingle), salt_i) — the string is hashed to a long
+def minhash_signature(shingle_col):
+    """32-hash MinHash signature as array<bigint>: min over shingles of
+    xxhash64(xxhash64(shingle), 42 + i) — the string is hashed to a long
     once, then each salted function re-hashes the fixed-width long, the
     same scheme (and thus identical signatures; tested) as the bulk
     :func:`minhash_signatures`. Pure built-ins — no Python in the loop.
 
-    Expression form (num_hashes array traversals per row). For bulk
+    Expression form (32 array traversals per row). For bulk
     signature computation prefer the bulk form, which hashes each shingle
     once and combines map-side.
     """
@@ -108,9 +108,9 @@ def minhash_signature(shingle_col, num_hashes: int = 32, seed: int = 42):
     return F.array(
         *[
             F.array_min(
-                F.transform(col, lambda s: F.xxhash64(F.xxhash64(s), F.lit(seed + i)))
+                F.transform(col, lambda s: F.xxhash64(F.xxhash64(s), F.lit(42 + i)))
             )
-            for i in range(num_hashes)
+            for i in range(32)
         ]
     )
 
@@ -420,8 +420,9 @@ def minhash_dedup(
     return df.join(losers, id_col, "left_anti")
 
 
-def simhash(text, bits: int = 64, seed: int = 42):
-    """X2 variant: SimHash fingerprint of a text column as one bigint.
+def simhash(text):
+    """X2 variant: 64-bit SimHash fingerprint of a text column as one
+    bigint (token hash xxhash64 salted with 42).
 
     Per token: 64-bit hash; per bit: +1 if set else -1; sum over tokens;
     fingerprint bit = sign. Entirely higher-order functions (one aggregate
@@ -431,15 +432,15 @@ def simhash(text, bits: int = 64, seed: int = 42):
     toks = F.split(normalized_text(text), " ")
     # Hash each token ONCE (transform evaluates its lambda once per
     # element), then expand bits from the bound hash variable ``h`` — an
-    # xxhash64 embedded in the per-bit array would be re-evaluated ``bits``
+    # xxhash64 embedded in the per-bit array would be re-evaluated 64
     # times per token (interpreted lambdas do no subexpression elimination).
     # Bit indices are static Python ints (F.shiftright requires an int
     # numBits, not a Column), so the per-bit array is built with a Python
     # loop — still one fully JVM-side expression per row.
-    tok_hashes = F.transform(toks, lambda t: F.xxhash64(t, F.lit(seed)))
+    tok_hashes = F.transform(toks, lambda t: F.xxhash64(t, F.lit(42)))
     counts = F.aggregate(
         tok_hashes,
-        F.array_repeat(F.lit(0), bits),
+        F.array_repeat(F.lit(0), 64),
         lambda acc, h: F.zip_with(
             acc,
             F.array(
@@ -448,14 +449,14 @@ def simhash(text, bits: int = 64, seed: int = 42):
                         F.shiftright(h, i).bitwiseAND(F.lit(1)) == 1,
                         F.lit(1),
                     ).otherwise(F.lit(-1))
-                    for i in range(bits)
+                    for i in range(64)
                 ]
             ),
             lambda a, v: a + v,
         ),
     )
     # Bit masks as signed-64 literals (1 << 63 wraps to the sign bit).
-    masks = [(1 << i) - (1 << 64) if i >= 63 else (1 << i) for i in range(bits)]
+    masks = [(1 << i) - (1 << 64) if i >= 63 else (1 << i) for i in range(64)]
     return F.aggregate(
         F.zip_with(
             counts,
@@ -471,13 +472,12 @@ def simhash_fingerprints(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    bits: int = 64,
-    seed: int = 42,
     hash_family: str = "xx",
 ) -> DataFrame:
-    """Bulk SimHash as (__id, __fp): explode tokens, hash each once, then
-    64 conditional-sum aggregates (+1/-1 per bit) with map-side partial
-    aggregation, and assemble the fingerprint from the per-bit signs.
+    """Bulk 64-bit SimHash (token hashes salted with 42) as (__id, __fp):
+    explode tokens, hash each once, then 64 conditional-sum aggregates
+    (+1/-1 per bit) with map-side partial aggregation, and assemble the
+    fingerprint from the per-bit signs.
 
     Same math as :func:`simhash` but whole-stage-codegen'd: the expression
     form's per-token 64-wide zip_with runs interpreted (higher-order
@@ -495,25 +495,25 @@ def simhash_fingerprints(
     toks = df.select(F.col(id_col).alias("__id"), F.explode(tokens(text_col)).alias("__tok"))
     if hash_family == "md5":
         hashed = toks.select(
-            "__id", portable_hash64("__tok", f":{seed}").alias("__h")
+            "__id", portable_hash64("__tok", ":42").alias("__h")
         )
     else:
-        hashed = toks.select("__id", F.xxhash64("__tok", F.lit(seed)).alias("__h"))
+        hashed = toks.select("__id", F.xxhash64("__tok", F.lit(42)).alias("__h"))
     sums = [
         F.sum(
             F.when(F.shiftright(F.col("__h"), i).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
         ).alias(f"__b{i}")
-        for i in range(bits)
+        for i in range(64)
     ]
     # Bit masks as signed-64 literals (1 << 63 wraps to the sign bit).
-    masks = [(1 << i) - (1 << 64) if i >= 63 else (1 << i) for i in range(bits)]
+    masks = [(1 << i) - (1 << 64) if i >= 63 else (1 << i) for i in range(64)]
     fp = reduce(
         lambda acc, i: acc.bitwiseOR(
             F.when(F.col(f"__b{i}") > 0, F.lit(masks[i]).cast("long")).otherwise(
                 F.lit(0).cast("long")
             )
         ),
-        range(bits),
+        range(64),
         F.lit(0).cast("long"),
     )
     return hashed.groupBy("__id").agg(*sums).select("__id", fp.alias("__fp"))
@@ -524,7 +524,6 @@ def simhash_near_dup_pairs(
     text_col: str = "text",
     id_col: str = "doc_id",
     max_hamming: int = 8,
-    seed: int = 42,
     hash_family: str = "xx",
 ) -> DataFrame:
     """SimHash near-dup candidates: block by the 4 16-bit quarters of the
@@ -533,7 +532,7 @@ def simhash_near_dup_pairs(
     Each pair is kept only in its first matching quarter — the matching
     quarters are exactly the zero 16-bit blocks of fp_a XOR fp_b — so no
     pair-dedup exchange exists (:func:`band_join`)."""
-    fp = simhash_fingerprints(df, text_col, id_col, seed=seed, hash_family=hash_family)
+    fp = simhash_fingerprints(df, text_col, id_col, hash_family=hash_family)
     return _fingerprint_pairs(fp, fp, 64, 4, max_hamming)
 
 
@@ -603,11 +602,10 @@ def jaccard_pairs(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    n: int = 3,
     min_jaccard: float = 0.5,
     max_df: int | None = None,
 ) -> DataFrame:
-    """Exact n-gram Jaccard similarity for pairs sharing >=1 shingle.
+    """Exact word 3-gram Jaccard similarity for pairs sharing >=1 shingle.
 
     Inverted-index join: explode shingles, self-join on shingle, count
     common, |A∪B| = |A|+|B|-common. Documents sharing nothing never pair, so
@@ -632,7 +630,7 @@ def jaccard_pairs(
     # __size is projected in its OWN select below the explode — bundling
     # size+explode in one select puts the size expression above the
     # Generate, re-building the gram array once per exploded row.
-    sh_expr = shingles_from_tokens("__toks", n)
+    sh_expr = shingles_from_tokens("__toks")
     exploded = (
         df.select(F.col(id_col).alias("__id"), tokens(text_col).alias("__toks"))
         .select("__id", "__toks", F.size(sh_expr).alias("__size"))
@@ -671,11 +669,13 @@ def jaccard_pairs(
     )
 
 
+CC_MAX_ROUNDS = 20  # connected_components' round bound
+
+
 def connected_components(
     pairs: DataFrame,
     id_a: str = "id_a",
     id_b: str = "id_b",
-    max_iter: int = 20,
 ) -> DataFrame:
     """Distributed connected components over a pair list: returns
     (node, component) where component is the smallest node id in the
@@ -730,7 +730,7 @@ def connected_components(
             F.least(F.min("v"), F.first("u")).alias("m")
         )
 
-    for _ in range(max_iter):
+    for _ in range(CC_MAX_ROUNDS):
         # large-star: every neighbor v > u links to u's component min
         e_sym = _sym(edges)
         mins = _min_nbr(e_sym)
@@ -815,14 +815,14 @@ def connected_components(
         if pending == 0:
             break
     else:
-        # max_iter exhausted without reaching a valid star forest: the
+        # CC_MAX_ROUNDS exhausted without reaching a valid star forest: the
         # edge set still has chains or split roots, so downstream
         # keep-one would silently under-merge. This is a correctness
         # failure, not a degraded answer — refuse to return it.
         raise RuntimeError(
-            f"connected_components: not converged after {max_iter} rounds "
+            f"connected_components: not converged after {CC_MAX_ROUNDS} rounds "
             f"({pending} forest-invariant violations remain); raise "
-            f"max_iter — rounds needed grow with component diameter"
+            f"CC_MAX_ROUNDS — rounds needed grow with component diameter"
         )
     return edges.select(F.col("u").alias("node"), F.col("v").alias("component"))
 
@@ -844,6 +844,12 @@ def minhash_dedup_cc(
     return df.join(losers, id_col, "left_anti")
 
 
+# semantic_dedup's governed cell size (uniques per k-means cell) and the
+# factor past which the fast path splits a cell again
+SEMDEDUP_CELL_SIZE = 1024
+SEMDEDUP_REBALANCE = 4
+
+
 def semantic_dedup(
     emb: DataFrame,
     k: int | None = None,
@@ -851,9 +857,7 @@ def semantic_dedup(
     min_sim: float = 0.95,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    target_cell_size: int = 1024,
     assign: str = "fast",
-    rebalance_factor: int | None = 4,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication: collapse EXACT duplicate
     vectors to their smallest id, cluster the unique vectors, then drop
@@ -891,8 +895,8 @@ def semantic_dedup(
     default) the cell count is GOVERNED, not guessed: the collapse's
     unique count n is measured (the collapsed relation is checkpointed,
     so the count job and every downstream stage share one
-    materialization) and ``k = ceil(n / target_cell_size)``, which pins
-    expected Σ|cell|² ≈ n·target_cell_size — LINEAR in uniques at any
+    materialization) and ``k = ceil(n / SEMDEDUP_CELL_SIZE)``, which pins
+    expected Σ|cell|² ≈ n·SEMDEDUP_CELL_SIZE — LINEAR in uniques at any
     corpus size, where any fixed k degrades quadratically (at 10^9
     uniques and k=16, one cell is ~6·10^7 vectors ⇒ ~2·10^15 pairs).
     An explicit ``k`` bypasses the count (callers whose oracle unrolls
@@ -913,13 +917,13 @@ def semantic_dedup(
     rounds — every routing decision replayable in SQL, the
     oracle-gated path (dedup_semantic_planted pins it) — but its
     assignment is an exploded O(n·k) decimal aggregate, i.e.
-    O(n²/target_cell) under the governed k (measured r8: 85s for only
+    O(n²/SEMDEDUP_CELL_SIZE) under the governed k (measured r8: 85s for only
     20k uniques at f10; the SCALE_SMOKE crossover line, in git history, records where
     it becomes untenable). Never default it at scale. Past ~10^4
     derived centroids the fast path's k×dim centroid broadcast itself
-    becomes the ceiling. ``rebalance_factor`` guards the fast path's
-    skew: it second-level-splits oversized final cells before the pair
-    join.
+    becomes the ceiling. The fast path guards against skew: it
+    second-level-splits final cells larger than SEMDEDUP_REBALANCE x
+    SEMDEDUP_CELL_SIZE before the pair join.
 
     .. versionchanged:: round 9
        ``assign`` DEFAULTS to ``"fast"`` (was ``"exact"``). Exact-copy
@@ -958,7 +962,7 @@ def semantic_dedup(
         # Deriving k needs the unique count — the count job doubles as
         # the checkpoint materializer; downstream stages read the blocks
         n_unique = reps.count()
-        k = max(1, -(-n_unique // target_cell_size))  # ceil div
+        k = max(1, -(-n_unique // SEMDEDUP_CELL_SIZE))  # ceil div
     rep_emb = reps.select(
         F.col("__vid").alias(id_col), F.col("__vec").alias(vec_col)
     )
@@ -976,59 +980,58 @@ def semantic_dedup(
         # self-join — without a checkpoint the pandas-UDF pass runs 3-4
         # times (the collapse is checkpointed for the same reason).
         members = members.localCheckpoint(eager=True)
-        if rebalance_factor:
-            # Skew guard: governed k bounds the EXPECTED cell size, but a
-            # dominant semantic cluster can still pile into one cell and
-            # re-quadraticize the pair join. Cells past rebalance_factor x
-            # target get ONE second-level split — a single global
-            # sub-clustering fit on the oversized cells' members (no
-            # per-group models), keyed (cell, sub): near-identical vectors
-            # still co-route (they are near each other under any
-            # clustering of their region), so the candidate contract is
-            # the same approximation as level 1 while the worst cell
-            # shrinks to ~oversized_mass/k2. The size probe collects
-            # <= k rows (the kmeans k-row-collect shape).
-            counts = members.groupBy("cell").count().collect()
-            big = sorted(
-                r["cell"]
-                for r in counts
-                if r["count"] > rebalance_factor * target_cell_size
+        # Skew guard: governed k bounds the EXPECTED cell size, but a
+        # dominant semantic cluster can still pile into one cell and
+        # re-quadraticize the pair join. Cells past SEMDEDUP_REBALANCE x
+        # SEMDEDUP_CELL_SIZE get ONE second-level split — a single global
+        # sub-clustering fit on the oversized cells' members (no
+        # per-group models), keyed (cell, sub): near-identical vectors
+        # still co-route (they are near each other under any
+        # clustering of their region), so the candidate contract is
+        # the same approximation as level 1 while the worst cell
+        # shrinks to ~oversized_mass/k2. The size probe collects
+        # <= k rows (the kmeans k-row-collect shape).
+        counts = members.groupBy("cell").count().collect()
+        big = sorted(
+            r["cell"]
+            for r in counts
+            if r["count"] > SEMDEDUP_REBALANCE * SEMDEDUP_CELL_SIZE
+        )
+        if big:
+            n_big = sum(r["count"] for r in counts if r["cell"] in set(big))
+            k2 = max(2, -(-n_big // SEMDEDUP_CELL_SIZE))
+            # The composite key below multiplies cell by 1e6; a
+            # larger k2 would let sub-keys bleed into the next
+            # cell's range and collide unrelated cells.
+            assert k2 < 1_000_000 - 1, (
+                f"rebalance k2={k2} would overflow the composite "
+                "cell key; raise SEMDEDUP_CELL_SIZE"
             )
-            if big:
-                n_big = sum(r["count"] for r in counts if r["cell"] in set(big))
-                k2 = max(2, -(-n_big // target_cell_size))
-                # The composite key below multiplies cell by 1e6; a
-                # larger k2 would let sub-keys bleed into the next
-                # cell's range and collide unrelated cells.
-                assert k2 < 1_000_000 - 1, (
-                    f"rebalance k2={k2} would overflow the composite "
-                    "cell key; raise target_cell_size"
-                )
-                sub = members.filter(F.col("cell").isin(big)).select(
-                    F.col("__vid").alias(id_col),
-                    F.col("__vec").alias(vec_col),
-                )
-                cn2 = kmeans_centroids(
-                    sub, k=k2, iters=iters, id_col=id_col, vec_col=vec_col
-                )
-                subcell = F.when(
-                    F.col("cell").isin(big),
-                    F.element_at(_cell_router(cn2, 1)("__vec"), 1),
-                ).otherwise(F.lit(-1))
-                # bigint arithmetic: with governed k = ceil(n/1024) a
-                # cell id past ~2147 (> ~2.2M uniques — exactly the fast
-                # path's regime) would overflow int32 under the 1e6
-                # multiplier (ANSI mode throws; ANSI-off wraps silently
-                # and collides unrelated cells).
-                members = members.withColumn("__sub", subcell).select(
-                    "__vid",
-                    "__vec",
-                    (
-                        F.col("cell").cast("bigint") * F.lit(1_000_000)
-                        + F.col("__sub").cast("bigint")
-                        + F.lit(1)
-                    ).alias("cell"),
-                )
+            sub = members.filter(F.col("cell").isin(big)).select(
+                F.col("__vid").alias(id_col),
+                F.col("__vec").alias(vec_col),
+            )
+            cn2 = kmeans_centroids(
+                sub, k=k2, iters=iters, id_col=id_col, vec_col=vec_col
+            )
+            subcell = F.when(
+                F.col("cell").isin(big),
+                F.element_at(_cell_router(cn2, 1)("__vec"), 1),
+            ).otherwise(F.lit(-1))
+            # bigint arithmetic: with governed k = ceil(n/1024) a
+            # cell id past ~2147 (> ~2.2M uniques — exactly the fast
+            # path's regime) would overflow int32 under the 1e6
+            # multiplier (ANSI mode throws; ANSI-off wraps silently
+            # and collides unrelated cells).
+            members = members.withColumn("__sub", subcell).select(
+                "__vid",
+                "__vec",
+                (
+                    F.col("cell").cast("bigint") * F.lit(1_000_000)
+                    + F.col("__sub").cast("bigint")
+                    + F.lit(1)
+                ).alias("cell"),
+            )
     else:
         from .similarity import _exploded, _keyed_corpus, _nearest, _sq_dists
 
@@ -1283,22 +1286,20 @@ def minhash_sig_index(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    n: int = 3,
-    num_hashes: int = 32,
-    seed: int = 42,
     hash_family: str = "xx",
 ) -> DataFrame:
     """The persistable LSH index state for cross-snapshot dedup:
-    (doc_id, sig array<bigint>) — one row per document of the EXISTING
+    (doc_id, sig array<bigint>) — minhash_signatures' 32-hash word
+    3-gram signature (seed 42), one row per document of the EXISTING
     corpus. Signatures are the expensive part (tokenize + shingle + hash
     every byte of text); band keys are cheap arithmetic over the array,
     so the index stores signatures only and each search derives its own
     banding — the same signature table serves any (bands, threshold)
     choice later. Write it partitioned/bucketed however the fleet likes;
     the incremental probe below never re-reads the old TEXT."""
-    return minhash_signatures(
-        df, text_col, id_col, n, num_hashes, seed, hash_family
-    ).select(F.col("__id").alias(id_col), F.col("__sig").alias("sig"))
+    return minhash_signatures(df, text_col, id_col, hash_family=hash_family).select(
+        F.col("__id").alias(id_col), F.col("__sig").alias("sig")
+    )
 
 
 def minhash_incremental_pairs(
@@ -1306,10 +1307,6 @@ def minhash_incremental_pairs(
     index: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    n: int = 3,
-    num_hashes: int = 32,
-    bands: int = 8,
-    seed: int = 42,
     min_jaccard: float = 0.7,
     hash_family: str = "xx",
 ) -> DataFrame:
@@ -1317,7 +1314,8 @@ def minhash_incremental_pairs(
     documents of a NEW batch near-duplicate the EXISTING corpus, without
     ever rescanning the existing corpus text. The old side enters as the
     persisted signature index (:func:`minhash_sig_index`); only the new
-    batch is tokenized/shingled/hashed. Both sides derive band keys from
+    batch is tokenized/shingled/hashed (the index's signature: 32 hashes,
+    seed 42). Both sides derive band keys (8 bands of 4 rows) from
     their signature arrays and meet on (band_idx, band_key) — the
     O(new·bands) LSH shuffle against an index pre-bucketable by band key
     at rest, never new × old.
@@ -1332,18 +1330,15 @@ def minhash_incremental_pairs(
     ``min_jaccard``. New-batch-internal duplicates are NOT this
     operator's job — run the self-join pair dedup on the batch first,
     then union the survivors' signatures into the index."""
-    rows_per_band = num_hashes // bands
-    new_sig = minhash_signatures(
-        new_docs, text_col, id_col, n, num_hashes, seed, hash_family
-    )
+    new_sig = minhash_signatures(new_docs, text_col, id_col, hash_family=hash_family)
     old_sig = index.select(
         F.col(id_col).alias("__id"), F.col("sig").alias("__sig")
     )
-    keys = F.array(*_band_keys("__sig", bands, rows_per_band, hash_family))
+    keys = F.array(*_band_keys("__sig", 8, 4, hash_family))
     return _minhash_band_join(
         new_sig.select("__id", "__sig", keys.alias("__bhs")),
         old_sig.select("__id", "__sig", keys.alias("__bhs")),
-        num_hashes,
+        32,
         min_jaccard,
         ("new_id", "old_id"),
         None,

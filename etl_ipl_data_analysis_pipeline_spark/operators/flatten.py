@@ -20,9 +20,9 @@ select chain, and the physical plan is a single narrow
 FileScan→Project→Generate pipeline (no shuffle) at any scale.
 
 Scale notes: explode fan-out multiplies rows (innings×overs×deliveries×…).
-Project-prune *before* flatten when only a column subset is needed — pass
-``keep`` to drop unneeded top-level columns so Generate operates on the
-narrowest rows possible.
+Project-prune *before* flatten when only a column subset is needed — select
+the needed top-level columns first so Generate operates on the narrowest
+rows possible.
 """
 
 from __future__ import annotations
@@ -82,25 +82,20 @@ def flatten_once(df: DataFrame, mode: str = "outer") -> DataFrame:
     return df.select(*projections)
 
 
-def flatten(
-    df: DataFrame,
-    mode: str = "outer",
-    keep: list[str] | None = None,
-    max_passes: int = 100,
-) -> DataFrame:
+FLATTEN_MAX_PASSES = 100  # a schema still nested after this many is an error
+
+
+def flatten(df: DataFrame, mode: str = "outer") -> DataFrame:
     """P4 fixpoint flatten (transformation_job.py:19-34, intent).
 
     mode="outer"     -> explode_outer (empty arrays keep their row, nulls)
     mode="reference" -> explode       (reference-faithful row dropping)
-    keep             -> project to these top-level columns first (prune early)
     """
-    if keep:
-        df = df.select(*keep)
     passes = 0
     while nested_columns(df):
-        if passes >= max_passes:
+        if passes >= FLATTEN_MAX_PASSES:
             raise RuntimeError(
-                f"flatten did not converge after {max_passes} passes; "
+                f"flatten did not converge after {FLATTEN_MAX_PASSES} passes; "
                 f"remaining nested: {nested_columns(df)}"
             )
         df = flatten_once(df, mode=mode)

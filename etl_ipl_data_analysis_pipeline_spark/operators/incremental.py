@@ -66,10 +66,10 @@ def upsert(
     return updates.unionByName(current.join(key_set, keys, "left_anti"))
 
 
-def summary_with_avg(summary: DataFrame, digits: int = 4) -> DataFrame:
-    """Derive avg from the maintained (sum, count) state — avg itself is not
-    decomposable, its state is."""
+def summary_with_avg(summary: DataFrame) -> DataFrame:
+    """Derive avg (rounded to 4dp) from the maintained (sum, count) state —
+    avg itself is not decomposable, its state is."""
     return summary.withColumn(
         "avg_value",
-        F.round((F.col("sum_value") / F.col("n_rows")).cast("double"), digits),
+        F.round((F.col("sum_value") / F.col("n_rows")).cast("double"), 4),
     )

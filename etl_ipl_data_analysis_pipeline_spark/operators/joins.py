@@ -139,13 +139,13 @@ def salted_join(
     left: DataFrame,
     right: DataFrame,
     on: str,
-    how: str = "inner",
     salt: int = 16,
-    seed: int = 42,
 ) -> DataFrame:
-    """Skew-safe equi join: spread each hot left key over ``salt`` reducers.
+    """Skew-safe inner equi join: spread each hot left key over ``salt``
+    reducers.
 
-    The left (fact) side gets a uniform ``__salt`` in [0, salt); the right
+    The left (fact) side gets a uniform ``__salt`` in [0, salt) (rand
+    seed 42); the right
     (dimension) side is replicated once per salt value; the join key becomes
     (key, salt). A key holding 20% of all rows then lands on ``salt``
     partitions instead of one — the classic remedy when AQE's skew-join
@@ -154,15 +154,13 @@ def salted_join(
     left row still meets every matching right row exactly once (the right
     replica with its salt value).
 
-    Use for inner/left joins where ``right`` is a dimension (its rows may
-    be replicated ``salt``× — keep it the small side). Costs salt× the
+    Use where ``right`` is a dimension (its rows may be replicated
+    ``salt``× — keep it the small side). Costs salt× the
     right-side shuffle volume; at 100 TB that trade is one small table
     broadcast-sized-up vs. a stalled straggler reducer.
     """
-    if how not in ("inner", "left", "left_outer"):
-        raise ValueError(f"salted_join supports inner/left joins, got {how!r}")
-    salted_left = left.withColumn("__salt", (F.rand(seed) * salt).cast("int"))
+    salted_left = left.withColumn("__salt", (F.rand(42) * salt).cast("int"))
     replicas = right.withColumn(
         "__salt", F.explode(F.array(*[F.lit(i) for i in range(salt)]))
     )
-    return salted_left.join(replicas, [on, "__salt"], how).drop("__salt")
+    return salted_left.join(replicas, [on, "__salt"]).drop("__salt")

@@ -53,9 +53,8 @@ def global_positions(
     cuts: list,
     pos_col: str,
     tot_col: str | None = None,
-    descending: bool = False,
 ) -> DataFrame:
-    """Append ``pos_col`` = row_number() OVER (ORDER BY c [DESC],
+    """Append ``pos_col`` = row_number() OVER (ORDER BY c,
     tiebreak) — an exact 1-based GLOBAL position — plus optionally
     ``tot_col`` = the global row count, WITHOUT a single-partition
     window anywhere near the base relation.
@@ -66,8 +65,8 @@ def global_positions(
     runs per bucket, and the per-bucket row counts — one row per bucket,
     broadcast — shift local ranks to exact 1-based global positions. The
     result is bit-identical to the window form for ANY cut boundaries
-    (cuts only steer parallelism). NULL keys sort first ascending /
-    last descending, matching the Spark window defaults they replace.
+    (cuts only steer parallelism). NULL keys sort first, matching the
+    Spark window default they replace.
 
     ``base`` is the pre-rank source relation: bucket counts depend only
     on column ``c``, so counting over it (a one-column scan) instead of
@@ -76,21 +75,17 @@ def global_positions(
     per layout column).
     """
     col = F.col(c)
-    null_bucket = F.lit(1 << 31) if descending else F.lit(-1)
-    bucket = F.when(col.isNull(), null_bucket).otherwise(range_bucket(col, cuts))
+    bucket = F.when(col.isNull(), F.lit(-1)).otherwise(range_bucket(col, cuts))
     bucketed = df.withColumn("__zb", bucket)
 
-    order = [col.desc() if descending else col.asc(), F.col(tiebreak).asc()]
-    w_in = Window.partitionBy("__zb").orderBy(*order)
+    w_in = Window.partitionBy("__zb").orderBy(col.asc(), F.col(tiebreak).asc())
     with_rn = bucketed.withColumn("__zrn", F.row_number().over(w_in))
 
     # one row per bucket: exclusive prefix counts + the global total,
     # windowed over the bounded bucket relation (never the base table).
-    # Bucket ids ascend with the key, so the DESC traversal is simply
-    # the prefix over descending bucket id.
     w_off = (
         Window.partitionBy(F.lit(0))
-        .orderBy(F.col("__zb").desc() if descending else F.col("__zb").asc())
+        .orderBy(F.col("__zb").asc())
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     offsets = (
@@ -294,11 +289,10 @@ def zorder_write(
     tiebreak: str,
     bits: int = 8,
     num_files: int = 16,
-    fmt: str = "parquet",
     num_ranges: int = 32,
 ) -> None:
     """Cluster ``df`` on the Z-key of ``cols`` and write ``num_files``
-    files: range-partition by the key (contiguous Z-ranges per file, so
+    parquet files: range-partition by the key (contiguous Z-ranges per file, so
     per-file min/max of every layout column is bounded), sort within each
     partition (bounds ROW-GROUP stats too), drop the helper columns."""
     ranks = zorder_ranks(df, cols, tiebreak, bits, num_ranges)
@@ -309,7 +303,6 @@ def zorder_write(
         keyed.repartitionByRange(num_files, "__z")
         .sortWithinPartitions("__z")
         .drop("__z", *[f"__r{i}" for i in range(len(cols))])
-        .write.format(fmt)
-        .mode("overwrite")
-        .save(path)
+        .write.mode("overwrite")
+        .parquet(path)
     )

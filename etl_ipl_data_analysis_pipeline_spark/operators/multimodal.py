@@ -61,7 +61,10 @@ def attach_metadata(binary_df: DataFrame) -> DataFrame:
     )
 
 
-def decode_image(content: bytes, dim: int = 8) -> tuple[int, int, list[float]]:
+FEATURE_DIM = 8  # floats in a decoded payload's feature vector
+
+
+def decode_image(content: bytes) -> tuple[int, int, list[float]]:
     """Decode an image payload to (width, height, feature_vector).
 
     REAL for the lib-free formats — binary PPM (P6) and uncompressed
@@ -80,29 +83,29 @@ def decode_image(content: bytes, dim: int = 8) -> tuple[int, int, list[float]]:
     try/except in extract_features turns a mixed-format corpus into
     real features where possible, NULLs elsewhere.
 
-    The feature vector is ``dim`` floats in [0, 1]: overall mean, per-
+    The feature vector is FEATURE_DIM floats in [0, 1]: overall mean, per-
     channel/segment means, and coarse spatial (or temporal) pooling —
     deterministic functions of the exact decoded samples.
     """
     head = bytes(content[:4])
     if head[:2] == b"P6":
-        return _decode_ppm(content, dim)
+        return _decode_ppm(content)
     if head[:2] == b"BM":
-        return _decode_bmp(content, dim)
+        return _decode_bmp(content)
     if bytes(content[:8]) == b"\x89PNG\r\n\x1a\n":
         w, h, arr = _decode_png_pixels(content)
-        return w, h, _pool_feature(arr.astype("float64") / 255.0, dim)
+        return w, h, _pool_feature(arr.astype("float64") / 255.0)
     if head[:2] == b"\xff\xd8":
         w, h, arr = _decode_jpeg_pixels(content)
-        return w, h, _pool_feature(arr.astype("float64") / 255.0, dim)
+        return w, h, _pool_feature(arr.astype("float64") / 255.0)
     if head == b"RIFF" and bytes(content[8:12]) == b"WAVE":
-        return _decode_wav(content, dim)
+        return _decode_wav(content)
     if head == b"GIF8":
         w, h, frames = _decode_gif_frames(content)
-        return w, h, _pool_feature(frames[0].astype("float64") / 255.0, dim)
+        return w, h, _pool_feature(frames[0].astype("float64") / 255.0)
     if head == b"RIFF" and bytes(content[8:12]) == b"AVI ":
         w, h, frames = _decode_avi_frames(content)
-        return w, h, _pool_feature(frames[0].astype("float64") / 255.0, dim)
+        return w, h, _pool_feature(frames[0].astype("float64") / 255.0)
     raise NotImplementedError(
         "compressed-video decode requires ffmpeg — not available in this "
         "environment; PPM/BMP/PNG/baseline-JPEG/GIF/WAV/uncompressed-AVI "
@@ -196,21 +199,19 @@ def _decode_png_pixels(content: bytes):
     return width, height, px
 
 
-def _pool_feature(arr, dim: int) -> list[float]:
-    """dim floats in [0, 1] from a (pixels, channels) or (samples,) float
-    array scaled to [0, 1]: global mean, then means of dim-1 contiguous
-    segments — deterministic coarse pooling."""
+def _pool_feature(arr) -> list[float]:
+    """FEATURE_DIM floats in [0, 1] from a (pixels, channels) or
+    (samples,) float array scaled to [0, 1]: global mean, then means of
+    FEATURE_DIM-1 contiguous segments — deterministic coarse pooling."""
     import numpy as np
 
     flat = arr.reshape(-1)
-    segs = np.array_split(flat, max(dim - 1, 1))
+    segs = np.array_split(flat, FEATURE_DIM - 1)
     out = [float(flat.mean())] + [float(s.mean()) if s.size else 0.0 for s in segs]
-    return [min(max(v, 0.0), 1.0) for v in out[:dim]] + [0.0] * max(
-        0, dim - len(out)
-    )
+    return [min(max(v, 0.0), 1.0) for v in out]
 
 
-def _decode_ppm(content: bytes, dim: int) -> tuple[int, int, list[float]]:
+def _decode_ppm(content: bytes) -> tuple[int, int, list[float]]:
     """Binary PPM (P6): ASCII header 'P6 <w> <h> <maxval>' (with
     #-comments) followed by w*h*3 raw bytes."""
     import numpy as np
@@ -231,10 +232,10 @@ def _decode_ppm(content: bytes, dim: int) -> tuple[int, int, list[float]]:
     width, height, maxval = fields
     px = np.frombuffer(buf, dtype=np.uint8, count=width * height * 3, offset=pos)
     arr = px.astype(np.float64).reshape(height, width, 3) / float(maxval)
-    return width, height, _pool_feature(arr, dim)
+    return width, height, _pool_feature(arr)
 
 
-def _decode_bmp(content: bytes, dim: int) -> tuple[int, int, list[float]]:
+def _decode_bmp(content: bytes) -> tuple[int, int, list[float]]:
     """Uncompressed 24-bit BMP (BITMAPINFOHEADER): rows bottom-up, padded
     to 4-byte boundaries, BGR order."""
     import struct
@@ -257,10 +258,10 @@ def _decode_bmp(content: bytes, dim: int) -> tuple[int, int, list[float]]:
     arr = rows.reshape(height, width, 3)[:, :, ::-1]  # BGR -> RGB
     if flip:
         arr = arr[::-1]
-    return width, height, _pool_feature(arr.astype(np.float64) / 255.0, dim)
+    return width, height, _pool_feature(arr.astype(np.float64) / 255.0)
 
 
-def _decode_wav(content: bytes, dim: int) -> tuple[int, int, list[float]]:
+def _decode_wav(content: bytes) -> tuple[int, int, list[float]]:
     """WAV PCM via the stdlib wave module: (n_channels, sample_rate//1000)
     ride the (width, height) slots; the feature pools |sample| energy."""
     import io
@@ -274,7 +275,7 @@ def _decode_wav(content: bytes, dim: int) -> tuple[int, int, list[float]]:
     if sampwidth != 2:
         raise NotImplementedError("only 16-bit PCM WAV decodes natively")
     samples = np.frombuffer(frames, dtype="<i2").astype(np.float64)
-    return n_ch, rate // 1000, _pool_feature(np.abs(samples) / 32768.0, dim)
+    return n_ch, rate // 1000, _pool_feature(np.abs(samples) / 32768.0)
 
 
 def _raw_samples(content: bytes):
@@ -354,7 +355,7 @@ def _raw_samples(content: bytes):
     )
 
 
-def image_ahash(media: DataFrame, bits: int = 16, fake: bool = False) -> DataFrame:
+def image_ahash(media: DataFrame, bits: int = 16) -> DataFrame:
     """Average-hash perceptual fingerprint — the image near-dup primitive
     (the LAION-style pHash-family shape): split the decoded integer
     samples into ``bits`` contiguous blocks (numpy array_split
@@ -370,8 +371,7 @@ def image_ahash(media: DataFrame, bits: int = 16, fake: bool = False) -> DataFra
     decode never leaves the executor; emits
     (media_id, width, height, n_samples, ahash). ``bits`` <= 62 keeps
     the hash in a signed bigint. Empty blocks (fewer samples than bits)
-    contribute 0-bits on both engines. ``fake=True`` swaps the
-    crc32-seeded stand-in decode (env-gated codec corpora)."""
+    contribute 0-bits on both engines."""
     import numpy as np
     import pandas as pd
 
@@ -379,11 +379,7 @@ def image_ahash(media: DataFrame, bits: int = 16, fake: bool = False) -> DataFra
         raise ValueError("bits must be in [1, 62] for a signed-bigint hash")
 
     def _hash_one(content) -> tuple:
-        if fake:
-            w, h, feat = _fake_decode(content, bits)
-            arr = np.array([int(f * 255.0) for f in feat], dtype=np.int64)
-        else:
-            w, h, arr = _raw_samples(content)
+        w, h, arr = _raw_samples(content)
         n = int(arr.size)
         total = int(arr.sum())
         out = 0
@@ -475,7 +471,7 @@ def png_encode(px_rows, filters, channels: int = 3) -> bytes:
     )
 
 
-def _fake_decode(content: bytes, dim: int = 8) -> tuple[int, int, list[float]]:
+def _fake_decode(content: bytes) -> tuple[int, int, list[float]]:
     """Deterministic stand-in: 'dimensions' and 'features' derived from
     content bytes — stable across runs/partitionings (crc32, not Python
     hash(), which is salted per process)."""
@@ -483,11 +479,11 @@ def _fake_decode(content: bytes, dim: int = 8) -> tuple[int, int, list[float]]:
 
     h = zlib.crc32(bytes(content[:64])) & 0x7FFFFFFF
     width, height = 16 + h % 1024, 16 + (h >> 10) % 1024
-    feat = [((h >> (i % 24)) & 0xFF) / 255.0 for i in range(dim)]
+    feat = [((h >> (i % 24)) & 0xFF) / 255.0 for i in range(FEATURE_DIM)]
     return width, height, feat
 
 
-def _fake_decode_md5(content: bytes, dim: int = 8) -> tuple[int, int, list[float]]:
+def _fake_decode_md5(content: bytes) -> tuple[int, int, list[float]]:
     """Portable twin of :func:`_fake_decode`: same (width, height, feature)
     derivation but seeded by md5 over the UPPERCASE HEX of the first 64
     payload bytes instead of crc32, because DuckDB 1.0 ships ``md5(VARCHAR)``
@@ -501,12 +497,12 @@ def _fake_decode_md5(content: bytes, dim: int = 8) -> tuple[int, int, list[float
     hx = bytes(content[:64]).hex().upper()
     h = int(hashlib.md5(hx.encode()).hexdigest()[:8], 16) & 0x7FFFFFFF
     width, height = 16 + h % 1024, 16 + (h >> 10) % 1024
-    feat = [((h >> (i % 24)) & 0xFF) / 255.0 for i in range(dim)]
+    feat = [((h >> (i % 24)) & 0xFF) / 255.0 for i in range(FEATURE_DIM)]
     return width, height, feat
 
 
 def extract_features(
-    media: DataFrame, fake: bool = False, dim: int = 8, portable: bool = False
+    media: DataFrame, fake: bool = False, portable: bool = False
 ) -> DataFrame:
     """Decode + featurize media rows via Arrow-batched mapInPandas.
 
@@ -533,7 +529,7 @@ def extract_features(
             }
             for content in pdf["content"]:
                 try:
-                    w, h, feat = decoder(content, dim)
+                    w, h, feat = decoder(content)
                     out["width"].append(w)
                     out["height"].append(h)
                     out["feature"].append(feat)
@@ -1281,9 +1277,10 @@ def _decode_gif_frames(content: bytes, frame_filter=None):
     return cw, ch_, frames
 
 
-def gif_encode(frames, palette, width: int, height: int, delays=None) -> bytes:
+def gif_encode(frames, palette, width: int, height: int) -> bytes:
     """Synthesize a real GIF89a: full-canvas frames of palette indices,
-    one global color table, per-frame GCE (disposal=1) when animated.
+    one global color table, per-frame GCE (disposal=1, 40 ms delay) when
+    animated.
     Exists for the decode gates and tests — the encoder/decoder pair
     round-trips bit-exactly (test-pinned), so the SQL oracle can score
     the decode from the raw pre-compression indices."""
@@ -1298,10 +1295,9 @@ def gif_encode(frames, palette, width: int, height: int, delays=None) -> bytes:
     out += struct.pack("<HHBBB", width, height, 0x80 | ((mcs - 1) << 4) | (mcs - 1), 0, 0)
     out += pal
     animated = len(frames) > 1
-    for fi, fr in enumerate(frames):
+    for fr in frames:
         if animated:
-            delay = (delays[fi] if delays else 4) & 0xFFFF
-            out += struct.pack("<BBBBHBB", 0x21, 0xF9, 4, 0x04, delay, 0, 0)
+            out += struct.pack("<BBBBHBB", 0x21, 0xF9, 4, 0x04, 4, 0, 0)
         out += struct.pack("<BHHHHB", 0x2C, 0, 0, width, height, 0)
         flat = [int(v) for row in fr for v in row]
         if any(v < 0 or v >= ncol for v in flat):
@@ -1396,10 +1392,10 @@ def _decode_avi_frames(content: bytes):
     return width, height, frames
 
 
-def avi_encode(frames, width: int, height: int, fps: int = 10) -> bytes:
-    """Synthesize a minimal uncompressed AVI (RIFF/hdrl/strl/movi, 24-bit
-    BI_RGB '00db' frames, bottom-up BGR, stride padded to 4). Exists for
-    the decode gates and tests; round-trips bit-exactly with
+def avi_encode(frames, width: int, height: int) -> bytes:
+    """Synthesize a minimal 10 fps uncompressed AVI (RIFF/hdrl/strl/movi,
+    24-bit BI_RGB '00db' frames, bottom-up BGR, stride padded to 4).
+    Exists for the decode gates and tests; round-trips bit-exactly with
     _decode_avi_frames (test-pinned)."""
     import struct
 
@@ -1415,11 +1411,11 @@ def avi_encode(frames, width: int, height: int, fps: int = 10) -> bytes:
 
     avih = struct.pack(
         "<14I",
-        1000000 // fps, stride * height * fps, 0, 0,
+        1000000 // 10, stride * height * 10, 0, 0,
         len(frames), 0, 1, stride * height, width, height, 0, 0, 0, 0,
     )
     strh = (
-        b"vids" + b"DIB " + struct.pack("<IHHIIIIIIIII", 0, 0, 0, 0, 1, fps, 0, len(frames), stride * height, 0, 0, 0)
+        b"vids" + b"DIB " + struct.pack("<IHHIIIIIIIII", 0, 0, 0, 0, 1, 10, 0, len(frames), stride * height, 0, 0, 0)
         + struct.pack("<4H", 0, 0, width, height)
     )
     strf = struct.pack("<IiiHHIIiiII", 40, width, height, 1, 24, 0, stride * height, 0, 0, 0, 0)

@@ -202,7 +202,6 @@ def grouped_exact_quantiles(
     group_col: str,
     value_col: str,
     qs: list[float],
-    num_ranges: int = 32,
     round_digits: int | None = 6,
     broadcast_groups: bool = True,
 ) -> DataFrame:
@@ -215,7 +214,7 @@ def grouped_exact_quantiles(
     for 5 event types, fatal when a group is 10% of 100 TB).
 
     Mechanism (the _exact_ntile pattern, per group): values are bucketed
-    by GLOBAL approxQuantile boundaries (data-derived literals — they
+    by 31 GLOBAL approxQuantile boundaries (32 ranges; data-derived literals — they
     only steer parallelism), row_number runs per (group, bucket), and
     per-(group, bucket) counts — one row per group x bucket, a relation
     the per-group offset window can rank in bounded time — shift local
@@ -262,7 +261,7 @@ def grouped_exact_quantiles(
     cuts = sorted(
         set(
             vals.approxQuantile(
-                "__v", [i / num_ranges for i in range(1, num_ranges)], 0.01
+                "__v", [i / 32 for i in range(1, 32)], 0.01
             )
         )
     )
@@ -282,7 +281,7 @@ def grouped_exact_quantiles(
     wl = Window.partitionBy("__g", "__b").orderBy("__v")
     if broadcast_groups:
         # Bounded-group fast path: the (group, bucket) count table is
-        # <= groups x num_ranges rows by contract, so collect it ONCE
+        # <= groups x 32 rows by contract, so collect it ONCE
         # and derive the offset and order-statistic target relations
         # driver-side as literal broadcasts. Without this, each
         # broadcast subtree (offsets, lo, hi) re-executes the base
@@ -335,7 +334,7 @@ def grouped_exact_quantiles(
                 # probe needs no offset relation and, crucially, the
                 # rank window below runs only over buckets that contain
                 # a requested statistic (a broadcast semi-join drops the
-                # rest at the scan): the sort shuffles ~2*qs/num_ranges
+                # rest at the scan): the sort shuffles ~2*qs/32
                 # of the rows instead of all of them.
                 for pos1, role in (
                     (lo_i + 1, "lo"),
@@ -376,7 +375,7 @@ def grouped_exact_quantiles(
         bcounts = bucketed.groupBy("__g", "__b").agg(
             F.count(F.lit(1)).alias("__c")
         )
-        # per-group exclusive prefix over <= num_ranges bucket rows per group
+        # per-group exclusive prefix over <= 32 bucket rows per group
         wo = (
             Window.partitionBy("__g")
             .orderBy("__b")

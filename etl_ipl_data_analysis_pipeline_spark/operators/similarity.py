@@ -191,25 +191,27 @@ def embedding_dim_covariance_jl(
     return embedding_dim_covariance(arr, vec_col)
 
 
+RRF_K = 60  # Cormack et al.'s constant
+
+
 def rrf_fuse(
     sparse: DataFrame,
     dense: DataFrame,
     k: int = 5,
-    rrf_k: int = 60,
     query_col: str = "query_id",
     id_col: str = "doc_id",
     rank_col: str = "rnk",
 ) -> DataFrame:
     """Reciprocal-rank fusion of two retrieval lists — the standard
     hybrid-retrieval combiner (Cormack et al., SIGIR'09): each candidate
-    scores sum(1 / (rrf_k + rank)) over the lists that retrieved it, so
+    scores sum(1 / (RRF_K + rank)) over the lists that retrieved it, so
     agreement between lexical (BM25) and dense (ANN) rankers dominates
     either ranker's absolute scores, and no score calibration between
     incomparable scales is needed.
 
     Inputs are (query, id, rank) relations (rank 1-based, as
     bm25_batch_topk and the top-k searchers emit). The fusion is pure
-    rank arithmetic: 1/(rrf_k + r) is one IEEE division of exact
+    rank arithmetic: 1/(RRF_K + r) is one IEEE division of exact
     integers and the two-list sum is a single commutative add, so the
     result is bit-identical across engines and the whole hybrid sits
     under the exact oracle gate of its two inputs for free.
@@ -226,8 +228,8 @@ def rrf_fuse(
     )
     fused = sp.join(dn, [query_col, id_col], "full_outer")
     rrf = F.coalesce(
-        F.lit(1.0) / (F.lit(rrf_k) + F.col("__rs")), F.lit(0.0)
-    ) + F.coalesce(F.lit(1.0) / (F.lit(rrf_k) + F.col("__rd")), F.lit(0.0))
+        F.lit(1.0) / (F.lit(RRF_K) + F.col("__rs")), F.lit(0.0)
+    ) + F.coalesce(F.lit(1.0) / (F.lit(RRF_K) + F.col("__rd")), F.lit(0.0))
     w = Window.partitionBy(query_col).orderBy(
         F.desc("__rrf"), F.asc(id_col)
     )
@@ -291,24 +293,22 @@ def ivf_topk(
     corpus: DataFrame,
     probes: DataFrame,
     k: int = 5,
-    n_centroids: int = 16,
-    nprobe: int = 4,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     probe_id_col: str = "query_id",
-    seed: int = 42,
     iters: int = 2,
 ) -> DataFrame:
-    """Approximate top-k via an inverted file (IVF) index.
+    """Approximate top-k via an inverted file (IVF) index over 16
+    k-means cells, searching the 4 nearest cells per probe.
 
     Build: spherical k-means centroids (:func:`kmeans_centroids`, a real
     Lloyd refinement — not a raw sample), then assign every corpus vector
     to its nearest centroid with one Arrow-vectorized matmul pass. Search:
-    route each probe to its ``nprobe`` nearest centroids (same UDF,
+    route each probe to its 4 nearest centroids (same UDF,
     argsort) and score only those cells. Corpus work drops by
-    ~n_centroids/nprobe. An earlier version assigned via
+    ~16/4. An earlier version assigned via
     crossJoin(centroids) + per-vector row_number window — that shuffles
-    n_centroids× the corpus; the matmul pass is narrow (no shuffle at all).
+    16× the corpus; the matmul pass is narrow (no shuffle at all).
 
     The cell id is also the partitioning key, so each cell's vectors
     co-locate — at 100 TB write the corpus bucketed by cell id
@@ -318,9 +318,9 @@ def ivf_topk(
         F.col(id_col).alias("vec_id"),
         _as_double_array(F.col(vec_col)).alias("__cvec"),
     )
-    cents = kmeans_centroids(corpus, n_centroids, iters, id_col, vec_col, seed)
+    cents = kmeans_centroids(corpus, 16, iters, id_col, vec_col)
     cn = _normalize_rows(cents)
-    nearest_cells = _cell_router(cn, nprobe, pin_single_eval=True)
+    nearest_cells = _cell_router(cn, 4, pin_single_eval=True)
 
     assigned = c.withColumn("cell", F.element_at(nearest_cells("__cvec"), 1))
     p = probes.select(
@@ -338,23 +338,23 @@ def ivf_topk(
     return topk_per_query(scored, k)
 
 
-def random_hyperplane_bucket(vec_col, n_planes: int = 16, dim: int = 64, seed: int = 42):
-    """Cosine-LSH bucket id: sign pattern of <v, h_j> for ``n_planes``
-    deterministic pseudo-random hyperplanes.
+def random_hyperplane_bucket(vec_col):
+    """Cosine-LSH bucket id of a 64-dim vector: sign pattern of <v, h_j>
+    for 16 deterministic pseudo-random hyperplanes (seed 42).
 
     The plane weights are generated ONCE at plan-build time with a seeded
     PRNG and embedded as literals — an earlier version derived each weight
     from xxhash64 inside the zip_with lambda, which re-hashed dim×n_planes
     constants per ROW (higher-order functions run interpreted, nothing is
     hoisted), measured ~10× slower at sf0.1. Same reproducibility: the
-    weights are a pure function of (seed, plane, index)."""
+    weights are a pure function of (plane, index)."""
     import random
 
     v = F.col(vec_col) if isinstance(vec_col, str) else vec_col
     bits = []
-    for j in range(n_planes):
-        rng = random.Random(seed * 100003 + j)
-        weights = F.array(*[F.lit(rng.uniform(-0.5, 0.5)) for _ in range(dim)])
+    for j in range(16):
+        rng = random.Random(42 * 100003 + j)
+        weights = F.array(*[F.lit(rng.uniform(-0.5, 0.5)) for _ in range(64)])
         dot_j = F.aggregate(
             F.zip_with(v, weights, lambda x, w: x * w),
             F.lit(0.0),
@@ -372,19 +372,17 @@ def lsh_topk(
     probes: DataFrame,
     k: int = 5,
     n_planes: int = 12,
-    dim: int = 64,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     probe_id_col: str = "query_id",
-    seed: int = 42,
 ) -> DataFrame:
     """Approximate top-k: only corpus vectors in the probe's LSH bucket are
     scored. Bucket id is an equi-join key, so the plan is a plain hash join —
     the O(n²) pair space never materializes."""
     # same PRNG stream as random_hyperplane_bucket (n_tables=1 → table 0
-    # uses `seed` directly), but one Arrow matmul instead of n_planes
+    # uses seed 42 directly), but one Arrow matmul instead of n_planes
     # interpreted aggregate passes per row
-    bucket_udf = multi_table_buckets_udf(n_planes, 1, dim, seed)
+    bucket_udf = multi_table_buckets_udf(n_planes, 1)
     c = corpus.select(
         F.col(id_col).alias("vec_id"),
         _as_double_array(F.col(vec_col)).alias("__cvec"),
@@ -403,7 +401,9 @@ def lsh_topk(
 
 def _plane_matrix(n_planes: int, dim: int, seed: int):
     """dim × n_planes hyperplane weights — same PRNG stream as
-    random_hyperplane_bucket, so both implementations bucket identically."""
+    random_hyperplane_bucket, so both implementations bucket identically.
+    Each plane is one PRNG stream, so the matrix for a smaller ``dim`` is
+    the leading rows of the matrix for a larger one."""
     import random
 
     import numpy as np
@@ -415,25 +415,31 @@ def _plane_matrix(n_planes: int, dim: int, seed: int):
     return np.array(cols).T
 
 
-def multi_table_buckets_udf(n_planes: int, n_tables: int, dim: int, seed: int):
+def multi_table_buckets_udf(n_planes: int, n_tables: int):
     """Arrow-vectorized bucket assignment: ONE numpy matmul computes all
     n_tables × n_planes hyperplane dots per batch, vs n_tables × n_planes
     interpreted aggregate-over-zip_with passes per row in the expression
     form (higher-order functions have no codegen). For 8 tables × 12 planes
     the matmul path is the difference between touching each vector element
-    96 times in the interpreter and once in BLAS."""
+    96 times in the interpreter and once in BLAS. Table t uses seed
+    42 + 7919·t; the weight matrix is sized from the batch's vector
+    width, so the caller never states the dimension."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.types import ArrayType, LongType
 
-    mats = np.concatenate(
-        [_plane_matrix(n_planes, dim, seed + 7919 * t) for t in range(n_tables)], axis=1
-    )  # dim × (n_tables · n_planes)
     powers = 2 ** np.arange(n_planes, dtype=np.int64)
+    mats = {}  # dim -> dim × (n_tables · n_planes), built once per worker
 
     def _buckets(vs):
         x = np.stack(vs.to_numpy())  # batch × dim
-        bits = (x @ mats) > 0  # batch × (T·P)
+        dim = x.shape[1]
+        if dim not in mats:
+            mats[dim] = np.concatenate(
+                [_plane_matrix(n_planes, dim, 42 + 7919 * t) for t in range(n_tables)],
+                axis=1,
+            )
+        bits = (x @ mats[dim]) > 0  # batch × (T·P)
         ids = (bits.reshape(len(x), n_tables, n_planes) * powers).sum(axis=2)
         return pd.Series(list(ids))
 
@@ -454,11 +460,9 @@ def lsh_topk_exact(
     probes: DataFrame,
     k: int = 5,
     n_planes: int = 12,
-    dim: int = 64,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     probe_id_col: str = "query_id",
-    seed: int = 42,
 ) -> DataFrame:
     """lsh_topk's cross-engine EXACT twin (the kmeans_exact treatment):
     same hyperplanes (:func:`_plane_matrix`, plan-time literals), but the
@@ -473,13 +477,17 @@ def lsh_topk_exact(
     plane) dot, then per vec bucket) — O(n·planes) rows shuffled, no
     UDF, no numpy. The matmul path (:func:`lsh_topk`) stays the
     throughput default; this is the auditable one.
+
+    The weight relation covers positions 1..64; a shorter vector joins
+    its leading rows, which are exactly the narrower matrix
+    (:func:`_plane_matrix`), so it buckets as :func:`lsh_topk` does.
     """
     spark = corpus.sparkSession
-    mat = _plane_matrix(n_planes, dim, seed)
+    mat = _plane_matrix(n_planes, 64, 42)
     wdf = spark.createDataFrame(
         [
             (i + 1, j, float(mat[i, j]))
-            for i in range(dim)
+            for i in range(64)
             for j in range(n_planes)
         ],
         "pos int, plane int, w double",
@@ -530,28 +538,24 @@ def lsh_topk_exact(
 def embedding_near_dup_pairs(
     df: DataFrame,
     min_sim: float = 0.95,
-    n_planes: int = 12,
-    n_tables: int = 8,
-    dim: int = 64,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    seed: int = 42,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (X2 embedding variant):
     multi-table LSH self-join, then exact cosine filter. Returns
     (id_a, id_b, sim), a<b.
 
-    A single 10-plane table has ~20% recall at sim 0.9; OR-ing ``n_tables``
+    A single 10-plane table has ~20% recall at sim 0.9; OR-ing 8
     independent tables (different seeds) raises it to 1-(1-p)^T — ~93% at
     sim 0.95 with 12 planes × 8 tables, while random pairs still collide at
     only ~T/2^n_planes ≈ 0.2%, keeping the self-join far from O(n²).
 
-    A true near-dup pair collides in MOST of the ``n_tables`` buckets
+    A true near-dup pair collides in MOST of the 8 buckets
     (high-sim vectors agree in nearly every table); each pair survives
     only in its first agreeing table (:func:`dedup.band_join`), decided
     inside the join stage before the cosine: one cosine per pair, no
     pair-dedup exchange at all."""
-    c = embedding_sig_index(df, n_planes, n_tables, dim, id_col, vec_col, seed)
+    c = embedding_sig_index(df, id_col, vec_col)
     return _embedding_band_join(c, c, id_col, min_sim)
 
 
@@ -591,16 +595,12 @@ def _embedding_band_join(
 
 def embedding_sig_index(
     df: DataFrame,
-    n_planes: int = 12,
-    n_tables: int = 8,
-    dim: int = 64,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    seed: int = 42,
 ) -> DataFrame:
     """Per-vector hyperplane-LSH STATE, one row per id: (id, __vec,
     __norm, __bkts) — the vector as doubles, its norm computed once,
-    and the n_tables bucket ids. This is the embedding twin of
+    and its bucket ids in 8 tables of 12 hyperplanes. This is the embedding twin of
     dedup.minhash_sig_index: PERSIST it (O(corpus) rows, unexploded)
     and later batches pair against it via
     :func:`embedding_incremental_pairs` without re-bucketing old
@@ -611,7 +611,7 @@ def embedding_sig_index(
     construction."""
     from ..functions import norm
 
-    bucket_udf = multi_table_buckets_udf(n_planes, n_tables, dim, seed)
+    bucket_udf = multi_table_buckets_udf(12, 8)
     return df.select(
         F.col(id_col),
         _as_double_array(F.col(vec_col)).alias("__vec"),
@@ -627,12 +627,8 @@ def embedding_incremental_pairs(
     new_df: DataFrame,
     index: DataFrame,
     min_sim: float = 0.95,
-    n_planes: int = 12,
-    n_tables: int = 8,
-    dim: int = 64,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    seed: int = 42,
 ) -> DataFrame:
     """NEW-vs-INDEXED embedding near-dup pairs: bucket only the incoming
     batch (the index rows carry their build-time __bkts verbatim), join
@@ -648,9 +644,7 @@ def embedding_incremental_pairs(
     O(batch) bucketing + a join sized by the batch's true collisions,
     never O(history) re-hashing. Contract: new ids are disjoint from
     indexed ids (the ledger's dedup job, as for minhash)."""
-    new_sigs = embedding_sig_index(
-        new_df, n_planes, n_tables, dim, id_col, vec_col, seed
-    )
+    new_sigs = embedding_sig_index(new_df, id_col, vec_col)
     return _embedding_band_join(
         new_sigs, index, id_col, min_sim, ("new_id", "old_id"), operator.ne
     )
@@ -670,8 +664,6 @@ def kmeans_centroids(
     iters: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    seed: int = 42,
-    dim: int | None = None,
 ):
     """Spherical k-means centroids as a k×dim numpy array (driver-side
     model, like MLlib's): hash-ordered deterministic init, then ``iters``
@@ -690,19 +682,16 @@ def kmeans_centroids(
         F.col(id_col).alias("vec_id"), _as_double_array(F.col(vec_col)).alias("__vec")
     )
     init = (
-        c.orderBy(F.xxhash64(F.col("vec_id") + F.lit(seed)))
+        c.orderBy(F.xxhash64(F.col("vec_id") + F.lit(42)))
         .limit(k)
         .orderBy("vec_id")
         .collect()
     )
     if not init:
-        # Empty corpus: return a 0×dim model when the caller passed ``dim``
-        # (Spark array schemas carry no fixed width to probe), so
-        # `vecs @ cents.T` still shape-checks for any later assignment
-        # batch (a 0×0 model would raise on non-empty input). Without
-        # ``dim`` the model is 0×0 and MUST NOT be used for assignment —
-        # only for "index is empty" branches.
-        return np.zeros((0, dim if dim else 0))
+        # Empty corpus: a 0×0 model (Spark array schemas carry no fixed
+        # width to probe). It MUST NOT be used for assignment — only for
+        # "index is empty" branches.
+        return np.zeros((0, 0))
     k = min(k, len(init))  # corpus smaller than k: one centroid per vector
     cents = _normalize_rows(np.array([r["__vec"] for r in init]))
 
@@ -801,11 +790,13 @@ def kmeans_exact(
     )
 
 
+IVF_CENTROIDS = 16  # ivf_topk_exact's k-means cells
+
+
 def ivf_topk_exact(
     corpus: DataFrame,
     probes: DataFrame,
     k: int = 5,
-    n_centroids: int = 16,
     nprobe: int = 4,
     iters: int = 2,
     id_col: str = "vec_id",
@@ -828,7 +819,7 @@ def ivf_topk_exact(
     relation, distance terms combine map-side to n·k rows, argmin
     windows partition by vector id — O(n·k) compute, no collect.
     """
-    cents = kmeans_exact(corpus, k=n_centroids, iters=iters, id_col=id_col, vec_col=vec_col)
+    cents = kmeans_exact(corpus, k=IVF_CENTROIDS, iters=iters, id_col=id_col, vec_col=vec_col)
     cm = cents.select("cid", "pos", F.col("centroid").alias("c"))
     # the SAME _keyed_corpus subtree kmeans_exact builds internally —
     # ReuseExchange serves the assignment pass and the vector back-join
@@ -899,13 +890,10 @@ def _cell_router(cn, nprobe: int, pin_single_eval: bool = False):
 def ivf_build_index(
     corpus: DataFrame,
     path: str,
-    n_centroids: int = 16,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    seed: int = 42,
-    iters: int = 2,
 ) -> None:
-    """Persist an IVF index: the production ANN lifecycle, where the
+    """Persist an IVF index of 16 cells (2 Lloyd rounds, seed 42): the production ANN lifecycle, where the
     k-means build is paid ONCE and amortized over every later search.
 
     Layout on disk:
@@ -919,15 +907,15 @@ def ivf_build_index(
       all of it).
 
     Determinism: the seeded k-means model and md5-free argmax assignment
-    make the whole index a pure function of (corpus, params) — the
+    make the whole index a pure function of the corpus — the
     persisted searcher below returns row-identical results to the
-    in-memory ivf_topk for the same parameters, which the tests assert.
+    in-memory ivf_topk, which the tests assert.
     """
     c = corpus.select(
         F.col(id_col).alias("vec_id"),
         _as_double_array(F.col(vec_col)).alias("embedding"),
     )
-    cents = kmeans_centroids(corpus, n_centroids, iters, id_col, vec_col, seed)
+    cents = kmeans_centroids(corpus, 16, 2, id_col, vec_col)
     cn = _normalize_rows(cents)
     spark = corpus.sparkSession
     cent_df = spark.createDataFrame(
@@ -951,13 +939,12 @@ def ivf_search_index(
     path: str,
     probes: DataFrame,
     k: int = 5,
-    nprobe: int = 4,
     probe_id_col: str = "query_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Search a persisted IVF index (ivf_build_index): load the k-row
     centroid model (bounded driver collect, like the in-memory path),
-    route each probe to its nprobe cells, and score ONLY those cells'
+    route each probe to its 4 nearest cells, and score ONLY those cells'
     partitions — the broadcast join on the partition column lets Spark
     prune the unrouted inverted lists at the scan. Same output contract
     as ivf_topk: (query_id, vec_id, sim) top-k per query, self excluded."""
@@ -970,7 +957,7 @@ def ivf_search_index(
         _as_double_array(F.col(vec_col)).alias("__pvec"),
     )
     routed = p.select(
-        "query_id", "__pvec", F.explode(_cell_router(cn, nprobe)("__pvec")).alias("cell")
+        "query_id", "__pvec", F.explode(_cell_router(cn, 4)("__pvec")).alias("cell")
     )
     vectors = spark.read.parquet(path + "/vectors").select(
         "vec_id", F.col("embedding").alias("__cvec"), "cell"
@@ -1429,20 +1416,21 @@ def pq_model_exact(
     return codes, cm
 
 
+# The PQ index shape: PQ_M subspaces of PQ_SUB_DIM dims, PQ_K centroids
+# each, PQ_ITERS Lloyd rounds.
+PQ_M, PQ_SUB_DIM, PQ_K, PQ_ITERS = 4, 16, 8, 2
+
+
 def pq_topk_exact(
     corpus: DataFrame,
     probes: DataFrame,
     k: int = 5,
-    m: int = 4,
-    sub_dim: int = 16,
-    k_codebook: int = 8,
-    iters: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     probe_id_col: str = "query_id",
 ) -> DataFrame:
-    """Asymmetric-distance (ADC) top-k search over PQ codes: per probe,
-    precompute the m x k table of exact decimal squared distances from
+    """Asymmetric-distance (ADC) top-k search over PQ codes of the
+    module's PQ shape (``PQ_M`` ...): per probe, precompute the m x k table of exact decimal squared distances from
     each probe subvector to each codebook centroid, then score every
     corpus vector as the SUM of its m table lookups — the corpus is
     touched only through its (vec_id, subspace, code) rows; the raw
@@ -1458,11 +1446,11 @@ def pq_topk_exact(
     corpus vector partial-aggregated map-side to one; the top-k merge is
     the skew-free two-phase topk_per_query."""
     codes, cents = pq_model_exact(
-        corpus, m=m, sub_dim=sub_dim, k=k_codebook, iters=iters,
+        corpus, m=PQ_M, sub_dim=PQ_SUB_DIM, k=PQ_K, iters=PQ_ITERS,
         id_col=id_col, vec_col=vec_col,
     )
     return _pq_adc_search(
-        codes, cents, probes, k=k, m=m, sub_dim=sub_dim,
+        codes, cents, probes, k=k, m=PQ_M, sub_dim=PQ_SUB_DIM,
         vec_col=vec_col, probe_id_col=probe_id_col,
     )
 
@@ -1521,14 +1509,10 @@ def _pq_adc_search(
 def pq_build_index(
     corpus: DataFrame,
     path: str,
-    m: int = 4,
-    sub_dim: int = 16,
-    k: int = 8,
-    iters: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> None:
-    """Persist a PQ index — the compressed-domain twin of
+    """Persist a PQ index of the module's PQ shape (``PQ_M`` ...) — the compressed-domain twin of
     ivf_build_index's pay-once lifecycle. Layout on disk:
 
     - ``path/codebooks``: (subspace, cid, pos, c) — m*k*sub_dim rows,
@@ -1542,7 +1526,7 @@ def pq_build_index(
     searcher is value-identical to the in-memory pq_topk_exact — the
     tests and the driver oracle assert it."""
     codes, cents = pq_model_exact(
-        corpus, m=m, sub_dim=sub_dim, k=k, iters=iters,
+        corpus, m=PQ_M, sub_dim=PQ_SUB_DIM, k=PQ_K, iters=PQ_ITERS,
         id_col=id_col, vec_col=vec_col,
     )
     cents.coalesce(1).write.mode("overwrite").parquet(path + "/codebooks")
@@ -1565,8 +1549,6 @@ def pq_append_index(
     spark,
     path: str,
     new_corpus: DataFrame,
-    m: int = 4,
-    sub_dim: int = 16,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> None:
@@ -1586,7 +1568,7 @@ def pq_append_index(
     # subspaces would produce short/biased code rows whose artificially
     # small ADC sums corrupt every subsequent search ranking.
     new_corpus = new_corpus.filter(
-        F.size(_as_double_array(F.col(vec_col))) == m * sub_dim
+        F.size(_as_double_array(F.col(vec_col))) == PQ_M * PQ_SUB_DIM
     )
     ex = new_corpus.select(
         F.col(id_col).alias("vec_id"),
@@ -1596,8 +1578,8 @@ def pq_append_index(
         # integer div, matching pq_model_exact/_pq_adc_search exactly
         # (double division agrees for realistic dims but departs from
         # the byte-identical-codes determinism discipline)
-        F.expr(f"gpos0 div {sub_dim}").cast("int").alias("subspace"),
-        (F.col("gpos0") % F.lit(sub_dim) + 1).alias("pos"),
+        F.expr(f"gpos0 div {PQ_SUB_DIM}").cast("int").alias("subspace"),
+        (F.col("gpos0") % F.lit(PQ_SUB_DIM) + 1).alias("pos"),
         "v",
     )
     key = ["vec_id", "subspace"]
@@ -1624,8 +1606,6 @@ def pq_search_index(
     path: str,
     probes: DataFrame,
     k: int = 5,
-    m: int = 4,
-    sub_dim: int = 16,
     vec_col: str = "embedding",
     probe_id_col: str = "query_id",
 ) -> DataFrame:
@@ -1645,7 +1625,7 @@ def pq_search_index(
         F.posexplode("codes").alias("subspace", "code"),
     )
     return _pq_adc_search(
-        codes, cents, probes, k=k, m=m, sub_dim=sub_dim,
+        codes, cents, probes, k=k, m=PQ_M, sub_dim=PQ_SUB_DIM,
         vec_col=vec_col, probe_id_col=probe_id_col,
     )
 
@@ -1654,12 +1634,11 @@ def ivf_build_index_exact(
     corpus: DataFrame,
     path: str,
     n_centroids: int = 16,
-    iters: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> None:
     """Persist the EXACT-gated IVF index: centroids from kmeans_exact
-    (decimal-summed Lloyd rounds, 6dp-floored coordinates — fully
+    (2 decimal-summed Lloyd rounds, 6dp-floored coordinates — fully
     SQL-replayable, unlike ivf_build_index's seeded Arrow model) and the
     corpus PARTITIONED by its nearest-centroid cell. Layout:
 
@@ -1674,7 +1653,7 @@ def ivf_build_index_exact(
     ivf_topk_exact — the persisted lifecycle inherits the full exact
     oracle, not just a planted recall gate."""
     cents = kmeans_exact(
-        corpus, k=n_centroids, iters=iters, id_col=id_col, vec_col=vec_col
+        corpus, k=n_centroids, iters=2, id_col=id_col, vec_col=vec_col
     )
     cm = cents.select("cid", "pos", F.col("centroid").alias("c"))
     cm.coalesce(1).write.mode("overwrite").parquet(path.rstrip("/") + "/centroids")
@@ -1816,10 +1795,10 @@ def ivf_compact_index(spark, path: str) -> None:
     )
 
 
-def pq_compact_index(spark, path: str, num_files: int = 1) -> None:
+def pq_compact_index(spark, path: str) -> None:
     """Compact a persisted PQ index's codes table after N delta appends
     (pq_append_index): the codes are the ONLY thing a search scans, so
-    small-file buildup taxes every query. A pure coalesced rewrite
+    small-file buildup taxes every query. A pure rewrite to one file,
     landed by io.overwrite_parquet's manifest commit, after io.recover
     finishes any torn earlier one; codes are untouched integers, so
     search results are value-identical — pytest-pinned alongside the
@@ -1828,7 +1807,7 @@ def pq_compact_index(spark, path: str, num_files: int = 1) -> None:
 
     codes = path.rstrip("/") + "/codes"
     recover(spark, codes)
-    overwrite_parquet(spark.read.parquet(codes).repartition(num_files), codes)
+    overwrite_parquet(spark.read.parquet(codes).repartition(1), codes)
 
 
 def ivf_search_index_exact(

@@ -24,14 +24,12 @@ from pyspark.sql import DataFrame
 STATE_COL = "hll_state"
 
 
-def sketch_distinct(
-    df: DataFrame, keys: list[str], col: str, lg_k: int = 12
-) -> DataFrame:
+def sketch_distinct(df: DataFrame, keys: list[str], col: str) -> DataFrame:
     """Partial-aggregate one partition of history into per-key HLL state
     (lg_k=12 => 4 KiB registers, ~1.6% standard error). This is the
     write-path of the rollup: run it per batch/day, append to the summary
     table."""
-    return df.groupBy(*keys).agg(F.hll_sketch_agg(col, lg_k).alias(STATE_COL))
+    return df.groupBy(*keys).agg(F.hll_sketch_agg(col, 12).alias(STATE_COL))
 
 
 def merge_sketch_rollup(summary: DataFrame, keys: list[str]) -> DataFrame:
@@ -70,19 +68,19 @@ def _cms_bucket(item, j: int, w: int):
     return F.conv(F.substring(F.md5(s), 1, 4), 16, 10).cast("long") % w
 
 
-def cms_build(df: DataFrame, col, d: int = CMS_D, w: int = CMS_W) -> DataFrame:
-    """Build the sketch: explode each occurrence into its d cells (a narrow
+def cms_build(df: DataFrame, col) -> DataFrame:
+    """Build the sketch: explode each occurrence into its CMS_D cells (a narrow
     d-times fanout, no data movement), then one partial+final count per
-    cell. Output is at most d*w rows regardless of input size."""
+    cell. Output is at most CMS_D*CMS_W rows regardless of input size."""
     item = F.col(col) if isinstance(col, str) else col
     cells = df.select(
         F.explode(
             F.array(
                 *[
                     F.struct(
-                        F.lit(j).alias("j"), _cms_bucket(item, j, w).alias("bucket")
+                        F.lit(j).alias("j"), _cms_bucket(item, j, CMS_W).alias("bucket")
                     )
-                    for j in range(d)
+                    for j in range(CMS_D)
                 ]
             )
         ).alias("c")
@@ -102,12 +100,10 @@ def cms_merge(*sketches: DataFrame) -> DataFrame:
     return u.groupBy("j", "bucket").agg(F.sum("cnt").alias("cnt"))
 
 
-def cms_estimate(
-    sketch: DataFrame, probes: DataFrame, col, d: int = CMS_D, w: int = CMS_W
-) -> DataFrame:
-    """Point-estimate each probe item: min over its d cells (the classic
+def cms_estimate(sketch: DataFrame, probes: DataFrame, col) -> DataFrame:
+    """Point-estimate each probe item: min over its CMS_D cells (the classic
     count-min upper bound — never under the true count, over only when all
-    d buckets collide with other items). The sketch is <= d*w rows by
+    its buckets collide with other items). The sketch is <= CMS_D*CMS_W rows by
     construction, so it broadcasts; the probe side streams map-side."""
     item = F.col(col) if isinstance(col, str) else col
     ph = probes.select(
@@ -116,9 +112,9 @@ def cms_estimate(
             F.array(
                 *[
                     F.struct(
-                        F.lit(j).alias("j"), _cms_bucket(item, j, w).alias("bucket")
+                        F.lit(j).alias("j"), _cms_bucket(item, j, CMS_W).alias("bucket")
                     )
-                    for j in range(d)
+                    for j in range(CMS_D)
                 ]
             )
         ).alias("c"),
@@ -154,7 +150,7 @@ def _kmv_hash(item) -> "F.Column":
     )
 
 
-def kmv_build(df: DataFrame, col: str, keys: list[str] | None = None, k: int = KMV_K) -> DataFrame:
+def kmv_build(df: DataFrame, col: str, keys: list[str] | None = None) -> DataFrame:
     """Per-key bottom-k distinct hashes (columns: *keys, hv). The distinct
     collapses duplicates partially map-side; the bottom-k is a window
     row_number per group (k small => tiny post-shuffle state), or a global
@@ -165,16 +161,16 @@ def kmv_build(df: DataFrame, col: str, keys: list[str] | None = None, k: int = K
     keys = list(keys or [])
     h = df.select(*keys, _kmv_hash(F.col(col)).alias("hv")).distinct()
     if not keys:
-        return h.orderBy("hv").limit(k)
+        return h.orderBy("hv").limit(KMV_K)
     w = Window.partitionBy(*keys).orderBy("hv")
     return (
         h.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
+        .filter(F.col("__rn") <= KMV_K)
         .drop("__rn")
     )
 
 
-def kmv_merge(sketches_: list[DataFrame], keys: list[str] | None = None, k: int = KMV_K) -> DataFrame:
+def kmv_merge(sketches_: list[DataFrame], keys: list[str] | None = None) -> DataFrame:
     """Union partial sketches and re-take the bottom k per group — the
     result is IDENTICAL to building on the unioned raw inputs (bottom-k of
     a union is the bottom-k of the union of bottom-k's), which
@@ -188,18 +184,16 @@ def kmv_merge(sketches_: list[DataFrame], keys: list[str] | None = None, k: int 
         u = u.unionByName(s_)
     u = u.distinct()
     if not keys:
-        return u.orderBy("hv").limit(k)
+        return u.orderBy("hv").limit(KMV_K)
     w = Window.partitionBy(*keys).orderBy("hv")
     return (
         u.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
+        .filter(F.col("__rn") <= KMV_K)
         .drop("__rn")
     )
 
 
-def kmv_estimate(
-    sketch: DataFrame, keys: list[str] | None = None, k: int = KMV_K
-) -> DataFrame:
+def kmv_estimate(sketch: DataFrame, keys: list[str] | None = None) -> DataFrame:
     """Distinct estimate per group: (k-1) * H / h_(k) when the sketch is
     full, else the sketch size itself (it saw every distinct value). The
     half-up rounding is floor(x*100+0.5)/100 — NOT round() — because
@@ -210,16 +204,16 @@ def kmv_estimate(
         F.count(F.lit(1)).alias("sketch_size"), F.max("hv").alias("__mx")
     )
     raw = F.when(
-        F.col("sketch_size") < k, F.col("sketch_size").cast("double")
+        F.col("sketch_size") < KMV_K, F.col("sketch_size").cast("double")
     ).otherwise(
-        F.lit(float(k - 1)) * F.lit(KMV_MAX_H) / F.col("__mx").cast("double")
+        F.lit(float(KMV_K - 1)) * F.lit(KMV_MAX_H) / F.col("__mx").cast("double")
     )
     return agg.withColumn(
         "est_distinct", F.floor(raw * 100 + F.lit(0.5)) / 100
     ).drop("__mx")
 
 
-def kmv_intersect_estimate(a: DataFrame, b: DataFrame, k: int = KMV_K) -> DataFrame:
+def kmv_intersect_estimate(a: DataFrame, b: DataFrame) -> DataFrame:
     """Theta-style intersection estimate from two ungrouped KMV sketches
     (columns: hv) — audience overlap WITHOUT an exact distinct over
     either side, the set-algebra completion of build/merge/estimate.
@@ -242,21 +236,21 @@ def kmv_intersect_estimate(a: DataFrame, b: DataFrame, k: int = KMV_K) -> DataFr
     kmv_build.
 
     Accuracy: relative standard error ~ 1/sqrt(n_common) <= 1/sqrt(k)
-    — k=64 gives ~12% RSE (the kmv_user_overlap query shows ~30% on one
-    draw at sf0.1, within 2.5 sigma), k=1024 ~3%. Size k to the target
-    error; the state stays O(k) rows regardless of input cardinality.
+    — KMV_K=64 gives ~12% RSE (the kmv_user_overlap query shows ~30% on one
+    draw at sf0.1, within 2.5 sigma), k=1024 ~3%. The state stays O(k)
+    rows regardless of input cardinality.
     """
     max_h = 16**15  # 2^60, the _kmv_hash domain bound
     sa = a.agg(
         F.count(F.lit(1)).alias("n_a"),
         F.coalesce(
-            F.when(F.count(F.lit(1)) >= k, F.max("hv")), F.lit(max_h)
+            F.when(F.count(F.lit(1)) >= KMV_K, F.max("hv")), F.lit(max_h)
         ).alias("__ta"),
     )
     sb = b.agg(
         F.count(F.lit(1)).alias("n_b"),
         F.coalesce(
-            F.when(F.count(F.lit(1)) >= k, F.max("hv")), F.lit(max_h)
+            F.when(F.count(F.lit(1)) >= KMV_K, F.max("hv")), F.lit(max_h)
         ).alias("__tb"),
     )
     common = (

@@ -88,16 +88,16 @@ def text_quality(
 _FP_MOD = 2_147_483_647  # 2^31 - 1 (Mersenne prime)
 
 
-def doc_fingerprint(text, seed: int = 42, hash_family: str = "xx"):
+def doc_fingerprint(text, hash_family: str = "xx"):
     """Polynomial rolling hash over normalized tokens — an order-sensitive
     fingerprint (reordered text fingerprints differently, unlike a
     bag-of-words hash). fp = Σ hash(tok_i)·31^i mod (2^31-1); operands stay
     below 2^31 so products never overflow ANSI bigint arithmetic.
 
     ``hash_family="md5"`` swaps the xxhash64 token hash for the portable
-    md5-derived one (functions.portable_hash31, salted with the seed):
-    the rolling combination is already pure modular arithmetic, so the
-    fingerprint becomes an exact cross-engine function of (text, seed) —
+    md5-derived one (functions.portable_hash31, salted ":42"): the
+    rolling combination is already pure modular arithmetic, so the
+    fingerprint becomes an exact cross-engine function of the text —
     the DuckDB oracle replays Σ h_i·31^i mod p over unnested tokens with
     a recursive power table."""
     from ..functions import portable_hash31
@@ -105,9 +105,9 @@ def doc_fingerprint(text, seed: int = 42, hash_family: str = "xx"):
     toks = F.split(normalized_text(text), " ")
     mod = F.lit(_FP_MOD)
     if hash_family == "md5":
-        tok_hash = lambda t: portable_hash31(t, f":{seed}")  # noqa: E731
+        tok_hash = lambda t: portable_hash31(t, ":42")  # noqa: E731
     else:
-        tok_hash = lambda t: F.pmod(F.xxhash64(t, F.lit(seed)), mod)  # noqa: E731
+        tok_hash = lambda t: F.pmod(F.xxhash64(t, F.lit(42)), mod)  # noqa: E731
     return F.aggregate(
         toks,
         F.struct(F.lit(0).cast("long").alias("h"), F.lit(1).cast("long").alias("p")),
@@ -977,12 +977,15 @@ def bm25_term_bucket_py(term: str, num_buckets: int) -> int:
     return int(hashlib.md5(term.encode()).hexdigest()[:15], 16) % num_buckets
 
 
+BM25_BUCKETS = 64  # term-hash partitions of a persisted BM25 index
+
+
 def bm25_build_index(
     df: DataFrame,
     path: str,
     id_col: str = "doc_id",
     text_col: str = "text",
-    num_buckets: int = 64,
+    num_buckets: int = BM25_BUCKETS,
 ) -> None:
     """Persist the FULL BM25 inverted index — the index-once / query-many
     retrieval lifecycle (the persisted-IVF pattern applied to lexical
@@ -1075,12 +1078,12 @@ def bm25_search_index(
     id_col: str = "doc_id",
     query_id_col: str = "query_id",
     term_col: str = "term",
-    num_buckets: int = 64,
 ) -> DataFrame:
-    """Search a persisted BM25 index (bm25_build_index) for a batch of
-    queries WITHOUT touching the corpus: the query terms' buckets are
-    computed driver-side (bm25_term_bucket_py) and pushed as literal
-    partition filters, so only ~|terms|/num_buckets of the postings and
+    """Search a persisted BM25 index (bm25_build_index, BM25_BUCKETS
+    buckets) for a batch of queries WITHOUT touching the corpus: the
+    query terms' buckets are computed driver-side (bm25_term_bucket_py)
+    and pushed as literal partition filters, so only
+    ~|terms|/BM25_BUCKETS of the postings and
     df partitions are read; scoring is the shared _bm25_rank tail on the
     loaded integer tables — value-identical to scoring a fresh build,
     hence to the batch oracle. Returns (query_id, id_col, score, rnk)."""
@@ -1088,7 +1091,7 @@ def bm25_search_index(
         F.col(query_id_col).alias("query_id"), F.col(term_col).alias("term")
     ).distinct()
     terms = sorted({r["term"] for r in qt.select("term").distinct().collect()})
-    buckets = sorted({bm25_term_bucket_py(t, num_buckets) for t in terms})
+    buckets = sorted({bm25_term_bucket_py(t, BM25_BUCKETS) for t in terms})
     base = path.rstrip("/")
     prune = F.col("term_bucket").isin(buckets) & F.col("term").isin(terms)
     tf = spark.read.parquet(base + "/postings").filter(prune).drop("term_bucket")
@@ -1249,19 +1252,18 @@ def bm25_merge_indexes(
     path_a: str,
     path_b: str,
     out_path: str,
-    num_buckets: int = 64,
 ) -> None:
     """Merge two persisted BM25 indexes over DISJOINT corpora (crawl N +
     batch N+1) WITHOUT touching any text — see
     :func:`bm25_merge_many`, of which this is the 2-ary case."""
-    bm25_merge_many(spark, [path_a, path_b], out_path, num_buckets)
+    bm25_merge_many(spark, [path_a, path_b], out_path)
 
 
 def bm25_merge_many(
     spark,
     paths: list[str],
     out_path: str,
-    num_buckets: int = 64,
+    num_buckets: int = BM25_BUCKETS,
 ) -> None:
     """Compact N >= 2 persisted BM25 indexes over DISJOINT corpora into
     one, WITHOUT touching any text — the daily-cadence maintenance

@@ -103,7 +103,7 @@ def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     cannot hash raw float-array cells."""
     media = _media_from_documents(spark, sf_dir)
     tagged = multimodal.attach_metadata(media.drop("doc_id"))
-    feats = multimodal.extract_features(tagged, fake=True, dim=8, portable=True)
+    feats = multimodal.extract_features(tagged, fake=True, portable=True)
     ids = media.select(
         F.xxhash64("path").alias("media_id"), F.col("doc_id")
     )

@@ -19,17 +19,17 @@ from . import load, register
 PLANTED_OFFSET = 100000
 
 
-def _planted_domain_guard(id_col: str, offset: int = PLANTED_OFFSET):
+def _planted_domain_guard(id_col: str):
     """Zero-valued guard term for planted-duplicate constructions: adds 0
     to the offset id, but RAISES at runtime if the fixture id has grown
-    into the planted domain (id >= offset). Both engines mirror the
+    into the planted domain (id >= PLANTED_OFFSET). Both engines mirror the
     planting, so a collision would silently degrade the "originals
     survive, mirrors dropped" property without ever failing the hash gate
     — this converts that silent degradation into a loud error wherever
     the query runs (driver gate included, not just pytest). Folding the
     assert into the arithmetic keeps Catalyst from pruning it as an
     unused column."""
-    ok = F.col(id_col) < F.lit(offset)
+    ok = F.col(id_col) < F.lit(PLANTED_OFFSET)
     msg = F.lit(f"planted {id_col} offset collides with fixture ids")
     return F.coalesce(F.assert_true(ok, msg).cast("bigint"), F.lit(0))
 
@@ -140,13 +140,13 @@ def _minhash_sig_cte(num_hashes: int = 32, bands: int = 8, seed: int = 42,
     )"""
 
 
-def _minhash_pairs_cte(min_jaccard: float, num_hashes: int = 32, bands: int = 8,
-                       seed: int = 42) -> str:
+def _minhash_pairs_cte(min_jaccard: float) -> str:
     """WITH-clause body computing the portable MinHash-LSH pair set
     (mhpairs: id_a, id_b, est_jaccard) — the exact oracle twin of
     dedup.minhash_near_dup_pairs(hash_family='md5'): same universal-hash
     constants (interpolated literals from the same seeded stream), same
     banding, band equality on the comma-joined VALUE string."""
+    num_hashes, bands, seed = 32, 8, 42  # the oracle's own literals
     return _minhash_sig_cte(num_hashes, bands, seed) + f""", cand AS (
       SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
       FROM band a JOIN band b
@@ -206,12 +206,13 @@ def dedup_minhash_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _simhash_oracle(seed: int = 42, bits: int = 60) -> str:
+def _simhash_oracle() -> str:
     """Oracle twin of dedup.simhash_fingerprints(hash_family='md5'):
     per-token portable 60-bit hash, one ±1 sum per bit, fingerprint
     assembled by adding the disjoint bit masks (OR of disjoint bits ==
     integer addition). Bits 60-63 are structurally 0 (the 15-hex-char
     hash has no entropy there), so only 60 sums are emitted."""
+    seed, bits = 42, 60  # the oracle's own literals
     sums = ", ".join(
         f"sum(CASE WHEN (h >> {i}) & 1 = 1 THEN 1 ELSE -1 END) AS b{i}"
         for i in range(bits)
@@ -3257,14 +3258,15 @@ def _bpe_train_ctes(n_merges: int = 8, top_words: int = 2000) -> list[str]:
     return ctes
 
 
-def _bpe_oracle_sql(n_merges: int = 8, top_words: int = 2000) -> str:
+def _bpe_oracle_sql() -> str:
     """Unrolled-round DuckDB twin of operators/textstats.bpe_train — the
     kmeans_clusters_exact pattern (iterative training as chained CTEs).
     Each round: freq-weighted adjacent-pair counts over the current
     symbol strings, argmax (count desc, pair asc), then the same TWO-PASS
     padded replace the Spark side applies (see bpe_train's fixpoint
     argument)."""
-    ctes = _bpe_train_ctes(n_merges, top_words)
+    n_merges = 8  # the oracle's own literal (2000 top words)
+    ctes = _bpe_train_ctes(n_merges, 2000)
     selects = [
         f"SELECT CAST({r} AS INT) AS step, pair,"
         f" replace(pair, ' ', '') AS merged, pair_count FROM t{r}"
@@ -3273,12 +3275,13 @@ def _bpe_oracle_sql(n_merges: int = 8, top_words: int = 2000) -> str:
     return "WITH " + ",\n".join(ctes) + "\n" + "\nUNION ALL ".join(selects)
 
 
-def _bpe_fertility_oracle_sql(n_merges: int = 8, top_words: int = 2000) -> str:
+def _bpe_fertility_oracle_sql() -> str:
     """Training replay + ENCODE replay: every distinct corpus word is
     char-split and pushed through the n_merges two-pass padded replaces,
     each round's pair read from its t{r} CTE via scalar subqueries —
     the SQL twin of textstats.bpe_encode's literal-driven replace chain."""
-    ctes = _bpe_train_ctes(n_merges, top_words)
+    n_merges = 8  # the oracle's own literal (2000 top words)
+    ctes = _bpe_train_ctes(n_merges, 2000)
     ctes.append(
         "dw AS (SELECT DISTINCT tok AS word"
         " FROM (SELECT unnest(t) AS tok FROM toks))"
@@ -3606,10 +3609,6 @@ def embedding_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _pq_oracle(
-    m: int = 4,
-    sub_dim: int = 16,
-    k: int = 8,
-    iters: int = 2,
     n_probes: int = 3,
     topk: int = 5,
     planted: bool = False,
@@ -3621,6 +3620,7 @@ def _pq_oracle(
     tables, and the (adc ASC, vec_id ASC) top-k. ``planted`` unions the
     probe mirrors into the pool and keeps only the mirror rows, turning
     the query into a deterministic recall gate."""
+    m, sub_dim, k, iters = 4, 16, 8, 2  # the oracle's own literals
     d = m * sub_dim
     pool = f"SELECT vec_id, embedding FROM embeddings WHERE len(embedding) = {d}"
     if planted:

@@ -1035,7 +1035,7 @@ def stream_snapshot_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_read_confs(spark)
     src = table_path(sf_dir, "orders")
     schema = spark.read.parquet(src).schema
-    stream = incremental._stream_reader(spark, src, "parquet", schema)
+    stream = incremental._stream_reader(spark, src, schema)
     base = _scratch_dir(sf_dir, "stream_snapshot_orders")
     shutil.rmtree(base, ignore_errors=True)
     shutil.rmtree(base + "__checkpoint", ignore_errors=True)

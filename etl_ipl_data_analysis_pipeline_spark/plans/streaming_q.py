@@ -453,7 +453,7 @@ def stream_ngram_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_read_confs(spark)
     path = table_path(sf_dir, "documents")
     schema = spark.read.parquet(path).schema
-    docs = incremental._stream_reader(spark, path, "parquet", schema)
+    docs = incremental._stream_reader(spark, path, schema)
     base = docs.select(
         "doc_id", tokens("text").alias("__t")
     ).select(
@@ -504,7 +504,7 @@ def stream_bloom_custkeys(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_read_confs(spark)
     path = table_path(sf_dir, "orders")
     schema = spark.read.parquet(path).schema
-    orders = incremental._stream_reader(spark, path, "parquet", schema)
+    orders = incremental._stream_reader(spark, path, schema)
 
     state = _scratch_dir(sf_dir, "bloom_stream_state")
     _wipe_stream_state(state, state + "__checkpoint")
@@ -585,7 +585,7 @@ def stream_source_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_read_confs(spark)
     path = table_path(sf_dir, "documents")
     schema = spark.read.parquet(path).schema
-    docs = incremental._stream_reader(spark, path, "parquet", schema)
+    docs = incremental._stream_reader(spark, path, schema)
     terms = docs.select(
         "source", F.split(normalized_text(F.col("text")), " ").alias("__t")
     ).select(
@@ -644,7 +644,7 @@ def stream_dsir_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_read_confs(spark)
     path = table_path(sf_dir, "documents")
     schema = spark.read.parquet(path).schema
-    docs = incremental._stream_reader(spark, path, "parquet", schema)
+    docs = incremental._stream_reader(spark, path, schema)
     base = docs.select(
         (F.col("lang") == F.lit("en")).cast("bigint").alias("tgt"),
         tokens("text").alias("__t0"),
@@ -703,7 +703,7 @@ def stream_minhash_sig_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_read_confs(spark)
     path = table_path(sf_dir, "documents")
     schema = spark.read.parquet(path).schema
-    docs = incremental._stream_reader(spark, path, "parquet", schema)
+    docs = incremental._stream_reader(spark, path, schema)
     state = _scratch_dir(sf_dir, "mh_sig_index_stream_state")
     _wipe_stream_state(state, state + "__checkpoint")
     index = sketch_stream.run_sig_index_stream(
@@ -748,7 +748,7 @@ def stream_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_read_confs(spark)
     path = table_path(sf_dir, "documents")
     schema = spark.read.parquet(path).schema
-    docs = incremental._stream_reader(spark, path, "parquet", schema)
+    docs = incremental._stream_reader(spark, path, schema)
     pairs_state = _scratch_dir(sf_dir, "mh_pair_stream_state")
     index_state = _scratch_dir(sf_dir, "mh_pair_stream_index")
     _wipe_stream_state(pairs_state, pairs_state + "__checkpoint", index_state)
@@ -793,7 +793,7 @@ def stream_value_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_read_confs(spark)
     path = table_path(sf_dir, "events")
     schema = spark.read.parquet(path).schema
-    ev = incremental._stream_reader(spark, path, "parquet", schema)
+    ev = incremental._stream_reader(spark, path, schema)
     binx = F.least(
         F.greatest(
             F.floor(F.col("value").cast("double") / F.lit(500.0) * F.lit(20.0))
@@ -856,7 +856,7 @@ def stream_dedup_survivors_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_read_confs(spark)
     path = table_path(sf_dir, "documents")
     schema = spark.read.parquet(path).schema
-    docs = incremental._stream_reader(spark, path, "parquet", schema)
+    docs = incremental._stream_reader(spark, path, schema)
     pairs_state = _scratch_dir(sf_dir, "mh_surv_stream_state")
     index_state = _scratch_dir(sf_dir, "mh_surv_stream_index")
     _wipe_stream_state(pairs_state, pairs_state + "__checkpoint", index_state)
@@ -911,7 +911,7 @@ def _register_stream_image_neardup():
         ensure_read_confs(spark)
         path = table_path(sf_dir, "documents")
         schema = spark.read.parquet(path).schema
-        docs = incremental._stream_reader(spark, path, "parquet", schema)
+        docs = incremental._stream_reader(spark, path, schema)
         pairs_state = _scratch_dir(sf_dir, "img_pair_stream_state")
         index_state = _scratch_dir(sf_dir, "img_pair_stream_index")
         _wipe_stream_state(pairs_state, pairs_state + "__checkpoint", index_state)
@@ -970,7 +970,7 @@ def _register_stream_embedding_neardup():
         ensure_read_confs(spark)
         path = table_path(sf_dir, "embeddings")
         schema = spark.read.parquet(path).schema
-        emb = incremental._stream_reader(spark, path, "parquet", schema)
+        emb = incremental._stream_reader(spark, path, schema)
         pairs_state = _scratch_dir(sf_dir, "emb_pair_stream_state")
         index_state = _scratch_dir(sf_dir, "emb_pair_stream_index")
         _wipe_stream_state(pairs_state, pairs_state + "__checkpoint", index_state)
@@ -1028,7 +1028,7 @@ def _register_stream_embedding_survivors():
         ensure_read_confs(spark)
         path = table_path(sf_dir, "embeddings")
         schema = spark.read.parquet(path).schema
-        emb = incremental._stream_reader(spark, path, "parquet", schema)
+        emb = incremental._stream_reader(spark, path, schema)
         pairs_state = _scratch_dir(sf_dir, "emb_surv_stream_state")
         index_state = _scratch_dir(sf_dir, "emb_surv_stream_index")
         _wipe_stream_state(pairs_state, pairs_state + "__checkpoint", index_state)
@@ -1101,7 +1101,7 @@ def _register_stream_bm25_index():
         ensure_read_confs(spark)
         path = table_path(sf_dir, "documents")
         schema = spark.read.parquet(path).schema
-        docs = incremental._stream_reader(spark, path, "parquet", schema)
+        docs = incremental._stream_reader(spark, path, schema)
         base = _scratch_dir(sf_dir, "bm25_stream_index")
         _wipe_stream_state(base, base + "__checkpoint")
 

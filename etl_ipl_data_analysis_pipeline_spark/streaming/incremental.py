@@ -17,10 +17,11 @@ from pyspark.sql import DataFrame, SparkSession
 from ..io import overwrite_parquet, recover
 
 
-def _stream_reader(spark: SparkSession, path: str, fmt: str, schema):
-    """File-source streams require a directory basePath; for a single-file
-    fixture, stream the parent directory with a glob filter on the name."""
-    reader = spark.readStream.schema(schema).format(fmt)
+def _stream_reader(spark: SparkSession, path: str, schema):
+    """Parquet file-source stream. File-source streams require a
+    directory basePath; for a single-file fixture, stream the parent
+    directory with a glob filter on the name."""
+    reader = spark.readStream.schema(schema).format("parquet")
     if os.path.isfile(path):
         reader = reader.option("pathGlobFilter", os.path.basename(path))
         path = os.path.dirname(path)
@@ -37,7 +38,7 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_read_confs(spark)
     path = table_path(sf_dir, "events")
     schema = spark.read.parquet(path).schema
-    return normalize_nanos_ts(_stream_reader(spark, path, "parquet", schema))
+    return normalize_nanos_ts(_stream_reader(spark, path, schema))
 
 
 def file_stream_pipeline(
@@ -45,11 +46,9 @@ def file_stream_pipeline(
     src_path: str,
     dst_path: str,
     checkpoint: str,
-    transform=None,
-    fmt: str = "parquet",
 ) -> int:
-    """Drain all currently-unprocessed files from ``src_path`` through
-    ``transform`` into ``dst_path``, exactly once per file across runs.
+    """Copy all currently-unprocessed parquet files from ``src_path``
+    into ``dst_path``, exactly once per file across runs.
 
     Returns the number of micro-batches executed this run (0 when nothing
     new — the run-twice idempotency contract). The checkpoint directory
@@ -58,10 +57,8 @@ def file_stream_pipeline(
     from ..plans import ensure_read_confs
 
     ensure_read_confs(spark)
-    schema = spark.read.format(fmt).load(src_path).schema
-    stream = _stream_reader(spark, src_path, fmt, schema)
-    if transform is not None:
-        stream = transform(stream)
+    schema = spark.read.parquet(src_path).schema
+    stream = _stream_reader(spark, src_path, schema)
     query = (
         stream.writeStream.format("parquet")
         .option("path", dst_path)

@@ -14,14 +14,10 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 
-def attributed_purchases(
-    purchases: DataFrame,
-    views: DataFrame,
-    attribution: str = "1 hour",
-    watermark: str = "2 hours",
-) -> DataFrame:
+def attributed_purchases(purchases: DataFrame, views: DataFrame) -> DataFrame:
     """Inner stream-stream join: each purchase paired with every view by
-    the same user in the preceding ``attribution`` window.
+    the same user in the preceding hour (the attribution window), both
+    sides watermarked at 2 hours.
 
     Works identically on batch DataFrames (same expressions, time-range
     condition becomes a plain theta join) — the equivalence test runs both.
@@ -40,26 +36,21 @@ def attributed_purchases(
         F.col("ts").alias("v_ts"),
     )
     if purchases.isStreaming:
-        p = p.withWatermark("p_ts", watermark)
-        v = v.withWatermark("v_ts", watermark)
+        p = p.withWatermark("p_ts", "2 hours")
+        v = v.withWatermark("v_ts", "2 hours")
     cond = (
         (p["user_id"] == v["user_id"])
         & (v["v_ts"] <= p["p_ts"])
-        & (v["v_ts"] >= p["p_ts"] - F.expr(f"INTERVAL {attribution}"))
+        & (v["v_ts"] >= p["p_ts"] - F.expr("INTERVAL 1 hour"))
     )
     return p.join(v, cond, "inner").select(
         "purchase_id", p["user_id"].alias("user_id"), "p_ts", "purchase_value", "view_id", "v_ts"
     )
 
 
-def attributed_purchases_outer(
-    purchases: DataFrame,
-    views: DataFrame,
-    attribution: str = "1 hour",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """LEFT OUTER stream-stream join: every purchase emits, attributed
-    views attached when they exist and NULLs otherwise — the "conversion
+def attributed_purchases_outer(purchases: DataFrame, views: DataFrame) -> DataFrame:
+    """LEFT OUTER stream-stream join (same 1-hour window and 2-hour
+    watermarks): every purchase emits, attributed views attached when they exist and NULLs otherwise — the "conversion
     with unattributed remainder" report.
 
     Outer stream-stream joins are stricter than inner: Spark only emits
@@ -83,12 +74,12 @@ def attributed_purchases_outer(
         F.col("ts").alias("v_ts"),
     )
     if purchases.isStreaming:
-        p = p.withWatermark("p_ts", watermark)
-        v = v.withWatermark("v_ts", watermark)
+        p = p.withWatermark("p_ts", "2 hours")
+        v = v.withWatermark("v_ts", "2 hours")
     cond = (
         (p["user_id"] == v["v_user"])
         & (v["v_ts"] <= p["p_ts"])
-        & (v["v_ts"] >= p["p_ts"] - F.expr(f"INTERVAL {attribution}"))
+        & (v["v_ts"] >= p["p_ts"] - F.expr("INTERVAL 1 hour"))
     )
     return p.join(v, cond, "left_outer").select(
         "purchase_id", "user_id", "p_ts", "purchase_value", "view_id", "v_ts"

@@ -59,10 +59,9 @@ def run_kmv_stream(
     state_path: str,
     col: str,
     keys: list[str] | None = None,
-    k: int = sketches.KMV_K,
 ) -> DataFrame:
     """Drain ``stream_df`` with Trigger.AvailableNow, folding each
-    micro-batch's bottom-k partial into the state table at
+    micro-batch's bottom-k (``sketches.KMV_K``) partial into the state table at
     ``state_path``; returns the final sketch state. Per batch: the
     partial build reduces the batch to <= k rows per group BEFORE the
     merge, so the union never carries raw events — O(batch) reduction
@@ -71,10 +70,8 @@ def run_kmv_stream(
     return _fold_stream(
         stream_df,
         state_path,
-        lambda batch: sketches.kmv_build(batch, col, keys=keys, k=k),
-        lambda current, incoming: sketches.kmv_merge(
-            [current, incoming], keys=keys, k=k
-        ),
+        lambda batch: sketches.kmv_build(batch, col, keys=keys),
+        lambda current, incoming: sketches.kmv_merge([current, incoming], keys=keys),
     )
 
 
@@ -183,7 +180,6 @@ def run_bloom_stream(
     key_col: str,
     num_bits: int = 4096,
     num_hashes: int = 3,
-    salt: str = "",
 ) -> DataFrame:
     """Maintain a Bloom word table (operators/bloom.py) from a stream
     with ``foreachBatch``: each micro-batch builds its own word table
@@ -199,7 +195,7 @@ def run_bloom_stream(
     return _fold_stream(
         stream_df,
         state_path,
-        lambda batch: bloom.bloom_build(batch, key_col, num_bits, num_hashes, salt),
+        lambda batch: bloom.bloom_build(batch, key_col, num_bits, num_hashes),
         lambda current, incoming: current.unionByName(incoming)
         .groupBy("word_idx")
         .agg(F.bit_or("word").alias("word")),
@@ -211,9 +207,6 @@ def run_sig_index_stream(
     state_path: str,
     text_col: str = "text",
     id_col: str = "doc_id",
-    n: int = 3,
-    num_hashes: int = 32,
-    seed: int = 42,
     hash_family: str = "md5",
 ) -> DataFrame:
     """Maintain the MinHash SIGNATURE INDEX (dedup.minhash_sig_index —
@@ -240,7 +233,7 @@ def run_sig_index_stream(
         stream_df,
         state_path,
         lambda batch: minhash_sig_index(
-            batch, text_col, id_col, n, num_hashes, seed, hash_family
+            batch, text_col, id_col, hash_family=hash_family
         ),
         lambda current, incoming: current.unionByName(incoming).dropDuplicates(
             [id_col]
@@ -325,10 +318,6 @@ def run_minhash_pair_stream(
     index_path: str,
     text_col: str = "text",
     id_col: str = "doc_id",
-    n: int = 3,
-    num_hashes: int = 32,
-    bands: int = 8,
-    seed: int = 42,
     min_jaccard: float = 0.7,
     hash_family: str = "md5",
 ) -> DataFrame:
@@ -348,15 +337,15 @@ def run_minhash_pair_stream(
         id_col,
         lambda batch: batch,
         lambda docs: dedup.minhash_near_dup_pairs(
-            docs, text_col, id_col, n, num_hashes, bands, seed, min_jaccard,
-            hash_family,
+            docs, text_col, id_col, min_jaccard=min_jaccard,
+            hash_family=hash_family,
         ),
         lambda docs, index: dedup.minhash_incremental_pairs(
-            docs, index, text_col, id_col, n, num_hashes, bands, seed,
-            min_jaccard, hash_family,
+            docs, index, text_col, id_col, min_jaccard=min_jaccard,
+            hash_family=hash_family,
         ).filter(F.col("new_id") != F.col("old_id")),
         lambda docs: dedup.minhash_sig_index(
-            docs, text_col, id_col, n, num_hashes, seed, hash_family
+            docs, text_col, id_col, hash_family=hash_family
         ),
     )
 
@@ -407,12 +396,8 @@ def run_embedding_pair_stream(
     pairs_path: str,
     index_path: str,
     min_sim: float = 0.95,
-    n_planes: int = 12,
-    n_tables: int = 8,
-    dim: int = 64,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    seed: int = 42,
 ) -> DataFrame:
     """Streaming EMBEDDING near-dup detection (:func:`_run_pair_stream`):
     ``prep_fn`` turns the raw batch into an (id, vector) relation; the
@@ -434,14 +419,12 @@ def run_embedding_pair_stream(
         id_col,
         lambda batch: prep_fn(batch).select(id_col, vec_col),
         lambda vecs: similarity.embedding_near_dup_pairs(
-            vecs, min_sim, n_planes, n_tables, dim, id_col, vec_col, seed
+            vecs, min_sim, id_col, vec_col
         ),
         lambda vecs, index: similarity.embedding_incremental_pairs(
-            vecs, index, min_sim, n_planes, n_tables, dim, id_col, vec_col, seed
+            vecs, index, min_sim, id_col, vec_col
         ),
-        lambda vecs: similarity.embedding_sig_index(
-            vecs, n_planes, n_tables, dim, id_col, vec_col, seed
-        ),
+        lambda vecs: similarity.embedding_sig_index(vecs, id_col, vec_col),
         "id_a bigint, id_b bigint, sim double",
     )
 
@@ -452,7 +435,6 @@ def run_bm25_index_stream(
     index_base: str,
     id_col: str = "doc_id",
     text_col: str = "text",
-    num_buckets: int = 64,
 ) -> str:
     """Streaming BM25 index maintenance — the LEXICAL leg of the
     index-upkeep family (minhash sig index, embedding sig index, now the
@@ -500,7 +482,6 @@ def run_bm25_index_stream(
             f"{base}/delta_{int(batch_id):08d}",
             id_col=id_col,
             text_col=text_col,
-            num_buckets=num_buckets,
         )
 
     drain(stream_df, apply_batch, base + "__checkpoint")
@@ -516,5 +497,5 @@ def run_bm25_index_stream(
     if len(paths) == 1:
         return paths[0]
     out = base + "/current"
-    ts.bm25_merge_many(spark, paths, out, num_buckets=num_buckets)
+    ts.bm25_merge_many(spark, paths, out)
     return out

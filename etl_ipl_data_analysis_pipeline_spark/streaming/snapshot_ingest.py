@@ -24,11 +24,9 @@ from .incremental import drain
 def run_snapshot_ingest_stream(
     stream_df: DataFrame,
     table_path: str,
-    prep_fn=None,
     checkpoint: str | None = None,
     compact_every: int | None = None,
     expire_retain: int | None = None,
-    target_mb: int = 128,
 ) -> int:
     """Drain ``stream_df`` (Trigger.AvailableNow) committing one snapshot
     version per non-empty micro-batch; returns the number of versions
@@ -37,7 +35,7 @@ def run_snapshot_ingest_stream(
 
     Without maintenance, a long-lived ingest accumulates one version +
     one file set per micro-batch forever. ``compact_every=N`` folds the
-    table into ~target_mb files (one extra 'replace' version) after
+    table into ~128 MB files (one extra 'replace' version) after
     every N data commits, and ``expire_retain=K`` then drops all but
     the newest K versions and their unreferenced files. Both reuse the
     snapshot commit machinery, so history stays readable until expiry
@@ -50,16 +48,15 @@ def run_snapshot_ingest_stream(
     def apply_batch(batch: DataFrame, batch_id: int) -> None:
         nonlocal committed
         spark = batch.sparkSession
-        out = prep_fn(batch) if prep_fn is not None else batch
         last = sn.snapshot_latest_batch_id(spark, table_path)
         if last is not None and int(batch_id) <= last:
             return  # re-delivered batch: already committed atomically
-        if out.limit(1).count() == 0:
+        if batch.limit(1).count() == 0:
             return
-        sn.snapshot_commit(out, table_path, mode="append", batch_id=int(batch_id))
+        sn.snapshot_commit(batch, table_path, mode="append", batch_id=int(batch_id))
         committed += 1
         if compact_every and committed % compact_every == 0:
-            sn.snapshot_compact(spark, table_path, target_mb=target_mb)
+            sn.snapshot_compact(spark, table_path)
             if expire_retain:
                 sn.snapshot_expire(
                     spark, table_path, keep_last=expire_retain, staging_grace_s=0

@@ -12,15 +12,14 @@ from pyspark.sql import DataFrame
 from ..functions import stable_sum
 
 
-def tumbling_stream(
-    events: DataFrame, window: str = "10 minutes", watermark: str = "30 minutes"
-) -> DataFrame:
-    """Tumbling event-time windows per event_type (streaming twin of the
-    window_tumbling batch query). The watermark bounds state: windows older
-    than max(event time) - watermark finalize and evict."""
+def tumbling_stream(events: DataFrame) -> DataFrame:
+    """10-minute tumbling event-time windows per event_type (streaming
+    twin of the window_tumbling batch query). The 30-minute watermark
+    bounds state: windows older than max(event time) - watermark finalize
+    and evict."""
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), "event_type")
+        events.withWatermark("ts", "30 minutes")
+        .groupBy(F.window("ts", "10 minutes").alias("w"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             stable_sum("value", 2).alias("sum_value"),
@@ -31,16 +30,12 @@ def tumbling_stream(
     )
 
 
-def sliding_stream(
-    events: DataFrame,
-    window: str = "10 minutes",
-    slide: str = "5 minutes",
-    watermark: str = "30 minutes",
-) -> DataFrame:
-    """Sliding windows (streaming twin of window_sliding)."""
+def sliding_stream(events: DataFrame) -> DataFrame:
+    """10-minute windows sliding by 5 minutes, 30-minute watermark
+    (streaming twin of window_sliding)."""
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window, slide).alias("w"))
+        events.withWatermark("ts", "30 minutes")
+        .groupBy(F.window("ts", "10 minutes", "5 minutes").alias("w"))
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             stable_sum("value", 2).alias("sum_value"),
@@ -49,15 +44,14 @@ def sliding_stream(
     )
 
 
-def session_stream(
-    events: DataFrame, gap: str = "30 minutes", watermark: str = "30 minutes"
-) -> DataFrame:
-    """Session windows per user (streaming twin of window_session).
-    session_window requires a watermark under streaming — state for a
-    session closes once the watermark passes its gap."""
+def session_stream(events: DataFrame) -> DataFrame:
+    """Session windows per user with a 30-minute gap (streaming twin of
+    window_session). session_window requires a watermark under streaming
+    — state for a session closes once the 30-minute watermark passes its
+    gap."""
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap).alias("w"), "user_id")
+        events.withWatermark("ts", "30 minutes")
+        .groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             stable_sum("value", 2).alias("sum_value"),

@@ -8,12 +8,15 @@ session and noop sink. The measured run records:
   stages, tasks, executor time, shuffle, input and spill bytes, ...);
 - ``driver.actions``: SQL executions started, so one action that AQE splits
   into a job per query stage still counts once;
-- the plan layer, ``perfbench.probe.plan_counts`` of the returned frame;
+- the plan layer, ``perfbench.probe.plan_counts`` of the returned frame,
+  plus ``plan.codegen_stages``: the whole-stage-codegen subtrees of the
+  plans the run executed (the distinct ``codegen id`` values of each SQL
+  execution's plan description in the status store), a count that depends
+  on the plans alone;
 - the driver layer: ``manifest.<fn>.calls`` and ``manifest.<fn>.s`` for each
   snapshot manifest primitive the query called (nested calls count in both);
-- the JVM layer: ``jvm.jit_s`` (JIT compilation time), ``jvm.classes_loaded``
-  and ``spark.codegen_compiles`` (generated classes Janino compiled), each
-  read from the JVM before and after the run;
+- the JVM layer: ``jvm.jit_s`` (JIT compilation time) and
+  ``jvm.classes_loaded``, each read from the JVM before and after the run;
 - ``jobs``: every job's description, read from the status store.
 
 Each frame's ``explain("formatted")`` plan goes to ``<out stem>.plans/``.
@@ -37,6 +40,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import sys
 import time
 from collections import Counter
@@ -54,18 +58,31 @@ MANIFEST_PRIMITIVES = (
 )
 
 
+_CODEGEN_ID = re.compile(r"\[codegen id : (\d+)\]")
+
+
 def jvm_counters(spark) -> dict:
-    """JIT seconds, classes loaded and codegen compiles so far in the
-    driver JVM, read through py4j (no job)."""
-    jvm = spark.sparkContext._jvm
-    beans = jvm.java.lang.management.ManagementFactory
+    """JIT seconds and classes loaded so far in the driver JVM, read
+    through py4j (no job)."""
+    beans = spark.sparkContext._jvm.java.lang.management.ManagementFactory
     return {
         "jvm.jit_s": beans.getCompilationMXBean().getTotalCompilationTime() / 1000.0,
         "jvm.classes_loaded": beans.getClassLoadingMXBean().getTotalLoadedClassCount(),
-        "spark.codegen_compiles": (
-            jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME().getCount()
-        ),
     }
+
+
+def codegen_stages(probe, first: int, last: int) -> int:
+    """Whole-stage-codegen subtrees of the executed plans of SQL
+    executions ``first``..``last``: the distinct codegen ids in each plan
+    description of the status store (the read the tier-1 plan-shape gate
+    makes; no job). Unlike the count of classes the driver compiled, it
+    does not depend on what earlier queries left in the codegen cache."""
+    n = 0
+    for eid in range(first, last + 1):
+        ex = probe._sql.execution(eid)
+        if ex.isDefined():
+            n += len(set(_CODEGEN_ID.findall(ex.get().physicalPlanDescription())))
+    return n
 
 
 class ManifestTimer:
@@ -123,7 +140,9 @@ def profile_query(spark, sf_dir: str, fn, probe, manifest: ManifestTimer) -> dic
     counters = probe.stop(mark, wall)
     counters.update({k: v - jvm0[k] for k, v in jvm_counters(spark).items()})
     counters["wall_s"] = wall
-    counters["driver.actions"] = probe._max_execution() - mark[1]
+    last_exec = probe._max_execution()
+    counters["driver.actions"] = last_exec - mark[1]
+    counters["plan.codegen_stages"] = codegen_stages(probe, mark[1] + 1, last_exec)
     counters.update(manifest.counts)
     counters.update(plan_counts(frames[0]))
     store = spark.sparkContext._jsc.sc().statusStore()

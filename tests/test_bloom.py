@@ -53,17 +53,6 @@ def test_false_positive_rate_and_determinism(spark):
     assert hits1 == hits2
 
 
-def test_salt_changes_positions(spark):
-    # salting rotates the hash family: a different salt must yield a
-    # different word table for the same keys
-    ks = _keys(spark, range(100))
-    a = bloom.bloom_build(ks, "k", num_bits=1024, num_hashes=3, salt="a")
-    b = bloom.bloom_build(ks, "k", num_bits=1024, num_hashes=3, salt="b")
-    ra = {(r.word_idx, r.word) for r in a.collect()}
-    rb = {(r.word_idx, r.word) for r in b.collect()}
-    assert ra != rb
-
-
 def test_probe_plan_is_broadcast_only(spark):
     # the fact side must never be exchanged by the probe: every word
     # lookup is a BroadcastHashJoin, nothing sort-merges

@@ -169,12 +169,12 @@ def test_minhash_expression_form_matches_bulk(spark):
         r["doc_id"]: r["sig"]
         for r in docs.select(
             "doc_id",
-            dedup.minhash_signature(dedup.shingles("text"), num_hashes=8).alias("sig"),
+            dedup.minhash_signature(dedup.shingles("text")).alias("sig"),
         ).collect()
     }
     bulk_sigs = {
         r["__id"]: r["__sig"]
-        for r in dedup.minhash_signatures(docs, num_hashes=8).collect()
+        for r in dedup.minhash_signatures(docs).collect()
     }
     assert expr_sigs == bulk_sigs
 
@@ -346,8 +346,8 @@ def test_semantic_dedup_drops_exact_embedding_copies(spark):
     assert survivors == {i for i, _ in base}
 
 
-def test_semantic_dedup_governed_k_matches_explicit(spark):
-    """k=None derives k = ceil(n_unique / target_cell_size) from the
+def test_semantic_dedup_governed_k_matches_explicit(spark, monkeypatch):
+    """k=None derives k = ceil(n_unique / SEMDEDUP_CELL_SIZE) from the
     post-collapse unique count: the governed run must produce exactly the
     explicit-k run's survivors (k is the ONLY thing derived — routing,
     scoring, keep-first are untouched)."""
@@ -357,12 +357,11 @@ def test_semantic_dedup_governed_k_matches_explicit(spark):
     base = [(i, [rnd.gauss(0, 1) for _ in range(16)]) for i in range(12)]
     mirrors = [(100 + i, vec) for i, vec in base[:4]]  # collapse -> 12 uniques
     emb = spark.createDataFrame(base + mirrors, "vec_id long, embedding array<double>")
+    monkeypatch.setattr(dedup, "SEMDEDUP_CELL_SIZE", 4)
     governed = {
         r["vec_id"]
-        for r in dedup.semantic_dedup(
-            emb, iters=2, min_sim=0.999, target_cell_size=4
-        ).collect()  # 12 uniques / 4 per cell -> derived k = 3
-    }
+        for r in dedup.semantic_dedup(emb, iters=2, min_sim=0.999).collect()
+    }  # 12 uniques / 4 per cell -> derived k = 3
     explicit = {
         r["vec_id"]
         for r in dedup.semantic_dedup(emb, k=3, iters=2, min_sim=0.999).collect()
@@ -485,7 +484,7 @@ class TestIntraDocSpanDedup:
             dedup.remove_duplicate_spans(df, scope="nope")
 
 
-def test_semantic_dedup_fast_rebalance_preserves_contract(spark):
+def test_semantic_dedup_fast_rebalance_preserves_contract(spark, monkeypatch):
     """A skewed corpus (most uniques piled near one direction) triggers
     the fast path's second-level cell split; the contract is unchanged:
     exact copies still die via the collapse (recall 1, routing-free) and
@@ -505,28 +504,22 @@ def test_semantic_dedup_fast_rebalance_preserves_contract(spark):
     emb = spark.createDataFrame(
         rows + mirrors, "vec_id long, embedding array<double>"
     )
+    monkeypatch.setattr(dedup, "SEMDEDUP_CELL_SIZE", 16)
+    monkeypatch.setattr(dedup, "SEMDEDUP_REBALANCE", 2)
     survivors = {
         r["vec_id"]
         for r in dedup.semantic_dedup(
-            emb,
-            iters=2,
-            min_sim=0.999,
-            assign="fast",
-            target_cell_size=16,
-            rebalance_factor=2,
+            emb, iters=2, min_sim=0.999, assign="fast"
         ).collect()
     }
     assert survivors == {i for i, _ in rows}
-    # rebalance off: same survivors (the split only re-carves candidates)
+    # no cell past the split bound: same survivors (the split only
+    # re-carves candidates)
+    monkeypatch.setattr(dedup, "SEMDEDUP_REBALANCE", 10**9)
     survivors_off = {
         r["vec_id"]
         for r in dedup.semantic_dedup(
-            emb,
-            iters=2,
-            min_sim=0.999,
-            assign="fast",
-            target_cell_size=16,
-            rebalance_factor=None,
+            emb, iters=2, min_sim=0.999, assign="fast"
         ).collect()
     }
     assert survivors_off == survivors

@@ -85,12 +85,3 @@ def test_multiple_arrays_explode_one_per_pass(spark):
     assert [f.name for f in one.schema.fields if f.dataType.typeName() == "array"] == ["b"]
     # fixpoint yields the cartesian of the two arrays
     assert len(flatten(df).collect()) == 4
-
-
-def test_keep_prunes_before_flatten(spark):
-    df = spark.createDataFrame(
-        [(1, {"a": 2}, [1, 2, 3])], "id long, s struct<a: long>, big array<long>"
-    )
-    out = flatten(df, keep=["id", "s"])
-    assert out.columns == ["id", "s_a"]
-    assert len(out.collect()) == 1

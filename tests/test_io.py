@@ -302,16 +302,16 @@ def test_compact_table_unpartitioned(spark, tmp_path):
     assert _table_rows(spark, path) == want
 
 
-def test_compact_table_leaves_scan_sized_files_alone(spark, tmp_path):
-    """files >= small_ratio x target never rewritten: with a threshold
-    below any real file size the pass is a no-op and bytes_rewritten=0."""
+def test_compact_table_leaves_scan_sized_files_alone(spark, tmp_path, monkeypatch):
+    """files >= COMPACT_SMALL_RATIO x target never rewritten: with a
+    threshold below any real file size the pass is a no-op and
+    bytes_rewritten=0."""
     path = str(tmp_path / "bigf")
     _mk_partitioned(spark, path)
     before = tio._list_data_files(spark, path)
     # every parquet file here is > ~400 bytes; threshold ~100 bytes
-    stats = tio.compact_table(
-        spark, path, target_file_mb=1, small_ratio=0.0001
-    )
+    monkeypatch.setattr(tio, "COMPACT_SMALL_RATIO", 0.0001)
+    stats = tio.compact_table(spark, path, target_file_mb=1)
     assert stats["dirs_compacted"] == 0 and stats["bytes_rewritten"] == 0
     assert sorted(f for _, f, _ in tio._list_data_files(spark, path)) == sorted(
         f for _, f, _ in before
@@ -396,39 +396,6 @@ def test_write_parquet_skew_knobs(spark, tmp_path):
     )
     assert hot_files3 == 3  # 270 rows / 100-cap => 3 rolled files
     assert sorted((r["k"], r["grp"]) for r in spark.read.parquet(p3).collect()) == want
-
-
-def test_compact_table_sort_by_preserves_footer_ranges(spark, tmp_path):
-    """sort_by compaction writes files whose parquet footer min/max on
-    the sort column are tight (disjoint-ish ranges), where unsorted
-    bin-packing interleaves the whole domain into every file."""
-    import pyarrow.parquet as pq
-
-    path = str(tmp_path / "sorted_tbl")
-    df = spark.range(4000).select(
-        F.col("id").alias("k"), F.lit("x").alias("grp")
-    )
-    # 8 slivers, each carrying the FULL k domain (round-robin)
-    df.repartition(8).write.mode("overwrite").parquet(path)
-    stats = tio.compact_table(
-        spark, path, target_file_mb=1, small_ratio=0.5, sort_by=["k"]
-    )
-    assert stats["dirs_compacted"] == 1
-    files = [f for _, f, _ in tio._list_data_files(spark, path)]
-    spans = []
-    for f in files:
-        md = pq.read_metadata(f.replace("file:", ""))
-        lo = min(md.row_group(i).column(0).statistics.min for i in range(md.num_row_groups))
-        hi = max(md.row_group(i).column(0).statistics.max for i in range(md.num_row_groups))
-        spans.append((lo, hi))
-    # every row survived
-    assert spark.read.parquet(path).count() == 4000
-    if len(spans) > 1:
-        # sorted compaction: per-file spans must not all cover the full
-        # domain; total overlap is bounded (files partition the sort key)
-        spans.sort()
-        for (lo1, hi1), (lo2, _) in zip(spans, spans[1:]):
-            assert hi1 <= lo2  # disjoint consecutive ranges
 
 
 def test_compact_table_midmove_crash_recovery(spark, tmp_path):
@@ -516,36 +483,6 @@ def test_compact_table_preserves_stringy_partition_values(spark, tmp_path):
         for r in spark.read.schema("k long, grp string").parquet(path).collect()
     )
     assert got == sorted((i, "00123" if i < 40 else "7e4") for i in range(60))
-
-
-def test_compact_table_sorted_multifile_ranges(spark, tmp_path):
-    """unpartitioned sort_by compaction with MORE THAN ONE output file:
-    range repartitioning must give disjoint per-file key spans (a
-    round-robin bin would make every file span the whole domain)."""
-    import pyarrow.parquet as pq
-
-    path = str(tmp_path / "ranged")
-    # ~3MB of data so n_target = ceil(bytes/1MB) >= 2
-    df = spark.range(120_000).select(
-        F.col("id").alias("k"),
-        F.sha2(F.col("id").cast("string"), 256).alias("pad"),
-    )
-    df.repartition(10).write.mode("overwrite").parquet(path)
-    stats = tio.compact_table(
-        spark, path, target_file_mb=1, small_ratio=0.9, sort_by=["k"]
-    )
-    files = [f for _, f, _ in tio._list_data_files(spark, path)]
-    assert len(files) >= 2, stats
-    spans = []
-    for f in files:
-        md = pq.read_metadata(f.replace("file:", ""))
-        lo = min(md.row_group(i).column(0).statistics.min for i in range(md.num_row_groups))
-        hi = max(md.row_group(i).column(0).statistics.max for i in range(md.num_row_groups))
-        spans.append((lo, hi))
-    spans.sort()
-    for (l1, h1), (l2, _) in zip(spans, spans[1:]):
-        assert h1 <= l2, spans
-    assert spark.read.parquet(path).count() == 120_000
 
 
 def test_write_parquet_salt_skips_map_columns(spark, tmp_path):

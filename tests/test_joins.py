@@ -118,14 +118,6 @@ def test_salted_join_equals_plain_join(spark):
     assert salted == plain
 
 
-def test_salted_left_join_keeps_unmatched(spark):
-    fact = spark.createDataFrame([(1, 10), (9, 90)], "k int, v int")
-    dim = spark.createDataFrame([(1, "one")], "k int, name string")
-    out = sorted(joins.salted_join(fact, dim, "k", how="left", salt=4).collect())
-    assert len(out) == 2
-    assert [r["name"] for r in out] == ["one", None]
-
-
 def test_salted_join_spreads_hot_key(spark):
     fact = spark.createDataFrame([(1, i) for i in range(1000)], "k int, v int")
     import pyspark.sql.functions as F

@@ -38,7 +38,7 @@ def test_attach_metadata_ids_stable(media):
 
 
 def test_extract_features_fake_plumbing(media):
-    out = multimodal.extract_features(media, fake=True, dim=8).collect()
+    out = multimodal.extract_features(media, fake=True).collect()
     assert len(out) == 4
     for r in out:
         assert r["width"] >= 16 and r["height"] >= 16
@@ -61,7 +61,7 @@ def test_extract_features_portable_md5_seed(media):
     import hashlib
 
     payload = b"\x89PNG\r\n\x1a\n" + b"hello world" * 10
-    w, h, feat = multimodal._fake_decode_md5(payload, dim=8)
+    w, h, feat = multimodal._fake_decode_md5(payload)
     seed = int(
         hashlib.md5(payload[:64].hex().upper().encode()).hexdigest()[:8], 16
     ) & 0x7FFFFFFF
@@ -107,11 +107,11 @@ class TestRealDecode:
         from etl_ipl_data_analysis_pipeline_spark.operators import multimodal as mm
 
         px = list(range(4 * 2 * 3))  # 4x2 RGB ramp
-        w, h, feat = mm.decode_image(self._ppm(4, 2, px), dim=4)
+        w, h, feat = mm.decode_image(self._ppm(4, 2, px))
         assert (w, h) == (4, 2)
         arr = np.array(px, dtype=np.float64) / 255.0
         assert feat[0] == pytest.approx(arr.mean())
-        segs = np.array_split(arr, 3)
+        segs = np.array_split(arr, mm.FEATURE_DIM - 1)
         assert feat[1:] == pytest.approx([s.mean() for s in segs])
 
     def test_bmp_decode_matches_ppm_pixels(self):
@@ -135,11 +135,11 @@ class TestRealDecode:
             + struct.pack("<IHHI", 54 + len(pixel_data), 0, 0, 54)
             + struct.pack("<IiiHHIIiiII", 40, 2, 2, 1, 24, 0, len(pixel_data), 0, 0, 0, 0)
         )
-        w, h, feat = mm.decode_image(header + pixel_data, dim=4)
+        w, h, feat = mm.decode_image(header + pixel_data)
         assert (w, h) == (2, 2)
         # decoded RGB top-down equals the ppm twin of the same pixels
         flat = [c for row in rgb_rows for p in row for c in p]
-        pw, ph, pfeat = mm.decode_image(self._ppm(2, 2, flat), dim=4)
+        pw, ph, pfeat = mm.decode_image(self._ppm(2, 2, flat))
         assert feat == pytest.approx(pfeat)
 
     def test_wav_decode(self):
@@ -157,7 +157,7 @@ class TestRealDecode:
             f.setsampwidth(2)
             f.setframerate(16000)
             f.writeframes(samples.tobytes())
-        n_ch, rate_k, feat = mm.decode_image(buf.getvalue(), dim=4)
+        n_ch, rate_k, feat = mm.decode_image(buf.getvalue())
         assert (n_ch, rate_k) == (1, 16)
         assert feat[0] == pytest.approx(np.abs(samples / 32768.0).mean())
 
@@ -410,7 +410,7 @@ class TestPngDecode:
         rnd = random.Random(37)
         rows = [[rnd.randrange(256) for _ in range(4 * 3)] for _ in range(3)]
         png = _encode_png(rows, [4, 1, 3], 3)
-        w, h, feat = mm.decode_image(png, dim=8)
+        w, h, feat = mm.decode_image(png)
         assert (w, h) == (4, 3) and len(feat) == 8
         flat = [b for r in rows for b in r]
         assert abs(feat[0] - sum(flat) / len(flat) / 255.0) < 1e-12
@@ -723,7 +723,7 @@ class TestAviCodec:
 
         frames = self._frames(4, 2, 3)
         payload = multimodal.avi_encode(frames, 4, 2)
-        w, h, feat = multimodal.decode_image(payload, dim=4)
+        w, h, feat = multimodal.decode_image(payload)
         assert (w, h) == (4, 2)
         assert feat[0] == pytest.approx(frames[0].astype("float64").mean() / 255.0)
         rw, rh, samples = multimodal._raw_samples(payload)

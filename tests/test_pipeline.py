@@ -83,17 +83,15 @@ def test_retry_backoff_and_reraise():
             raise OSError("transient")
         return "ok"
 
-    assert retry(flaky, attempts=5, base_delay=0.5, sleep=delays.append) == "ok"
-    assert delays == [0.5, 1.0]  # base * 2^n
+    assert retry(flaky, sleep=delays.append) == "ok"
+    assert delays == [1.0, 2.0]  # 2^n seconds
 
     with pytest.raises(ValueError):
         retry(
             lambda: (_ for _ in ()).throw(ValueError("permanent")),
-            attempts=3,
-            base_delay=1.0,
             sleep=delays.append,
         )
-    assert delays[2:] == [1.0, 2.0]  # retried twice then re-raised
+    assert delays[2:] == [1.0, 2.0, 4.0, 8.0]  # retried 4 times then re-raised
 
 
 def test_quarantine_diverts_corrupt_files(spark, tmp_path, pipe_args):

@@ -49,8 +49,11 @@ def test_one_aggregation_counters(spark, pq, probe):
     assert c["spark.shuffle_write_bytes"] > 0
     assert c["plan.exchanges"] >= 1
     assert not any(k.startswith("manifest.") for k in c)
-    for key in ("jvm.jit_s", "jvm.classes_loaded", "spark.codegen_compiles"):
+    for key in ("jvm.jit_s", "jvm.classes_loaded"):
         assert c[key] >= 0
+    # range -> partial aggregate, then the final aggregate
+    assert c["plan.codegen_stages"] == 2
+    assert "spark.codegen_compiles" not in c
     assert len(entry["jobs"]) == c["spark.jobs"]
     assert "Exchange" in entry["plan"]
 

@@ -684,11 +684,9 @@ def test_dsir_weights_match_python_mirror(spark, texts, tgt_mod):
     df = spark.createDataFrame(rows, "doc_id long, text string, tgt boolean")
     got = {
         r["doc_id"]: (r["n_grams"], r["weight"])
-        for r in curation.dsir_importance(
-            df, F.col("tgt"), n_buckets=64
-        ).collect()
+        for r in curation.dsir_importance(df, F.col("tgt")).collect()
     }
-    expect = _py_dsir_weights(rows)
+    expect = _py_dsir_weights(rows, n_buckets=curation.DSIR_BUCKETS)
     for doc_id, (n_grams, weight) in expect.items():
         assert got[doc_id] == (n_grams, weight), doc_id
 

@@ -72,14 +72,14 @@ def test_lsh_recall_vs_exact(spark, vectors):
     approx = {
         (r["query_id"], r["vec_id"])
         for r in similarity.lsh_topk(
-            vectors, twins, k=3, n_planes=8, dim=DIM, probe_id_col="vec_id"
+            vectors, twins, k=3, n_planes=8, probe_id_col="vec_id"
         ).collect()
     }
     assert len(exact_top1 & approx) / len(exact_top1) >= 0.8
 
     rand_probes = vectors.filter("vec_id < 10")
     rand_approx = similarity.lsh_topk(
-        vectors, rand_probes, k=3, n_planes=8, dim=DIM, probe_id_col="vec_id"
+        vectors, rand_probes, k=3, n_planes=8, probe_id_col="vec_id"
     )
     assert rand_approx.count() > 0  # buckets are not degenerate
 
@@ -92,9 +92,7 @@ def test_ivf_recall_vs_exact(spark, vectors):
     }
     approx = {
         (r["query_id"], r["vec_id"])
-        for r in similarity.ivf_topk(
-            vectors, probes, k=3, n_centroids=8, nprobe=4, probe_id_col="vec_id"
-        ).collect()
+        for r in similarity.ivf_topk(vectors, probes, k=3, probe_id_col="vec_id").collect()
     }
     assert len(exact & approx) / len(exact) >= 0.5
 
@@ -113,7 +111,7 @@ def test_embedding_near_dup_planted_recall(spark, vectors):
     pairs = {
         (r["id_a"], r["id_b"])
         for r in similarity.embedding_near_dup_pairs(
-            vectors, min_sim=0.95, dim=DIM
+            vectors, min_sim=0.95
         ).collect()
     }
     planted = {(i, 900 + i) for i in range(10)}
@@ -147,13 +145,13 @@ def test_expression_and_udf_bucketing_agree(spark):
     )
 
     df = spark.createDataFrame(
-        [(i, [((i * 31 + j * 7) % 13 - 6) / 6.0 for j in range(16)]) for i in range(40)],
+        [(i, [((i * 31 + j * 7) % 13 - 6) / 6.0 for j in range(64)]) for i in range(40)],
         "vec_id long, v array<double>",
     )
     out = df.select(
         "vec_id",
-        random_hyperplane_bucket("v", n_planes=8, dim=16, seed=42).alias("expr_b"),
-        F.element_at(multi_table_buckets_udf(8, 1, 16, 42)("v"), 1).alias("udf_b"),
+        random_hyperplane_bucket("v").alias("expr_b"),
+        F.element_at(multi_table_buckets_udf(16, 1)("v"), 1).alias("udf_b"),
     ).collect()
     assert all(r["expr_b"] == r["udf_b"] for r in out)
 
@@ -209,7 +207,7 @@ _TIE_ROWS = [
 
 
 @pytest.mark.parametrize("site", ["ivf_assign", "ivf_persisted_route", "pq_code"])
-def test_exact_family_tie_goes_to_lower_cid(spark, tmp_path, site):
+def test_exact_family_tie_goes_to_lower_cid(spark, tmp_path, monkeypatch, site):
     """Every exact-family site breaks an exact distance tie to the lower
     centroid id: corpus assignment, nprobe routing from a persisted
     index, and PQ coding."""
@@ -221,11 +219,12 @@ def test_exact_family_tie_goes_to_lower_cid(spark, tmp_path, site):
     if site == "ivf_assign":
         # probe 3 searches cell 0 alone, which holds vec 2 only if the
         # tie went to cid 0
-        out = similarity.ivf_topk_exact(df, probe(3), k=5, n_centroids=2, nprobe=1, iters=1)
+        monkeypatch.setattr(similarity, "IVF_CENTROIDS", 2)
+        out = similarity.ivf_topk_exact(df, probe(3), k=5, nprobe=1, iters=1)
         assert {r.vec_id for r in out.collect()} == {0, 2}
     elif site == "ivf_persisted_route":
         idx = str(tmp_path / "ivf")
-        similarity.ivf_build_index_exact(df, idx, n_centroids=2, iters=1)
+        similarity.ivf_build_index_exact(df, idx, n_centroids=2)  # 2nd round: no move
         out = similarity.ivf_search_index_exact(spark, idx, probe(2), k=5, nprobe=1)
         assert {r.vec_id for r in out.collect()} == {0, 3}  # cell 0 minus vec 2
     else:
@@ -352,14 +351,14 @@ def test_exact_twin_topk_recall(spark, vectors):
     lsh = {
         (r["query_id"], r["vec_id"])
         for r in similarity.lsh_topk_exact(
-            vectors, twins, k=3, n_planes=8, dim=DIM, probe_id_col="vec_id"
+            vectors, twins, k=3, n_planes=8, probe_id_col="vec_id"
         ).collect()
     }
     assert len(exact_top1 & lsh) / len(exact_top1) >= 0.8
     ivf = {
         (r["query_id"], r["vec_id"])
         for r in similarity.ivf_topk_exact(
-            vectors, twins, k=3, n_centroids=8, nprobe=4, probe_id_col="vec_id"
+            vectors, twins, k=3, nprobe=4, probe_id_col="vec_id"
         ).collect()
     }
     assert len(exact_top1 & ivf) / len(exact_top1) >= 0.8
@@ -408,6 +407,14 @@ class TestQuantizeInt8:
         assert all(r["n_dims"] == 2 for r in rows.values())
 
 
+@pytest.fixture()
+def small_pq(monkeypatch):
+    """8-dim PQ shape (2 subspaces x 4 dims, 4 centroids, 1 Lloyd round)
+    so the fixtures stay small."""
+    for name, value in [("PQ_M", 2), ("PQ_SUB_DIM", 4), ("PQ_K", 4), ("PQ_ITERS", 1)]:
+        monkeypatch.setattr(similarity, name, value)
+
+
 class TestProductQuantization:
     @pytest.fixture()
     def vecs(self, spark):
@@ -437,7 +444,7 @@ class TestProductQuantization:
         # centroids: k x sub_dim per subspace
         assert cents.count() == 2 * 4 * 4
 
-    def test_planted_copy_has_minimal_adc(self, spark, vecs):
+    def test_planted_copy_has_minimal_adc(self, spark, vecs, small_pq):
         from etl_ipl_data_analysis_pipeline_spark.operators.similarity import (
             pq_topk_exact,
         )
@@ -450,14 +457,14 @@ class TestProductQuantization:
         )
         pool = vecs.unionByName(mirror)
         out = pq_topk_exact(
-            pool, probe, k=40, m=2, sub_dim=4, k_codebook=4, iters=1
+            pool, probe, k=40
         ).collect()
         by_id = {r["vec_id"]: r["adc"] for r in out}
         # the exact copy shares all codes with the probe, so its ADC is
         # the global minimum
         assert by_id[1003] == min(by_id.values())
 
-    def test_deterministic(self, spark, vecs):
+    def test_deterministic(self, spark, vecs, small_pq):
         from etl_ipl_data_analysis_pipeline_spark.operators.similarity import (
             pq_topk_exact,
         )
@@ -466,12 +473,10 @@ class TestProductQuantization:
             F.col("vec_id").alias("query_id"), "embedding"
         )
         a = sorted(
-            map(tuple, pq_topk_exact(vecs, probes, k=3, m=2, sub_dim=4,
-                                     k_codebook=4, iters=1).collect())
+            map(tuple, pq_topk_exact(vecs, probes, k=3).collect())
         )
         b = sorted(
-            map(tuple, pq_topk_exact(vecs.repartition(7), probes, k=3, m=2,
-                                     sub_dim=4, k_codebook=4, iters=1).collect())
+            map(tuple, pq_topk_exact(vecs.repartition(7), probes, k=3).collect())
         )
         assert a == b
 
@@ -502,7 +507,7 @@ class TestNormOutliers:
 
 
 class TestPQPersisted:
-    def test_persisted_search_identical_to_in_memory(self, spark, tmp_path):
+    def test_persisted_search_identical_to_in_memory(self, spark, tmp_path, small_pq):
         import random
 
         rng = random.Random(11)
@@ -511,14 +516,10 @@ class TestPQPersisted:
         probes = df.filter(F.col("vec_id") < 2).select(
             F.col("vec_id").alias("query_id"), "embedding"
         )
-        mem = similarity.pq_topk_exact(
-            df, probes, k=7, m=2, sub_dim=4, k_codebook=4, iters=1
-        )
+        mem = similarity.pq_topk_exact(df, probes, k=7)
         idx = str(tmp_path / "pq")
-        similarity.pq_build_index(df, idx, m=2, sub_dim=4, k=4, iters=1)
-        disk = similarity.pq_search_index(
-            spark, idx, probes, k=7, m=2, sub_dim=4
-        )
+        similarity.pq_build_index(df, idx)
+        disk = similarity.pq_search_index(spark, idx, probes, k=7)
         assert sorted(map(tuple, mem.collect())) == sorted(
             map(tuple, disk.collect())
         )

@@ -53,13 +53,9 @@ def test_append_mode_withholds_open_windows(spark, sf_dir, registry):
 def test_file_pipeline_exactly_once(spark, sf_dir, tmp_path):
     src = os.path.join(sf_dir, "events.parquet")
     dst, ckpt = str(tmp_path / "out"), strm.checkpoint_dir(str(tmp_path), "events")
-    n1 = strm.file_stream_pipeline(
-        spark, src, dst, ckpt, transform=lambda df: df.filter(F.col("event_type") == "click")
-    )
+    n1 = strm.file_stream_pipeline(spark, src, dst, ckpt)
     rows1 = spark.read.parquet(dst).count()
-    n2 = strm.file_stream_pipeline(
-        spark, src, dst, ckpt, transform=lambda df: df.filter(F.col("event_type") == "click")
-    )
+    n2 = strm.file_stream_pipeline(spark, src, dst, ckpt)
     assert n1 >= 1 and n2 == 0
     assert spark.read.parquet(dst).count() == rows1
 
@@ -320,10 +316,10 @@ def test_kmv_stream_batch_boundary_independence(spark, tmp_path):
         .select("event_type", "user_id")
     )
     got = sketch_stream.run_kmv_stream(
-        stream, str(tmp_path / "state"), "user_id", keys=["event_type"], k=16
+        stream, str(tmp_path / "state"), "user_id", keys=["event_type"]
     )
     want = sketches.kmv_build(
-        df.select("event_type", "user_id"), "user_id", keys=["event_type"], k=16
+        df.select("event_type", "user_id"), "user_id", keys=["event_type"]
     )
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
 
@@ -482,9 +478,9 @@ def _zero_batch_cases():
         "kmv": (
             "event_type string, user_id long",
             lambda st, d: ss.run_kmv_stream(
-                st, f"{d}/s", "user_id", keys=["event_type"], k=16
+                st, f"{d}/s", "user_id", keys=["event_type"]
             ),
-            lambda e: sketches.kmv_build(e, "user_id", keys=["event_type"], k=16),
+            lambda e: sketches.kmv_build(e, "user_id", keys=["event_type"]),
         ),
         "sig_index": (
             docs,
@@ -800,15 +796,13 @@ def test_embedding_pair_stream_equals_batch_and_survives_replay(spark, tmp_path)
             .parquet(src)
         )
 
-    kw = dict(min_sim=0.99, n_planes=6, n_tables=4, dim=16)
+    kw = dict(min_sim=0.99)
     pairs_state = str(tmp_path / "emb_pairs")
     index_state = str(tmp_path / "emb_index")
     got = sketch_stream.run_embedding_pair_stream(
         stream(), lambda b: b, pairs_state, index_state, **kw
     )
-    want = similarity.embedding_near_dup_pairs(
-        df, kw["min_sim"], kw["n_planes"], kw["n_tables"], kw["dim"]
-    )
+    want = similarity.embedding_near_dup_pairs(df, kw["min_sim"])
     as_rows = lambda d: sorted(
         (r["id_a"], r["id_b"], r["sim"]) for r in d.collect()
     )
